@@ -1,7 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /**
  * E6-E9: graph materialization with skew handling, per-partition
@@ -14,9 +15,10 @@ import org.apache.spark.sql.functions._
  *   staging/   bucket=K/err=B/...   one pass of the parse kernel, the
  *                                   resumable unit of work
  *   nodes/                          distinct terms: id, kind, value, lang, dt
- *   edges/                          subj_id, pred, obj_id + lineage
+ *   edges/                          subj_id, pred, obj_id + lineage; AQE
+ *                                   sizes the files (see saltedRepartition)
  *   metrics/                        per-document lineage + counts + sha256
- *   manifest/                       per-bucket checkpoint rows
+ *   manifest/  bucket=K/...         per-bucket checkpoint rows (n_docs)
  *
  * Resume contract (E8): work is sharded into `buckets` by a hash of the
  * document identity (repo, path, commit). A bucket appears in `manifest`
@@ -33,19 +35,54 @@ object Materialize {
     pmod(xxhash64(col("repo"), col("path"), col("commit")), lit(buckets.toLong))
 
   /**
-   * Read the staging table back with `err` re-typed: partition-column
-   * type inference has no boolean case, so `err=true/false` directory
-   * values come back as strings.
+   * Schema of the staging table as [[readStaging]] returns it: the parse
+   * kernel's flat columns (see [[TripleExtract.parseExpr]]) in file order,
+   * then the `bucket`/`err` partition columns. Columns read from parquet
+   * are always nullable.
+   */
+  val StagingSchema: StructType = StructType(Seq(
+    StructField("repo", StringType),
+    StructField("path", StringType),
+    StructField("commit", StringType),
+    StructField("line", IntegerType),
+    StructField("skind", ByteType),
+    StructField("subj", StringType),
+    StructField("pred", StringType),
+    StructField("okind", ByteType),
+    StructField("obj", StringType),
+    StructField("lang", StringType),
+    StructField("dt", StringType),
+    StructField("charPos", IntegerType),
+    StructField("message", StringType),
+    StructField("bucket", LongType),
+    StructField("err", BooleanType)))
+
+  /** Schema of the manifest table: one row per committed bucket. */
+  private val ManifestSchema: StructType = StructType(Seq(
+    StructField("n_docs", LongType),
+    StructField("bucket", LongType)))
+
+  /**
+   * Read the staging table back with its known schema. Naming the schema
+   * skips the parquet schema-inference job a plain `spark.read.parquet`
+   * runs, and types the `bucket=K/err=B` directory values directly:
+   * partition-column inference has no boolean case (it would hand `err`
+   * back as a string) and would type `bucket` as int.
    */
   def readStaging(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/staging")
-      .withColumn("err", col("err").cast("boolean"))
+    spark.read.schema(StagingSchema).parquet(s"$outDir/staging")
 
   /**
    * E6: salted repartition to break hot-key skew. Hash-partitions on
    * (key, salt) so a hub key spreads over `salts` partitions instead of
    * one, while small keys keep near-locality. AQE skew-join handling is
    * also enabled session-wide (see Pipeline.session).
+   *
+   * With `numPartitions = None` the exchange is a repartition-by-columns,
+   * which AQE may coalesce: AQE then sizes the output (a small table
+   * becomes one file, not `spark.sql.shuffle.partitions` tiny ones) and
+   * the salt only spreads hot keys across the partitions AQE keeps. A
+   * pinned count is a repartition-by-number, which AQE never coalesces.
    *
    * The salt MUST be deterministic per row: deriving it from
    * spark_partition_id()/monotonically_increasing_id() means a task retry
@@ -56,12 +93,20 @@ object Materialize {
    * `key` uniformly yet reproducibly across retries.
    */
   def saltedRepartition(df: DataFrame, key: Column, saltFrom: Seq[Column],
-                        salts: Int, numPartitions: Int): DataFrame = {
+                        salts: Int, numPartitions: Option[Int] = None): DataFrame = {
     val salt = pmod(xxhash64(saltFrom: _*), lit(salts.toLong))
-    df.withColumn("__salt", salt)
-      .repartition(numPartitions, key, col("__salt"))
-      .drop("__salt")
+    val withSalt = df.withColumn("__salt", salt)
+    val spread = numPartitions match {
+      case Some(n) => withSalt.repartition(n, key, col("__salt"))
+      case None => withSalt.repartition(key, col("__salt"))
+    }
+    spread.drop("__salt")
   }
+
+  /** [[saltedRepartition]] into exactly `numPartitions` partitions. */
+  def saltedRepartition(df: DataFrame, key: Column, saltFrom: Seq[Column],
+                        salts: Int, numPartitions: Int): DataFrame =
+    saltedRepartition(df, key, saltFrom, salts, Some(numPartitions))
 
   /** Distinct nodes table from a (skolemized, canonicalized) triples frame.
     *
@@ -232,6 +277,23 @@ object Materialize {
   }
 
   /**
+   * The committed manifest rows (n_docs, bucket), read with their known
+   * schema, so no schema-inference job runs. Only a manifest that was
+   * never committed reads as "nothing done": a missing directory, or one
+   * holding nothing but hidden entries such as the `_temporary` dir of a
+   * write that died before its commit (the parquet reader skips those,
+   * so it finds no file). Any other failure, such as a corrupt file or a
+   * `bucket=` directory that is not a number, fails the caller rather
+   * than silently re-running every bucket.
+   */
+  def readManifest(spark: SparkSession, manifestPath: String): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(manifestPath)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(path)) spark.read.schema(ManifestSchema).parquet(manifestPath)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), ManifestSchema)
+  }
+
+  /**
    * Full materialization run with resume. Returns the number of buckets
    * actually processed in this invocation (0 == nothing left to do).
    */
@@ -242,13 +304,16 @@ object Materialize {
 
     val withBucket = corpus.toDF().withColumn("bucket", bucketOf(buckets))
     val manifestPath = s"$outDir/manifest"
-    val done: DataFrame =
-      try spark.read.parquet(manifestPath).select("bucket").distinct()
-      catch { case _: Exception => spark.emptyDataset[Long].toDF("bucket") }
+    val done = readManifest(spark, manifestPath).select("bucket")
 
+    // the per-bucket document counts ARE the manifest rows this run
+    // commits: collecting them here (<= `buckets` rows) spares the commit
+    // a second scan of the corpus
     val todo = withBucket.join(broadcast(done), Seq("bucket"), "left_anti")
-    val todoBuckets = todo.select("bucket").distinct().as[Long].collect().sorted
-    if (todoBuckets.isEmpty) return 0
+    val todoCounts = todo.groupBy("bucket").agg(count(lit(1)).as("n_docs"))
+      .as[(Long, Long)].collect()
+    if (todoCounts.isEmpty) return 0
+    val todoBuckets = todoCounts.map(_._1).sorted
 
     // ---- parse (single pass) -> staging, partitioned by (bucket, err)
     // native generator path: no object-serde boundary (see ParseNtLines)
@@ -272,8 +337,7 @@ object Materialize {
     nodes(triplesDf).write.mode(SaveMode.Overwrite).parquet(s"$outDir/nodes")
     saltedRepartition(edges(triplesDf), col("subj_id"),
       saltFrom = Seq(col("repo"), col("path"), col("commit"), col("line")),
-      salts = 16,
-      numPartitions = spark.sessionState.conf.numShufflePartitions)
+      salts = 16)
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/edges")
 
     // ---- metrics for the documents processed in THIS run: counted from
@@ -286,9 +350,7 @@ object Materialize {
       .parquet(s"$outDir/metrics") // dynamic overwrite: idempotent on re-run
 
     // ---- commit the checkpoint LAST: bucket-level manifest rows
-    withBucket
-      .filter(col("bucket").isin(todoBuckets: _*))
-      .groupBy("bucket").agg(count(lit(1)).as("n_docs"))
+    todoCounts.toSeq.toDF("bucket", "n_docs")
       .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(manifestPath)
 
     todoBuckets.length

@@ -202,10 +202,15 @@ object Dedup {
   /** As `jaccardPairsFromShingles` over the ARRAY form ([[docShingleArrays]],
     * one row per id): attach the two shingle sets by id equi-join and take
     * `size(array_intersect(sa, sb))` as a narrow per-row expression.
-    * Output contract is IDENTICAL — (a, b, inter, union_), BIGINT sizes,
+    * PRECONDITION: `candidates` holds DISTINCT (a, b) pairs, as every
+    * caller's LSH/blocking output does. Under it the output is IDENTICAL
+    * to the exploded form — (a, b, inter, union_), BIGINT sizes,
     * zero-intersection pairs dropped (the exploded form's inner shingle
     * join never produced them; arrays are distinct so the intersect count
-    * is the set intersection size). What disappears vs the exploded form
+    * is the set intersection size). A pair listed k times breaks the
+    * equality: the exploded form's (a, b) aggregate folds the k copies
+    * into ONE row with `inter` multiplied by k, while this join emits k
+    * rows with the true `inter`. What disappears vs the exploded form
     * (guide §2.3 "move heavy bytes once" + §2.4): the
     * O(|candidates| x doc-size) join intermediate, the (a, b) pair-count
     * aggregate exchange, and the separate per-doc `sizes` pass —

@@ -1,6 +1,9 @@
 package graft.kg
 
+import org.apache.spark.SparkException
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BooleanType
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -28,6 +31,25 @@ class PipelineSpec extends AnyFunSuite {
       n -> (triples, errors)
     }.toMap
   }
+
+  /** Order-independent content hash of a table: (rows, sum of row hashes). */
+  private def tableHash(df: DataFrame): (Long, java.math.BigDecimal) = {
+    val r = df.select(count(lit(1)),
+      sum(xxhash64(df.columns.map(col).toIndexedSeq: _*).cast("decimal(38,0)"))).head()
+    (r.getLong(0), r.getDecimal(1))
+  }
+
+  private def tempDir(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  /** Per-bucket (bucket -> n_docs) rows of a manifest directory. */
+  private def manifestCounts(dir: String): Map[Long, Long] =
+    Materialize.readManifest(spark, s"$dir/manifest").select("bucket", "n_docs")
+      .as[(Long, Long)].collect().toMap
+
+  /** Documents per bucket, counted straight from the corpus. */
+  private def corpusCounts(corpus: Dataset[CorpusRow], buckets: Int): Map[Long, Long] =
+    corpus.toDF().groupBy(Materialize.bucketOf(buckets).as("bucket")).count()
+      .as[(Long, Long)].collect().toMap
 
   test("kernel over W3C corpus matches the pure parser file-by-file") {
     val parsed = TripleExtract.parse(Corpus.w3cFixtures(spark)).cache()
@@ -87,8 +109,12 @@ class PipelineSpec extends AnyFunSuite {
   test("nodes/edges materialization with manifest resume") {
     val dir = Files.createTempDirectory("graft-mat").toString
     val corpus = Corpus.synthetic(spark, nDocs = 40, linesPerDoc = 25)
+    // no manifest directory: nothing is done, so every bucket runs and
+    // commits its corpus document count
+    val perBucket = corpusCounts(corpus, 8)
     val n1 = Materialize.run(spark, corpus, dir, buckets = 8)
-    assert(n1 > 0)
+    assert(n1 == perBucket.size)
+    assert(manifestCounts(dir) == perBucket)
     val edges = spark.read.parquet(s"$dir/edges")
     val nodes = spark.read.parquet(s"$dir/nodes")
     val staged = Materialize.readStaging(spark, dir)
@@ -106,6 +132,75 @@ class PipelineSpec extends AnyFunSuite {
       .write.partitionBy("bucket").parquet(s"$dir2/manifest")
     val n3 = Materialize.run(spark, corpus, dir2, buckets = 8)
     assert(n3 == n1 - 3)
+    assert(manifestCounts(dir2) == perBucket)
+  }
+
+  test("run writes nodes/edges equal to the linked staging; AQE sizes the edges files") {
+    // pinned wider than the suite default so a fixed-count edges exchange
+    // (one file per shuffle partition) cannot pass the file-count check
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try {
+      val dir = tempDir("graft-layout")
+      assert(Materialize.run(spark, Corpus.synthetic(spark, nDocs = 40, linesPerDoc = 25),
+        dir, buckets = 8) > 0)
+      val linked = Canonicalize(Skolemize(
+        TripleExtract.assembleTriples(Materialize.readStaging(spark, dir))))
+      assert(tableHash(spark.read.parquet(s"$dir/nodes")) == tableHash(Materialize.nodes(linked)))
+      assert(tableHash(spark.read.parquet(s"$dir/edges")) == tableHash(Materialize.edges(linked)))
+      val partFiles = new java.io.File(s"$dir/edges").listFiles.count(_.getName.startsWith("part-"))
+      assert(partFiles >= 1 && partFiles < 16, s"edges written as $partFiles part files")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+  }
+
+  test("readStaging reads StagingSchema and matches the schema-inferring read row for row") {
+    val dir = tempDir("graft-staging")
+    val corpus = Corpus.synthetic(spark, nDocs = 12, linesPerDoc = 10)
+      .union(Seq(CorpusRow("r", "bad.nt", "c", "nt", "oops\n<a:b> <c:d> \"x\" .")).toDS())
+    // the staging layout as every Materialize.run has written it
+    TripleExtract.parseExpr(corpus.toDF()).withColumn("bucket", Materialize.bucketOf(4))
+      .write.partitionBy("bucket", "err").parquet(s"$dir/staging")
+    val staged = Materialize.readStaging(spark, dir)
+    assert(staged.schema == Materialize.StagingSchema)
+    assert(staged.schema("err").dataType == BooleanType)
+    // the earlier reader: parquet schema inference (which types `bucket`
+    // as int and `err` as string), then the err string->boolean cast
+    val inferred = spark.read.parquet(s"$dir/staging")
+    assert(inferred.columns.toSeq == staged.columns.toSeq)
+    val before = inferred.withColumn("err", col("err").cast("boolean"))
+      .withColumn("bucket", col("bucket").cast("long"))
+    assert(staged.filter(col("err")).count() == 1)
+    assert(staged.exceptAll(before).isEmpty && before.exceptAll(staged).isEmpty)
+  }
+
+  test("manifest: a directory holding only _temporary means nothing is done") {
+    // what a manifest write that died before its commit leaves behind;
+    // the uncommitted file is garbage, so reading it would fail the run
+    val corpus = Corpus.synthetic(spark, nDocs = 16, linesPerDoc = 5)
+    val dir = tempDir("graft-tmpmanifest")
+    val attempt = new java.io.File(s"$dir/manifest/_temporary/0/_temporary/attempt_0/bucket=0")
+    assert(attempt.mkdirs())
+    Files.write(new java.io.File(attempt, "part-00000.snappy.parquet").toPath, "torn".getBytes)
+    assert(Materialize.run(spark, corpus, dir, buckets = 4) == corpusCounts(corpus, 4).size)
+  }
+
+  test("manifest: an unreadable manifest fails the run before any work") {
+    val corpus = Corpus.synthetic(spark, nDocs = 16, linesPerDoc = 5)
+    // a committed manifest file that is not parquet
+    val corrupt = tempDir("graft-badmanifest")
+    val bucketDir = new java.io.File(s"$corrupt/manifest/bucket=0")
+    assert(bucketDir.mkdirs())
+    Files.write(new java.io.File(bucketDir, "part-00000.snappy.parquet").toPath, "not parquet".getBytes)
+    val readFailure = intercept[SparkException](Materialize.run(spark, corpus, corrupt, buckets = 4))
+    assert(readFailure.getMessage.contains("manifest/bucket=0"))
+    assert(!new java.io.File(s"$corrupt/staging").exists())
+    // a bucket directory whose value is not a bucket number
+    val foreign = tempDir("graft-foreignmanifest")
+    Seq(1L).toDF("n_docs").write.parquet(s"$foreign/manifest/bucket=x")
+    val castFailure = intercept[RuntimeException](
+      Materialize.run(spark, corpus, foreign, buckets = 4))
+    assert(castFailure.getMessage.contains("INVALID_PARTITION_VALUE"))
+    assert(!new java.io.File(s"$foreign/staging").exists())
   }
 
   test("metrics carry the per-document content sha256 invariant") {
