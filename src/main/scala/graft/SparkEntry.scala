@@ -37,13 +37,10 @@ object SparkEntry {
     }.toDS()
   }
 
-  /** Corpus -> triples through the NATIVE ParseNtLines generator (r7,
-    * guide §4 class: no object-serde boundary in the hot path — the typed
-    * Dataset route decoded every CorpusRow into a case class and
-    * re-encoded every ParsedLine). Kernel semantics are identical by
-    * construction (ParserEquivalenceSpec locks the byte and char kernels
-    * together); the typed API keeps its own driver coverage through the
-    * error/lenient/metrics gates that call TripleExtract.parse directly. */
+  /** Corpus -> triples through the ParseNtLines generator, the one Spark
+    * parse route (no object-serde boundary in the hot path). The
+    * error/lenient/metrics gates call its typed view TripleExtract.parse,
+    * which plans as the same GenerateExec. */
   private def parsedTriples(c: Dataset[CorpusRow]): DataFrame =
     TripleExtract.assembleTriples(TripleExtract.parseExpr(c.toDF()))
 

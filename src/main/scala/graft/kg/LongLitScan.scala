@@ -2,20 +2,22 @@ package graft.kg
 
 /**
  * Escape-exact close detection for lenient corpus-mode multi-line long
- * literals (`"""..."""` spanning physical lines, TripleExtract.parseDoc /
- * ParseNtLines).
+ * literals (`"""..."""` spanning physical lines, ParseNtLines).
  *
  * The r2 guard re-parsed the whole statement window whenever an appended
  * line merely CONTAINED the substring `"""` — an adversarial document
  * whose every line holds `\"""` (escaped quote + two content quotes, so
  * the literal never closes) drove that to O(lines^2) total parse work
  * (ADVICE r2). This scanner instead mirrors the parser's own long-literal
- * lexing rules exactly — each appended char is visited ONCE:
+ * lexing rules exactly — each appended byte is visited ONCE (quote and
+ * backslash are ASCII, and multi-byte UTF-8 sequences contain no bytes
+ * < 0x80, so byte-wise scanning is exact):
  *
  *  - a backslash consumes its escape payload, VALIDATING it: simple
  *    escapes (\\ \" \' \b \t \n \f \r) skip two chars; \u/\U must be
- *    followed by 4/8 hex digits. An INVALID payload or a non-hex char
- *    inside the hex body is a guaranteed terminal error on the next
+ *    followed by 4/8 hex digits, and a \U value must be <= U+10FFFF.
+ *    An INVALID payload, a non-hex char inside the hex body or an
+ *    out-of-range \U value is a guaranteed terminal error on the next
  *    re-parse, so the scanner requests it immediately — without this the
  *    error would surface only at a later close/pending trigger, silently
  *    swallowing the intervening statements (found by the fuzz
@@ -37,8 +39,7 @@ package graft.kg
  * full-window re-parse at document end for the exact document-mode error.
  * Total cost is O(statement window), amortized O(document).
  *
- * String and byte twins keep NtLineParser/NtBytesParser symmetric
- * (ParserEquivalenceSpec covers both paths differentially).
+ * PipelineSpec checks it against the re-parse-after-every-line oracle.
  */
 private[kg] object LongLitScan {
 
@@ -56,47 +57,24 @@ private[kg] object LongLitScan {
    * re-parse is due, else `-(resumePos) - 1` (resume the next scan from
    * `resumePos`).
    */
-  def scanToClose(s: String, from: Int, until: Int): Int = {
-    var i = from
-    while (i < until) {
-      val c = s.charAt(i)
-      if (c == '\\') {
-        if (i + 1 >= until) return -(i + 1) - 1 // trailing: pendingEscapeAt(e) catches it
-        val p = s.charAt(i + 1)
-        if (p == 'u' || p == 'U') {
-          val need = if (p == 'u') 4 else 8
-          var j = i + 2
-          var k = 0
-          while (k < need && j < until && isHexChar(s.charAt(j))) { j += 1; k += 1 }
-          if (k < need && j < until) return j // non-hex inside the body: terminal
-          i = j // complete, or partial at window end (pendingEscapeAt catches)
-        } else if (isSimpleEscape(p)) i += 2
-        else return i + 1 // invalid payload: terminal
-      } else if (c == '"' && i + 2 < until && s.charAt(i + 1) == '"' && s.charAt(i + 2) == '"')
-        return i + 3
-      else i += 1
-    }
-    -i - 1
-  }
-
-  /** Byte twin of `scanToClose` (quote/backslash are ASCII; multi-byte
-    * UTF-8 sequences contain no bytes < 0x80, so byte-wise is exact). */
   def scanToClose(b: Array[Byte], from: Int, until: Int): Int = {
     var i = from
     while (i < until) {
       val c = b(i)
       if (c == '\\'.toByte) {
-        if (i + 1 >= until) return -(i + 1) - 1
+        if (i + 1 >= until) return -(i + 1) - 1 // trailing: pendingEscapeAt(e) catches it
         val p = b(i + 1)
         if (p == 'u'.toByte || p == 'U'.toByte) {
           val need = if (p == 'u'.toByte) 4 else 8
           var j = i + 2
           var k = 0
           while (k < need && j < until && isHexChar(b(j))) { j += 1; k += 1 }
-          if (k < need && j < until) return j
-          i = j
+          if (k < need && j < until) return j // non-hex inside the body: terminal
+          if (k == 8 && java.lang.Long.parseLong(new String(b, i + 2, 8, "US-ASCII"), 16) >
+              Character.MAX_CODE_POINT) return j // above U+10FFFF: terminal
+          i = j // complete, or partial at window end (pendingEscapeAt catches)
         } else if (isSimpleEscape(p)) i += 2
-        else return i + 1
+        else return i + 1 // invalid payload: terminal
       } else if (c == '"'.toByte && i + 2 < until && b(i + 1) == '"'.toByte && b(i + 2) == '"'.toByte)
         return i + 3
       else i += 1
@@ -105,16 +83,6 @@ private[kg] object LongLitScan {
   }
 
   /** True when the window [start, e) ends inside an escape sequence. */
-  def pendingEscapeAt(s: String, start: Int, e: Int): Boolean = {
-    var i = e - 1
-    var nHex = 0
-    while (i >= start && nHex < 8 && isHexChar(s.charAt(i))) { nHex += 1; i -= 1 }
-    if (i >= start && s.charAt(i) == 'u' && nHex < 4) oddBackslashRun(s, start, i - 1)
-    else if (i >= start && s.charAt(i) == 'U' && nHex < 8) oddBackslashRun(s, start, i - 1)
-    else oddBackslashRun(s, start, e - 1)
-  }
-
-  /** Byte twin of `pendingEscapeAt`. */
   def pendingEscapeAt(b: Array[Byte], start: Int, e: Int): Boolean = {
     var i = e - 1
     var nHex = 0
@@ -122,13 +90,6 @@ private[kg] object LongLitScan {
     if (i >= start && b(i) == 'u'.toByte && nHex < 4) oddBackslashRun(b, start, i - 1)
     else if (i >= start && b(i) == 'U'.toByte && nHex < 8) oddBackslashRun(b, start, i - 1)
     else oddBackslashRun(b, start, e - 1)
-  }
-
-  private def oddBackslashRun(s: String, start: Int, j0: Int): Boolean = {
-    var j = j0
-    var k = 0
-    while (j >= start && s.charAt(j) == '\\') { k += 1; j -= 1 }
-    (k & 1) == 1
   }
 
   private def oddBackslashRun(b: Array[Byte], start: Int, j0: Int): Boolean = {

@@ -4,23 +4,23 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Byte-level twin of NtLineParser for the Tungsten hot path: parses
- * directly over UTF-8 bytes (the native representation of parquet
- * strings) and emits term values as UTF8String, so the common case —
- * no escapes in a token — is a single byte-range copy with NO
- * UTF-16 decode/encode round trip per value and no per-document
- * char[] materialization.
+ * Byte-level twin of the char kernel, run by the ParseNtLines generator
+ * (the one Spark parse route): parses directly over UTF-8 bytes (the
+ * native representation of parquet strings) and emits term values as
+ * UTF8String, so the common case — no escapes in a token — is a single
+ * byte-range copy with NO UTF-16 decode/encode round trip per value and
+ * no per-document char[] materialization.
  *
- * Semantics are identical to NtLineParser (same grammar, same error
- * messages with CHAR-accurate positions — the rare error path decodes
- * the line prefix to count chars). The grammar's structural characters
+ * On valid UTF-8, semantics are identical to the char kernel (same
+ * grammar, same error messages with CHAR-accurate positions — the rare
+ * error path decodes the line prefix to count chars); raw malformed UTF-8
+ * is the generator's to reject. The grammar's structural characters
  * are all ASCII, and UTF-8 multi-byte sequences never contain ASCII
  * bytes, so byte dispatch is exact. Escape sequences (`\\`, `%XX`) drop
  * the token into char-builder mode, preserving the reference's decoded
  * semantics (incl. invalid-percent-run -> U+FFFD).
  *
- * Differentially tested against NtLineParser (ParserEquivalenceSpec and
- * the generator-vs-kernel pipeline test).
+ * Differentially tested against the char kernel (ParserEquivalenceSpec).
  */
 final class NtBytesParser(strict: Boolean) {
 
@@ -32,7 +32,7 @@ final class NtBytesParser(strict: Boolean) {
   private[this] var inLongLit = false
   private[this] val sb = new java.lang.StringBuilder(128)
 
-  /** See NtLineParser.eoiInUnclosedLongLiteral (identical semantics). */
+  /** The last failure hit end-of-input inside an open lenient long literal. */
   def eoiInUnclosedLongLiteral: Boolean = inLongLit && at >= end
 
   // token-capture state: raw byte range [tokStart, at) unless escaped
@@ -245,9 +245,12 @@ final class NtBytesParser(strict: Boolean) {
     ((hexDigit() << 12) | (hexDigit() << 8) | (hexDigit() << 4) | hexDigit()).toChar
 
   private def hex8(): Int = {
+    val digits = at
     var v = 0
     var k = 0
     while (k < 8) { v = (v << 4) | hexDigit(); k += 1 }
+    // a parse error where the reference's appendCodePoint would throw
+    if (!Character.isValidCodePoint(v)) { at = digits; failValidation(f"\\U$v%08X is not a valid code point") }
     v
   }
 
@@ -341,10 +344,10 @@ final class NtBytesParser(strict: Boolean) {
 
   private def fail(expected: String): Nothing = {
     val found = if (cur == '\u0000') "EOI" else {
-      // decode the (possibly multi-byte) char at the cursor
+      // the first UTF-16 unit of the (possibly multi-byte) char, as the reference shows
       val len = math.min(4, end - at)
       val s = new String(buf, at, len, StandardCharsets.UTF_8)
-      if (s.isEmpty) "EOI" else s.substring(0, s.offsetByCodePoints(0, 1))
+      if (s.isEmpty) "EOI" else s.substring(0, 1)
     }
     raise(s"expected [$expected], but found [$found]")
   }

@@ -67,33 +67,21 @@ object NtFileSource {
 
   /**
    * One parsed line per row for very large files: text splitting is done
-   * by Spark (range-splittable for uncompressed input), line numbers are
-   * recovered per file with a window — only needed when exact reference
-   * line numbers matter; otherwise pass lineNo=0.
+   * by Spark (range-splittable for uncompressed input) and each text row
+   * runs through the same ParseNtLines generator as `TripleExtract.parse`.
+   * A row is a one-line document, so every parsed row carries `line = 1`
+   * and error messages say "in line 1"; the file line number is not
+   * recovered (use `documents` + `TripleExtract.parse` when it matters).
+   * Lenient multi-line long literals cannot span rows here.
    */
   def parseLines(spark: SparkSession, pathGlob: String,
                  lang: String = TripleExtract.LangStrict): Dataset[ParsedLine] = {
     import spark.implicits._
-    val lines = spark.read.textFile(pathGlob)
-      .select(input_file_name().as("path"), col("value").as("line"))
-      .as[(String, String)]
-    lines.mapPartitions { it =>
-      val strictParser = NtLineParser.strict
-      val lenientParser = NtLineParser.lenient
-      val p = if (lang == TripleExtract.LangLenient) lenientParser else strictParser
-      it.flatMap { case (path, text) =>
-        try {
-          if (p.parseSlice(text, 0, text.length, 0))
-            Iterator.single(ParsedLine(err = false, "files", path, Corpus.FixedCommit, 0,
-              p.subjKind, p.subjValue, p.predValue,
-              p.objKind, p.objValue, p.objLang, p.objDt, 0, null))
-          else Iterator.empty
-        } catch {
-          case ex: NtParseException =>
-            Iterator.single(ParsedLine(err = true, "files", path, Corpus.FixedCommit, 0,
-              -1, null, null, -1, null, null, null, ex.charPos, ex.shortMessage))
-        }
-      }
-    }
+    TripleExtract.parseExpr(spark.read.text(pathGlob).select(
+      lit("files").as("repo"),
+      input_file_name().as("path"),
+      lit(Corpus.FixedCommit).as("commit"),
+      lit(lang).as("lang"),
+      col("value").as("content"))).as[ParsedLine]
   }
 }

@@ -29,8 +29,8 @@ import java.nio.charset.StandardCharsets
  *  - a raw NUL char is indistinguishable from end-of-input (the reference
  *    uses '\u0000' as its END sentinel, NtParser.scala:622).
  *
- * Instances are mutable and reusable across lines (one instance per Spark
- * partition inside mapPartitions); they are NOT thread-safe.
+ * The reference implementation and String API; Spark runs its byte twin
+ * NtBytesParser. Instances are reusable across lines, NOT thread-safe.
  */
 final class NtLineParser(strict: Boolean) {
 
@@ -286,15 +286,18 @@ final class NtLineParser(strict: Boolean) {
     ((hexDigit() << 12) | (hexDigit() << 8) | (hexDigit() << 4) | hexDigit()).toChar
 
   private def hex8(): Int = {
+    val digits = at
     var v = 0
     var k = 0
     while (k < 8) { v = (v << 4) | hexDigit(); k += 1 }
+    // a parse error where the reference's appendCodePoint would throw
+    if (!Character.isValidCodePoint(v)) { at = digits; failValidation(f"\\U$v%08X is not a valid code point") }
     v
   }
 
   private def hexDigit(): Int = {
     val c = cur
-    val v = Character.digit(c, 16)
+    val v = if (c < 0x80) Character.digit(c, 16) else -1 // ASCII only, like IS_HEX_CHAR
     if (v < 0) fail("hex character")
     step()
     v

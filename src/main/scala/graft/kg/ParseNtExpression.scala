@@ -1,5 +1,7 @@
 package graft.kg
 
+import java.nio.{ByteBuffer, CharBuffer}
+import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, SpecificInternalRow}
@@ -9,15 +11,19 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native Catalyst table-generating expression for the parse kernel
- * (SURVEY.md §4.3 "phase 2" path): `parse_nt(content, lang)` explodes one
- * corpus row into its parsed line rows WITHOUT the typed-Dataset
- * object-serde boundary (no DeserializeToObject / CorpusRow / ParsedLine
- * instances / SerializeFromObject) — the generator builds InternalRows
- * directly, and lineage columns ride along as ordinary projected columns
- * of the same GenerateExec, pruned by Catalyst like any other column.
+ * The one Spark parse route (SURVEY.md §4.3 "phase 2" path), behind
+ * `TripleExtract.parse`/`parseExpr`, `NtFileSource.parseLines`, SQL
+ * `parse_nt` and `Materialize.run`: `parse_nt(content, lang)` explodes
+ * one corpus row into its parsed line rows WITHOUT a typed-Dataset
+ * object-serde boundary — the generator builds InternalRows directly, and
+ * lineage columns ride along as ordinary projected columns of the same
+ * GenerateExec, pruned by Catalyst like any other column.
  *
- * Semantics are identical to TripleExtract.parse (same NtLineParser).
+ * Malformed UTF-8 (SURVEY §A3): the reference's reporting decoder refuses
+ * it, but a string column can hold raw invalid bytes (text files, binary
+ * casts). One `UTF8String.isValid` pass per document; in an invalid one,
+ * each statement window with a malformed sequence is one error row at
+ * the decoded char index of its first bad byte.
  */
 case class ParseNtLines(content: Expression, lang: Expression)
     extends Generator with CodegenFallback {
@@ -46,7 +52,9 @@ case class ParseNtLines(content: Expression, lang: Expression)
     if (c == null) return Iterator.empty
     // byte-level path: ONE byte copy of the doc, no UTF-16 decode; values
     // come out of NtBytesParser as UTF8String slices
-    val bytes = c.asInstanceOf[UTF8String].getBytes
+    val str = c.asInstanceOf[UTF8String]
+    val bytes = str.getBytes
+    val valid = str.isValid
     val langV = lang.eval(input)
     val lenient = langV != null &&
       langV.asInstanceOf[UTF8String].toString == TripleExtract.LangLenient
@@ -110,23 +118,25 @@ case class ParseNtLines(content: Expression, lang: Expression)
 
       private def fetch(): InternalRow = {
         while (pos < n) {
-          // statement window with lenient multi-line long-literal
-          // extension — mirrors TripleExtract.parseDoc exactly
+          // statement window: one physical line, extended in lenient mode
+          // while a """ literal is open (LenientNtParserSpec.scala:34-40);
+          // the statement keeps its FIRST physical line number
           val start = pos
           var e = scanLine()
           val startLine = lineNo
           var scanPos = -1 // escape-exact scanner cursor, per statement
+          var out: InternalRow = null
           var attempt = true
           while (attempt) {
             attempt = false
             try {
-              if (p.parseSlice(bytes, start, e, startLine))
-                return tripleRow(startLine)
+              if (p.parseSlice(bytes, start, e, startLine)) out = tripleRow(startLine)
             } catch {
               case ex: NtParseException =>
                 if (lenient && p.eoiInUnclosedLongLiteral && pos < n) {
-                  // escape-exact O(window) extension — mirrors
-                  // TripleExtract.parseDoc exactly (see LongLitScan)
+                  // re-parse only when the escape-exact scanner finds the
+                  // close or a terminal escape: O(window) per statement
+                  // even on adversarial input (see LongLitScan)
                   if (scanPos < 0) scanPos = e
                   var doReparse = LongLitScan.pendingEscapeAt(bytes, start, e)
                   if (doReparse && pos < n) e = scanLine()
@@ -143,10 +153,15 @@ case class ParseNtLines(content: Expression, lang: Expression)
                     }
                   }
                   attempt = true
-                } else
-                  return errorRow(startLine, ex.charPos, ex.shortMessage)
+                } else out = errorRow(startLine, ex.charPos, ex.shortMessage)
             }
           }
+          if (!valid) {
+            val bad = ParseNtLines.malformedAt(bytes, start, e)
+            if (bad != null) out = errorRow(startLine, bad._1,
+              s"parse error in line $startLine at char ${bad._1}, malformed UTF-8 input [${bad._2}]")
+          }
+          if (out != null) return out
         }
         null
       }
@@ -168,6 +183,18 @@ case class ParseNtLines(content: Expression, lang: Expression)
 
 object ParseNtLines {
   import org.apache.spark.sql.graftshim.ColumnShim
+
+  /** The first malformed UTF-8 sequence in bytes[from, until) as (1-based
+    * decoded char index, its bytes in hex), or null when the slice decodes
+    * cleanly — the same verdict as the reference's reporting decoder. */
+  private def malformedAt(bytes: Array[Byte], from: Int, until: Int): (Int, String) = {
+    val in = ByteBuffer.wrap(bytes, from, until - from)
+    val out = CharBuffer.allocate(until - from)
+    val r = StandardCharsets.UTF_8.newDecoder().decode(in, out, true)
+    if (!r.isError) null
+    else (out.position() + 1,
+      (in.position() until in.position() + r.length()).map(i => f"${bytes(i) & 0xFF}%02X").mkString(" "))
+  }
 
   /** Column wrapper: use in select() like explode(). */
   def parseNt(content: Column, lang: Column): Column =

@@ -4,22 +4,23 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /**
- * E2+E3: line slicing + triple extraction as one typed Dataset transform.
+ * E2+E3: line slicing + triple extraction, one Spark route.
  *
  * The reference's whole workload is a per-line recursive-descent parse
  * driven by a lazy pull iterator (NtParser.scala:824-897). The Spark-native
- * equivalent is a `mapPartitions`-backed flatMap: one reusable
- * NtLineParser per partition (the reference proves parser reuse is safe,
- * NtParserRegressionSpec.scala:75-96), rows streamed through without
- * materializing a document's lines.
+ * equivalent is the ParseNtLines generator: one reusable NtBytesParser
+ * per task (the reference proves parser reuse is safe,
+ * NtParserRegressionSpec.scala:75-96) over each document's UTF-8 bytes,
+ * rows streamed out without materializing a document's lines. `parse` is
+ * the typed view of `parseExpr`, not a second kernel: both plan as one
+ * GenerateExec, so every entry point gives the same rows.
  *
  * Scale/allocation notes:
  *  - narrow stage (no shuffle); partition granularity comes from the
  *    corpus scan (`spark.sql.files.maxPartitionBytes` at 100 TB);
- *  - lines are parsed IN PLACE over the content string (offset windows,
- *    no per-line substring) and the parser exposes term slots, so the
- *    per-triple garbage is only the output row itself — GC pressure is
- *    what caps local[32] scaling;
+ *  - lines are parsed IN PLACE over the content bytes (offset windows,
+ *    no per-line copy) and the parser exposes term slots, so the
+ *    per-triple garbage is only the term values themselves;
  *  - the kernel emits a FLAT row (ParsedLine); nested TripleRow structs
  *    are assembled afterwards with codegen'd `struct()` expressions,
  *    which is much cheaper than a nested case-class encoder;
@@ -31,119 +32,20 @@ object TripleExtract {
   final val LangStrict = "nt"
   final val LangLenient = "nt-lenient"
 
-  /** Parse a whole corpus into flat triple/error rows in a single pass. */
+  /** Parse a whole corpus into flat triple/error rows in a single pass:
+    * the typed view of `parseExpr` (same generator, same rows). */
   def parse(corpus: Dataset[CorpusRow]): Dataset[ParsedLine] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    corpus.mapPartitions { docs =>
-      // one parser pair per partition, reused across all rows
-      val strictParser = NtLineParser.strict
-      val lenientParser = NtLineParser.lenient
-      docs.flatMap { doc => parseDoc(doc, strictParser, lenientParser) }
-    }
-  }
-
-  /** Streaming per-document line scan; 0 or 1 output rows per line. */
-  private def parseDoc(doc: CorpusRow, strictParser: NtLineParser,
-                       lenientParser: NtLineParser): Iterator[ParsedLine] = {
-    val lenient = doc.lang == LangLenient
-    val p = if (lenient) lenientParser else strictParser
-    val content = doc.content
-    val n = content.length
-    new scala.collection.AbstractIterator[ParsedLine] {
-      private[this] var pos = 0
-      private[this] var lineNo = 0
-      private[this] var ready: ParsedLine = _
-
-      /** Content end of the physical line starting at pos; advances pos
-        * past the \n / \r / \r\n terminator and bumps the line counter. */
-      private def scanLine(): Int = {
-        var e = pos
-        while (e < n && { val c = content.charAt(e); c != '\n' && c != '\r' }) e += 1
-        pos =
-          if (e < n && content.charAt(e) == '\r' && e + 1 < n && content.charAt(e + 1) == '\n') e + 2
-          else e + 1
-        lineNo += 1
-        e
-      }
-
-      private def fetch(): ParsedLine = {
-        while (pos < n) {
-          // statement window: starts as one physical line; in lenient mode
-          // an unclosed """...""" long literal extends it across following
-          // lines, so the raw newline becomes literal content (reference
-          // parity: LenientNtParserSpec.scala:34-40). The statement keeps
-          // its FIRST physical line number; the counter tracks all lines
-          // consumed, so later statements stay correctly numbered.
-          val start = pos
-          var e = scanLine()
-          val startLine = lineNo
-          var scanPos = -1 // escape-exact scanner cursor, per statement
-          var attempt = true
-          while (attempt) {
-            attempt = false
-            try {
-              if (p.parseSlice(content, start, e, startLine))
-                return ParsedLine(err = false, doc.repo, doc.path, doc.commit, startLine,
-                  p.subjKind, p.subjValue, p.predValue,
-                  p.objKind, p.objValue, p.objLang, p.objDt, 0, null)
-            } catch {
-              case ex: NtParseException =>
-                if (lenient && p.eoiInUnclosedLongLiteral && pos < n) {
-                  // Extend the window line by line, re-parsing only when
-                  // the ESCAPE-EXACT scanner (LongLitScan) finds the true
-                  // close or the window ends mid-escape (the escape
-                  // payload will be the line terminator — guaranteed
-                  // terminal error on the next re-parse). Each appended
-                  // char is scanned ONCE and re-parses are O(1) per
-                  // statement, so total parse cost stays O(window) even
-                  // on adversarial `\"""`-per-line input (the r2 guard
-                  // re-parsed on any appended `"""` substring: O(lines^2),
-                  // ADVICE r2). A document that ends unclosed gets one
-                  // final full-window re-parse for the exact document-mode
-                  // error.
-                  if (scanPos < 0) scanPos = e
-                  var doReparse = LongLitScan.pendingEscapeAt(content, start, e)
-                  if (doReparse && pos < n) e = scanLine()
-                  while (!doReparse && pos < n) {
-                    e = scanLine()
-                    val r = LongLitScan.scanToClose(content, scanPos, e)
-                    if (r >= 0) { scanPos = r; doReparse = true }
-                    else {
-                      scanPos = -r - 1
-                      if (LongLitScan.pendingEscapeAt(content, start, e)) {
-                        if (pos < n) e = scanLine()
-                        doReparse = true
-                      }
-                    }
-                  }
-                  attempt = true
-                } else
-                  return ParsedLine(err = true, doc.repo, doc.path, doc.commit, startLine,
-                    -1, null, null, -1, null, null, null, ex.charPos, ex.shortMessage)
-            }
-          }
-        }
-        null
-      }
-
-      def hasNext: Boolean = {
-        if (ready == null) ready = fetch()
-        ready != null
-      }
-      def next(): ParsedLine = {
-        if (!hasNext) Iterator.empty.next()
-        val r = ready; ready = null; r
-      }
-    }
+    parseExpr(corpus.toDF()).as[ParsedLine]
   }
 
   /**
-   * Expression-based variant of `parse` (same kernel semantics, same flat
-   * schema): uses the native ParseNtLines Catalyst generator, so the plan
-   * has no object-serde boundary — GenerateExec streams InternalRows and
-   * lineage columns are ordinary pruned projections. Prefer this path for
-   * throughput-critical jobs; `parse` remains the typed-API shape.
+   * The parse as a DataFrame over any frame with `repo, path, commit,
+   * lang, content` columns: the native ParseNtLines Catalyst generator,
+   * so the plan has no object-serde boundary — GenerateExec streams
+   * InternalRows and lineage columns are ordinary pruned projections.
+   * Columns come out in ParsedLine order.
    */
   def parseExpr(corpus: DataFrame): DataFrame = {
     corpus.select(

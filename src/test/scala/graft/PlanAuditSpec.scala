@@ -222,6 +222,21 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"), plan.take(500))
   }
 
+  test("typed parse and the line-per-row file source plan as the ParseNtLines generator") {
+    // one Spark parse route: a typed mapPartitions route would show up as
+    // MapPartitions over DeserializeToObject'd corpus rows
+    val files = java.nio.file.Files.createTempDirectory("graft-plan-parse")
+    java.nio.file.Files.writeString(files.resolve("a.nt"), "<a:b> <c:d> \"x\" .\n")
+    Seq(
+      "TripleExtract.parse" -> kg.TripleExtract.parse(kg.NtFileSource.documents(spark, s"$files/*.nt")),
+      "NtFileSource.parseLines" -> kg.NtFileSource.parseLines(spark, s"$files/*.nt")
+    ).foreach { case (name, parsed) =>
+      val plan = parsed.queryExecution.executedPlan.toString
+      assert(plan.contains("Generate") && !plan.contains("MapPartitions") &&
+        !plan.contains("DeserializeToObject"), s"$name:\n$plan")
+    }
+  }
+
   test("SPARQL ORDER BY + LIMIT plans as TakeOrderedAndProject, not a global sort") {
     // per-partition top-k then one merge — the only slice shape that
     // survives a 100 TB input; a global Sort before the limit would be

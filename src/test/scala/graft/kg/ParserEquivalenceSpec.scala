@@ -1,8 +1,10 @@
 package graft.kg
 
-import org.scalacheck.{Prop, Test => SC}
+import org.scalacheck.{Gen, Prop, Test => SC}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Differential suite: NtBytesParser (UTF-8 byte cursor, UTF8String
@@ -29,9 +31,12 @@ class ParserEquivalenceSpec extends AnyFunSuite {
     try Right(p.parseStatement(line, no))
     catch { case e: NtParseException => Left((e.charPos, e.getMessage)) }
 
+  private def outcomes(line: String, no: Int, strict: Boolean) =
+    (viaBytes(if (strict) NtBytesParser.strict else NtBytesParser.lenient, line, no),
+      viaChars(new NtLineParser(strict), line, no))
+
   private def assertSame(line: String, no: Int, strict: Boolean): Unit = {
-    val b = viaBytes(if (strict) NtBytesParser.strict else NtBytesParser.lenient, line, no)
-    val c = viaChars(new NtLineParser(strict), line, no)
+    val (b, c) = outcomes(line, no, strict)
     (b, c) match {
       case (Right(x), Right(y)) => assert(x == y, s"statement mismatch on: $line")
       case (Left((bp, bm)), Left((cp, cm))) =>
@@ -41,15 +46,66 @@ class ParserEquivalenceSpec extends AnyFunSuite {
     }
   }
 
+  private def fixtureLines(name: String): List[String] = {
+    val in = getClass.getResourceAsStream(s"/w3c/$name")
+    val content = try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8).mkString finally in.close()
+    scala.io.Source.fromString(content).getLines().toList
+  }
+
   test("all W3C fixture lines parse identically in both parsers") {
     Corpus.fixtureNames.foreach { n =>
-      val in = getClass.getResourceAsStream(s"/w3c/$n")
-      val content = try scala.io.Source.fromInputStream(in)(scala.io.Codec.UTF8).mkString finally in.close()
-      scala.io.Source.fromString(content).getLines().zipWithIndex.foreach { case (l, i) =>
+      fixtureLines(n).zipWithIndex.foreach { case (l, i) =>
         assertSame(l, i + 1, strict = true)
         assertSame(l, i + 1, strict = false)
       }
     }
+  }
+
+  test("byte-mutated W3C lines: a triple, a skip or an in-line NtParseException (property)") {
+    val lines = Corpus.fixtureNames.flatMap(fixtureLines).filter(_.nonEmpty).toIndexedSeq
+    val invalidUtf8 = Seq(0x80, 0xBF, 0xC0, 0xC3, 0xE2, 0xED, 0xF0, 0xF8, 0xFF).map(_.toByte)
+    val genMutant: Gen[Array[Byte]] = for {
+      line <- Gen.oneOf(lines)
+      kind <- Gen.choose(0, 6)
+      at0 <- Gen.choose(0, line.length * 4)
+      b <- Gen.choose(0, 255)
+      bad <- Gen.oneOf(invalidUtf8)
+      esc <- Gen.oneOf("\\u", "\\u0", "\\u00", "\\u000", "\\U0000", "\\U000000")
+    } yield {
+      val bytes = line.getBytes(StandardCharsets.UTF_8)
+      val at = at0 % (bytes.length + 1)
+      def insert(ins: Array[Byte]) = bytes.take(at) ++ ins ++ bytes.drop(at)
+      kind match {
+        case 0 => // flip one bit of one byte
+          val m = bytes.clone(); val i = at % bytes.length
+          m(i) = (m(i) ^ (1 << (b & 7))).toByte; m
+        case 1 => bytes.take(at) // truncation
+        case 2 => insert(Array('\r'.toByte))
+        case 3 => insert(esc.getBytes(StandardCharsets.UTF_8)) // split escape
+        case 4 => insert(Array(0.toByte))
+        case 5 => insert(Array(bad))
+        case _ => // overwrite one byte with any value
+          val m = bytes.clone(); m(at % bytes.length) = b.toByte; m
+      }
+    }
+    // ASCII-only counterexample label: test reports cannot carry lone surrogates
+    def show(bytes: Array[Byte]) =
+      bytes.map(b => if (b >= 0x20 && b < 0x7f) b.toChar.toString else f"\\x${b & 0xFF}%02X").mkString
+    val res = SC.check(SC.Parameters.default.withMinSuccessfulTests(3000),
+      Prop.forAll(genMutant) { bytes =>
+        val decodedLength = new String(bytes, StandardCharsets.UTF_8).length
+        val inLine = Seq(NtBytesParser.strict, NtBytesParser.lenient).forall { p =>
+          try { p.parseSlice(bytes, 0, bytes.length, 1); true }
+          catch { case e: NtParseException => e.charPos >= 1 && e.charPos <= decodedLength + 1 }
+        }
+        // on valid UTF-8 the byte kernel must agree with the char kernel
+        val agree = !UTF8String.fromBytes(bytes).isValid || {
+          val line = new String(bytes, StandardCharsets.UTF_8)
+          Seq(true, false).forall(strict => outcomes(line, 1, strict) match { case (b, c) => b == c })
+        }
+        (inLine && agree) :| show(bytes)
+      })
+    assert(res.passed, res.status.toString)
   }
 
   test("non-ASCII prefixes keep char-accurate error positions") {
@@ -57,6 +113,9 @@ class ParserEquivalenceSpec extends AnyFunSuite {
     assertSame("<u:caf\u00e9\u00e9\u00e9> <p:q> oops .", 3, strict = true)
     assertSame("<u:\u4e2d\u6587> x", 1, strict = true)
     assertSame("<u:\u00e9> <p:q> \"caf\u00e9\"@ .", 2, strict = true)
+    // a supplementary char at the error: "found" is its first UTF-16 unit
+    assertSame("\uD800\uDC00 x", 1, strict = true)
+    assertSame("<a:b> <p:q> \uD83D\uDE00 .", 1, strict = true)
     // and non-ASCII values round-trip
     assertSame("<u:\u00e9x> <p:\u4e2d> \"v\u00e9\u4e2d\"@en .", 1, strict = true)
   }
@@ -110,8 +169,16 @@ class ParserEquivalenceSpec extends AnyFunSuite {
       """<a:b> <c:d> "x"^^<dt:%ZZ> .""",
       """<a:b> <c:d> "x"@en-us-x .""",
       """<a:b><c:d>"x"@en .""",
-      """   <a:b>\t<c:d> "x" . # c""".replace("\\t", "\t")
+      """   <a:b>\t<c:d> "x" . # c""".replace("\\t", "\t"),
+      """<a:b> <c:d> "x\U00110000y" .""",
+      """<u:\UFFFFFFFF> <c:d> <e:f> .""",
+      "<a:b> <c:d> \"\\u\u0660\u0660\u0664\u0661\" ." // Arabic-Indic digits are not hex
     ).zipWithIndex.foreach { case (l, i) => assertSame(l, i + 1, strict = true) }
+    // an out-of-range \U escape is a parse error at its first digit, not
+    // the IllegalArgumentException of StringBuilder.appendCodePoint
+    val e = intercept[NtParseException](NtLineParser.strict.parseStatement("""<a:b> <c:d> "x\U00110000" .""", 1))
+    assert(e.charPos == 17 && e.shortMessage ==
+      "parse error in line 1 at char 17, \\U00110000 is not a valid code point")
   }
 }
 

@@ -292,53 +292,15 @@ class PipelineSpec extends AnyFunSuite {
       "<a:b> <p:q> \"\"\"a\"\"\n\"b\"\"\" .")).toDS()
     assert(TripleExtract.triples(TripleExtract.parse(c4)).collect()
       .map(_.obj.value).toList == List("a\"\"\n\"b"))
-
-    // the byte-path generator agrees on every case (twin kernels)
-    val all = c1.union(c2).union(c2b).union(c3).union(c4)
-    val viaKernel = TripleExtract.parse(all).toDF().collect().map(_.toSeq).toSet
-    val viaExpr = TripleExtract.parseExpr(all.toDF()).collect().map(_.toSeq).toSet
-    assert(viaExpr == viaKernel)
   }
 
   test("lenient extension matches re-parse-after-every-line semantics on fuzzed docs") {
-    // SEMANTIC ORACLE for LongLitScan: the O(n^2) definition — extend the
-    // statement window one physical line at a time and re-parse after
-    // EVERY extension. The production scanner must produce the identical
-    // row sequence on documents dense in quotes/backslashes/escapes.
-    def referenceParse(content: String): Seq[(Boolean, Int, String)] = {
-      val p = NtLineParser.lenient
-      val out = scala.collection.mutable.ArrayBuffer[(Boolean, Int, String)]()
-      val n = content.length
-      var pos = 0
-      var lineNo = 0
-      def scanLine(): Int = {
-        var e = pos
-        while (e < n && { val c = content.charAt(e); c != '\n' && c != '\r' }) e += 1
-        pos =
-          if (e < n && content.charAt(e) == '\r' && e + 1 < n && content.charAt(e + 1) == '\n') e + 2
-          else e + 1
-        lineNo += 1
-        e
-      }
-      while (pos < n) {
-        val start = pos
-        var e = scanLine()
-        val startLine = lineNo
-        var done = false
-        while (!done) {
-          try {
-            if (p.parseSlice(content, start, e, startLine))
-              out += ((false, startLine, p.objValue))
-            done = true // success, or comment/blank (false)
-          } catch {
-            case ex: NtParseException =>
-              if (p.eoiInUnclosedLongLiteral && pos < n) e = scanLine() // extend ONE line
-              else { out += ((true, startLine, ex.shortMessage)); done = true }
-          }
-        }
-      }
-      out.toSeq
-    }
+    // SEMANTIC ORACLE for LongLitScan: RouteOracle's O(n^2) definition —
+    // extend the statement window one physical line at a time and re-parse
+    // after EVERY extension. The production scanner must produce the
+    // identical row sequence on documents dense in quotes/backslashes/escapes.
+    def referenceParse(content: String): Seq[(Boolean, Int, String)] =
+      RouteOracle.rows(content, lenient = true).map(r => (r._1, r._2, if (r._1) r._11 else r._7))
 
     val pool = Array(
       "<a:b> <p:q> \"\"\"", "\"\"\"", "\"\"\" .", "\"\"\"@en .", "x y", "\\",
@@ -364,40 +326,15 @@ class PipelineSpec extends AnyFunSuite {
     val expected = docs.map(d => d.path ->
       (d.content, referenceParse(d.content))).toMap
     val corpus = docs.toDS()
-    // BOTH kernels against the oracle: the char Dataset kernel and the
-    // byte-twin native generator must each match per-line semantics
     def byPath(rows: Seq[(String, Boolean, Int, String)]) =
       rows.groupBy(_._1).view.mapValues(_.sortBy(_._3).map(r => (r._2, r._3, r._4)).toSeq).toMap
-    val viaKernel = byPath(TripleExtract.parse(corpus).collect().toSeq
-      .map(r => (r.path, r.err, r.line, if (r.err) r.message else r.obj)))
     val viaExpr = byPath(TripleExtract.parseExpr(corpus.toDF()).collect().toSeq
       .map(r => (r.getString(2), r.getBoolean(0), r.getInt(4),
         if (r.getBoolean(0)) r.getString(13) else r.getString(9))))
     for ((path, (content, exp)) <- expected) {
-      val k = viaKernel.getOrElse(path, Seq.empty)
       val e = viaExpr.getOrElse(path, Seq.empty)
-      assert(k == exp, s"$path (char kernel)\n--- content ---\n$content\n--- expected $exp\n--- got $k")
-      assert(e == exp, s"$path (byte generator)\n--- content ---\n$content\n--- expected $exp\n--- got $e")
+      assert(e == exp, s"$path\n--- content ---\n$content\n--- expected $exp\n--- got $e")
     }
-  }
-
-  test("native ParseNtLines generator matches the Dataset kernel exactly") {
-    val corpus = Corpus.w3cFixtures(spark).union(Seq(
-      CorpusRow("r", "len.nt", "c", TripleExtract.LangLenient,
-        "<a:b> <p:q> \"\"\"long \"lit\"\"\"\" .\nbad\n<a:b> <p:q> \"ok\" ."),
-      CorpusRow("r", "ml.nt", "c", TripleExtract.LangLenient,
-        "<a:b> <p:q> \"\"\"baz\nqux\"\"\" .\n<a:b> <p:r> \"\"\"t\"\"\"@en .\n<a:b> <p:s> \"\"\"open"),
-      CorpusRow("r", "mlcrlf.nt", "c", TripleExtract.LangLenient,
-        "<a:b> <p:q> \"\"\"c\r\nr\"\"\" .\r\n<a:b> <p:r> \"n\" .")).toDS())
-    val viaKernel = TripleExtract.parse(corpus).toDF()
-    val viaExpr = TripleExtract.parseExpr(corpus.toDF())
-    assert(viaExpr.schema.fieldNames.toSeq == viaKernel.schema.fieldNames.toSeq)
-    val k = viaKernel.collect().map(_.toSeq).toSet
-    val e = viaExpr.collect().map(_.toSeq).toSet
-    assert(e == k)
-    // and the plan has no object serde boundary
-    val plan = viaExpr.queryExecution.executedPlan.toString
-    assert(!plan.contains("DeserializeToObject") && plan.contains("Generate"))
   }
 
   test("compaction rewrites small files without changing the data") {
