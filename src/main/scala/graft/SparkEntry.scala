@@ -353,20 +353,12 @@ object SparkEntry {
         .select(Canonicalize.n3Statement(col("subj"), col("pred"), col("obj")).as("n3"))
     }),
 
-    // flagship: full parse -> skolemize -> canonicalize -> edges -> agg.
-    // r7: the mixed count + COUNT DISTINCT is spelled as an explicit
-    // two-level aggregate — per-(pred, subj) partial counts, then per-pred
-    // sum/count — which computes the identical result without Catalyst's
-    // Expand plan (Expand doubles every edge row ahead of the first
-    // exchange; the two-level form shuffles each row once, half the
-    // bytes). subj_id is never NULL (sha256 of a struct), so
-    // count(partial rows) == countDistinct(subj_id) exactly.
+    // flagship: full parse -> skolemize -> canonicalize -> edges -> agg
     "kg_entry_graph" -> ((s, dir) => {
       val corpus = nationCorpus(s, dir).union(documentsCorpus(s, dir))
       val edges = Materialize.edges(Canonicalize(Skolemize(parsedTriples(corpus))))
-      edges.groupBy("pred", "subj_id").agg(count(lit(1)).as("__n"))
-        .groupBy("pred").agg(sum(col("__n")).as("n_edges"),
-          count(lit(1)).as("n_subjects"))
+      edges.groupBy("pred").agg(count(lit(1)).as("n_edges"),
+        countDistinct(col("subj_id")).as("n_subjects"))
     }),
 
     // B9/B22-B24: bnode label charset + minimal whitespace
@@ -952,7 +944,8 @@ object SparkEntry {
       GraphOps.degrees(e)
     }),
 
-    // iterative min-label propagation connected components
+    // connected components (large-star/small-star rounds); maxIter = 4
+    // must suffice, since non-convergence is an error
     "kg_graph_components" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/nation.parquet")
         .select((col("n_nationkey") + 100).cast("long").as("src"),
@@ -1016,12 +1009,8 @@ object SparkEntry {
       val dups = Dedup.jaccardPairsFromShingleArrays(arr, cands)
         .filter(col("inter") * 5 >= col("union_") * 4)
         .select("a", "b")
-      // fail LOUDLY on non-convergence (ADVICE r3): partially contracted
-      // labels would otherwise surface only as a confusing hash mismatch
-      val (labels, converged) =
-        GraphOps.connectedComponentsWithStatus(dups, "a", "b", maxIter = 16)
-      require(converged, "td_dup_clusters: connected components did not converge")
-      labels.select(col("node_id").as("id"), col("component").as("cluster"))
+      GraphOps.connectedComponents(dups, "a", "b", maxIter = 16)
+        .select(col("node_id").as("id"), col("component").as("cluster"))
     }),
 
     // E-stage PageRank at KG shape (VERDICT r3 #8): over the MATERIALIZED

@@ -313,16 +313,18 @@ object Bgp {
     case PAlternative(parts) =>
       require(parts.sizeIs >= 2, s"an alternative path needs >= 2 parts: $p")
       parts.map(pathRel(base, _)).reduce(_ union _)
-    case PClosure(inner, op) =>
-      val rel = pathRel(base, inner)
-      op match {
-        case '+' => GraphOps.transitiveClosure(rel, "subj_id", "obj_id")
-        case '*' => GraphOps.transitiveClosure(rel, "subj_id", "obj_id")
-          .union(graphIdentity(base)).distinct()
-        case '?' => rel.union(graphIdentity(base)).distinct()
-        case other => throw new IllegalArgumentException(
-          s"unknown path closure operator '$other'")
-      }
+    case PClosure(inner, op) => closureRel(pathRel(base, inner), op, base)
+  }
+
+  /** The `+`, `*` or `?` closure of a (subj_id, obj_id) path relation:
+    * `+` is GraphOps.transitiveClosure (irreflexive, see its scaladoc),
+    * `*` adds the zero-length path over `base`'s terms, `?` is the hop or
+    * the zero-length path. */
+  private def closureRel(hop: DataFrame, op: Char, base: DataFrame): DataFrame = op match {
+    case '+' => GraphOps.transitiveClosure(hop, "subj_id", "obj_id")
+    case '*' => closureRel(hop, '+', base).union(graphIdentity(base)).distinct()
+    case '?' => hop.union(graphIdentity(base)).distinct()
+    case other => throw new IllegalArgumentException(s"unknown path closure operator '$other'")
   }
 
   private[kg] def patternRel(base: DataFrame, p: TriplePattern): DataFrame = {
@@ -358,25 +360,10 @@ object Bgp {
     }
     val pairPos = Seq("subj_id" -> p.subj, "obj_id" -> p.obj)
     val (rel, pos) = p.pred match {
-      case PlusPath(pr) =>
-        (GraphOps.transitiveClosure(pathHop(gbase, C(pr)), "subj_id", "obj_id"),
-          pairPos)
-      case StarPath(pr) =>
-        (GraphOps.transitiveClosure(pathHop(gbase, C(pr)), "subj_id", "obj_id")
-           .union(graphIdentity(gbase)).distinct(), pairPos)
-      case OptPath(pr) =>
-        (pathHop(gbase, C(pr)).union(graphIdentity(gbase)).distinct(), pairPos)
-      case GroupPath(inner, op) =>
-        val hop = pathHop(gbase, inner)
-        val r = op match {
-          case '+' => GraphOps.transitiveClosure(hop, "subj_id", "obj_id")
-          case '*' => GraphOps.transitiveClosure(hop, "subj_id", "obj_id")
-            .union(graphIdentity(gbase)).distinct()
-          case '?' => hop.union(graphIdentity(gbase)).distinct()
-          case other => throw new IllegalArgumentException(
-            s"unknown path group operator '$other'")
-        }
-        (r, pairPos)
+      case PlusPath(pr)         => (closureRel(pathHop(gbase, C(pr)), '+', gbase), pairPos)
+      case StarPath(pr)         => (closureRel(pathHop(gbase, C(pr)), '*', gbase), pairPos)
+      case OptPath(pr)          => (closureRel(pathHop(gbase, C(pr)), '?', gbase), pairPos)
+      case GroupPath(inner, op) => (closureRel(pathHop(gbase, inner), op, gbase), pairPos)
       case NestedPath(ast) =>
         (pathRel(gbase, ast), pairPos)
       case AltPath(_) | InvPath(_) | NegSet(_) | SeqPath(_) =>

@@ -117,11 +117,9 @@ object EntityResolution {
       // feeds CC's per-round contraction AND its node universe AND the
       // final label join — checkpoint the (small) verified edge list
       // once instead of re-running the block self-join per consumer;
-      // lazy (r7): CC's first checksum action materializes it
+      // lazy (r7): CC's first fingerprint action materializes it
       .localCheckpoint(false)
-    val (labels, converged) =
-      GraphOps.connectedComponentsWithStatus(pairs, "a", "b", maxIter = 50)
-    require(converged, "resolveEntities: connected components did not converge")
+    val labels = GraphOps.connectedComponents(pairs, "a", "b", maxIter = 50)
     entities.select(col(idCol).as("id"))
       .join(labels.withColumnRenamed("node_id", "id"), Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("canonical"))

@@ -20,12 +20,13 @@ object GraphOps {
   /**
    * Multi-source BFS shortest-path distances over the undirected graph,
    * capped at `maxDepth` hops: the KG traversal primitive ("everything
-   * within k hops of these entities"). Classic frontier iteration — each
-   * round is one equi-join of the current frontier against the edge list
-   * plus an anti-join against the visited set, so round cost is
-   * O(frontier-adjacent edges), the same shape at 10^12 edges; rounds
-   * are bounded by maxDepth and stop early when the frontier empties.
-   * First visit IS the shortest distance, so results are deterministic.
+   * within k hops of these entities"). Classic frontier iteration as a
+   * [[fixpoint]] over the distances found so far: round r joins the nodes
+   * at distance r - 1 against the edge list and anti-joins the visited
+   * set, so round cost is O(frontier-adjacent edges), the same shape at
+   * 10^12 edges. It stops early when a round finds no new node; reaching
+   * `maxDepth` is the cap by design, not an error. First visit IS the
+   * shortest distance, so results are deterministic.
    * Output: (node_id, dist) for every node within maxDepth (sources at 0).
    */
   def bfsDistances(edges: DataFrame, src: String, dst: String,
@@ -36,31 +37,14 @@ object GraphOps {
       .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
     val bidir = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .distinct().localCheckpoint(false) // lazy: round 1's count materializes it
-    var dists = sources.toDF("node_id").withColumn("dist", lit(0L))
-      .localCheckpoint(true)
-    var frontier = dists.select("node_id")
-    var d = 1L
-    var done = false
-    while (!done && d <= maxDepth) {
-      // LAZY checkpoints (still cut lineage immediately — localCheckpoint
-      // truncates the logical plan at call time): the count action both
-      // materializes the frontier and answers the emptiness probe, and
-      // the lazily-checkpointed dists is persisted by the NEXT round's
-      // count through the dependency chain — one job per round instead of
-      // three (r7)
-      val next = frontier.join(bidir, frontier("node_id") === bidir("u"))
+      .distinct().localCheckpoint(false) // cut once, read by every round
+    fixpoint(sources.distinct.toDF("node_id").withColumn("dist", lit(0L)), maxDepth) { (dists, round) =>
+      val next = dists.filter(col("dist") === round - 1L).select("node_id")
+        .join(bidir, col("node_id") === col("u"))
         .select(col("v").as("node_id")).distinct()
         .join(dists, Seq("node_id"), "left_anti")
-        .localCheckpoint(false)
-      if (next.count() == 0L) done = true
-      else {
-        dists = dists.union(next.withColumn("dist", lit(d))).localCheckpoint(false)
-        frontier = next
-        d += 1
-      }
-    }
-    dists
+      dists.union(next.withColumn("dist", lit(round.toLong)))
+    }._1
   }
 
   /**
@@ -170,20 +154,20 @@ object GraphOps {
    * doubles each round and a diameter-D hierarchy closes in O(log D)
    * joins — the property that matters for deep ontology chains, where
    * naive one-hop expansion (frontier semi-naive) costs D shuffle
-   * rounds. Each round is one equi-join + distinct; lineage cut and
-   * convergence detected by a count+xor checksum action (same recipe as
-   * connectedComponents). Output: distinct pairs reachable in >= 1 step
-   * (src <> dst), under the CALLER'S `src`/`dst` column names.
+   * rounds. Each round is one equi-join + distinct, run as a [[fixpoint]]
+   * step. Output: distinct pairs reachable in >= 1 step (src <> dst),
+   * under the CALLER'S `src`/`dst` column names.
    *
    * Closure SIZE is inherently O(n*reach) — at web scale you close
    * curated hierarchy predicates (subClassOf over a vocabulary), never
-   * the instance graph; `maxIter` bounds runaway inputs.
+   * the instance graph; `maxIter` doubling rounds (paths up to 2^maxIter
+   * hops) bound runaway inputs, and running out of them is an error.
    *
    * CONVENTION (documented deviation, ADVICE r6): the closure is
    * IRREFLEXIVE — `a =!= b` is filtered every round, so `x p+ x` pairs
    * arising from cycles are NOT emitted, where SPARQL 1.1
    * arbitrary-length-path semantics would include them. Every consumer
-   * (PlusPath/PClosure lowering in Bgp, the DuckDB oracle mirrors, and
+   * (the closure lowering in Bgp, the DuckDB oracle mirrors, and
    * GraphQueryDifferentialSpec's brute force) shares this convention;
    * the driver corpora are acyclic, so the engines agree. Changing it
    * means changing ALL of those together — a build-round item, not an
@@ -191,39 +175,14 @@ object GraphOps {
    */
   def transitiveClosure(edges: DataFrame, src: String, dst: String,
                         maxIter: Int = 20): DataFrame = {
-    // lazy checkpoint: the checksum action below materializes it in the
-    // same job, and its count doubles as the emptiness probe (r7 — was
-    // three actions: eager checkpoint, checksum, isEmpty)
-    var paths = edges.select(col(src).as("a"), col(dst).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(false)
-
-    def checksum(d: DataFrame): (Long, Long) = {
-      val r = d.agg(count(lit(1)), expr("bit_xor(xxhash64(a, b))")).collect()(0)
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-
-    var cs = checksum(paths)
-    var converged = cs._1 == 0L
-    var i = 0
-    while (!converged && i < maxIter) {
+    val seed = edges.select(col(src).as("a"), col(dst).as("b"))
+      .filter(col("a") =!= col("b")).distinct()
+    val paths = converged("transitiveClosure", maxIter)(fixpoint(seed, maxIter) { (paths, _) =>
       val hop = paths.as("l").join(paths.as("r"), col("l.b") === col("r.a"))
         .select(col("l.a").as("a"), col("r.b").as("b"))
         .filter(col("a") =!= col("b"))
-      // LAZY checkpoint + the checksum action materializes it: one job
-      // per round instead of two (r7 — the eager checkpoint ran its own
-      // materialization job and the checksum immediately re-scanned the
-      // freshly cached blocks; Spark completes a lazy local checkpoint
-      // as part of the first action's run, so fusing them halves the
-      // per-round job count at any scale)
-      paths = paths.union(hop).distinct().localCheckpoint(false)
-      val next = checksum(paths)
-      converged = next == cs
-      cs = next
-      i += 1
-    }
-    require(converged, s"transitiveClosure: not closed after $maxIter doubling rounds " +
-      "(covers paths up to 2^iter hops — the input is deeper than expected or cyclic " +
-      "beyond the bound)")
+      paths.union(hop).distinct()
+    })
     paths.select(col("a").as(src), col("b").as(dst))
   }
 
@@ -235,40 +194,25 @@ object GraphOps {
    * the graph's degeneracy layering, and each round's cost shrinks with
    * the surviving edge set. The k-core is where KG curation looks for
    * the "dense nucleus" (well-connected entities) vs peelable fringe.
+   * A peeled edge set is a subset of the one before, so the driver's
+   * fingerprint repeats exactly when no node was weak.
    *
    * Input treated as undirected, self-loops dropped. Output: (node_id)
    * rows — the members of the k-core (empty frame if none).
    */
   def kCore(edges: DataFrame, src: String, dst: String, k: Int,
             maxIter: Int = 100): DataFrame = {
-    // lazy checkpoints + edge-count convergence (r7): a weak node always
-    // carries >= 1 surviving edge, so the edge count strictly decreases
-    // exactly when the weak set is non-empty — the peeled frame's count
-    // is both the materializing action and the fixpoint probe, one job
-    // per round instead of two (weak job + isEmpty + e job before)
-    var e = edges
+    val seed = edges
       .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(false)
-    var n = e.count()
-    var done = n == 0L
-    var i = 0
-    while (!done && i < maxIter) {
+      .filter(col("a") =!= col("b")).distinct()
+    val e = converged("kCore", maxIter)(fixpoint(seed, maxIter) { (e, _) =>
       val deg = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
         .groupBy("n").agg(count(lit(1)).as("dg"))
+      // lazy: shared by both anti-joins, materialized by the round's action
       val weak = deg.filter(col("dg") < k).select("n").localCheckpoint(false)
-      val e2 = e.join(weak.withColumnRenamed("n", "a"), Seq("a"), "left_anti")
+      e.join(weak.withColumnRenamed("n", "a"), Seq("a"), "left_anti")
         .join(weak.withColumnRenamed("n", "b"), Seq("b"), "left_anti")
-        .localCheckpoint(false)
-      val n2 = e2.count()
-      if (n2 == n) done = true
-      else {
-        e = e2
-        n = n2
-        done = n == 0L
-        i += 1
-      }
-    }
-    require(done, s"kCore: peeling did not reach a fixpoint in $maxIter rounds")
+    })
     e.select(col("a").as("node_id")).union(e.select(col("b").as("node_id"))).distinct()
   }
 
@@ -282,8 +226,9 @@ object GraphOps {
    * any component onto its minimum id in O(log n) rounds REGARDLESS of
    * diameter — the property that matters at 10^12-edge scale, where a
    * long path would cost min-label propagation O(diameter) shuffles.
-   * Each round is two aggregate+join shuffles plus one cheap checksum
-   * action for convergence detection; lineage is cut per round.
+   * Each round is two window+distinct shuffles, run as a [[fixpoint]]
+   * step; running out of `maxIter` rounds is an error, since partly
+   * contracted labels would split a component.
    *
    * Input edges (src, dst) are treated as undirected; self-loops are
    * dropped but their nodes kept. Output: (node_id, component) where
@@ -291,42 +236,12 @@ object GraphOps {
    */
   def connectedComponents(edges: DataFrame, src: String, dst: String,
                           maxIter: Int = 50): DataFrame = {
-    val (labels, converged) = connectedComponentsWithStatus(edges, src, dst, maxIter)
-    if (!converged)
-      // the min-aggregate below keeps output well-formed (one row per
-      // node) but labels may be PARTIALLY CONTRACTED — never return that
-      // silently (ADVICE r2): callers needing the flag use ...WithStatus
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents: maxIter=$maxIter expired before convergence; " +
-          "labels may be partially contracted (two nodes of one component " +
-          "can carry different ids). Raise maxIter or use " +
-          "connectedComponentsWithStatus to branch on the flag.")
-    labels
-  }
-
-  /** As `connectedComponents`, returning (labels, converged). */
-  def connectedComponentsWithStatus(edges: DataFrame, src: String, dst: String,
-                                    maxIter: Int = 50): (DataFrame, Boolean) = {
     val nodes = edges.select(col(src).as("node_id"))
       .union(edges.select(col(dst).as("node_id"))).distinct()
-    // lazy checkpoint + checksum fusion, count doubles as emptiness probe
-    // (same three-actions-to-one collapse as transitiveClosure — r7)
-    var e = edges
+    val seed = edges
       .select(greatest(col(src), col(dst)).as("u"), least(col(src), col(dst)).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(false)
-
-    def checksum(d: DataFrame): (Long, Long) = {
-      // xor-fold of row hashes: overflow-free (ANSI-safe) set fingerprint;
-      // rows are distinct so xor cancellation cannot hide a change
-      val r = d.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).collect()(0)
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-
-    var cs = checksum(e)
-    var converged = cs._1 == 0L
-    var i = 0
     // per-star min attached via a WINDOW over the star root instead of a
     // groupBy + self-join (r7, guide §2.4): the aggregate+join spelling
     // paid an exchange for the aggregate AND an exchange for the join
@@ -334,9 +249,9 @@ object GraphOps {
     // exchange that clusters the star, and the following distinct reuses
     // that clustering (HashPartitioning(u) satisfies the (u, v) dedup's
     // distribution), so a round costs 2 exchanges instead of 6. Same
-    // math, same rows — GraphOpsSpec + the CC differential specs pin it.
+    // math, same rows — OpsSpec and OptimizationEquivalenceSpec pin it.
     val wU = org.apache.spark.sql.expressions.Window.partitionBy("u")
-    while (!converged && i < maxIter) {
+    val e = converged("connectedComponents", maxIter)(fixpoint(seed, maxIter) { (e, _) =>
       // large-star: for each u, m = min(N(u) + {u}); emit (v, m) for v > u
       val nbrs = e.union(e.select(col("v").as("u"), col("u").as("v")))
       val ls = nbrs
@@ -346,32 +261,63 @@ object GraphOps {
         .distinct()
       // small-star: edges already point large->small, so for each u,
       // m = min of its smaller neighbors; re-hang them (and u) onto m
-      val ss = ls
-        .withColumn("m", min(col("v")).over(wU))
+      ls.withColumn("m", min(col("v")).over(wU))
         .select(explode(array(
           struct(col("v").as("a"), col("m").as("b")),
           struct(col("u").as("a"), col("m").as("b")))).as("p"))
         .select(col("p.a").as("u"), col("p.b").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct()
-      // lazy checkpoint, materialized BY the checksum action: one job per
-      // round instead of two (same fusion as transitiveClosure — r7)
-      e = ss.localCheckpoint(eager = false)
-      val next = checksum(e)
-      converged = next == cs
-      cs = next
-      i += 1
-    }
-    // fixpoint is a star forest (child -> component root); roots and
-    // isolated / self-loop-only nodes label themselves. The min-aggregate
-    // keeps the output well-formed (exactly one row per node) even if
-    // maxIter expired before convergence — mid-algorithm a node can hold
-    // edges to two different smaller ids, which a bare join would emit as
-    // two conflicting rows.
-    val labels = nodes.join(
+    })
+    // the fixpoint is a star forest (child -> component root); roots and
+    // isolated / self-loop-only nodes label themselves
+    nodes.join(
         e.groupBy(col("u").as("node_id")).agg(min(col("v")).as("root")),
         Seq("node_id"), "left")
       .select(col("node_id"), coalesce(col("root"), col("node_id")).as("component"))
-    (labels, converged)
+  }
+
+  /**
+   * The one loop behind the iterative operators: state 0 is `init`, and
+   * round r = 1..maxIter computes state r = step(state r-1, r). It stops
+   * at the first state whose (count, bit_xor(xxhash64(all columns)))
+   * fingerprint equals the previous state's, or that is empty, and
+   * returns the last state with whether it stopped before the bound.
+   *
+   * Each state is LAZILY checkpointed — the lineage is cut at call time —
+   * and the round's one fingerprint action also materializes that
+   * checkpoint, so a round costs one action.
+   *
+   * Sound only under two preconditions, which every step here keeps:
+   *  - a state's rows are distinct, so xor cancellation cannot hide a
+   *    change;
+   *  - a step maps an empty state to an empty state, so an empty state
+   *    is a fixpoint.
+   */
+  private def fixpoint(init: DataFrame, maxIter: Int)(
+      step: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
+    def fingerprint(d: DataFrame): (Long, Long) = {
+      val r = d.agg(count(lit(1)), bit_xor(xxhash64(d.columns.toSeq.map(col): _*)))
+        .collect()(0)
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
+    var state = init.localCheckpoint(false)
+    var fp = fingerprint(state)
+    var round = 0
+    var done = fp._1 == 0L
+    while (!done && round < maxIter) {
+      round += 1
+      state = step(state, round).localCheckpoint(false)
+      val next = fingerprint(state)
+      done = next == fp || next._1 == 0L
+      fp = next
+    }
+    (state, done)
+  }
+
+  /** A fixpoint's final state, or an error naming the operator and bound. */
+  private def converged(op: String, maxIter: Int)(r: (DataFrame, Boolean)): DataFrame = {
+    require(r._2, s"$op: no fixpoint within maxIter = $maxIter rounds")
+    r._1
   }
 }

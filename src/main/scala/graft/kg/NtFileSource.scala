@@ -1,5 +1,6 @@
 package graft.kg
 
+import java.nio.charset.{Charset, StandardCharsets}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,22 +47,28 @@ object NtFileSource {
 
   /**
    * A5 codec parity: the reference's Loader accepts arbitrary charsets
-   * (Loader.scala:34-44). For non-UTF-8 sources, read the raw bytes and
-   * decode with the built-in `decode` expression (codegen'd, per-file).
-   * No decompression on this path (binaryFile reads verbatim).
+   * (Loader.scala:34-44). Reads each file's raw bytes (binaryFile, no
+   * decompression). UTF-8, under any of its names, is cast to a string
+   * without decoding, so malformed UTF-8 becomes the parse generator's
+   * per-window error rows exactly as through `documents`. Any other
+   * charset goes through the built-in `decode`, for which malformed input
+   * fails the job with Spark's MALFORMED_CHARACTER_CODING error (a
+   * single-byte charset such as ISO-8859-1 has no malformed input).
    */
   def documentsWithCharset(spark: SparkSession, pathGlob: String, charset: String,
                            repo: String = "files",
                            commit: String = Corpus.FixedCommit,
                            lang: String = TripleExtract.LangStrict): Dataset[CorpusRow] = {
     import spark.implicits._
+    val utf8 = scala.util.Try(Charset.forName(charset)).toOption.contains(StandardCharsets.UTF_8)
     spark.read.format("binaryFile").load(pathGlob)
       .select(
         lit(repo).as("repo"),
         col("path"),
         lit(commit).as("commit"),
         lit(lang).as("lang"),
-        decode(col("content"), charset).as("content"))
+        (if (utf8) col("content").cast("string") else decode(col("content"), charset))
+          .as("content"))
       .as[CorpusRow]
   }
 

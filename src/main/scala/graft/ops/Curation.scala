@@ -262,15 +262,10 @@ object Curation {
                     trainPct: Int = 80, valPct: Int = 10): DataFrame = {
     require(trainPct > 0 && valPct >= 0 && trainPct + valPct < 100,
       "need train + val < 100 with a nonempty test remainder")
-    // convergence is REQUIRED: partially-contracted clusters would put
-    // two near-dup docs in different splits — the exact leak this
-    // function exists to prevent — so a warn-and-continue is not enough
-    val (cc, converged) =
-      graft.kg.GraphOps.connectedComponentsWithStatus(pairs, "a", "b")
-    require(converged,
-      "leakFreeSplit: connected components did not converge; refusing to " +
-        "emit a split that could leak near-duplicates across train/eval")
-    val clusters = cc.withColumnRenamed("node_id", "id")
+    // connectedComponents fails rather than return partly contracted
+    // clusters, which would put two near-dup docs in different splits
+    val clusters = graft.kg.GraphOps.connectedComponents(pairs, "a", "b")
+      .withColumnRenamed("node_id", "id")
     val pct = Dedup.hash64(
       concat(lit("split:"), col("cluster").cast("string"))) % 100
     docs.select(id.as("id"))

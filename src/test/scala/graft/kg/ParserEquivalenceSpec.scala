@@ -37,13 +37,7 @@ class ParserEquivalenceSpec extends AnyFunSuite {
 
   private def assertSame(line: String, no: Int, strict: Boolean): Unit = {
     val (b, c) = outcomes(line, no, strict)
-    (b, c) match {
-      case (Right(x), Right(y)) => assert(x == y, s"statement mismatch on: $line")
-      case (Left((bp, bm)), Left((cp, cm))) =>
-        assert(bp == cp, s"char position mismatch on: $line\nbytes=$bm\nchars=$cm")
-        assert(bm == cm, s"error message mismatch on: $line")
-      case _ => fail(s"outcome mismatch on: $line\nbytes=$b\nchars=$c")
-    }
+    if (b != c) fail(s"mismatch on: ${Escaped(line)}\nbytes=${Escaped(b.toString)}\nchars=${Escaped(c.toString)}")
   }
 
   private def fixtureLines(name: String): List[String] = {
@@ -88,9 +82,6 @@ class ParserEquivalenceSpec extends AnyFunSuite {
           val m = bytes.clone(); m(at % bytes.length) = b.toByte; m
       }
     }
-    // ASCII-only counterexample label: test reports cannot carry lone surrogates
-    def show(bytes: Array[Byte]) =
-      bytes.map(b => if (b >= 0x20 && b < 0x7f) b.toChar.toString else f"\\x${b & 0xFF}%02X").mkString
     val res = SC.check(SC.Parameters.default.withMinSuccessfulTests(3000),
       Prop.forAll(genMutant) { bytes =>
         val decodedLength = new String(bytes, StandardCharsets.UTF_8).length
@@ -103,9 +94,9 @@ class ParserEquivalenceSpec extends AnyFunSuite {
           val line = new String(bytes, StandardCharsets.UTF_8)
           Seq(true, false).forall(strict => outcomes(line, 1, strict) match { case (b, c) => b == c })
         }
-        (inLine && agree) :| show(bytes)
+        (inLine && agree) :| Escaped(bytes)
       })
-    assert(res.passed, res.status.toString)
+    assert(res.passed, Escaped(res.status.toString))
   }
 
   test("non-ASCII prefixes keep char-accurate error positions") {
@@ -157,7 +148,7 @@ class ParserEquivalenceSpec extends AnyFunSuite {
         val c = viaChars(NtLineParser.strict, line, 1)
         b == c && b == Right(st)
       })
-    assert(res.passed, res.status.toString)
+    assert(res.passed, Escaped(res.status.toString))
   }
 
   test("escape-heavy and percent-run lines agree") {

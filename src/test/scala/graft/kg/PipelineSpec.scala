@@ -333,7 +333,8 @@ class PipelineSpec extends AnyFunSuite {
         if (r.getBoolean(0)) r.getString(13) else r.getString(9))))
     for ((path, (content, exp)) <- expected) {
       val e = viaExpr.getOrElse(path, Seq.empty)
-      assert(e == exp, s"$path\n--- content ---\n$content\n--- expected $exp\n--- got $e")
+      if (e != exp) fail(s"$path\n--- content ---\n${Escaped(content)}\n" +
+        s"--- expected ${Escaped(exp.toString)}\n--- got ${Escaped(e.toString)}")
     }
   }
 

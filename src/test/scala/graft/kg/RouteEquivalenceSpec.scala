@@ -2,7 +2,7 @@ package graft.kg
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import RouteOracle.OracleRow
@@ -10,7 +10,8 @@ import RouteEquivalenceSpec.Doc
 
 /**
  * Every Spark parse entry point — `TripleExtract.parse`, `parseExpr`, SQL
- * `parse_nt`, and `NtFileSource.documents` files through `parse` — gives
+ * `parse_nt`, and `NtFileSource.documents` and UTF-8
+ * `documentsWithCharset` files through `parse` — gives
  * the per-line NtLineParser oracle's rows (RouteOracle) on the same
  * document bytes, including raw invalid UTF-8, which a string column can
  * hold when it comes from a binary cast or a text file.
@@ -52,8 +53,9 @@ class RouteEquivalenceSpec extends AnyFunSuite {
       .collect().toSeq.map(r => r.getAs[String]("path") -> RouteOracle.of(r)))
   }
 
-  /** Each document written verbatim to a file, read back per mode. */
-  private def viaFiles(docs: Seq[Doc]): Rows = {
+  /** Each document written verbatim to a file, read back per mode with
+    * `read(glob, lang)`. */
+  private def viaFiles(docs: Seq[Doc])(read: (String, String) => Dataset[CorpusRow]): Rows = {
     val root = Files.createTempDirectory("graft-route")
     val names = docs.zipWithIndex.map { case (d, i) =>
       val dir = root.resolve(d.lang)
@@ -62,19 +64,27 @@ class RouteEquivalenceSpec extends AnyFunSuite {
       s"d$i.nt" -> d.path
     }.toMap
     val rows = docs.map(_.lang).distinct.flatMap { lang =>
-      TripleExtract.parse(NtFileSource.documents(spark, s"$root/$lang/*", lang = lang))
+      TripleExtract.parse(read(s"$root/$lang/*", lang))
         .collect().toSeq.map(r => names(r.path.split('/').last) -> RouteOracle.of(r))
     }
     byPath(rows)
   }
 
+  private def documents(glob: String, lang: String) =
+    NtFileSource.documents(spark, glob, lang = lang)
+  private def withCharset(charset: String)(glob: String, lang: String) =
+    NtFileSource.documentsWithCharset(spark, glob, charset, lang = lang)
+
   private def assertAllRoutes(docs: Seq[Doc]): Unit = {
     val exp = expected(docs)
     assert(exp.nonEmpty)
     for ((route, got) <- Seq("parse" -> viaParse(docs), "parseExpr" -> viaParseExpr(docs),
-           "parse_nt" -> viaSql(docs), "documents+parse" -> viaFiles(docs));
+           "parse_nt" -> viaSql(docs), "documents+parse" -> viaFiles(docs)(documents),
+           "documentsWithCharset+parse" -> viaFiles(docs)(withCharset("UTF-8")));
          path <- (exp.keySet ++ got.keySet).toSeq.sorted)
-      assert(got.get(path) == exp.get(path), s"$route on $path")
+      if (got.get(path) != exp.get(path))
+        fail(s"$route on $path: got ${Escaped(got.get(path).toString)}, " +
+          s"expected ${Escaped(exp.get(path).toString)}")
   }
 
   test("W3C fixtures and the skewed synthetic corpus: every route gives the oracle's rows") {
@@ -136,6 +146,8 @@ class RouteEquivalenceSpec extends AnyFunSuite {
       Doc("badend.nt", TripleExtract.LangStrict, utf8("<a:b> <p:q> \"ok\" . # ") ++ Array(0xF0.toByte)))
     assertAllRoutes(docs)
     val exp = expected(docs)
+    // a UTF-8 alias takes the same cast, not Spark's failing `decode`
+    assert(viaFiles(docs)(withCharset("utf8")) == exp)
     assert(exp("bad.nt")(1) == ((true, 2, -1.toByte, null, null, -1.toByte, null, null, null, 15,
       "parse error in line 2 at char 15, malformed UTF-8 input [C3]")))
     assert(exp("bad.nt").map(r => (r._1, r._2)) == Seq((false, 1), (true, 2), (false, 3)))

@@ -49,9 +49,7 @@ class DedupSkewSpec extends AnyFunSuite {
     assert(starA >= 1 && starA <= 4, s"clones hang off $starA keepers — star path bypassed")
     // connectivity: components over the candidate edges put every clone
     // (and the cloned original) into ONE cluster
-    val (labels, converged) =
-      graft.kg.GraphOps.connectedComponentsWithStatus(cands, "a", "b")
-    assert(converged)
+    val labels = graft.kg.GraphOps.connectedComponents(cands, "a", "b")
     val cloneComponents = labels
       .filter(col("node_id") > maxId)
       .select(countDistinct(col("component"))).collect()(0).getLong(0)
