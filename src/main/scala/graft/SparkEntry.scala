@@ -44,6 +44,14 @@ object SparkEntry {
   private def parsedTriples(c: Dataset[CorpusRow]): DataFrame =
     TripleExtract.assembleTriples(TripleExtract.parseExpr(c.toDF()))
 
+  /** Parsed, skolemized and canonicalized: the linked triples of a corpus. */
+  private def linked(c: Dataset[CorpusRow]): DataFrame = Canonicalize(Skolemize(parsedTriples(c)))
+
+  /** The linked edges of a corpus, checkpointed: the BGP/SPARQL gates scan
+    * them once per pattern, so the parse and the three sha256 ids run once. */
+  private def linkedEdges(c: Dataset[CorpusRow]): DataFrame =
+    Materialize.edges(linked(c)).localCheckpoint(false)
+
   /**
    * Small-input parallelism guard: a few-MB parquet is one row group and
    * parquet cannot split below row-group boundaries, so every narrow
@@ -124,13 +132,15 @@ object SparkEntry {
    * corpus parse single-pass across the two materialization jobs.
    */
   private def sparqlGraph(c: Dataset[CorpusRow]): (DataFrame, DataFrame) = {
-    // LAZY checkpoints (r7): each frame is still ONE cached RDD — every
-    // pattern scan / bindValues join reuses the same blocks, so the r5
-    // recompute hazard cannot return — but the three materialization
-    // jobs (triples, edges, nodes) now fuse into the query's own action:
-    // the edges/nodes RDDs persist on first computation and the triples
-    // RDD persists as their shared dependency, parsed once.
-    val t = Canonicalize(Skolemize(parsedTriples(c))).localCheckpoint(false)
+    // Each frame is ONE cached RDD — every pattern scan / bindValues join
+    // reuses the same blocks, so the r5 recompute hazard cannot return,
+    // and the triples are parsed once. The checkpoints are not deferred
+    // work: under AQE each localCheckpoint(false) runs the shuffle-map
+    // stages under it when it is called (a corpus fan-out repartition,
+    // the nodes distinct), and only the result stages wait for the
+    // query's action (graft.Probe: kg_sparql_bind runs 3 jobs while it is
+    // built, both its shuffle-writing stages among them, 4 in its write).
+    val t = linked(c).localCheckpoint(false)
     (Materialize.edges(t).localCheckpoint(false),
       Materialize.nodes(t).localCheckpoint(false))
   }
@@ -214,7 +224,7 @@ object SparkEntry {
     // exchange equal the plain relational aggregate (partition balance
     // itself is spec-asserted; this proves no row is lost or duplicated)
     "kg_salted_edges" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(nationCorpus(s, dir)))))
+      val e = Materialize.edges(linked(nationCorpus(s, dir)))
       Materialize.saltedRepartition(e, col("subj_id"),
         saltFrom = Seq(col("repo"), col("path"), col("commit"), col("line")),
         salts = 16, numPartitions = s.sessionState.conf.numShufflePartitions)
@@ -319,13 +329,13 @@ object SparkEntry {
 
     // E7/D1: nodes table (distinct terms with sha256 ids)
     "kg_nodes" -> ((s, dir) => {
-      Materialize.nodes(Canonicalize(Skolemize(parsedTriples(nationCorpus(s, dir)))))
+      Materialize.nodes(linked(nationCorpus(s, dir)))
         .select(col("id"), col("kind").cast("int").as("kind"), col("value"), col("lang"), col("dt"))
     }),
 
     // E7: edges table (node ids + lineage line numbers)
     "kg_edges" -> ((s, dir) => {
-      Materialize.edges(Canonicalize(Skolemize(parsedTriples(nationCorpus(s, dir)))))
+      Materialize.edges(linked(nationCorpus(s, dir)))
         .select(col("subj_id"), col("pred"), col("obj_id"), col("line"))
     }),
 
@@ -356,7 +366,7 @@ object SparkEntry {
     // flagship: full parse -> skolemize -> canonicalize -> edges -> agg
     "kg_entry_graph" -> ((s, dir) => {
       val corpus = nationCorpus(s, dir).union(documentsCorpus(s, dir))
-      val edges = Materialize.edges(Canonicalize(Skolemize(parsedTriples(corpus))))
+      val edges = Materialize.edges(linked(corpus))
       edges.groupBy("pred").agg(count(lit(1)).as("n_edges"),
         countDistinct(col("subj_id")).as("n_subjects"))
     }),
@@ -501,7 +511,7 @@ object SparkEntry {
     // end-to-end result is value-checked: predicate co-occurrence per
     // subject over the nation-derived edge set
     "kg_bucketed_traversal" -> ((s, dir) => {
-      val edges = Materialize.edges(Canonicalize(Skolemize(parsedTriples(nationCorpus(s, dir)))))
+      val edges = Materialize.edges(linked(nationCorpus(s, dir)))
         .select("subj_id", "pred", "obj_id")
       // idempotent rebuild: drop the catalog entry AND any orphaned
       // location (a killed run leaves the dir without the table)
@@ -1022,7 +1032,7 @@ object SparkEntry {
     // scaled-integer BIGINT, so the result is EXACT and hash-comparable.
     "kg_pagerank_edges" -> ((s, dir) => {
       val corpus = nationCorpus(s, dir).union(documentsCorpus(s, dir))
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(corpus))))
+      val e = Materialize.edges(linked(corpus))
       def idLong(c: String) = conv(substr(col(c), lit(1), lit(15)), 16, 10).cast("long")
       GraphOps.pagerankScaled(
         e.select(idLong("subj_id").as("src"), idLong("obj_id").as("dst")),
@@ -1039,9 +1049,7 @@ object SparkEntry {
     // real bucketed edges TABLE the scans are free and Exchange-free —
     // PlanAuditSpec gates that plan)
     "kg_bgp_match" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Bgp.matchPatterns(e, Seq(
+      Bgp.matchPatterns(linkedEdges(documentsCorpus(s, dir)), Seq(
         Bgp.TriplePattern(Bgp.V("doc"), Bgp.C("urn:col:documents:lang"),
           Bgp.C(Bgp.litId("en"))),
         Bgp.TriplePattern(Bgp.V("doc"), Bgp.C("urn:col:documents:source"),
@@ -1191,7 +1199,7 @@ object SparkEntry {
     // edges: one row per subject, a column per predicate, min-object
     // determinism (the "KG to ML feature table" step)
     "kg_property_table" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
+      val e = Materialize.edges(linked(documentsCorpus(s, dir)))
       Materialize.propertyTable(e, Seq(
           "urn:col:documents:lang", "urn:col:documents:source", "urn:col:documents:text"))
         .select(col("subj_id").as("doc"),
@@ -1215,9 +1223,7 @@ object SparkEntry {
     // anyway (PlanAuditSpec pins the plan), and equi-join commutativity
     // makes the bindings identical to the well-ordered twin
     "kg_bgp_reorder" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Bgp.matchPatterns(e, Seq(
+      Bgp.matchPatterns(linkedEdges(documentsCorpus(s, dir)), Seq(
         Bgp.TriplePattern(Bgp.V("doc"), Bgp.C("urn:col:documents:source"),
           Bgp.V("src")),
         Bgp.TriplePattern(Bgp.V("doc"), Bgp.C("urn:col:documents:lang"),
@@ -1229,9 +1235,7 @@ object SparkEntry {
     // post-match predicates are plain Column filters Catalyst pushes
     // into the join where legal
     "kg_bgp_filter" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Bgp.matchPatterns(e,
+      Bgp.matchPatterns(linkedEdges(documentsCorpus(s, dir)),
         Seq(
           Bgp.TriplePattern(Bgp.V("doc"), Bgp.C("urn:col:documents:lang"), Bgp.V("l")),
           Bgp.TriplePattern(Bgp.V("doc"), Bgp.C("urn:col:documents:source"), Bgp.V("src"))),
@@ -1259,9 +1263,7 @@ object SparkEntry {
     // sets — the zh branch binds no ?src, so its rows NULL-pad that
     // column (union-of-solution-mappings semantics, zero-shuffle concat)
     "kg_bgp_union" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Bgp.matchUnion(e, Seq(
+      Bgp.matchUnion(linkedEdges(documentsCorpus(s, dir)), Seq(
         Seq(
           Bgp.TriplePattern(Bgp.V("d"), Bgp.C("urn:col:documents:lang"),
             Bgp.C(Bgp.litId("en"))),
@@ -1277,9 +1279,7 @@ object SparkEntry {
     // recipe, OPTIONAL left-joins, FILTER applies after the group
     // (SparqlParserSpec pins parsed == programmatic on every construct)
     "kg_sparql_parse" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """SELECT ?doc ?src WHERE {
           |  ?doc <urn:col:documents:lang> "en" .
           |  OPTIONAL { ?doc <urn:col:documents:source> ?src }
@@ -1292,9 +1292,7 @@ object SparkEntry {
     // (the anti side is projected to the shared column and deduped
     // before the join, so no group payload crosses the shuffle)
     "kg_bgp_minus" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Bgp.matchGroup(e,
+      Bgp.matchGroup(linkedEdges(documentsCorpus(s, dir)),
         required = Seq(
           Bgp.TriplePattern(Bgp.V("d"), Bgp.C("urn:col:documents:lang"), Bgp.V("l"))),
         minus = Seq(Seq(
@@ -1305,9 +1303,7 @@ object SparkEntry {
     // SPARQL predicate alternatives <lang>|<source>: one pattern, a
     // pushed IN-filter on pred — two edges per doc, one binding column
     "kg_bgp_alt" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Bgp.matchPatterns(e, Seq(
+      Bgp.matchPatterns(linkedEdges(documentsCorpus(s, dir)), Seq(
         Bgp.TriplePattern(Bgp.V("d"),
           Bgp.AltPath(Seq("urn:col:documents:lang", "urn:col:documents:source")),
           Bgp.V("v"))))
@@ -1390,9 +1386,7 @@ object SparkEntry {
     // hash-aggregate shuffle on the group key, COUNTs partial-agg'd
     // map-side before it
     "kg_sparql_agg" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """SELECT ?l (COUNT(?d) AS ?n) (COUNT(DISTINCT ?src) AS ?nsrc)
           |       (MIN(?src) AS ?first_src)
           |WHERE {
@@ -1406,9 +1400,7 @@ object SparkEntry {
     // cross-engine) — plans as TakeOrderedAndProject, per-partition
     // top-k then one merge, never a global sort
     "kg_sparql_orderby" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """SELECT ?src (COUNT(?d) AS ?n) WHERE {
           |  ?d <urn:col:documents:source> ?src .
           |} GROUP BY ?src ORDER BY DESC(?n) ASC(?src) LIMIT 7 OFFSET 3""".stripMargin)
@@ -1419,9 +1411,7 @@ object SparkEntry {
     // (Bgp.applyValues) — the selection ships with the task, the
     // bindings side never shuffles
     "kg_sparql_values" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """SELECT ?d ?l ?src WHERE {
           |  ?d <urn:col:documents:lang> ?l .
           |  ?d <urn:col:documents:source> ?src .
@@ -1432,9 +1422,7 @@ object SparkEntry {
     // SPARQL ASK: boolean group-existence probe — limit(1) keeps the
     // plan a first-match scan, not a full count
     "kg_sparql_ask" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """ASK { ?d <urn:col:documents:lang> "en" .
           |      ?d <urn:col:documents:source> ?src
           |      FILTER (?src != "src0") }""".stripMargin)
@@ -1445,9 +1433,7 @@ object SparkEntry {
     // distinct (subj_id, pred, obj_id) rows in the engine's own edges
     // convention; the one shuffle is the graph-set distinct
     "kg_sparql_construct" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """CONSTRUCT { ?src <urn:rev:source> ?d . ?d a <urn:Doc> }
           |WHERE { ?d <urn:col:documents:source> ?src }""".stripMargin)
     }),
@@ -1456,9 +1442,7 @@ object SparkEntry {
     // equi-join on the shared ?d — the probe sides are projected to the
     // shared column and deduped, so no group payload crosses the shuffle
     "kg_sparql_exists" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """SELECT ?d ?l WHERE {
           |  ?d <urn:col:documents:lang> ?l .
           |  FILTER EXISTS { ?d <urn:col:documents:source> "src1" }
@@ -1546,9 +1530,7 @@ object SparkEntry {
     // deduped then ONE left-semi equi-join selects the edges; output in
     // the engine's edges convention
     "kg_sparql_describe" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """DESCRIBE ?d <urn:g:documents:7>
           |WHERE { ?d <urn:col:documents:lang> "de" }""".stripMargin)
     }),
@@ -1607,9 +1589,7 @@ object SparkEntry {
     // group-side pre-filter, exactly the ON-clause semantics for
     // group-variable-only conditions
     "kg_sparql_opt_filter" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """SELECT ?d ?s WHERE {
           |  ?d <urn:col:documents:lang> ?l .
           |  OPTIONAL { ?d <urn:col:documents:source> ?s FILTER(?s != "src1") }
@@ -1652,9 +1632,7 @@ object SparkEntry {
     // the conditioned source when it matched, the (always-bound) lang
     // otherwise; composes the optional-filter and bind layers
     "kg_sparql_coalesce" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """SELECT ?d ?v WHERE {
           |  ?d <urn:col:documents:lang> ?l .
           |  OPTIONAL { ?d <urn:col:documents:source> ?s FILTER(?s != "src1") }
@@ -1677,9 +1655,7 @@ object SparkEntry {
     // parser and the node-id hashing run, so a prefixed constant matches
     // the same materialized edge the full-IRI spelling does
     "kg_sparql_prefix" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(documentsCorpus(s, dir)))))
-        .localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """PREFIX col: <urn:col:documents:>
           |SELECT ?d ?s WHERE { ?d col:lang "en" . ?d col:source ?s }""".stripMargin)
     }),
@@ -1708,9 +1684,7 @@ object SparkEntry {
     // back onto the docs on the anchored ?l, the COUNT alias read
     // directly by the outer FILTER (a computed value — no nodes join)
     "kg_sparql_subquery" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(
-          documentsCorpus(s, dir))))).localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """SELECT ?d ?l ?n WHERE {
           |  ?d <urn:col:documents:lang> ?l .
           |  { SELECT ?l (COUNT(*) AS ?n)
@@ -1740,9 +1714,7 @@ object SparkEntry {
     // every cross-space use (literals, VALUES, node-position reuse) is
     // a parse error instead of a silently-constant comparison
     "kg_sparql_predvar" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(
-          documentsCorpus(s, dir))))).localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """SELECT ?d ?col ?o WHERE {
           |  ?d ?p ?o .
           |  FILTER(?p != <urn:col:documents:text>)
@@ -1836,9 +1808,7 @@ object SparkEntry {
     // cells AND-ed per row, rows OR-ed) — zero joins, zero shuffles —
     // instead of the semi-join the fully-bound form uses
     "kg_sparql_values_undef" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(
-          nationCorpus(s, dir))))).localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(nationCorpus(s, dir)),
         """SELECT ?a ?r WHERE {
           |  ?a <urn:col:nation:n_regionkey> ?r .
           |  VALUES (?a ?r) { (<urn:g:nation:1> UNDEF) (UNDEF "3") }
@@ -1852,8 +1822,7 @@ object SparkEntry {
     // per-graph scans prune before any join
     "kg_sparql_from" -> ((s, dir) => {
       val corpus = documentsCorpus(s, dir).union(nationCorpus(s, dir))
-      val e = Materialize.quads(Materialize.edges(Canonicalize(Skolemize(
-          parsedTriples(corpus))))).localCheckpoint(false)
+      val e = Materialize.quads(Materialize.edges(linked(corpus))).localCheckpoint(false)
       Sparql.run(e,
         """SELECT ?g ?p (COUNT(*) AS ?n)
           |FROM <urn:graph:synthetic/nation>
@@ -1899,9 +1868,7 @@ object SparkEntry {
     // nation pairs excluding the reflexive ones; the negated test
     // composes with the shared-variable join, no extra shuffles
     "kg_sparql_sameterm" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(
-          nationCorpus(s, dir))))).localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(nationCorpus(s, dir)),
         """SELECT ?a ?b WHERE {
           |  ?a <urn:col:nation:n_regionkey> ?r .
           |  ?b <urn:col:nation:n_regionkey> ?r .
@@ -1939,8 +1906,7 @@ object SparkEntry {
     // by (graph, predicate), both raw columns, one hash-agg shuffle
     "kg_sparql_graph" -> ((s, dir) => {
       val corpus = documentsCorpus(s, dir).union(nationCorpus(s, dir))
-      val e = Materialize.quads(Materialize.edges(Canonicalize(Skolemize(
-          parsedTriples(corpus))))).localCheckpoint(false)
+      val e = Materialize.quads(Materialize.edges(linked(corpus))).localCheckpoint(false)
       Sparql.run(e,
         """SELECT ?g ?p (COUNT(*) AS ?n) WHERE {
           |  GRAPH ?g { ?s ?p ?o }
@@ -1988,9 +1954,7 @@ object SparkEntry {
     // the same join-order machinery as any other group relation; the
     // group FILTER applies after, seeing both branches' bindings
     "kg_sparql_union_mixed" -> ((s, dir) => {
-      val e = Materialize.edges(Canonicalize(Skolemize(parsedTriples(
-          documentsCorpus(s, dir))))).localCheckpoint(false)
-      Sparql.run(e,
+      Sparql.run(linkedEdges(documentsCorpus(s, dir)),
         """SELECT ?d ?l ?v WHERE {
           |  ?d <urn:col:documents:lang> ?l .
           |  { ?d <urn:col:documents:source> ?v }

@@ -90,10 +90,10 @@ object EntityResolution {
                       maxEdit: Int, prefixLen: Int = 4,
                       maxBlock: Int = 1000): DataFrame = {
     val keyed = blockKeys(entities, idCol, labelCol, prefixLen, dedup = false)
-      // lazy (r7): feeds the size guard AND both join sides — the RDD is
-      // still computed once and cached (all consumers share the one
-      // checkpointed RDD object), but materialization now happens inside
-      // the first downstream action instead of as its own job barrier
+      // feeds the size guard AND both join sides: one checkpointed RDD,
+      // computed once. Under AQE this call runs any shuffle-map stage under
+      // `entities` at once; the keying itself is the result stage and runs
+      // in the first downstream action
       .localCheckpoint(false)
     val ok = keyed.groupBy("bkey").agg(count(lit(1)).as("n"))
       .filter(col("n") <= maxBlock)
@@ -116,8 +116,11 @@ object EntityResolution {
       .select("a", "b")
       // feeds CC's per-round contraction AND its node universe AND the
       // final label join — checkpoint the (small) verified edge list
-      // once instead of re-running the block self-join per consumer;
-      // lazy (r7): CC's first fingerprint action materializes it
+      // once instead of re-running the block self-join per consumer.
+      // Under AQE this call already runs the block-size, self-join and
+      // distinct shuffle-map stages; only the verify after the distinct
+      // waits for CC's first fingerprint action (graft.Probe:
+      // kg_entity_resolution runs 19 jobs while it is built, 5 in its write)
       .localCheckpoint(false)
     val labels = GraphOps.connectedComponents(pairs, "a", "b", maxIter = 50)
     entities.select(col(idCol).as("id"))

@@ -72,7 +72,9 @@ object GraphOps {
       .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .localCheckpoint(false) // lazy: shared by deg/orientation/closure consumers
+      // shared by deg/orientation/closure consumers; under AQE this call
+      // runs the distinct's shuffle-map stage, only its result stage waits
+      .localCheckpoint(false)
     val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("dg"))
       .localCheckpoint(false)
@@ -117,9 +119,10 @@ object GraphOps {
   def pagerankScaled(edges: DataFrame, src: String, dst: String,
                      iters: Int = 3, scale: Long = 1000000000000L): DataFrame = {
     val teleport = scale * 15L / 100L
-    // lazy (r7): e/nodes/outDeg are each ONE cached RDD shared by every
-    // iteration; with no per-round action left (see below) the caller's
-    // single action materializes the whole fixed-iteration chain
+    // e/nodes/outDeg are each ONE cached RDD shared by every iteration.
+    // Under AQE each localCheckpoint(false) runs the shuffle-map stages
+    // under it when it is called (the nodes distinct, the out-degree
+    // group-by); only its result stage waits for the caller's action
     val e = edges.select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
       .localCheckpoint(false)
     val nodes = e.select(col("src").as("node_id"))
@@ -134,11 +137,12 @@ object GraphOps {
         .join(outDeg.withColumnRenamed("node_id", "src").withColumnRenamed("out_deg", "odg"), Seq("src"))
         .select(col("dst").as("node_id"), expr("pr DIV odg").as("c"))
       val sums = contrib.groupBy("node_id").agg(sum(col("c")).as("s"))
-      // lazy: the plan is truncated at call time (what the per-round cut
-      // is for); materialization happens once, in the caller's action —
-      // the fixed iteration count needs no per-round convergence probe,
-      // so the old eager checkpoint was one full job barrier per
-      // iteration for nothing (r7)
+      // the plan is truncated at call time (what the per-round cut is
+      // for). The fixed iteration count needs no per-round convergence
+      // probe, but the round is not deferred: under AQE this call runs
+      // the round's join and group-by shuffle-map stages at once, and only
+      // the result stage waits for the caller's action (graft.Probe:
+      // kg_pagerank runs 18 jobs while it is built, 1 in its write)
       pr = nodes.join(sums, Seq("node_id"), "left")
         .select(col("node_id"),
           (lit(teleport) + expr("(coalesce(s, 0L) * 85) DIV 100")).as("pr"))
@@ -208,7 +212,8 @@ object GraphOps {
     val e = converged("kCore", maxIter)(fixpoint(seed, maxIter) { (e, _) =>
       val deg = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
         .groupBy("n").agg(count(lit(1)).as("dg"))
-      // lazy: shared by both anti-joins, materialized by the round's action
+      // shared by both anti-joins; under AQE this call runs the degree
+      // group-by's shuffle-map stage, the round's action the rest
       val weak = deg.filter(col("dg") < k).select("n").localCheckpoint(false)
       e.join(weak.withColumnRenamed("n", "a"), Seq("a"), "left_anti")
         .join(weak.withColumnRenamed("n", "b"), Seq("b"), "left_anti")
@@ -284,9 +289,11 @@ object GraphOps {
    * fingerprint equals the previous state's, or that is empty, and
    * returns the last state with whether it stopped before the bound.
    *
-   * Each state is LAZILY checkpointed — the lineage is cut at call time —
-   * and the round's one fingerprint action also materializes that
-   * checkpoint, so a round costs one action.
+   * Each state is checkpointed with `localCheckpoint(false)`, which cuts
+   * the lineage at call time and, under AQE, runs the step's shuffle-map
+   * stages right then; the round's one fingerprint action computes the
+   * result stage, which also materializes the checkpoint. So a round
+   * costs its step's shuffle-map stages plus one action.
    *
    * Sound only under two preconditions, which every step here keeps:
    *  - a state's rows are distinct, so xor cancellation cannot hide a

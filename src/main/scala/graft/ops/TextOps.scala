@@ -169,8 +169,10 @@ object TextOps {
     * decontamination indexes use. */
   def invertedIndexFromTokens(tok: DataFrame, minDf: Int, maxDf: Int): DataFrame = {
     // tok feeds both the df table and the posting join — checkpoint so
-    // the corpus-scale tokenize runs ONCE, not once per consumer (lazy:
-    // both consumers share the one cached RDD; no separate job barrier)
+    // the corpus-scale tokenize runs ONCE, not once per consumer. Under
+    // AQE this call runs tok's shuffle-map stages at once (the shingle
+    // distinct of td_inverted_index); only its result stage waits for the
+    // first action (graft.Probe: 2 jobs while built, 3 in the write)
     val t = tok.localCheckpoint(false)
     val rare = t.groupBy("term").agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf && col("df") <= maxDf)
@@ -290,7 +292,12 @@ object TextOps {
       size(filter(toks, t => t === lit(terms(i)))).cast("long").as(s"tf$i"))
     val base = docs
       .select(id.as("id") +: size(toks).cast("long").as("dl") +: tfCols: _*)
-      .localCheckpoint(false) // feeds the totals row AND the scoring pass (lazy: the broadcast build materializes it once; the scoring pass reuses the cache)
+      // feeds the totals row AND the scoring pass. Under AQE this call
+      // runs the shuffle-map stages under `docs` at once (td_bm25's
+      // fan-out repartition); the tf projection is the result stage, run
+      // once by the first action and reused from the cache by the other
+      // (graft.Probe: td_bm25 runs 2 jobs while built, 3 in its write)
+      .localCheckpoint(false)
     val aggList = Seq(count(lit(1)).as("nn"), sum(col("dl")).as("ll")) ++
       terms.indices.map(i => sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
     val tot = base.agg(aggList.head, aggList.tail: _*)

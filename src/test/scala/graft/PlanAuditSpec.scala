@@ -377,4 +377,26 @@ class PlanAuditSpec extends AnyFunSuite {
     }
     assert(over.isEmpty, s"shuffle budget exceeded — audit the plan before raising: ${over.mkString("; ")}")
   }
+
+  test("heavy queries execute exactly their pinned shuffle-writing stages") {
+    // The budgets above read the visible top plan; this gate counts what
+    // executes over the whole query lambda plus one noop write, in the
+    // shared session (AQE on): the shuffle-map stages a
+    // localCheckpoint(false) runs at call time and every fixpoint round's
+    // jobs included. Pins are exact, so a removed stage must be re-pinned
+    // as deliberately as an added one.
+    val pinned = Seq(
+      "td_split_leakfree" -> 21, "td_dup_clusters" -> 19,
+      "kg_entity_resolution" -> 17, "kg_bgp_path_deep" -> 8,
+      "td_dedup_jaccard" -> 5, "td_dedup_minhash_lsh" -> 5,
+      "td_bm25" -> 3, "kg_sparql_bind" -> 2)
+    val trace = new CostTrace(spark.sparkContext)
+    val got = try pinned.map { case (name, _) =>
+      trace.span(name) {
+        SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+      }
+      name -> trace.cost(trace.spans.last).shuffleStages
+    } finally trace.close()
+    assert(got == pinned)
+  }
 }

@@ -1,7 +1,7 @@
 package graft.kg
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.graftshim.JobCounter
+import graft.CostTrace
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -51,10 +51,13 @@ class FixpointSpec extends AnyFunSuite {
 
   /** (jobs while the operator is called, jobs of one collect of its result). */
   private def jobs(op: => DataFrame): (Int, Int) = {
-    val sc = spark.sparkContext
-    val (df, build) = JobCounter(sc)(op)
-    val (_, run) = JobCounter(sc)(df.collect())
-    (build, run)
+    val trace = new CostTrace(spark.sparkContext)
+    try {
+      val df = trace.span("build")(op)
+      trace.span("run")(df.collect())
+      val Seq(build, run) = trace.spans.map(trace.cost(_).jobs)
+      (build, run)
+    } finally trace.close()
   }
 
   test("jobs per call are those of one action per round") {
