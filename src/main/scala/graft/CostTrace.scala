@@ -18,10 +18,9 @@ import org.apache.spark.scheduler._
  *
  * Jobs that run while a frame is being built count in the span that builds
  * it: a fixpoint round's action, and the shuffle-map stages that
- * `localCheckpoint(false)` runs at call time under AQE (only the result
- * stage waits for the first action). So a span around a whole query lambda
- * plus its action sees everything the query executes, not just the plan of
- * the last action.
+ * [[Share]] runs at call time under AQE. So a span around a whole query
+ * lambda plus its action sees everything the query executes, not just the
+ * plan of the last action.
  *
  * It listens from construction to `close()`; the engine never attaches
  * one. One driver thread opens spans.

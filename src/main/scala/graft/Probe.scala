@@ -95,27 +95,21 @@ object Probe {
   }
 
   /** L0-L3 over kg_sparql_bind's corpus: each prefix adds one layer. */
-  private def link(s: SparkSession, t: CostTrace, sfDir: String, reps: Int,
-                   cpus: Int): ListMap[String, Any] = {
-    val XSD = "http://www.w3.org/2001/XMLSchema#"
-    def corpus = Corpus.fromTableTyped(s.read.parquet(s"$sfDir/orders.parquet").repartition(cpus),
-      "orders", "o_orderkey", Seq(
-        ("o_custkey", col("o_custkey"), s"${XSD}long"),
-        ("o_totalprice", col("o_totalprice"), s"${XSD}double"))).toDF()
-    def linked = Canonicalize(Skolemize(TripleExtract.assembleTriples(TripleExtract.parseExpr(corpus))))
+  private def link(s: SparkSession, t: CostTrace, sfDir: String, reps: Int): ListMap[String, Any] = {
+    def corpus = SparkEntry.ordersCorpus(s, sfDir)
     val prefixes: Seq[(String, () => Unit)] = Seq(
-      "render" -> (() => noop(corpus)),
-      "parse" -> (() => noop(TripleExtract.assembleTriples(TripleExtract.parseExpr(corpus)))),
-      "link" -> (() => noop(linked)),
-      "edges" -> (() => noop(Materialize.edges(linked))),
-      "nodes" -> (() => noop(Materialize.nodes(linked))),
-      // sparqlGraph's shape: both relations over one triples checkpoint
+      "render" -> (() => noop(corpus.toDF())),
+      "parse" -> (() => noop(SparkEntry.parsedTriples(corpus))),
+      "link" -> (() => noop(SparkEntry.linked(corpus))),
+      "edges" -> (() => noop(Materialize.edges(SparkEntry.linked(corpus)))),
+      "nodes" -> (() => noop(Materialize.nodes(SparkEntry.linked(corpus)))),
+      // the SPARQL gates' graph: both relations over one shared triples frame
       "edges+nodes" -> { () =>
-        val l = linked.localCheckpoint(false)
-        noop(Materialize.edges(l).localCheckpoint(false))
-        noop(Materialize.nodes(l).localCheckpoint(false))
+        val (e, n) = SparkEntry.sparqlGraph(corpus)
+        noop(e)
+        noop(n)
       })
-    ListMap("kernel_bytes_triples_per_s" -> kernelRate(s, corpus),
+    ListMap("kernel_bytes_triples_per_s" -> kernelRate(s, corpus.toDF()),
       "spans" -> ListMap.from(prefixes.map { case (name, f) =>
         name -> report(t, (1 to reps).map(_ => sample(t, name)(f())))
       }))
@@ -147,16 +141,7 @@ object Probe {
     val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
       "exact_dedup" -> (d => Dedup.exactGroups(d, col("doc_id"), col("text"))),
       "minhash_lsh" -> (d => Dedup.lshCandidates(d, col("doc_id"), col("text"))),
-      // td_dedup_jaccard's two stages; each checkpoint runs its
-      // shuffle-map stages inside its own span
-      "jaccard_two_stage" -> { d =>
-        val arr = t.span("shingles")(
-          Dedup.docShingleArrays(d, col("doc_id"), col("text"), 3).localCheckpoint(false))
-        val cands = t.span("candidates")(Dedup.lshCandidatesFromShingles(
-          arr.select(col("id"), explode(col("shingles")).as("shingle"))).localCheckpoint(false))
-        Dedup.jaccardPairsFromShingleArrays(arr, cands)
-          .filter(col("inter") * 5 >= col("union_") * 4)
-      },
+      "jaccard_two_stage" -> (d => Dedup.nearDupPairs(d, col("doc_id"), col("text"))),
       "simhash" -> (d => Dedup.simhash16(d, col("doc_id"), col("text"))),
       "repetition" -> (d => Curation.repetitionMetrics(d, col("doc_id"), col("text"))),
       "interdoc_dedup" -> (d => Curation.interdocSegmentDedup(d, col("doc_id"), col("text"))),
@@ -168,12 +153,12 @@ object Probe {
       "quality" -> (d => TextOps.quality(d, col("doc_id"), col("text"))))
     val base = s.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
     scales.flatMap { k =>
-      // materialized once per scale: every op times its own work, not
-      // the replica construction; ids are disjoint per replica
-      val d = (0 until k).map { i =>
+      // shared, and stored by the count: every op times its own work,
+      // not the replica construction; ids are disjoint per replica
+      val d = Share((0 until k).map { i =>
         base.select((col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
           concat(lit(s"r${i}x "), replace(col("text"), lit(" "), lit(s" r${i}x "))).as("text"))
-      }.reduce(_ union _).repartition(cpus).localCheckpoint(true)
+      }.reduce(_ union _).repartition(cpus))
       val nDocs = d.count()
       val rows = ops.map { case (name, f) =>
         val samples = (1 to reps).map(_ => sample(t, s"$name x$k")(noop(f(d))))
@@ -213,7 +198,7 @@ object Probe {
     val t = new CostTrace(spark.sparkContext)
     val out =
       try {
-        if (linkMode) ListMap("probe" -> "link") ++ link(spark, t, sfDir, reps, cpus)
+        if (linkMode) ListMap("probe" -> "link") ++ link(spark, t, sfDir, reps)
         else if (scales.nonEmpty)
           ListMap("probe" -> "scale", "scale" -> scale(spark, t, sfDir, reps, cpus, scales))
         else ListMap("probe" -> "queries", "queries" -> queries(spark, t, sfDir, reps, names.toSeq))

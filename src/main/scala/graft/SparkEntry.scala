@@ -41,16 +41,17 @@ object SparkEntry {
     * parse route (no object-serde boundary in the hot path). The
     * error/lenient/metrics gates call its typed view TripleExtract.parse,
     * which plans as the same GenerateExec. */
-  private def parsedTriples(c: Dataset[CorpusRow]): DataFrame =
+  private[graft] def parsedTriples(c: Dataset[CorpusRow]): DataFrame =
     TripleExtract.assembleTriples(TripleExtract.parseExpr(c.toDF()))
 
   /** Parsed, skolemized and canonicalized: the linked triples of a corpus. */
-  private def linked(c: Dataset[CorpusRow]): DataFrame = Canonicalize(Skolemize(parsedTriples(c)))
+  private[graft] def linked(c: Dataset[CorpusRow]): DataFrame =
+    Canonicalize(Skolemize(parsedTriples(c)))
 
-  /** The linked edges of a corpus, checkpointed: the BGP/SPARQL gates scan
-    * them once per pattern, so the parse and the three sha256 ids run once. */
+  /** The linked edges of a corpus, shared: the BGP/SPARQL gates scan them
+    * once per pattern, so the parse and the three sha256 ids run once. */
   private def linkedEdges(c: Dataset[CorpusRow]): DataFrame =
-    Materialize.edges(linked(c)).localCheckpoint(false)
+    Share(Materialize.edges(linked(c)))
 
   /**
    * Small-input parallelism guard: a few-MB parquet is one row group and
@@ -123,26 +124,27 @@ object SparkEntry {
   /**
    * Parse -> skolemize -> canonicalize -> materialize for the SPARQL
    * gates, returning the ID-SPACE (edges, nodes) pair with BOTH
-   * relations checkpointed — not just the term-struct triples. A BGP
-   * scans the edge relation once per pattern and every bindValues join
-   * reads the nodes relation, so checkpointing only the triples made
-   * each of those scans re-derive sha2(concat(CASE...)) node ids for
-   * every row (r5 verdict #1: kg_sparql_bind read 6.36 s where its
-   * sibling read 0.63 s). The intermediate triples checkpoint keeps the
-   * corpus parse single-pass across the two materialization jobs.
+   * relations shared — not just the term-struct triples. A BGP scans the
+   * edge relation once per pattern and every bindValues join reads the
+   * nodes relation, so sharing only the triples made each of those scans
+   * re-derive sha2(concat(CASE...)) node ids for every row (r5 verdict
+   * #1: kg_sparql_bind read 6.36 s where its sibling read 0.63 s). The
+   * shared triples keep the corpus parse single-pass across the two
+   * relations.
    */
-  private def sparqlGraph(c: Dataset[CorpusRow]): (DataFrame, DataFrame) = {
-    // Each frame is ONE cached RDD — every pattern scan / bindValues join
-    // reuses the same blocks, so the r5 recompute hazard cannot return,
-    // and the triples are parsed once. The checkpoints are not deferred
-    // work: under AQE each localCheckpoint(false) runs the shuffle-map
-    // stages under it when it is called (a corpus fan-out repartition,
-    // the nodes distinct), and only the result stages wait for the
-    // query's action (graft.Probe: kg_sparql_bind runs 3 jobs while it is
-    // built, both its shuffle-writing stages among them, 4 in its write).
-    val t = linked(c).localCheckpoint(false)
-    (Materialize.edges(t).localCheckpoint(false),
-      Materialize.nodes(t).localCheckpoint(false))
+  private[graft] def sparqlGraph(c: Dataset[CorpusRow]): (DataFrame, DataFrame) = {
+    val t = Share(linked(c))
+    (Share(Materialize.edges(t)), Share(Materialize.nodes(t)))
+  }
+
+  /** The orders table as typed N-Triples (custkey as xsd:long, totalprice
+    * as xsd:double): the corpus of the numeric SPARQL gates. */
+  private[graft] def ordersCorpus(s: SparkSession, dir: String): Dataset[CorpusRow] = {
+    val XSD = "http://www.w3.org/2001/XMLSchema#"
+    Corpus.fromTableTyped(fanOut(s, s.read.parquet(s"$dir/orders.parquet")), "orders",
+      "o_orderkey", Seq(
+        ("o_custkey", col("o_custkey"), s"${XSD}long"),
+        ("o_totalprice", col("o_totalprice"), s"${XSD}double")))
   }
 
   private def embs(s: SparkSession, dir: String): DataFrame =
@@ -427,24 +429,9 @@ object SparkEntry {
     "td_dedup_minhash_lsh" -> ((s, dir) =>
       Dedup.lshCandidates(docs(s, dir), col("doc_id"), col("text"))),
 
-    "td_dedup_jaccard" -> ((s, dir) => {
-      // the scalable two-stage shape: LSH candidates -> exact verify.
-      // ONE tokenization pass is materialized as the per-doc shingle-SET
-      // ARRAY frame (localCheckpoint, blocks reclaimed by the
-      // ContextCleaner once the plan is unreferenced — a bare .persist()
-      // here would pin cache blocks for the session lifetime); the LSH
-      // stage explodes it, the verify reads the arrays directly
-      // (narrow array_intersect — no O(candidates x doc-size) join
-      // intermediate, r7 third pass). The tiny candidate list is
-      // checkpointed so the verify joins never recompute the minhash
-      // sub-plan.
-      val d = docs(s, dir)
-      val arr = Dedup.docShingleArrays(d, col("doc_id"), col("text"), 3).localCheckpoint(false)
-      val sh = arr.select(col("id"), explode(col("shingles")).as("shingle"))
-      val cands = Dedup.lshCandidatesFromShingles(sh).localCheckpoint(false)
-      Dedup.jaccardPairsFromShingleArrays(arr, cands)
-        .filter(col("inter") * 5 >= col("union_") * 4) // jaccard >= 0.8, float-free
-    }),
+    // the scalable two-stage shape: LSH candidates -> exact verify
+    "td_dedup_jaccard" -> ((s, dir) =>
+      Dedup.nearDupPairs(docs(s, dir), col("doc_id"), col("text"))),
 
     "td_dedup_simhash" -> ((s, dir) =>
       Dedup.simhash16(docs(s, dir), col("doc_id"), col("text"))),
@@ -872,8 +859,8 @@ object SparkEntry {
     // cardinality, estimate next to the exact truth so the gate pins
     // BOTH the sketch arithmetic and its accuracy on this corpus
     "td_sketch_distinct" -> ((s, dir) => {
-      val sh = Dedup.wordShingles(docs(s, dir), col("lang"), col("text"), 3)
-        .localCheckpoint(false) // shared by the sketch and the exact truth
+      // shared by the sketch and the exact truth
+      val sh = Share(Dedup.wordShingles(docs(s, dir), col("lang"), col("text"), 3))
       val sk = Sketches.kmvDistinct(sh, col("id"), col("shingle"), 256)
       val truth = sh.groupBy(col("id")).agg(count(lit(1)).as("n_true"))
       sk.join(truth, sk("g") === truth("id"))
@@ -894,16 +881,14 @@ object SparkEntry {
     // heavy hitters emitted NEXT TO their exact counts (cm_est >= true_n
     // is the classic guarantee; the overshoot on this corpus is pinned)
     "td_sketch_countmin" -> ((s, dir) => {
-      val g = docs(s, dir)
-        .select(explode(TextOps.ngramArray(col("text"), 2)).as("gram"))
-        .localCheckpoint(false)
+      // the gram stream feeds the counters and the exact top 5
+      val g = Share(docs(s, dir)
+        .select(explode(TextOps.ngramArray(col("text"), 2)).as("gram")))
       val counters = Sketches.countMinCounters(g, col("gram"), depth = 4, width = 64)
-      // top5 is referenced twice (query frame + truth join-back):
-      // checkpoint the 5 rows so the TakeOrdered over the gram stream
-      // runs once, not twice
-      val top5 = g.groupBy("gram").agg(count(lit(1)).as("true_n"))
-        .orderBy(col("true_n").desc, col("gram")).limit(5)
-        .localCheckpoint(false)
+      // top5 is referenced twice (query frame + truth join-back): share
+      // the 5 rows so the TakeOrdered over the gram stream runs once
+      val top5 = Share(g.groupBy("gram").agg(count(lit(1)).as("true_n"))
+        .orderBy(col("true_n").desc, col("gram")).limit(5))
       Sketches.cmEstimate(counters, top5, col("gram"), depth = 4, width = 64)
         .join(top5, col("value") === col("gram"))
         .select(col("gram"), col("true_n"), col("cm_est"))
@@ -936,13 +921,7 @@ object SparkEntry {
     // CLUSTER (LSH -> jaccard verify -> CC), split = portable hash of the
     // cluster id, so near-dups can never straddle train and eval
     "td_split_leakfree" -> ((s, dir) => {
-      val arr = Dedup.docShingleArrays(docs(s, dir), col("doc_id"), col("text"), 3)
-        .localCheckpoint(false)
-      val sh = arr.select(col("id"), explode(col("shingles")).as("shingle"))
-      val cands = Dedup.lshCandidatesFromShingles(sh).localCheckpoint(false)
-      val dups = Dedup.jaccardPairsFromShingleArrays(arr, cands)
-        .filter(col("inter") * 5 >= col("union_") * 4)
-        .select("a", "b")
+      val dups = Dedup.nearDupPairs(docs(s, dir), col("doc_id"), col("text")).select("a", "b")
       Curation.leakFreeSplit(docs(s, dir), col("doc_id"), dups)
     }),
 
@@ -1012,13 +991,7 @@ object SparkEntry {
     // bounded (bucketed candidates, O(log n) CC rounds) and the oracle
     // reproduces the clusters with a recursive CTE over the same pairs
     "td_dup_clusters" -> ((s, dir) => {
-      val arr = Dedup.docShingleArrays(docs(s, dir), col("doc_id"), col("text"), 3)
-        .localCheckpoint(false)
-      val sh = arr.select(col("id"), explode(col("shingles")).as("shingle"))
-      val cands = Dedup.lshCandidatesFromShingles(sh).localCheckpoint(false)
-      val dups = Dedup.jaccardPairsFromShingleArrays(arr, cands)
-        .filter(col("inter") * 5 >= col("union_") * 4)
-        .select("a", "b")
+      val dups = Dedup.nearDupPairs(docs(s, dir), col("doc_id"), col("text")).select("a", "b")
       GraphOps.connectedComponents(dups, "a", "b", maxIter = 16)
         .select(col("node_id").as("id"), col("component").as("cluster"))
     }),
@@ -1043,7 +1016,7 @@ object SparkEntry {
     // documents edges: a star pattern with a selective constant
     // (lang = "en" by node id, pushed to the scan) and a free variable
     // (?src) — the KG query primitive over what the parser built.
-    // localCheckpoint = "materialize edges, then match": every pattern
+    // shared edges = "materialize edges, then match": every pattern
     // of a BGP scans the edge relation, so matching over a derived
     // frame would re-run the corpus parse once per pattern (over the
     // real bucketed edges TABLE the scans are free and Exchange-free —
@@ -1456,12 +1429,7 @@ object SparkEntry {
     // (integer and double families both promote to double) — IRIs in
     // value position would read NULL and drop, per SPARQL
     "kg_sparql_typed_filter" -> ((s, dir) => {
-      val XSD = "http://www.w3.org/2001/XMLSchema#"
-      val orders = fanOut(s, s.read.parquet(s"$dir/orders.parquet"))
-      val corpus = Corpus.fromTableTyped(orders, "orders", "o_orderkey", Seq(
-        ("o_custkey", col("o_custkey"), s"${XSD}long"),
-        ("o_totalprice", col("o_totalprice"), s"${XSD}double")))
-      val (e, nd) = sparqlGraph(corpus)
+      val (e, nd) = sparqlGraph(ordersCorpus(s, dir))
       Sparql.run(e, nd,
         """SELECT ?o ?c WHERE {
           |  ?o <urn:col:orders:o_custkey> ?c .
@@ -1512,12 +1480,7 @@ object SparkEntry {
     // to double — engine- and parallelism-reproducible where a float
     // sum is neither
     "kg_sparql_sum_avg" -> ((s, dir) => {
-      val XSD = "http://www.w3.org/2001/XMLSchema#"
-      val orders = fanOut(s, s.read.parquet(s"$dir/orders.parquet"))
-      val corpus = Corpus.fromTableTyped(orders, "orders", "o_orderkey", Seq(
-        ("o_custkey", col("o_custkey"), s"${XSD}long"),
-        ("o_totalprice", col("o_totalprice"), s"${XSD}double")))
-      val (e, nd) = sparqlGraph(corpus)
+      val (e, nd) = sparqlGraph(ordersCorpus(s, dir))
       Sparql.run(e, nd,
         """SELECT ?c (SUM(?p) AS ?total) (AVG(?p) AS ?mean) (COUNT(?p) AS ?n)
           |WHERE { ?o <urn:col:orders:o_custkey> ?c .
@@ -1540,12 +1503,7 @@ object SparkEntry {
     // FILTERs read DIRECTLY (bind columns never re-join the nodes
     // table); a pure projection, zero added shuffles
     "kg_sparql_bind" -> ((s, dir) => {
-      val XSD = "http://www.w3.org/2001/XMLSchema#"
-      val orders = fanOut(s, s.read.parquet(s"$dir/orders.parquet"))
-      val corpus = Corpus.fromTableTyped(orders, "orders", "o_orderkey", Seq(
-        ("o_custkey", col("o_custkey"), s"${XSD}long"),
-        ("o_totalprice", col("o_totalprice"), s"${XSD}double")))
-      val (e, nd) = sparqlGraph(corpus)
+      val (e, nd) = sparqlGraph(ordersCorpus(s, dir))
       Sparql.run(e, nd,
         """SELECT ?o ?c ?net WHERE {
           |  ?o <urn:col:orders:o_custkey> ?c .
@@ -1666,12 +1624,7 @@ object SparkEntry {
     // the aggregate is computed in the SAME hash-agg pass under an
     // internal alias and dropped after the filter
     "kg_sparql_having" -> ((s, dir) => {
-      val XSD = "http://www.w3.org/2001/XMLSchema#"
-      val orders = fanOut(s, s.read.parquet(s"$dir/orders.parquet"))
-      val corpus = Corpus.fromTableTyped(orders, "orders", "o_orderkey", Seq(
-        ("o_custkey", col("o_custkey"), s"${XSD}long"),
-        ("o_totalprice", col("o_totalprice"), s"${XSD}double")))
-      val (e, nd) = sparqlGraph(corpus)
+      val (e, nd) = sparqlGraph(ordersCorpus(s, dir))
       Sparql.run(e, nd,
         """SELECT ?c (COUNT(*) AS ?n) WHERE {
           |  ?o <urn:col:orders:o_custkey> ?c .
@@ -1822,7 +1775,7 @@ object SparkEntry {
     // per-graph scans prune before any join
     "kg_sparql_from" -> ((s, dir) => {
       val corpus = documentsCorpus(s, dir).union(nationCorpus(s, dir))
-      val e = Materialize.quads(Materialize.edges(linked(corpus))).localCheckpoint(false)
+      val e = Share(Materialize.quads(Materialize.edges(linked(corpus))))
       Sparql.run(e,
         """SELECT ?g ?p (COUNT(*) AS ?n)
           |FROM <urn:graph:synthetic/nation>
@@ -1906,7 +1859,7 @@ object SparkEntry {
     // by (graph, predicate), both raw columns, one hash-agg shuffle
     "kg_sparql_graph" -> ((s, dir) => {
       val corpus = documentsCorpus(s, dir).union(nationCorpus(s, dir))
-      val e = Materialize.quads(Materialize.edges(linked(corpus))).localCheckpoint(false)
+      val e = Share(Materialize.quads(Materialize.edges(linked(corpus))))
       Sparql.run(e,
         """SELECT ?g ?p (COUNT(*) AS ?n) WHERE {
           |  GRAPH ?g { ?s ?p ?o }
@@ -1970,12 +1923,7 @@ object SparkEntry {
     // result is the winning TERM ID, so all-IRI groups keep the id pick
     // bit-for-bit
     "kg_sparql_minmax" -> ((s, dir) => {
-      val XSD = "http://www.w3.org/2001/XMLSchema#"
-      val orders = fanOut(s, s.read.parquet(s"$dir/orders.parquet"))
-      val corpus = Corpus.fromTableTyped(orders, "orders", "o_orderkey", Seq(
-        ("o_custkey", col("o_custkey"), s"${XSD}long"),
-        ("o_totalprice", col("o_totalprice"), s"${XSD}double")))
-      val (e, nd) = sparqlGraph(corpus)
+      val (e, nd) = sparqlGraph(ordersCorpus(s, dir))
       Sparql.run(e, nd,
         """SELECT ?c (MIN(?p) AS ?lo) (MAX(?p) AS ?hi) (COUNT(*) AS ?n)
           |WHERE { ?o <urn:col:orders:o_custkey> ?c .
@@ -1989,12 +1937,7 @@ object SparkEntry {
     // as total-order tiebreak, planned as TakeOrderedAndProject under
     // the LIMIT (per-partition top-k, never a global sort)
     "kg_sparql_order_value" -> ((s, dir) => {
-      val XSD = "http://www.w3.org/2001/XMLSchema#"
-      val orders = fanOut(s, s.read.parquet(s"$dir/orders.parquet"))
-      val corpus = Corpus.fromTableTyped(orders, "orders", "o_orderkey", Seq(
-        ("o_custkey", col("o_custkey"), s"${XSD}long"),
-        ("o_totalprice", col("o_totalprice"), s"${XSD}double")))
-      val (e, nd) = sparqlGraph(corpus)
+      val (e, nd) = sparqlGraph(ordersCorpus(s, dir))
       Sparql.run(e, nd,
         """SELECT ?o ?p WHERE {
           |  ?o <urn:col:orders:o_custkey> ?c .
@@ -2008,12 +1951,7 @@ object SparkEntry {
     // join), the id column breaking boundary ties deterministically —
     // same TakeOrderedAndProject top-k shape as a plain key
     "kg_sparql_order_expr" -> ((s, dir) => {
-      val XSD = "http://www.w3.org/2001/XMLSchema#"
-      val orders = fanOut(s, s.read.parquet(s"$dir/orders.parquet"))
-      val corpus = Corpus.fromTableTyped(orders, "orders", "o_orderkey", Seq(
-        ("o_custkey", col("o_custkey"), s"${XSD}long"),
-        ("o_totalprice", col("o_totalprice"), s"${XSD}double")))
-      val (e, nd) = sparqlGraph(corpus)
+      val (e, nd) = sparqlGraph(ordersCorpus(s, dir))
       Sparql.run(e, nd,
         """SELECT ?o ?p ?c WHERE {
           |  ?o <urn:col:orders:o_custkey> ?c .

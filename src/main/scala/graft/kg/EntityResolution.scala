@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Share
 
 /**
  * Entity resolution over KG node labels: multi-pass blocking ->
@@ -89,16 +90,14 @@ object EntityResolution {
   def resolveEntities(entities: DataFrame, idCol: String, labelCol: String,
                       maxEdit: Int, prefixLen: Int = 4,
                       maxBlock: Int = 1000): DataFrame = {
-    val keyed = blockKeys(entities, idCol, labelCol, prefixLen, dedup = false)
-      // feeds the size guard AND both join sides: one checkpointed RDD,
-      // computed once. Under AQE this call runs any shuffle-map stage under
-      // `entities` at once; the keying itself is the result stage and runs
-      // in the first downstream action
-      .localCheckpoint(false)
+    // feeds the size guard AND both join sides
+    val keyed = Share(blockKeys(entities, idCol, labelCol, prefixLen, dedup = false))
     val ok = keyed.groupBy("bkey").agg(count(lit(1)).as("n"))
       .filter(col("n") <= maxBlock)
     val inBlock = keyed.join(ok.select("bkey"), Seq("bkey"))
-    val pairs = inBlock.as("x").join(inBlock.as("y"),
+    // the (small) verified edge list feeds CC's per-round contraction AND
+    // its node universe AND the final label join
+    val pairs = Share(inBlock.as("x").join(inBlock.as("y"),
         col("x.bkey") === col("y.bkey") && col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
         col("x.norm").as("na"), col("y.norm").as("nb"))
@@ -113,15 +112,7 @@ object EntityResolution {
       // mirror's plain levenshtein(x,y) <= k is equivalent by definition
       .filter(abs(length(col("na")) - length(col("nb"))) <= maxEdit &&
         levenshtein(col("na"), col("nb"), maxEdit) =!= -1)
-      .select("a", "b")
-      // feeds CC's per-round contraction AND its node universe AND the
-      // final label join — checkpoint the (small) verified edge list
-      // once instead of re-running the block self-join per consumer.
-      // Under AQE this call already runs the block-size, self-join and
-      // distinct shuffle-map stages; only the verify after the distinct
-      // waits for CC's first fingerprint action (graft.Probe:
-      // kg_entity_resolution runs 19 jobs while it is built, 5 in its write)
-      .localCheckpoint(false)
+      .select("a", "b"))
     val labels = GraphOps.connectedComponents(pairs, "a", "b", maxIter = 50)
     entities.select(col(idCol).as("id"))
       .join(labels.withColumnRenamed("node_id", "id"), Seq("id"), "left")

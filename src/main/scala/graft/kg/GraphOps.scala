@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Share
 
 /**
  * Distributed graph algorithms over the materialized edges table,
@@ -36,8 +37,8 @@ object GraphOps {
     val und = edges
       .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-    val bidir = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .distinct().localCheckpoint(false) // cut once, read by every round
+    // read by every round
+    val bidir = Share(und.union(und.select(col("v").as("u"), col("u").as("v"))).distinct())
     fixpoint(sources.distinct.toDF("node_id").withColumn("dist", lit(0L)), maxDepth) { (dists, round) =>
       val next = dists.filter(col("dist") === round - 1L).select("node_id")
         .join(bidir, col("node_id") === col("u"))
@@ -68,16 +69,14 @@ object GraphOps {
     // dropped but their nodes kept")
     val allNodes = edges.select(col(src).as("node_id"))
       .union(edges.select(col(dst).as("node_id"))).distinct()
-    val und = edges
+    // shared by the degree, orientation and closure consumers
+    val und = Share(edges
       .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      // shared by deg/orientation/closure consumers; under AQE this call
-      // runs the distinct's shuffle-map stage, only its result stage waits
-      .localCheckpoint(false)
-    val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("dg"))
-      .localCheckpoint(false)
+      .distinct())
+    // read by both orientation joins
+    val deg = Share(und.select(col("a").as("n")).union(und.select(col("b").as("n")))
+      .groupBy("n").agg(count(lit(1)).as("dg")))
     val withDeg = und
       .join(deg.select(col("n").as("a"), col("dg").as("da")), Seq("a"))
       .join(deg.select(col("n").as("b"), col("dg").as("db")), Seq("b"))
@@ -119,16 +118,11 @@ object GraphOps {
   def pagerankScaled(edges: DataFrame, src: String, dst: String,
                      iters: Int = 3, scale: Long = 1000000000000L): DataFrame = {
     val teleport = scale * 15L / 100L
-    // e/nodes/outDeg are each ONE cached RDD shared by every iteration.
-    // Under AQE each localCheckpoint(false) runs the shuffle-map stages
-    // under it when it is called (the nodes distinct, the out-degree
-    // group-by); only its result stage waits for the caller's action
-    val e = edges.select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
-      .localCheckpoint(false)
-    val nodes = e.select(col("src").as("node_id"))
-      .union(e.select(col("dst").as("node_id"))).distinct().localCheckpoint(false)
-    val outDeg = e.groupBy(col("src").as("node_id")).agg(count(lit(1)).as("out_deg"))
-      .localCheckpoint(false)
+    // e, nodes and outDeg are each shared by every iteration
+    val e = Share(edges.select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst")))
+    val nodes = Share(e.select(col("src").as("node_id"))
+      .union(e.select(col("dst").as("node_id"))).distinct())
+    val outDeg = Share(e.groupBy(col("src").as("node_id")).agg(count(lit(1)).as("out_deg")))
     var pr = nodes.withColumn("pr", lit(scale))
     var i = 0
     while (i < iters) {
@@ -137,16 +131,11 @@ object GraphOps {
         .join(outDeg.withColumnRenamed("node_id", "src").withColumnRenamed("out_deg", "odg"), Seq("src"))
         .select(col("dst").as("node_id"), expr("pr DIV odg").as("c"))
       val sums = contrib.groupBy("node_id").agg(sum(col("c")).as("s"))
-      // the plan is truncated at call time (what the per-round cut is
-      // for). The fixed iteration count needs no per-round convergence
-      // probe, but the round is not deferred: under AQE this call runs
-      // the round's join and group-by shuffle-map stages at once, and only
-      // the result stage waits for the caller's action (graft.Probe:
-      // kg_pagerank runs 18 jobs while it is built, 1 in its write)
-      pr = nodes.join(sums, Seq("node_id"), "left")
+      // cut per round, so the plan stays one round deep; the fixed
+      // iteration count needs no convergence probe
+      pr = Share(nodes.join(sums, Seq("node_id"), "left")
         .select(col("node_id"),
-          (lit(teleport) + expr("(coalesce(s, 0L) * 85) DIV 100")).as("pr"))
-        .localCheckpoint(false)
+          (lit(teleport) + expr("(coalesce(s, 0L) * 85) DIV 100")).as("pr")))
       i += 1
     }
     pr.select(col("node_id"), col("pr").as("pr_scaled"))
@@ -212,9 +201,8 @@ object GraphOps {
     val e = converged("kCore", maxIter)(fixpoint(seed, maxIter) { (e, _) =>
       val deg = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
         .groupBy("n").agg(count(lit(1)).as("dg"))
-      // shared by both anti-joins; under AQE this call runs the degree
-      // group-by's shuffle-map stage, the round's action the rest
-      val weak = deg.filter(col("dg") < k).select("n").localCheckpoint(false)
+      // shared by both anti-joins
+      val weak = Share(deg.filter(col("dg") < k).select("n"))
       e.join(weak.withColumnRenamed("n", "a"), Seq("a"), "left_anti")
         .join(weak.withColumnRenamed("n", "b"), Seq("b"), "left_anti")
     })
@@ -289,11 +277,10 @@ object GraphOps {
    * fingerprint equals the previous state's, or that is empty, and
    * returns the last state with whether it stopped before the bound.
    *
-   * Each state is checkpointed with `localCheckpoint(false)`, which cuts
-   * the lineage at call time and, under AQE, runs the step's shuffle-map
-   * stages right then; the round's one fingerprint action computes the
-   * result stage, which also materializes the checkpoint. So a round
-   * costs its step's shuffle-map stages plus one action.
+   * Each state goes through [[graft.Share]], which cuts the lineage; the
+   * round's one fingerprint action is the state's first action, so it
+   * also stores the shared blocks. A round costs its step's shuffle-map
+   * stages plus one action.
    *
    * Sound only under two preconditions, which every step here keeps:
    *  - a state's rows are distinct, so xor cancellation cannot hide a
@@ -308,13 +295,13 @@ object GraphOps {
         .collect()(0)
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var state = init.localCheckpoint(false)
+    var state = Share(init)
     var fp = fingerprint(state)
     var round = 0
     var done = fp._1 == 0L
     while (!done && round < maxIter) {
       round += 1
-      state = step(state, round).localCheckpoint(false)
+      state = Share(step(state, round))
       val next = fingerprint(state)
       done = next == fp || next._1 == 0L
       fp = next

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Share
 
 /**
  * Corpus-curation operators common in large-scale training-data
@@ -214,11 +215,10 @@ object Curation {
    */
   def interdocSegmentDedup(docs: DataFrame, id: Column, text: Column,
                            n: Int = 10, maxDocs: Int = 1): DataFrame = {
-    // checkpoint (lazy): the segment stream feeds the boilerplate count
-    // AND the anti-join probe side — without the cut each consumer
-    // re-ran the split+posexplode segmentation over the full corpus
-    // (r7, guide §2.4 class; materialized by the first action)
-    val segs = tokenSegments(docs, id, text, n).localCheckpoint(false)
+    // the segment stream feeds the boilerplate count AND the anti-join
+    // probe side — unshared, each consumer re-ran the split+posexplode
+    // segmentation over the full corpus (r7, guide §2.4 class)
+    val segs = Share(tokenSegments(docs, id, text, n))
     val boilerplate = segs.groupBy("seg")
       .agg(countDistinct(col("id")).as("n_docs"))
       .filter(col("n_docs") > maxDocs)

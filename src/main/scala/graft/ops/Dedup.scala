@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Share
 
 /**
  * Deduplication operators for large-scale training-data pipelines.
@@ -58,10 +59,10 @@ object Dedup {
   /** The per-document distinct shingle SET kept as an ARRAY column:
     * (id, shingles) — same precondition as [[docShingles]] (`id` unique
     * per row), and `docShingles == explode of this frame` row for row.
-    * One checkpointed copy can feed BOTH the LSH stage (exploded) and the
+    * One shared copy can feed BOTH the LSH stage (exploded) and the
     * array-based Jaccard verify below without a second tokenization pass,
-    * and the checkpoint stores each doc id once instead of once per
-    * shingle. */
+    * and the shared frame stores each doc id once instead of once per
+    * shingle ([[nearDupPairs]]). */
   def docShingleArrays(docs: DataFrame, id: Column, text: Column, n: Int): DataFrame =
     docs.select(id.as("id"), array_distinct(TextOps.ngramArray(text, n)).as("shingles"))
 
@@ -117,23 +118,22 @@ object Dedup {
       numHashes, rowsPerBand, maxBucket)
 
   /** As `lshCandidates`, over a pre-computed (id, shingle) frame — share
-    * one shingle frame between candidate generation and Jaccard verify. */
+    * one shingle frame between candidate generation and Jaccard verify.
+    * Not lazy: the banded keys and the bucket sizes go through
+    * [[graft.Share]], so the call runs their shuffle-map stages (the
+    * minhash group-by and the bucket-size group-by). */
   def lshCandidatesFromShingles(shingles: DataFrame, numHashes: Int = 8,
                                 rowsPerBand: Int = 2, maxBucket: Int = 1024): DataFrame = {
-    // banded is tiny (bands rows per doc); checkpoint it so the expensive
-    // shingle+sha subplan runs ONCE for both the size split below (lazy —
-    // r7: the consumers share one cached RDD either way, and lazy lets
-    // the materialization ride the query's own action)
-    val banded = bandedKeys(minhashSignature(shingles, numHashes), numHashes, rowsPerBand)
-      .localCheckpoint(false)
-    // checkpoint (lazy) the per-bucket sizes too: they feed BOTH the
-    // small-clique and keeper-star branches below, and without the cut
-    // each branch re-aggregated the full banded frame — two identical
-    // HashAggregate+Exchange subtrees over a corpus-sized input (r7,
-    // guide §2.4; same fix jaccardPairsFromShingles got for its `sizes`)
-    val sizes = banded.groupBy("band", "band_key")
-      .agg(count(lit(1)).as("bsz"), min(col("id")).as("keeper"))
-      .localCheckpoint(false)
+    // banded is tiny (bands rows per doc); shared so the expensive
+    // shingle+sha subplan runs ONCE for both the size split below
+    val banded = Share(bandedKeys(minhashSignature(shingles, numHashes), numHashes, rowsPerBand))
+    // the per-bucket sizes feed BOTH the small-clique and keeper-star
+    // branches below; unshared, each branch re-aggregated the full banded
+    // frame — two identical HashAggregate+Exchange subtrees over a
+    // corpus-sized input (r7, guide §2.4; jaccardPairsFromShingles shares
+    // its `sizes` for the same reason)
+    val sizes = Share(banded.groupBy("band", "band_key")
+      .agg(count(lit(1)).as("bsz"), min(col("id")).as("keeper")))
     val member = banded.join(sizes, Seq("band", "band_key"))
     val ids = sort_array(collect_list(col("id")))
     val pairs = flatten(transform(sequence(lit(1), size(col("ids")) - 1), i =>
@@ -169,14 +169,16 @@ object Dedup {
     jaccardPairsFromShingles(docShingles(docs, id, text, shingleWords), candidates)
 
   /** As `jaccardPairs`, over a pre-computed (id, shingle) frame — share
-    * (and persist) ONE shingle frame with `lshCandidatesFromShingles`
-    * instead of re-deriving shingles after the LSH stage. */
+    * ONE shingle frame with `lshCandidatesFromShingles` instead of
+    * re-deriving shingles after the LSH stage. Not lazy: the per-id sizes
+    * go through [[graft.Share]], so the call runs their group-by's
+    * shuffle-map stage. */
   def jaccardPairsFromShingles(sh: DataFrame, candidates: Option[DataFrame]): DataFrame = {
-    // checkpoint (lazy): sizes feeds BOTH endpoint joins below — without
-    // it the plan re-aggregated the whole shingle frame once per side
-    // (r7: the audited plan showed two identical HashAggregate+Exchange
-    // subtrees; one pass now, broadcast twice)
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n")).localCheckpoint(false)
+    // sizes feeds BOTH endpoint joins below — unshared, the plan
+    // re-aggregated the whole shingle frame once per side (r7: the
+    // audited plan showed two identical HashAggregate+Exchange subtrees;
+    // one pass now, broadcast twice)
+    val sizes = Share(sh.groupBy("id").agg(count(lit(1)).as("n")))
     val paired = candidates match {
       case None =>
         // all-pairs: only for small verification scales — hot shingles
@@ -224,6 +226,29 @@ object Dedup {
         (size(col("sa")).cast("long") + size(col("sb")).cast("long")).as("sz_"))
       .filter(col("inter") >= 1)
       .select(col("a"), col("b"), col("inter"), (col("sz_") - col("inter")).as("union_"))
+
+  /**
+   * Near-duplicate document pairs, the scalable two-stage shape: LSH
+   * candidates over 3-word shingles, then exact Jaccard verify at
+   * `inter / union_ >= 0.8` (float-free: `5 * inter >= 4 * union_`).
+   * Output: (a, b, inter, union_) with a < b. PRECONDITION: `id` unique
+   * per row, as for [[docShingleArrays]].
+   *
+   * ONE tokenization pass is shared as the per-doc shingle-set ARRAY
+   * frame: the LSH stage explodes it, the verify reads the arrays directly
+   * (narrow `array_intersect`, no O(candidates x doc-size) join
+   * intermediate, r7). The small candidate list is shared too, so the two
+   * verify joins never recompute the minhash sub-plan. Not lazy: the
+   * call runs the shuffle-map stages of both shared frames and of the LSH
+   * stage's own shared frames.
+   */
+  def nearDupPairs(docs: DataFrame, id: Column, text: Column): DataFrame = {
+    val arr = Share(docShingleArrays(docs, id, text, 3))
+    val cands = Share(lshCandidatesFromShingles(
+      arr.select(col("id"), explode(col("shingles")).as("shingle"))))
+    jaccardPairsFromShingleArrays(arr, cands)
+      .filter(col("inter") * 5 >= col("union_") * 4)
+  }
 
   /**
    * 16-bit SimHash over the distinct-token set: bit j is set when the

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Share
 
 /**
  * Sequence PACKING for LLM training data: documents are concatenated in
@@ -35,14 +36,13 @@ object Packing {
   def prefixOffsets(df: DataFrame, id: Column, n: Column,
                     blockSize: Long = 4096L): DataFrame = {
     require(blockSize > 0, "blockSize must be positive")
-    // checkpoint (lazy): base feeds the block-totals aggregate AND the
-    // offset-join probe side — without the cut each consumer re-ran the
-    // source scan and the `n` expression (for packSequences that is a
-    // full re-tokenization of the corpus text; r7, guide §2.4/§5). The
-    // materialized frame is (id, n, blk) longs — narrow vs the source.
-    val base = df.select(id.cast("long").as("id"), n.cast("long").as("n"))
-      .withColumn("blk", expr(s"id DIV $blockSize"))
-      .localCheckpoint(false)
+    // base feeds the block-totals aggregate AND the offset-join probe
+    // side — unshared, each consumer re-ran the source scan and the `n`
+    // expression (for packSequences that is a full re-tokenization of the
+    // corpus text; r7, guide §2.4/§5). The shared frame is (id, n, blk)
+    // longs — narrow vs the source.
+    val base = Share(df.select(id.cast("long").as("id"), n.cast("long").as("n"))
+      .withColumn("blk", expr(s"id DIV $blockSize")))
     val blkOff = base.groupBy("blk").agg(sum("n").as("bn"))
       .withColumn("boff", coalesce(
         sum("bn").over(Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)),

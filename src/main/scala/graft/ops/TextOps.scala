@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Share
 
 /**
  * Text analysis for training-data curation: token counting, quality
@@ -168,12 +169,9 @@ object TextOps {
     * e.g. n-gram shingles (Dedup.wordShingles), the unit real
     * decontamination indexes use. */
   def invertedIndexFromTokens(tok: DataFrame, minDf: Int, maxDf: Int): DataFrame = {
-    // tok feeds both the df table and the posting join — checkpoint so
-    // the corpus-scale tokenize runs ONCE, not once per consumer. Under
-    // AQE this call runs tok's shuffle-map stages at once (the shingle
-    // distinct of td_inverted_index); only its result stage waits for the
-    // first action (graft.Probe: 2 jobs while built, 3 in the write)
-    val t = tok.localCheckpoint(false)
+    // tok feeds both the df table and the posting join, so the
+    // corpus-scale tokenize runs ONCE, not once per consumer
+    val t = Share(tok)
     val rare = t.groupBy("term").agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf && col("df") <= maxDf)
     t.join(rare, Seq("term"))
@@ -208,12 +206,11 @@ object TextOps {
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("cab"))
       .filter(col("cab") >= minPair)
-    // uni feeds both per-word joins AND the corpus total — checkpoint the
+    // uni feeds both per-word joins AND the corpus total — share the
     // vocabulary-sized frame so the corpus tokenize+count runs ONCE, not
-    // three times (the un-checkpointed plan re-scanned the corpus per use)
-    val uni = docs.select(explode(words).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+    // three times (the unshared plan re-scanned the corpus per use)
+    val uni = Share(docs.select(explode(words).as("term"))
+      .groupBy("term").agg(count(lit(1)).as("c")))
     // the corpus-total scalar attaches via a single-row broadcast cross
     // join — the ONE shape where a broadcast nested loop is exactly
     // right at any scale (the grand-total aggregate is ≤ 1 row by
@@ -290,14 +287,9 @@ object TextOps {
     val toks = split(text, " ")
     val tfCols = terms.indices.map(i =>
       size(filter(toks, t => t === lit(terms(i)))).cast("long").as(s"tf$i"))
-    val base = docs
-      .select(id.as("id") +: size(toks).cast("long").as("dl") +: tfCols: _*)
-      // feeds the totals row AND the scoring pass. Under AQE this call
-      // runs the shuffle-map stages under `docs` at once (td_bm25's
-      // fan-out repartition); the tf projection is the result stage, run
-      // once by the first action and reused from the cache by the other
-      // (graft.Probe: td_bm25 runs 2 jobs while built, 3 in its write)
-      .localCheckpoint(false)
+    // feeds the totals row AND the scoring pass
+    val base = Share(docs
+      .select(id.as("id") +: size(toks).cast("long").as("dl") +: tfCols: _*))
     val aggList = Seq(count(lit(1)).as("nn"), sum(col("dl")).as("ll")) ++
       terms.indices.map(i => sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
     val tot = base.agg(aggList.head, aggList.tail: _*)
@@ -334,12 +326,11 @@ object TextOps {
    * Output: (id, rank, term, tf, df), rank in 1..k.
    */
   def salientTerms(docs: DataFrame, id: Column, text: Column, k: Int): DataFrame = {
-    // tf feeds both the df rollup and the final join — checkpoint so the
-    // corpus tokenize+count runs ONCE
-    val tf = docs
+    // tf feeds both the df rollup and the final join, so the corpus
+    // tokenize+count runs ONCE
+    val tf = Share(docs
       .select(id.as("id"), explode(split(text, " ")).as("term"))
-      .groupBy("id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+      .groupBy("id", "term").agg(count(lit(1)).as("tf")))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("id")
       .orderBy(col("df").asc, col("tf").desc, col("term").asc)

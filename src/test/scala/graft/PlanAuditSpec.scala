@@ -274,7 +274,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // stopped firing) is a scale bug even while correctness stays green.
     // Budgets are the counts measured at the time each query's plan was
     // last reviewed (AQE off to expose raw Exchanges; frames behind a
-    // localCheckpoint were audited when their operators landed).
+    // Share were audited when their operators landed).
     // r7 re-audit: the optimization round re-measured every count and
     // PINNED THE LOWER NUMBERS where shuffles were removed (columnar
     // bm25, per-doc shingle distinct, distinct-before-hash nodes,
@@ -306,7 +306,7 @@ class PlanAuditSpec extends AnyFunSuite {
       "kg_bgp_path_seq" -> 0,
       // the zero-length-path forms pay exactly the graph-identity
       // distinct (their closure legs hide behind transitiveClosure's
-      // localCheckpoints); the pattern joins themselves broadcast
+      // shared rounds); the pattern joins themselves broadcast
       "kg_bgp_path_star" -> 1, "kg_bgp_path_negopt" -> 1,
       "kg_bgp_alt" -> 0, "kg_sparql_parse" -> 0, "kg_sparql_agg" -> 2,
       "kg_sparql_orderby" -> 1, "kg_sparql_values" -> 0,
@@ -352,9 +352,9 @@ class PlanAuditSpec extends AnyFunSuite {
       "kg_sparql_having" -> 1,
       // r6 surface (pinned from the audited plans, AQE off): every
       // non-aggregating query is ZERO-shuffle — term joins and pattern
-      // joins broadcast over the checkpointed frames, VALUES-with-UNDEF
+      // joins broadcast over the shared frames, VALUES-with-UNDEF
       // and IN compile to pushed filters, closure legs live behind
-      // transitiveClosure's localCheckpoints, the order-expression
+      // transitiveClosure's shared rounds, the order-expression
       // top-k is per-partition; the four aggregating queries pay
       // exactly their one group-by hash-agg shuffle
       "kg_sparql_datefns" -> 0, "kg_bgp_path_deep" -> 0,
@@ -382,7 +382,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // The budgets above read the visible top plan; this gate counts what
     // executes over the whole query lambda plus one noop write, in the
     // shared session (AQE on): the shuffle-map stages a
-    // localCheckpoint(false) runs at call time and every fixpoint round's
+    // Share runs at call time and every fixpoint round's
     // jobs included. Pins are exact, so a removed stage must be re-pinned
     // as deliberately as an added one.
     val pinned = Seq(
