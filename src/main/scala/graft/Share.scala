@@ -19,7 +19,32 @@ import org.apache.spark.sql.DataFrame
  *    Losing that executor (or its blocks) fails the consuming job with a
  *    `SparkException` naming the missing checkpoint block; it never returns
  *    partial rows (`ShareSpec`).
+ *  - Plans: the shared RDD is named for the code that called `Share`
+ *    (`localCheckpoint at GraphOps.scala:304`), not for this file, so a
+ *    formatted plan still says which frame a scan reads. The caller's own
+ *    call-site properties are restored afterwards.
  */
 object Share {
-  def apply(df: DataFrame): DataFrame = df.localCheckpoint(false)
+  // the SparkContext local properties an RDD's creation site is read from
+  private val ShortForm = "callSite.short"
+  private val LongForm = "callSite.long"
+  private val self = getClass.getName.stripSuffix("$")
+
+  def apply(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val callers = Thread.currentThread.getStackTrace.toSeq
+      .dropWhile(f => !isSelf(f)).dropWhile(isSelf)
+    val saved = Seq(ShortForm, LongForm).map(k => k -> sc.getLocalProperty(k))
+    callers.headOption.foreach { f =>
+      sc.setLocalProperty(ShortForm, s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}")
+      // 20 frames: Spark's default spark.callstack.depth
+      sc.setLocalProperty(LongForm, callers.take(20).mkString("\n"))
+    }
+    // a null value removes the key, so an unset property stays unset
+    try df.localCheckpoint(false)
+    finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
+  private def isSelf(f: StackTraceElement): Boolean =
+    f.getClassName == self || f.getClassName.startsWith(self + "$")
 }

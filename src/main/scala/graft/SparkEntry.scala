@@ -1229,7 +1229,8 @@ object SparkEntry {
         nk.cast("string").as("subj_id"), lit("peer").as("pred"),
         ((nk + 1) % 25).cast("string").as("obj_id"))
       Bgp.matchPatterns(up.union(peer),
-        Seq(Bgp.TriplePattern(Bgp.V("s"), Bgp.PlusPath("up"), Bgp.V("o"))))
+        Seq(Bgp.TriplePattern(Bgp.V("s"),
+          Bgp.PathPat(Bgp.PClosure(Bgp.PLeaf("up"), '+')), Bgp.V("o"))))
     }),
 
     // SPARQL UNION: bag union of two branches with different variable
@@ -1278,7 +1279,8 @@ object SparkEntry {
     "kg_bgp_alt" -> ((s, dir) => {
       Bgp.matchPatterns(linkedEdges(documentsCorpus(s, dir)), Seq(
         Bgp.TriplePattern(Bgp.V("d"),
-          Bgp.AltPath(Seq("urn:col:documents:lang", "urn:col:documents:source")),
+          Bgp.PathPat(Bgp.PAlternative(Seq(
+            Bgp.PLeaf("urn:col:documents:lang"), Bgp.PLeaf("urn:col:documents:source")))),
           Bgp.V("v"))))
     }),
 

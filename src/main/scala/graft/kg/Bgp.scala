@@ -43,19 +43,20 @@ import org.apache.spark.sql.functions._
  * product is always a bug, and the caller can add the linking pattern
  * or run the components as separate queries.
  *
- * PROPERTY PATHS: a predicate position may be [[PlusPath]] (SPARQL
- * `<p>+`): the pattern then matches the TRANSITIVE CLOSURE of that one
- * predicate's edge set, computed by `GraphOps.transitiveClosure`
- * (iterative doubling, O(log diameter) self-joins). Closure size is
- * inherently O(n * reach) — at web scale you put `+` on curated
- * hierarchy predicates (subClassOf, partOf over a vocabulary), never on
- * instance-scale predicates; transitiveClosure's maxIter bounds runaway
- * inputs. [[InvPath]] (`^<p>`) matches the inverse edge — the same
- * pushed scan with the id columns swapped; [[SeqPath]]
- * (`<p1>/<p2>/...`, steps optionally inverted) composes one edge per
- * step via equi-joins on the intermediate node ids, projecting each
- * intermediate away before the next join (bag semantics — one binding
- * row per distinct route, as SPARQL defines for `/`).
+ * PROPERTY PATHS: a predicate position may hold a [[PathPat]], any
+ * SPARQL 1.1 property path as one recursive [[PathAst]], evaluated by
+ * one function (`pathRel`) into a (subj_id, obj_id) relation. Leaves
+ * and negated sets are pushed scan filters, an alternative of distinct
+ * leaf predicates is ONE pushed IN-filter scan, inverse swaps the id
+ * columns, a sequence (`<p1>/<p2>/...`) composes one relation per part
+ * via equi-joins on the intermediate node ids (bag semantics — one
+ * binding row per distinct route, as SPARQL defines for `/`), and `+`
+ * is the TRANSITIVE CLOSURE of the inner relation, computed by
+ * `GraphOps.transitiveClosure` (iterative doubling, O(log diameter)
+ * self-joins). Closure size is inherently O(n * reach) — at web scale
+ * you put `+` on curated hierarchy predicates (subClassOf, partOf over
+ * a vocabulary), never on instance-scale predicates; transitiveClosure's
+ * maxIter bounds runaway inputs.
  *
  * FILTER: post-match column predicates over the binding columns (SPARQL
  * FILTER in the well-behaved fragment) — pass them via the `filters`
@@ -78,59 +79,13 @@ object Bgp {
   sealed trait TermPat
   final case class V(name: String) extends TermPat
   final case class C(value: String) extends TermPat
-  /** SPARQL `<p>+` — PREDICATE position only: matches pairs connected by
-    * a path of 1..n `pred` edges (transitive closure of the predicate). */
-  final case class PlusPath(pred: String) extends TermPat
-  /** SPARQL `<p1>|<p2>` — PREDICATE position only: matches an edge whose
-    * predicate is ANY of the alternatives (a pushed IN-filter on the
-    * scan, same shape as a single constant). */
-  final case class AltPath(preds: Seq[String]) extends TermPat
-  /** SPARQL `^<p>` — PREDICATE position only: matches the INVERSE edge
-    * (object-to-subject); the same pushed predicate filter with the id
-    * columns swapped, zero extra cost. */
-  final case class InvPath(pred: String) extends TermPat
-  /** One step of a sequence path: a predicate, optionally inverted. */
-  final case class PathStep(pred: String, inverse: Boolean = false)
-  /** SPARQL `<p1>/<p2>/...` — PREDICATE position only: pairs connected
-    * by one edge per step in order (steps may be inverted, `^<p>`).
-    * k steps = k-1 equi-joins on the intermediate node ids (uniform
-    * sha256 — skew-free), each hop's predicate filter pushed to its
-    * scan, intermediate nodes projected away before every join. BAG
-    * semantics per SPARQL path evaluation: each distinct route yields
-    * one binding row. */
-  final case class SeqPath(steps: Seq[PathStep]) extends TermPat
-  /** SPARQL `<p>*` — PREDICATE position only: the predicate's transitive
-    * closure UNION the zero-length path, which per the SPARQL spec
-    * matches EVERY term of the graph ((n, n) for each distinct node).
-    * The relation is therefore >= \|V\| rows — anchor it with a
-    * selective co-pattern, as with any `skos:broader*`-style query. */
-  final case class StarPath(pred: String) extends TermPat
-  /** SPARQL `<p>?` — PREDICATE position only: the predicate's edges
-    * UNION the zero-length path (identity over every graph node). */
-  final case class OptPath(pred: String) extends TermPat
-  /** SPARQL `!(<p1>|...)` — PREDICATE position only: matches an edge
-    * whose predicate is NONE of the members (a pushed NOT-IN filter on
-    * the scan); forward members only — a set with inverse members `^p`
-    * lowers to [[PNegated]] inside a [[NestedPath]] instead. */
-  final case class NegSet(preds: Seq[String]) extends TermPat
-  /** A parenthesized path group with a closure operator applied —
-    * SPARQL `(p1/p2)+`, `(a|b)*`, `(^p/q)?`: `inner` is the grouped
-    * path (SeqPath / AltPath / InvPath / a plain C), and `op` is '+'
-    * (transitive closure of the group's relation), '*' (closure union
-    * the zero-length path) or '?' (the relation union the zero-length
-    * path). The closure runs the same O(log diameter) iterative
-    * doubling as `<p>+`, over the COMPOSED hop relation — size caveats
-    * of [[PlusPath]]/[[StarPath]] apply unchanged. */
-  final case class GroupPath(inner: TermPat, op: Char) extends TermPat
-
-  /** The full SPARQL 1.1 property-path algebra, recursively composable
-    * — the general form behind the specialized TermPats above. The
-    * front end lowers every simple shape to its specialized twin (a
-    * pushed IN-filter beats a union of scans), so a [[NestedPath]]
-    * carries only the genuinely nested shapes: closures inside
-    * sequences or alternatives (`<a>/<b>+`), inverses of groups
-    * (`^(<a>/<b>)`), alternatives of non-leaves (`<a>+|<b>`), mixed
-    * negated sets (`!(<a>|^<b>)`), and closures over any of those. */
+  /** The SPARQL 1.1 property-path algebra, recursively composable — the
+    * one form of every path in predicate position (a [[PathPat]]). A
+    * bare predicate is a [[C]], not a `PLeaf`, so it keeps the `pred`
+    * column and a variable GRAPH. Every shape compiles through one
+    * evaluator, `pathRel`; its one shape-specific plan is the
+    * alternative of distinct leaf predicates, which is a single pushed
+    * IN-filter scan instead of a union of scans. */
   sealed trait PathAst
   /** One predicate's forward edges. */
   final case class PLeaf(pred: String) extends PathAst
@@ -141,7 +96,8 @@ object Bgp {
     * two id columns ever crossing a join. */
   final case class PSequence(parts: Seq[PathAst]) extends PathAst
   /** `p1|p2|...` — bag union of the branch relations (SPARQL path
-    * evaluation: each distinct route yields one row). */
+    * evaluation: each distinct route yields one row, so `<p>|<p>`
+    * yields every `p` edge twice). */
   final case class PAlternative(parts: Seq[PathAst]) extends PathAst
   /** `path+` / `path*` / `path?` — closure of the composed relation via
     * the same O(log diameter) iterative doubling as `<p>+`; `*`/`?`
@@ -151,12 +107,10 @@ object Bgp {
   /** `!(f1|...|^i1|...)` — a negated property set with forward and
     * inverse members (SPARQL 1.1 9.1): the bag union of a forward
     * NOT-IN scan over `fwd` and an id-swapped NOT-IN scan over `inv`;
-    * either side may be empty (all-forward lowers to [[NegSet]]). */
+    * either side may be empty. */
   final case class PNegated(fwd: Seq[String], inv: Seq[String]) extends PathAst
-  /** A genuinely nested property path (see [[PathAst]]) in predicate
-    * position, compiled recursively by the pathRel case of
-    * [[pathHop]]-style composition inside [[patternRel]]. */
-  final case class NestedPath(path: PathAst) extends TermPat
+  /** A property path (see [[PathAst]]) in predicate position. */
+  final case class PathPat(path: PathAst) extends TermPat
 
   /** GRAPH-position scoping from a SPARQL dataset clause (13.2):
     * restrict the pattern's quads to the graph-IRI set `values` (a
@@ -219,70 +173,27 @@ object Bgp {
       case GraphIn(_, Some(n))  => n
     }.toSet
 
-  /** Constant positions of a pattern; most path forms count as a
-    * constant predicate (they pin the relation to a fixed predicate
-    * set / its closure / its composition) — EXCEPT the zero-length
-    * forms `*`/`?`, whose relation contains identity over every graph
-    * node (>= \|V\| rows, the WEAKEST relation in the query): counting
-    * them selective would put them at the head of the join tree. */
+  /** Constant positions of a pattern; a path counts as a constant
+    * predicate (it pins the relation to a fixed predicate set / its
+    * closure / its composition) — EXCEPT a path whose relation contains
+    * the zero-length identity over every graph node (>= \|V\| rows, the
+    * WEAKEST relation in the query): counting it selective would put it
+    * at the head of the join tree. */
   private def patConsts(p: TriplePattern): Int =
     (Seq(p.subj, p.pred, p.obj) ++ p.graph).count {
-      case V(_)                     => false
-      case StarPath(_) | OptPath(_) => false
-      case GroupPath(_, op)         => op == '+'
-      case NestedPath(ast)          => !pathHasIdentity(ast)
-      case GraphIn(_, bind)         => bind.isEmpty
-      case _                        => true
+      case V(_)             => false
+      case PathPat(ast)     => !pathHasIdentity(ast)
+      case GraphIn(_, bind) => bind.isEmpty
+      case _                => true
     }
 
-  /** One relation per triple pattern: constants -> pushed-down filters,
-    * variables -> renamed columns (a variable repeated WITHIN a pattern
-    * becomes an equality filter and binds once); a PlusPath predicate
-    * swaps the base edge relation for that predicate's closure; an
-    * AltPath predicate is a pushed IN-filter. */
-  /** The (subj_id, obj_id) relation of ONE traversal of a path form —
-    * the building block [[patternRel]] scans and [[GroupPath]] closures
-    * compose. Constants/alternatives/negated sets are pushed scan
-    * filters; inverse swaps the id columns; a sequence composes one
-    * pushed scan per step via equi-joins on the intermediate ids. */
-  private def pathHop(base: DataFrame, pat: TermPat): DataFrame = pat match {
-    case C(pr) =>
-      base.filter(col("pred") === lit(pr)).select("subj_id", "obj_id")
-    case AltPath(ps) =>
-      require(ps.nonEmpty, "empty predicate alternative list")
-      base.filter(col("pred").isin(ps: _*)).select("subj_id", "obj_id")
-    case InvPath(pr) =>
-      base.filter(col("pred") === lit(pr))
-        .select(col("obj_id").as("subj_id"), col("subj_id").as("obj_id"))
-    case NegSet(ps) =>
-      require(ps.nonEmpty, "empty negated property set")
-      base.filter(!col("pred").isin(ps: _*)).select("subj_id", "obj_id")
-    case SeqPath(steps) =>
-      require(steps.sizeIs >= 2, s"a sequence path needs >= 2 steps: $pat")
-      // hop i carries (n{i}, n{i+1}); the fold joins on the shared
-      // intermediate name, so no payload but two id columns ever
-      // crosses a join
-      val hops = steps.zipWithIndex.map { case (PathStep(pr, inv), i) =>
-        val h = base.filter(col("pred") === lit(pr))
-        val (a, b) = if (inv) ("obj_id", "subj_id") else ("subj_id", "obj_id")
-        h.select(col(a).as(s"n$i"), col(b).as(s"n${i + 1}"))
-      }
-      val joined = hops.tail.zipWithIndex.foldLeft(hops.head) {
-        case (acc, (h, i)) =>
-          acc.join(h, Seq(s"n${i + 1}")).select(col("n0"), col(s"n${i + 2}"))
-      }
-      joined.select(col("n0").as("subj_id"), col(s"n${steps.size}").as("obj_id"))
-    case other =>
-      throw new IllegalArgumentException(s"not a composable path form: $other")
-  }
-
-  /** The (subj_id, obj_id) relation of a fully general [[PathAst]] —
-    * recursive composition: leaves and negated sets are pushed scan
-    * filters, inverse swaps columns, sequences fold equi-joins on the
-    * intermediate ids, alternatives are bag unions, closures run the
-    * O(log diameter) iterative doubling over the composed inner
-    * relation ('*'/'?' union the zero-length identity of the SCOPED
-    * graph, same semantics as [[StarPath]]/[[OptPath]]). */
+  /** The (subj_id, obj_id) relation of a [[PathAst]] — recursive
+    * composition: leaves and negated sets are pushed scan filters, inverse
+    * swaps columns, sequences fold equi-joins on the intermediate ids
+    * (nothing but two id columns ever crosses a join), alternatives are
+    * bag unions, closures run the O(log diameter) iterative doubling over
+    * the composed inner relation ('*'/'?' union the zero-length identity
+    * of the SCOPED graph). */
   private def pathRel(base: DataFrame, p: PathAst): DataFrame = p match {
     case PLeaf(pr) =>
       base.filter(col("pred") === lit(pr)).select("subj_id", "obj_id")
@@ -312,7 +223,13 @@ object Bgp {
       }.select(col("n0").as("subj_id"), col(s"n${parts.size}").as("obj_id"))
     case PAlternative(parts) =>
       require(parts.sizeIs >= 2, s"an alternative path needs >= 2 parts: $p")
-      parts.map(pathRel(base, _)).reduce(_ union _)
+      val leaves = parts.collect { case PLeaf(pr) => pr }
+      // distinct leaf predicates partition the matching edges, so one
+      // pushed IN scan is their bag union; a repeated leaf must keep
+      // its second copy of each edge, which only the union gives
+      if (leaves.distinct.sizeIs == parts.size)
+        base.filter(col("pred").isin(leaves: _*)).select("subj_id", "obj_id")
+      else parts.map(pathRel(base, _)).reduce(_ union _)
     case PClosure(inner, op) => closureRel(pathRel(base, inner), op, base)
   }
 
@@ -327,6 +244,10 @@ object Bgp {
     case other => throw new IllegalArgumentException(s"unknown path closure operator '$other'")
   }
 
+  /** One relation per triple pattern: constants -> pushed-down filters,
+    * variables -> renamed columns (a variable repeated WITHIN a pattern
+    * becomes an equality filter and binds once); a path predicate swaps
+    * the base edge relation for the path's (subj_id, obj_id) relation. */
   private[kg] def patternRel(base: DataFrame, p: TriplePattern): DataFrame = {
     Seq(p.subj, p.obj).foreach(t =>
       require(t.isInstanceOf[V] || t.isInstanceOf[C],
@@ -360,14 +281,7 @@ object Bgp {
     }
     val pairPos = Seq("subj_id" -> p.subj, "obj_id" -> p.obj)
     val (rel, pos) = p.pred match {
-      case PlusPath(pr)         => (closureRel(pathHop(gbase, C(pr)), '+', gbase), pairPos)
-      case StarPath(pr)         => (closureRel(pathHop(gbase, C(pr)), '*', gbase), pairPos)
-      case OptPath(pr)          => (closureRel(pathHop(gbase, C(pr)), '?', gbase), pairPos)
-      case GroupPath(inner, op) => (closureRel(pathHop(gbase, inner), op, gbase), pairPos)
-      case NestedPath(ast) =>
-        (pathRel(gbase, ast), pairPos)
-      case AltPath(_) | InvPath(_) | NegSet(_) | SeqPath(_) =>
-        (pathHop(gbase, p.pred), pairPos)
+      case PathPat(ast) => (pathRel(gbase, ast), pairPos)
       case _ =>
         val trip = Seq("subj_id" -> p.subj, "pred" -> p.pred, "obj_id" -> p.obj)
         (gbase, p.graph match {

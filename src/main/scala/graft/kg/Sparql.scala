@@ -3,7 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import Bgp.{AltPath, C, InvPath, NegSet, OptPath, PathStep, PlusPath, SeqPath, StarPath, TriplePattern, V}
+import Bgp.{C, TriplePattern, V}
 
 /**
  * A tiny SPARQL front end for the [[Bgp]] layer — the string surface
@@ -1052,13 +1052,9 @@ object Sparql {
     *   pathPrim:= 'a' | <iri> | '!' negset | '(' path ')'
     *   negset  := '^'? <iri> | '(' '^'? <iri> ('|' '^'? <iri>)* ')'
     * Operator CHAINING without parens (`<p>*+`) stays rejected per the
-    * W3C grammar — parenthesize to nest: `(<p>*)+`. The parsed AST is
-    * then LOWERED: every shape the specialized TermPats carry (a plain
-    * predicate, an IN-filter alternative, a step sequence, one closure
-    * over one simple group, an all-forward negated set) compiles to its
-    * optimized twin, so existing plans are byte-identical; only
-    * genuinely nested shapes ride [[Bgp.NestedPath]]'s recursive
-    * composition. */
+    * W3C grammar — parenthesize to nest: `(<p>*)+`. [[predTerm]] keeps
+    * a bare predicate as a plain constant and hands every other parsed
+    * path to Bgp whole, as a [[Bgp.PathPat]]. */
   private def pathExpr(c: Cursor): Bgp.PathAst = {
     val parts = Seq.newBuilder[Bgp.PathAst]
     parts += pathSeqExpr(c)
@@ -1128,40 +1124,15 @@ object Sparql {
       s"path+/*/?, !negset, '(' path ')' or 'a'), found $t")
   }
 
-  /** A PathAst part that is one sequence STEP: a leaf or its inverse. */
-  private def asStep(p: Bgp.PathAst): Option[PathStep] = p match {
-    case Bgp.PLeaf(pr)                 => Some(PathStep(pr))
-    case Bgp.PInverse(Bgp.PLeaf(pr))   => Some(PathStep(pr, inverse = true))
-    case _                             => None
-  }
-
-  /** Lower a parsed path to the most specialized TermPat that carries
-    * it (see [[pathExpr]]); genuinely nested shapes stay general. */
-  private def lowerPath(p: Bgp.PathAst): Bgp.TermPat = p match {
-    case Bgp.PLeaf(pr)               => C(pr)
-    case Bgp.PInverse(Bgp.PLeaf(pr)) => InvPath(pr)
-    case Bgp.PAlternative(ps) if ps.forall(_.isInstanceOf[Bgp.PLeaf]) =>
-      AltPath(ps.collect { case Bgp.PLeaf(pr) => pr })
-    case Bgp.PSequence(ps) if ps.forall(asStep(_).isDefined) =>
-      SeqPath(ps.flatMap(asStep))
-    case Bgp.PClosure(Bgp.PLeaf(pr), '+') => PlusPath(pr)
-    case Bgp.PClosure(Bgp.PLeaf(pr), '*') => StarPath(pr)
-    case Bgp.PClosure(Bgp.PLeaf(pr), '?') => OptPath(pr)
-    case Bgp.PClosure(inner, op) =>
-      lowerPath(inner) match {
-        case t @ (C(_) | AltPath(_) | InvPath(_) | SeqPath(_)) =>
-          Bgp.GroupPath(t, op)
-        case _ => Bgp.NestedPath(p)
-      }
-    case Bgp.PNegated(fwd, Seq()) if fwd.nonEmpty => NegSet(fwd)
-    case other => Bgp.NestedPath(other)
-  }
-
-  /** Predicate-position term: a ?variable, or a property path lowered
-    * to its most specialized TermPat (see [[pathExpr]]/[[lowerPath]]). */
+  /** Predicate-position term: a ?variable, a bare predicate as a
+    * constant (it keeps the `pred` column and a variable GRAPH), or any
+    * other property path (see [[pathExpr]]). */
   private def predTerm(c: Cursor): Bgp.TermPat = c.peekOrFail match {
     case TVar(n) => c.next(); V(n)
-    case _       => lowerPath(pathExpr(c))
+    case _ => pathExpr(c) match {
+      case Bgp.PLeaf(pr) => C(pr)
+      case path          => Bgp.PathPat(path)
+    }
   }
 
   private def triple(c: Cursor): TriplePattern = {

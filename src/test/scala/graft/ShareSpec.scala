@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.SparkException
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kg.TestSpark
@@ -31,5 +32,24 @@ class ShareSpec extends AnyFunSuite {
     val e = intercept[SparkException](shared.filter(col("k") < 5).collect())
     assert(e.getMessage.contains("Checkpoint block rdd_") && e.getMessage.contains("not found"),
       e.getMessage)
+  }
+
+  test("a shared frame's plan names the caller, and the caller's call site is restored") {
+    val sc = spark.sparkContext
+    val keys = Seq("callSite.short", "callSite.long")
+    def frame() = Share(spark.range(0, 10, 1, 2).select((col("id") * 2).as("x")))
+    // unset before the call: still unset after it
+    sc.clearCallSite()
+    val plan = frame().queryExecution.explainString(FormattedMode)
+    assert(plan.contains("localCheckpoint at ShareSpec.scala:"), plan)
+    assert(!plan.contains("Share.scala"), plan)
+    assert(keys.map(sc.getLocalProperty).forall(_ == null))
+    // set by the caller before the call: the same values after it
+    sc.setLocalProperty(keys(0), "caller short")
+    sc.setLocalProperty(keys(1), "caller long")
+    try {
+      frame()
+      assert(keys.map(sc.getLocalProperty) === Seq("caller short", "caller long"))
+    } finally sc.clearCallSite()
   }
 }

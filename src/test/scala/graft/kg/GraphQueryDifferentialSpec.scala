@@ -107,7 +107,7 @@ class GraphQueryDifferentialSpec extends AnyFunSuite {
   }
 
   test("every property-path form equals its brute-force semantics on random graphs") {
-    import Bgp.{AltPath, InvPath, NegSet, OptPath, PathStep, PlusPath, SeqPath, StarPath}
+    import Bgp.{PAlternative, PClosure, PInverse, PLeaf, PNegated, PSequence, PathAst, PathPat}
     val rnd = new Random(31)
     for (trial <- 1 to 3) {
       val nodes = (0 until 10).map(i => s"n$i")
@@ -115,8 +115,12 @@ class GraphQueryDifferentialSpec extends AnyFunSuite {
         Seq("p", "q")(rnd.nextInt(2)), nodes(rnd.nextInt(10))))
         .filter(e => e._1 != e._3).distinct
       val df = es.toDF("subj_id", "pred", "obj_id")
-      def run(pat: Bgp.TermPat): Seq[(String, String)] =
-        Bgp.matchPatterns(df, Seq(TriplePattern(V("x"), pat, V("y"))))
+      def run(path: PathAst): Seq[(String, String)] =
+        Bgp.matchPatterns(df, Seq(TriplePattern(V("x"), PathPat(path), V("y"))))
+          .collect().map(r => (r.getAs[String]("x"), r.getAs[String]("y")))
+          .sorted.toSeq
+      def runQ(path: String): Seq[(String, String)] =
+        Sparql.run(df, s"SELECT ?x ?y WHERE { ?x $path ?y }")
           .collect().map(r => (r.getAs[String]("x"), r.getAs[String]("y")))
           .sorted.toSeq
       val pE = es.filter(_._2 == "p").map(e => (e._1, e._3))
@@ -133,20 +137,23 @@ class GraphQueryDifferentialSpec extends AnyFunSuite {
         seen - a
       }
       val plusBrute = adj.keySet.flatMap(a => reach(a).map(b => (a, b)))
-      assert(run(PlusPath("p")).toSet === plusBrute, s"trial $trial plus")
-      assert(run(StarPath("p")).toSet ===
+      assert(run(PClosure(PLeaf("p"), '+')).toSet === plusBrute, s"trial $trial plus")
+      assert(run(PClosure(PLeaf("p"), '*')).toSet ===
         plusBrute ++ allNodes.map(n => (n, n)), s"trial $trial star")
-      assert(run(OptPath("p")).toSet ===
+      assert(run(PClosure(PLeaf("p"), '?')).toSet ===
         pE.toSet ++ allNodes.map(n => (n, n)), s"trial $trial opt")
-      assert(run(InvPath("p")) === pE.map(_.swap).sorted, s"trial $trial inv")
-      assert(run(NegSet(Seq("p"))) === qE.sorted, s"trial $trial neg")
-      assert(run(AltPath(Seq("p", "q"))) === (pE ++ qE).sorted, s"trial $trial alt")
+      assert(run(PInverse(PLeaf("p"))) === pE.map(_.swap).sorted, s"trial $trial inv")
+      assert(run(PNegated(Seq("p"), Nil)) === qE.sorted, s"trial $trial neg")
+      assert(run(PAlternative(Seq(PLeaf("p"), PLeaf("q")))) === (pE ++ qE).sorted, s"trial $trial alt")
+      // a repeated leaf is a second route: SPARQL's alt is a multiset union
+      assert(runQ("<p>|<p>") === (pE ++ pE).sorted, s"trial $trial alt dup")
+      assert(runQ("<p>|<q>|<p>") === (pE ++ pE ++ qE).sorted, s"trial $trial alt dup3")
       // sequence p then inverse q: one row PER ROUTE (bag semantics)
       val seqBrute = (for {
         (x, m) <- pE
         (z, m2) <- qE if m2 == m
       } yield (x, z)).sorted
-      assert(run(SeqPath(Seq(PathStep("p"), PathStep("q", inverse = true)))) ===
+      assert(run(PSequence(Seq(PLeaf("p"), PInverse(PLeaf("q"))))) ===
         seqBrute, s"trial $trial seq")
     }
   }

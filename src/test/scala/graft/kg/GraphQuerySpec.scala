@@ -1,6 +1,7 @@
 package graft.kg
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.expressions.In
 import org.apache.spark.sql.functions._
 
 /**
@@ -12,7 +13,10 @@ import org.apache.spark.sql.functions._
 class GraphQuerySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-  import Bgp.{AltPath, C, PlusPath, TriplePattern, V}
+  import Bgp.{C, PAlternative, PClosure, PLeaf, PathPat, TriplePattern, V}
+
+  private def plus(pred: String) = PathPat(PClosure(PLeaf(pred), '+'))
+  private def alt(preds: String*) = PathPat(PAlternative(preds.map(PLeaf)))
 
   private def edges(rows: (String, String, String)*) =
     rows.toDF("subj_id", "pred", "obj_id")
@@ -139,42 +143,51 @@ class GraphQuerySpec extends AnyFunSuite {
     assert(out.collect().map(_.getAs[String]("d")).toSeq === Seq("d2"))
   }
 
-  test("PlusPath matches the predicate's transitive closure") {
+  test("a <p>+ path matches the predicate's transitive closure") {
     val e = edges(("a", "up", "b"), ("b", "up", "c"), ("c", "up", "d"),
       ("x", "other", "a"))
-    val out = Bgp.matchPatterns(e, Seq(TriplePattern(V("s"), PlusPath("up"), V("o"))))
+    val out = Bgp.matchPatterns(e, Seq(TriplePattern(V("s"), plus("up"), V("o"))))
     assert(out.collect().map(r => (r.getAs[String]("s"), r.getAs[String]("o"))).toSet ===
       Set(("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"), ("c", "d")))
     // constant object: everything with a 1+-hop 'up' path to d
-    val toD = Bgp.matchPatterns(e, Seq(TriplePattern(V("s"), PlusPath("up"), C("d"))))
+    val toD = Bgp.matchPatterns(e, Seq(TriplePattern(V("s"), plus("up"), C("d"))))
     assert(toD.collect().map(_.getAs[String]("s")).toSet === Set("a", "b", "c"))
-    // PlusPath is predicate-position-only
+    // a path is predicate-position-only
     val ex = intercept[IllegalArgumentException] {
-      Bgp.matchPatterns(e, Seq(TriplePattern(PlusPath("up"), C("p"), V("o"))))
+      Bgp.matchPatterns(e, Seq(TriplePattern(plus("up"), C("p"), V("o"))))
     }
     assert(ex.getMessage.contains("predicate position"))
   }
 
-  test("PlusPath composes with plain patterns on shared variables") {
+  test("a <p>+ path composes with plain patterns on shared variables") {
     val e = edges(("a", "up", "b"), ("b", "up", "c"),
       ("a", "lang", "en"), ("b", "lang", "fr"), ("c", "lang", "en"))
     val out = Bgp.matchPatterns(e, Seq(
-      TriplePattern(V("s"), PlusPath("up"), V("o")),
+      TriplePattern(V("s"), plus("up"), V("o")),
       TriplePattern(V("o"), C("lang"), C("en"))))
     assert(out.collect().map(r => (r.getAs[String]("o"), r.getAs[String]("s"))).toSet ===
       Set(("c", "a"), ("c", "b")))
   }
 
-  test("AltPath matches any of the predicate alternatives (pushed IN-filter)") {
+  test("a leaf alternative matches any of its predicates (one pushed IN scan)") {
     val e = edges(("d1", "title", "t1"), ("d2", "label", "t2"),
       ("d3", "name", "t3"), ("d4", "other", "t4"))
     val out = Bgp.matchPatterns(e,
-      Seq(TriplePattern(V("d"), AltPath(Seq("title", "label")), V("t"))))
+      Seq(TriplePattern(V("d"), alt("title", "label"), V("t"))))
     assert(out.collect().map(r => (r.getAs[String]("d"), r.getAs[String]("t"))).toSet ===
       Set(("d1", "t1"), ("d2", "t2")))
-    // predicate-position only, like PlusPath
+    // distinct leaves are ONE scan with one IN filter on pred, not a
+    // union of per-leaf scans (over an RDD leaf: the optimizer folds a
+    // filter on a local relation into the relation itself)
+    val plan = Bgp.matchPatterns(spark.createDataFrame(e.rdd, e.schema),
+      Seq(TriplePattern(V("d"), alt("title", "label"), V("t"))))
+      .queryExecution.optimizedPlan
+    assert(plan.collectLeaves().size === 1, plan)
+    val ins = plan.flatMap(_.expressions.flatMap(_.collect { case i: In => i }))
+    assert(ins.size === 1 && ins.head.value.references.toSeq.map(_.name) === Seq("pred"), plan)
+    // predicate-position only, like every path
     val ex = intercept[IllegalArgumentException] {
-      Bgp.matchPatterns(e, Seq(TriplePattern(AltPath(Seq("x")), C("p"), V("o"))))
+      Bgp.matchPatterns(e, Seq(TriplePattern(alt("x", "y"), C("p"), V("o"))))
     }
     assert(ex.getMessage.contains("predicate position"))
   }

@@ -138,7 +138,8 @@ class SourcesAndStreamSpec extends AnyFunSuite {
     assert(got === Set(("urn:a", "urn:r1", "east")))
     val ex = intercept[IllegalArgumentException](NtStream.bgpEnrich(
       statics, statics,
-      Bgp.TriplePattern(Bgp.V("x"), Bgp.PlusPath("urn:in"), Bgp.V("y")), Nil))
+      Bgp.TriplePattern(Bgp.V("x"),
+        Bgp.PathPat(Bgp.PClosure(Bgp.PLeaf("urn:in"), '+')), Bgp.V("y")), Nil))
     assert(ex.getMessage.contains("plain"))
   }
 

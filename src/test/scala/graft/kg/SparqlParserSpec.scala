@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class SparqlParserSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-  import Bgp.{AltPath, C, PlusPath, TriplePattern, V}
+  import Bgp.{C, PAlternative, PClosure, PLeaf, PathPat, TriplePattern, V}
 
   private def edges(rows: (String, String, String)*) =
     rows.toDF("subj_id", "pred", "obj_id")
@@ -85,7 +85,7 @@ class SparqlParserSpec extends AnyFunSuite {
     val parsed = Sparql.run(up,
       """SELECT ?x ?y WHERE { ?x <urn:up>+ ?y . ?x a <urn:Class> }""")
     val prog = Bgp.matchPatterns(up, Seq(
-      TriplePattern(V("x"), PlusPath("urn:up"), V("y")),
+      TriplePattern(V("x"), PathPat(PClosure(PLeaf("urn:up"), '+')), V("y")),
       TriplePattern(V("x"), C("http://www.w3.org/1999/02/22-rdf-syntax-ns#type"), C(cls))))
       .select("x", "y")
     assertSame(parsed, prog)
@@ -93,7 +93,7 @@ class SparqlParserSpec extends AnyFunSuite {
   }
 
   test("inverse ^<p> and sequence <p1>/<p2> paths parse to the twin") {
-    import Bgp.{InvPath, PathStep, SeqPath}
+    import Bgp.{PInverse, PSequence}
     val (a, b, p, r) = (d1, d2, d3, en) // a up p; b up p; p up r
     val up = edges((a, "urn:up", p), (b, "urn:up", p), (p, "urn:up", r))
     def render(df: DataFrame) =
@@ -101,13 +101,13 @@ class SparqlParserSpec extends AnyFunSuite {
 
     val inv = Sparql.run(up, "SELECT ?x ?y WHERE { ?x ^<urn:up> ?y }")
     val invProg = Bgp.matchPatterns(up,
-      Seq(TriplePattern(V("x"), InvPath("urn:up"), V("y")))).select("x", "y")
+      Seq(TriplePattern(V("x"), PathPat(PInverse(PLeaf("urn:up"))), V("y")))).select("x", "y")
     assertSame(inv, invProg)
     assert(render(inv) === Seq((p, a), (p, b), (r, p)).sorted)
 
     val grand = Sparql.run(up, "SELECT ?x ?y WHERE { ?x <urn:up>/<urn:up> ?y }")
     val grandProg = Bgp.matchPatterns(up, Seq(TriplePattern(V("x"),
-      SeqPath(Seq(PathStep("urn:up"), PathStep("urn:up"))), V("y")))).select("x", "y")
+      PathPat(PSequence(Seq(PLeaf("urn:up"), PLeaf("urn:up")))), V("y")))).select("x", "y")
     assertSame(grand, grandProg)
     assert(render(grand) === Seq((a, r), (b, r)).sorted)
 
@@ -133,7 +133,7 @@ class SparqlParserSpec extends AnyFunSuite {
   }
 
   test("zero-length paths <p>*/<p>? and negated property sets parse to the twin") {
-    import Bgp.{NegSet, OptPath, StarPath}
+    import Bgp.PNegated
     val (a, b, p, r) = (d1, d2, d3, en) // a up p; b up p; p up r; a peer b
     val g = edges((a, "urn:up", p), (b, "urn:up", p), (p, "urn:up", r),
       (a, "urn:peer", b))
@@ -144,20 +144,20 @@ class SparqlParserSpec extends AnyFunSuite {
 
     val star = Sparql.run(g, "SELECT ?x ?y WHERE { ?x <urn:up>* ?y }")
     val starProg = Bgp.matchPatterns(g,
-      Seq(TriplePattern(V("x"), StarPath("urn:up"), V("y")))).select("x", "y")
+      Seq(TriplePattern(V("x"), PathPat(PClosure(PLeaf("urn:up"), '*')), V("y")))).select("x", "y")
     assertSame(star, starProg)
     assert(render(star) === identity ++
       Set((a, p), (b, p), (p, r), (a, r), (b, r))) // closure, peer NOT leaked
 
     val opt = Sparql.run(g, "SELECT ?x ?y WHERE { ?x <urn:up>? ?y }")
     val optProg = Bgp.matchPatterns(g,
-      Seq(TriplePattern(V("x"), OptPath("urn:up"), V("y")))).select("x", "y")
+      Seq(TriplePattern(V("x"), PathPat(PClosure(PLeaf("urn:up"), '?')), V("y")))).select("x", "y")
     assertSame(opt, optProg)
     assert(render(opt) === identity ++ Set((a, p), (b, p), (p, r)))
 
     val neg = Sparql.run(g, "SELECT ?x ?y WHERE { ?x !<urn:up> ?y }")
     val negProg = Bgp.matchPatterns(g,
-      Seq(TriplePattern(V("x"), NegSet(Seq("urn:up")), V("y")))).select("x", "y")
+      Seq(TriplePattern(V("x"), PathPat(PNegated(Seq("urn:up"), Nil)), V("y")))).select("x", "y")
     assertSame(neg, negProg)
     assert(render(neg) === Set((a, b))) // only the peer edge survives
 
@@ -201,7 +201,8 @@ class SparqlParserSpec extends AnyFunSuite {
     val alt = Sparql.run(e,
       """SELECT * WHERE { ?d <urn:title>|<urn:alt> ?t }""")
     val altProg = Bgp.matchPatterns(e,
-      Seq(TriplePattern(V("d"), AltPath(Seq("urn:title", "urn:alt")), V("t"))))
+      Seq(TriplePattern(V("d"),
+        PathPat(PAlternative(Seq(PLeaf("urn:title"), PLeaf("urn:alt")))), V("t"))))
     assertSame(alt, altProg)
     assert(alt.count() === 2)
 
@@ -1249,14 +1250,14 @@ class SparqlParserSpec extends AnyFunSuite {
   }
 
   test("nested property paths: (p1/p2)+, (a|b)+, (^p)?, group twins") {
-    import Bgp.{GroupPath, InvPath, SeqPath, PathStep}
+    import Bgp.{PInverse, PSequence}
     // chain 1 -up-> 2 -up-> 3 -up-> 4 -up-> 5, plus a 'peer' distractor
     val chain = (1 to 4).map(i => (i.toString, "up", (i + 1).toString)) :+
       (("1", "peer", "5"))
     val e = chain.toDF("subj_id", "pred", "obj_id")
     val twoHopPlus = Sparql.run(e, "SELECT ?x ?y WHERE { ?x (<up>/<up>)+ ?y }")
     val prog = Bgp.matchPatterns(e, Seq(TriplePattern(V("x"),
-      GroupPath(SeqPath(Seq(PathStep("up"), PathStep("up"))), '+'), V("y"))))
+      PathPat(PClosure(PSequence(Seq(PLeaf("up"), PLeaf("up"))), '+')), V("y"))))
     assertSame(twoHopPlus, prog)
     // even distances only: (1,3),(1,5),(2,4),(3,5)
     assert(twoHopPlus.collect().map(r => (r.getString(0), r.getString(1))).toSet
@@ -1265,13 +1266,13 @@ class SparqlParserSpec extends AnyFunSuite {
     // pairs (i < j) plus nothing new from peer (1->5 already reachable)
     val altPlus = Sparql.run(e, "SELECT ?x ?y WHERE { ?x (<up>|<peer>)+ ?y }")
     val progAlt = Bgp.matchPatterns(e, Seq(TriplePattern(V("x"),
-      GroupPath(Bgp.AltPath(Seq("up", "peer")), '+'), V("y"))))
+      PathPat(PClosure(PAlternative(Seq(PLeaf("up"), PLeaf("peer"))), '+')), V("y"))))
     assertSame(altPlus, progAlt)
     assert(altPlus.count() === 10)
     // (^up)? = inverse edges union the zero-length identity
     val invOpt = Sparql.run(e, "SELECT ?x ?y WHERE { ?x (^<up>)? ?y }")
     val progInv = Bgp.matchPatterns(e, Seq(TriplePattern(V("x"),
-      GroupPath(InvPath("up"), '?'), V("y"))))
+      PathPat(PClosure(PInverse(PLeaf("up")), '?')), V("y"))))
     assertSame(invOpt, progInv)
     // a parenthesized single step with an operator canonicalizes to the
     // unparenthesized form
