@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.kg._
 import graft.ops._
 
@@ -20,10 +21,24 @@ object SparkEntry {
 
   private val XSD_STR = "http://www.w3.org/2001/XMLSchema#string"
 
+  // the driver tables' schemas, as parquet inference types them: a named
+  // schema skips the footer job a schema-less read runs
+  private[graft] val NationSchema = StructType(Seq(
+    StructField("n_nationkey", IntegerType), StructField("n_name", StringType),
+    StructField("n_regionkey", IntegerType)))
+  private[graft] val DocumentsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType), StructField("source", StringType),
+    StructField("n_chars", LongType)))
+  private[graft] val EmbeddingsSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
+    StructField("label", IntegerType)))
+
   // ---------- corpora ------------------------------------------------------
 
   private def nationCorpus(s: SparkSession, dir: String): Dataset[CorpusRow] =
-    Corpus.fromTable(fanOut(s, s.read.parquet(s"$dir/nation.parquet")), "nation", "n_nationkey",
+    Corpus.fromTable(fanOut(s, s.read.schema(NationSchema).parquet(s"$dir/nation.parquet")),
+      "nation", "n_nationkey",
       Seq("n_name" -> col("n_name"), "n_regionkey" -> col("n_regionkey")))
 
   private def documentsCorpus(s: SparkSession, dir: String): Dataset[CorpusRow] =
@@ -119,7 +134,7 @@ object SparkEntry {
   }
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    fanOut(s, s.read.parquet(s"$dir/documents.parquet"))
+    fanOut(s, s.read.schema(DocumentsSchema).parquet(s"$dir/documents.parquet"))
 
   /**
    * Parse -> skolemize -> canonicalize -> materialize for the SPARQL
@@ -148,7 +163,7 @@ object SparkEntry {
   }
 
   private def embs(s: SparkSession, dir: String): DataFrame =
-    fanOut(s, s.read.parquet(s"$dir/embeddings.parquet"))
+    fanOut(s, s.read.schema(EmbeddingsSchema).parquet(s"$dir/embeddings.parquet"))
 
   // ---------- flagship -----------------------------------------------------
 

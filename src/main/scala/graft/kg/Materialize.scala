@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSes
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Share
+
 /**
  * E6-E9: graph materialization with skew handling, per-partition
  * checkpoint/resume and metrics.
@@ -17,7 +19,8 @@ import org.apache.spark.sql.types._
  *   nodes/                          distinct terms: id, kind, value, lang, dt
  *   edges/                          subj_id, pred, obj_id + lineage; AQE
  *                                   sizes the files (see saltedRepartition)
- *   metrics/                        per-document lineage + counts + sha256
+ *   metrics/   bucket=K/...         per-document lineage + counts + sha256,
+ *                                   one file per bucket
  *   manifest/  bucket=K/...         per-bucket checkpoint rows (n_docs)
  *
  * Resume contract (E8): work is sharded into `buckets` by a hash of the
@@ -27,6 +30,13 @@ import org.apache.spark.sql.types._
  * the manifest before any parsing happens. Staging writes use dynamic
  * partition overwrite, making a re-run of a half-written bucket
  * idempotent.
+ *
+ * A run reads the corpus twice: once for one digest row per todo
+ * document (repo, path, commit, content_sha256, bucket), shared with
+ * [[graft.Share]], from which come both the manifest counts and the
+ * metrics; and once to parse the todo documents. A lost digest block fails
+ * the metrics write, which comes before the manifest commit, so a resume
+ * re-runs those buckets.
  */
 object Materialize {
 
@@ -265,14 +275,22 @@ object Materialize {
    * carried next to the counts so any downstream consumer can audit that
    * the bytes parsed are the bytes shipped).
    */
-  def metrics(corpus: DataFrame, parsed: DataFrame): DataFrame = {
+  def metrics(corpus: DataFrame, parsed: DataFrame): DataFrame =
+    countsJoin(digests(corpus), parsed)
+
+  /** One row per document, its content replaced by the content sha256;
+    * `keep` columns ride along after it. */
+  private def digests(docs: DataFrame, keep: Column*): DataFrame =
+    docs.select(Seq(col("repo"), col("path"), col("commit"),
+      sha2(col("content"), 256).as("content_sha256")) ++ keep: _*)
+
+  /** Each [[digests]] row with its document's triple and error counts
+    * in `parsed` (0 and 0 for a document that parsed to no rows). */
+  private def countsJoin(digestRows: DataFrame, parsed: DataFrame): DataFrame = {
     val counts = parsed.groupBy("repo", "path", "commit").agg(
       sum(when(!col("err"), 1L).otherwise(0L)).as("n_triples"),
       sum(when(col("err"), 1L).otherwise(0L)).as("n_errors"))
-    corpus
-      .select(col("repo"), col("path"), col("commit"),
-        sha2(col("content"), 256).as("content_sha256"))
-      .join(counts, Seq("repo", "path", "commit"), "left")
+    digestRows.join(counts, Seq("repo", "path", "commit"), "left")
       .na.fill(0L, Seq("n_triples", "n_errors"))
   }
 
@@ -306,11 +324,12 @@ object Materialize {
     val manifestPath = s"$outDir/manifest"
     val done = readManifest(spark, manifestPath).select("bucket")
 
-    // the per-bucket document counts ARE the manifest rows this run
-    // commits: collecting them here (<= `buckets` rows) spares the commit
-    // a second scan of the corpus
+    // one digest row per todo document, shared: its per-bucket counts ARE
+    // the manifest rows this run commits (<= `buckets` rows, collected
+    // here), and the metrics write reads it instead of the corpus
     val todo = withBucket.join(broadcast(done), Seq("bucket"), "left_anti")
-    val todoCounts = todo.groupBy("bucket").agg(count(lit(1)).as("n_docs"))
+    val todoDigests = Share(digests(todo, col("bucket")))
+    val todoCounts = todoDigests.groupBy("bucket").agg(count(lit(1)).as("n_docs"))
       .as[(Long, Long)].collect()
     if (todoCounts.isEmpty) return 0
     val todoBuckets = todoCounts.map(_._1).sorted
@@ -342,10 +361,11 @@ object Materialize {
 
     // ---- metrics for the documents processed in THIS run: counted from
     // the STAGED rows, not the live parse plan — re-evaluating `parsed`
-    // here would parse the whole todo corpus a second time
+    // here would parse the whole todo corpus a second time. A
+    // repartition-by-bucket that AQE sizes (the edges pattern) puts each
+    // bucket in one task, so each bucket is one file.
     val stagedTodo = staged.filter(col("bucket").isin(todoBuckets: _*))
-    metrics(todo.drop("bucket"), stagedTodo)
-      .withColumn("bucket", bucketOf(buckets))
+    countsJoin(todoDigests, stagedTodo).repartition(col("bucket"))
       .write.mode(SaveMode.Overwrite).partitionBy("bucket")
       .parquet(s"$outDir/metrics") // dynamic overwrite: idempotent on re-run
 

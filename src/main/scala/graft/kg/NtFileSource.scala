@@ -29,7 +29,12 @@ import org.apache.spark.sql.functions._
  */
 object NtFileSource {
 
-  /** One CorpusRow per file under `pathGlob` (supports .nt, .nt.gz, .nt.bz2). */
+  /**
+   * One CorpusRow per file under `pathGlob` (supports .nt, .nt.gz, .nt.bz2).
+   * The glob is expanded and its files listed on the driver, with no Spark
+   * job, up to the session's `parallelPartitionDiscovery.threshold` paths
+   * (1024 in [[Pipeline.session]]); the files are read by the first action.
+   */
   def documents(spark: SparkSession, pathGlob: String, repo: String = "files",
                 commit: String = Corpus.FixedCommit,
                 lang: String = TripleExtract.LangStrict): Dataset[CorpusRow] = {

@@ -222,6 +222,22 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"), plan.take(500))
   }
 
+  test("driver tables read with their known schemas: building the frame runs no job") {
+    // the named schemas are the inferred ones, so no column type changes
+    Seq("nation" -> SparkEntry.NationSchema, "documents" -> SparkEntry.DocumentsSchema,
+      "embeddings" -> SparkEntry.EmbeddingsSchema).foreach { case (t, schema) =>
+      assert(spark.read.parquet(s"$dir/$t.parquet").schema == schema, t)
+    }
+    val trace = new CostTrace(spark.sparkContext)
+    try {
+      val names = Seq("kg_parse_documents", "kg_nodes", "kg_edges", "td_fingerprint",
+        "td_dedup_simhash", "td_ann_topk")
+      names.foreach(n => trace.span(n)(SparkEntry.queries(n)(spark, dir)))
+      val built = trace.spans.map(s => s.name -> trace.cost(s).jobs).toMap
+      assert(built == names.map(_ -> 0).toMap)
+    } finally trace.close()
+  }
+
   test("typed parse and the line-per-row file source plan as the ParseNtLines generator") {
     // one Spark parse route: a typed mapPartitions route would show up as
     // MapPartitions over DeserializeToObject'd corpus rows
