@@ -1070,9 +1070,9 @@ object SparkEntry {
         ((col("n_nationkey") + off) % 25).cast("long").cast("string").as("obj_id"))
       val e = lbl("next", 1)
         .union(lbl("skip", 2).filter(col("subj_id").cast("long") % 2 === 0))
-      Bgp.matchWithOptional(e,
-        Seq(Bgp.TriplePattern(Bgp.V("a"), Bgp.C("next"), Bgp.V("b"))),
-        Seq(Seq(Bgp.TriplePattern(Bgp.V("a"), Bgp.C("skip"), Bgp.V("c")))))
+      Sparql.evaluate(e, Sparql.LeftJoin(
+        Sparql.BGP(Seq(Bgp.TriplePattern(Bgp.V("a"), Bgp.C("next"), Bgp.V("b")))),
+        Sparql.BGP(Seq(Bgp.TriplePattern(Bgp.V("a"), Bgp.C("skip"), Bgp.V("c"))))))
     }),
 
     // entity resolution over label variants: 5 deterministic variants per
@@ -1226,9 +1226,9 @@ object SparkEntry {
       Bgp.matchPatterns(linkedEdges(documentsCorpus(s, dir)),
         Seq(
           Bgp.TriplePattern(Bgp.V("doc"), Bgp.C("urn:col:documents:lang"), Bgp.V("l")),
-          Bgp.TriplePattern(Bgp.V("doc"), Bgp.C("urn:col:documents:source"), Bgp.V("src"))),
-        Seq(col("l") === lit(Bgp.litId("en")) || col("l") === lit(Bgp.litId("fr")),
-          col("src") =!= lit(Bgp.litId("src0"))))
+          Bgp.TriplePattern(Bgp.V("doc"), Bgp.C("urn:col:documents:source"), Bgp.V("src"))))
+        .filter(col("l") === lit(Bgp.litId("en")) || col("l") === lit(Bgp.litId("fr")))
+        .filter(col("src") =!= lit(Bgp.litId("src0")))
     }),
 
     // SPARQL property path <up>+ : transitive closure of ONE predicate's
@@ -1252,15 +1252,15 @@ object SparkEntry {
     // sets — the zh branch binds no ?src, so its rows NULL-pad that
     // column (union-of-solution-mappings semantics, zero-shuffle concat)
     "kg_bgp_union" -> ((s, dir) => {
-      Bgp.matchUnion(linkedEdges(documentsCorpus(s, dir)), Seq(
-        Seq(
+      Sparql.evaluate(linkedEdges(documentsCorpus(s, dir)), Sparql.Union(Seq(
+        Sparql.BGP(Seq(
           Bgp.TriplePattern(Bgp.V("d"), Bgp.C("urn:col:documents:lang"),
             Bgp.C(Bgp.litId("en"))),
           Bgp.TriplePattern(Bgp.V("d"), Bgp.C("urn:col:documents:source"),
-            Bgp.V("src"))),
-        Seq(
+            Bgp.V("src")))),
+        Sparql.BGP(Seq(
           Bgp.TriplePattern(Bgp.V("d"), Bgp.C("urn:col:documents:lang"),
-            Bgp.C(Bgp.litId("zh"))))))
+            Bgp.C(Bgp.litId("zh"))))))))
     }),
 
     // the STRING front end end-to-end: Sparql.parse + run over the same
@@ -1281,12 +1281,12 @@ object SparkEntry {
     // (the anti side is projected to the shared column and deduped
     // before the join, so no group payload crosses the shuffle)
     "kg_bgp_minus" -> ((s, dir) => {
-      Bgp.matchGroup(linkedEdges(documentsCorpus(s, dir)),
-        required = Seq(
-          Bgp.TriplePattern(Bgp.V("d"), Bgp.C("urn:col:documents:lang"), Bgp.V("l"))),
-        minus = Seq(Seq(
+      Sparql.evaluate(linkedEdges(documentsCorpus(s, dir)), Sparql.Minus(
+        Sparql.BGP(Seq(
+          Bgp.TriplePattern(Bgp.V("d"), Bgp.C("urn:col:documents:lang"), Bgp.V("l")))),
+        Sparql.BGP(Seq(
           Bgp.TriplePattern(Bgp.V("d"), Bgp.C("urn:col:documents:source"),
-            Bgp.C(Bgp.litId("src0"))))))
+            Bgp.C(Bgp.litId("src0")))))))
     }),
 
     // SPARQL predicate alternatives <lang>|<source>: one pattern, a
@@ -1398,7 +1398,7 @@ object SparkEntry {
 
     // SPARQL VALUES, multi-variable form: the inline (lang, source)
     // rows become a broadcast left-semi join against the bindings
-    // (Bgp.applyValues) — the selection ships with the task, the
+    // (a VALUES table in the algebra) — the selection ships with the task, the
     // bindings side never shuffles
     "kg_sparql_values" -> ((s, dir) => {
       Sparql.run(linkedEdges(documentsCorpus(s, dir)),

@@ -58,13 +58,9 @@ import org.apache.spark.sql.functions._
  * a vocabulary), never on instance-scale predicates; transitiveClosure's
  * maxIter bounds runaway inputs.
  *
- * FILTER: post-match column predicates over the binding columns (SPARQL
- * FILTER in the well-behaved fragment) — pass them via the `filters`
- * overloads; they are plain `.filter` calls, evaluated after the whole
- * group matches (so they may reference OPTIONAL-bound variables, which
- * are NULL for unmatched rows — as in SPARQL, where an error/unbound
- * comparison makes the filter drop the row; use `isNull` checks for
- * bound-ness tests).
+ * The group operators around a BGP — OPTIONAL, MINUS, UNION, FILTER,
+ * BIND, VALUES and the EXISTS probes — are nodes of the SPARQL algebra
+ * tree ([[Sparql.Pattern]]), run by [[Sparql.evaluate]].
  *
  * Bag semantics (standard BGP): no implicit distinct. Binding columns
  * are emitted in VARIABLE-NAME ORDER (so results are independent of the
@@ -364,140 +360,6 @@ object Bgp {
     joined.select(joined.columns.sorted.map(col): _*)
   }
 
-  /** [[matchPatterns]] + SPARQL FILTER predicates over the binding
-    * columns, applied after the match. */
-  def matchPatterns(edges: DataFrame, patterns: Seq[TriplePattern],
-                    filters: Seq[Column]): DataFrame =
-    filters.foldLeft(matchPatterns(edges, patterns))(_ filter _)
-
-  /**
-   * BGP with SPARQL OPTIONAL groups: `required` matches as
-   * [[matchPatterns]]; each optional group is itself a BGP, matched
-   * independently and LEFT-joined to the required bindings on its
-   * shared variables — rows keep their required bindings and take NULL
-   * for the group's new variables when the group has no match. `filters`
-   * apply AFTER the optional joins (standard SPARQL group semantics:
-   * FILTER sees the whole group's bindings, including NULLs for
-   * unmatched optional variables).
-   *
-   * Restricted to the WELL-DESIGNED case (Pérez et al., "Semantics and
-   * Complexity of SPARQL", TODS'09 — the fragment where OPTIONAL is
-   * exactly a left outer join): every group must share >= 1 variable
-   * with `required`, and a variable bound by one optional group may not
-   * appear in another (cross-group correlation reintroduces the
-   * non-monotone cases that need bag-difference plans, and is almost
-   * always a query bug). Each group is one equi-left-join keyed on the
-   * shared variables — same shuffle shape as the inner joins.
-   */
-  def matchWithOptional(edges: DataFrame, required: Seq[TriplePattern],
-                        optional: Seq[Seq[TriplePattern]],
-                        filters: Seq[Column] = Nil,
-                        optionalFilters: Seq[Seq[Column]] = Nil): DataFrame = {
-    val base = matchPatterns(edges, required)
-    val reqVars = base.columns.toSet
-    val newVarsSeen = scala.collection.mutable.Set.empty[String]
-    val joined = optional.zipWithIndex.foldLeft(base) { case (acc, (group, i)) =>
-      // a FILTER inside the OPTIONAL group conditions the MATCH, not the
-      // row: SPARQL's LeftJoin(required, P, C). When C reads only the
-      // group's own variables (the Sparql front end enforces this),
-      // pre-filtering the group side is exactly the ON-clause semantics —
-      // a failing C makes the group unmatched (NULLs), never drops the row
-      val g = optionalFilters.lift(i).getOrElse(Nil)
-        .foldLeft(matchPatterns(edges, group))(_ filter _)
-      val shared = g.columns.toSeq.filter(reqVars.contains)
-      require(shared.nonEmpty,
-        s"optional group ${group.mkString(", ")} shares no variable with the " +
-          "required pattern — an unanchored OPTIONAL is a cartesian product")
-      val fresh = g.columns.toSeq.filterNot(reqVars.contains)
-      val overlap = fresh.filter(newVarsSeen.contains)
-      require(overlap.isEmpty,
-        s"variable(s) ${overlap.mkString(", ")} bound by two optional groups — " +
-          "only well-designed patterns (each optional var bound once) are supported")
-      newVarsSeen ++= fresh
-      acc.join(g, shared, "left")
-    }
-    filters.foldLeft(joined)(_ filter _)
-  }
-
-  /**
-   * SPARQL MINUS groups over a matched binding frame: each group is
-   * itself a BGP, matched independently; rows of `bindings` are removed
-   * when a group solution agrees on the variables they share — one
-   * LEFT-ANTI equi-join per group on the shared variables (the same
-   * shuffle shape as the inner joins; the anti side is projected to its
-   * shared columns and deduped first, so no group payload crosses the
-   * shuffle).
-   *
-   * A group sharing NO variable with the bindings is rejected: SPARQL's
-   * disjoint-domain MINUS removes nothing, which in practice means a
-   * typo'd variable — fail loudly instead. NULL bindings (from an
-   * unmatched OPTIONAL) never equal a group value under join equality,
-   * so such rows SURVIVE — matching SPARQL's compatibility semantics,
-   * where an unbound shared variable makes the mappings compatible only
-   * on the remaining shared domain (and our well-designed fragment
-   * requires at least one non-null shared var for removal).
-   */
-  def applyMinus(edges: DataFrame, bindings: DataFrame,
-                 minus: Seq[Seq[TriplePattern]]): DataFrame =
-    minus.foldLeft(bindings) { (acc, group) =>
-      val g = matchPatterns(edges, group)
-      val shared = g.columns.toSeq.filter(acc.columns.contains)
-      require(shared.nonEmpty,
-        s"MINUS group ${group.mkString(", ")} shares no variable with the " +
-          "bindings — SPARQL disjoint-domain MINUS removes nothing; this is " +
-          "almost always a typo'd variable")
-      acc.join(g.select(shared.map(col): _*).distinct(), shared, "left_anti")
-    }
-
-  /**
-   * SPARQL `FILTER EXISTS { group }` / `FILTER NOT EXISTS { group }` over
-   * a matched binding frame: each group is itself a BGP, matched
-   * independently; a binding row passes EXISTS when a group solution
-   * agrees on the variables they share (one LEFT-SEMI equi-join per
-   * group), and NOT EXISTS inverts that (LEFT-ANTI). The probe side is
-   * projected to the shared columns and deduped first, so no group
-   * payload crosses the shuffle, and semi/anti joins preserve the
-   * binding side's bag semantics exactly.
-   *
-   * Fragment note: full SPARQL evaluates EXISTS by substituting the
-   * outer row's bound variables and leaving the rest free; over shared
-   * NON-NULL variables that is precisely this equi-semi-join. A group
-   * sharing NO variable with the bindings is rejected (a constant-truth
-   * probe is almost always a typo'd variable), and a NULL shared
-   * binding (unmatched OPTIONAL) never equals a probe value, so such
-   * rows fail EXISTS and survive NOT EXISTS — the same compatibility
-   * rule [[applyMinus]] documents. Within this fragment NOT EXISTS and
-   * MINUS coincide; they diverge only on the disjoint-domain and
-   * correlated-FILTER cases both are rejected from.
-   */
-  def applyExists(edges: DataFrame, bindings: DataFrame,
-                  groups: Seq[Seq[TriplePattern]],
-                  negate: Boolean = false): DataFrame =
-    groups.foldLeft(bindings) { (acc, group) =>
-      val g = matchPatterns(edges, group)
-      val shared = g.columns.toSeq.filter(acc.columns.contains)
-      require(shared.nonEmpty,
-        s"${if (negate) "NOT EXISTS" else "EXISTS"} group " +
-          s"${group.mkString(", ")} shares no variable with the bindings — " +
-          "a constant-truth probe is almost always a typo'd variable")
-      acc.join(g.select(shared.map(col): _*).distinct(), shared,
-        if (negate) "left_anti" else "left_semi")
-    }
-
-  /**
-   * Full SPARQL group for the well-designed fragment:
-   * required BGP -> OPTIONAL left-joins -> MINUS anti-joins -> FILTERs
-   * (filters last: SPARQL group semantics scope FILTER over the whole
-   * group's bindings, including OPTIONAL NULLs).
-   */
-  def matchGroup(edges: DataFrame, required: Seq[TriplePattern],
-                 optional: Seq[Seq[TriplePattern]] = Nil,
-                 minus: Seq[Seq[TriplePattern]] = Nil,
-                 filters: Seq[Column] = Nil): DataFrame = {
-    val withOpt = matchWithOptional(edges, required, optional)
-    filters.foldLeft(applyMinus(edges, withOpt, minus))(_ filter _)
-  }
-
   /**
    * VALUE-SPACE bridge for FILTER-by-value: SPARQL comparisons like
    * `FILTER(?price > 100)` are undecidable over hashed node ids — the
@@ -537,76 +399,5 @@ object Bgp {
         .drop("__term_id")
         .withColumnRenamed("__term", s"${v}_term")
     }
-  }
-
-  /**
-   * SPARQL VALUES over a matched binding frame: keep only rows whose
-   * `vars` columns match one of the inline `rows` (SET semantics — the
-   * inline data is deduped and used as a selection, never a bag
-   * multiplier). A single variable compiles to an IN-filter Catalyst can
-   * push toward the scan; multiple variables become a BROADCAST
-   * left-semi join against the (tiny, driver-local) inline relation —
-   * both shapes are shuffle-free on the bindings side at any scale.
-   *
-   * Restricted to the well-designed fragment: every VALUES variable
-   * must be a binding column, and a NULL binding (an unmatched OPTIONAL
-   * variable) never matches an inline row — callers who need SPARQL's
-   * unbound-is-compatible semantics should anchor VALUES variables in
-   * the required pattern (the [[Sparql]] front end enforces exactly
-   * that).
-   */
-  def applyValues(bindings: DataFrame, vars: Seq[String],
-                  rows: Seq[Seq[String]]): DataFrame = {
-    require(vars.nonEmpty, "VALUES needs at least one variable")
-    require(rows.nonEmpty, "VALUES needs at least one row")
-    require(rows.forall(_.size == vars.size),
-      s"every VALUES row must have ${vars.size} term(s) for (${vars.mkString(", ")})")
-    val missing = vars.filterNot(bindings.columns.contains)
-    require(missing.isEmpty,
-      s"VALUES variable(s) ${missing.mkString(", ")} are not bound by the pattern")
-    // UNDEF cells (null) are compatible with ANY binding (SPARQL 10.2);
-    // a semi-join key cannot express that, so rows with UNDEF compile
-    // to the disjunction of their defined-cell conjunctions — a pushed
-    // boolean filter, still zero-shuffle (inline data is always small).
-    // A row of ALL UNDEF cells is compatible with everything: no filter.
-    if (rows.exists(_.contains(null))) {
-      val rowPreds = rows.distinct.map { r =>
-        vars.zip(r).collect { case (v, c0) if c0 != null => col(v) === lit(c0) }
-          .reduceOption(_ && _)
-      }
-      if (rowPreds.contains(None)) bindings
-      else bindings.filter(rowPreds.flatten.reduce(_ || _))
-    }
-    else if (vars.sizeIs == 1)
-      bindings.filter(col(vars.head).isin(rows.map(_.head).distinct: _*))
-    else {
-      val spark = bindings.sparkSession
-      val schema = org.apache.spark.sql.types.StructType(vars.map(v =>
-        org.apache.spark.sql.types.StructField(v, org.apache.spark.sql.types.StringType,
-          nullable = false)))
-      val inline = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          rows.distinct.map(org.apache.spark.sql.Row.fromSeq), 1), schema)
-      bindings.join(broadcast(inline), vars, "left_semi")
-    }
-  }
-
-  /**
-   * SPARQL UNION: bag union of independently matched branches. Columns
-   * align on the union of all branch variables (name order); a variable
-   * unbound in a branch is NULL in that branch's rows — standard SPARQL
-   * union-of-solution-mappings semantics. Each branch is a full BGP
-   * (its own join order, its own pushed filters); the union itself is a
-   * zero-shuffle concatenation.
-   */
-  def matchUnion(edges: DataFrame, branches: Seq[Seq[TriplePattern]]): DataFrame = {
-    require(branches.nonEmpty, "empty UNION")
-    val matched = branches.map(b => matchPatterns(edges, b))
-    val allVars = matched.flatMap(_.columns).distinct.sorted
-    matched.map { m =>
-      val have = m.columns.toSet
-      m.select(allVars.map(v =>
-        (if (have(v)) col(v) else lit(null).cast("string")).as(v)): _*)
-    }.reduce(_ union _)
   }
 }

@@ -342,13 +342,7 @@ object Materialize {
       .partitionBy("bucket", "err")
       .parquet(s"$outDir/staging")
 
-    if (strict) {
-      val firstErr = readStaging(spark, outDir).filter(col("err"))
-        .select("repo", "path", "commit", "line", "charPos", "message")
-        .limit(1).collect()
-      if (firstErr.nonEmpty)
-        throw new IllegalStateException(s"strict mode: ${firstErr.head.mkString(" | ")}")
-    }
+    if (strict) TripleExtract.failOnErrors(readStaging(spark, outDir).as[ParsedLine])
 
     // ---- derive graph tables from ALL staged triples (cheap vs parse)
     val staged = readStaging(spark, outDir)

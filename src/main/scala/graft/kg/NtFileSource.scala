@@ -14,18 +14,19 @@ import org.apache.spark.sql.functions._
  *  - `spark.read.textFile` already does distributed line splitting AND
  *    transparent `.gz`/`.bz2` decompression through the Hadoop codec
  *    factory (suffix-driven rather than magic-byte-driven — same formats);
- *  - `input_file_name()` supplies the per-line provenance the reference
- *    got from its caller;
- *  - grouping lines back into documents is NOT needed: the parser is
- *    line-local, so files become corpus rows of single lines with the
- *    line number recovered per-file downstream.
+ *  - `input_file_name()` supplies the per-file provenance the reference
+ *    got from its caller.
  *
  * Two ingestion shapes:
- *  - `documents`: one CorpusRow per FILE (content = whole file) — matches
- *    the table-input contract; fine for source files (<= a few MB each);
- *  - `lines`: one row per line with (path, lineNo) — the scalable shape
- *    for huge single files, since Spark splits uncompressed/bzip2 text
- *    by range while a whole-file read cannot be split.
+ *  - `documents` (and `documentsWithCharset`): one CorpusRow per FILE
+ *    (content = whole file), whose parsed rows carry the file's line
+ *    numbers — matches the table-input contract; fine for source files
+ *    (<= a few MB each);
+ *  - `parseLines`: one parsed row per text line — the scalable shape for
+ *    huge single files, since Spark splits uncompressed/bzip2 text by
+ *    range while a whole-file read cannot be split. Each line is parsed
+ *    as a one-line document, so every row carries `line = 1`; the file
+ *    line number is not recovered.
  */
 object NtFileSource {
 

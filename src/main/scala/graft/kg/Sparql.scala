@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import Bgp.{C, TriplePattern, V}
 
@@ -26,15 +27,15 @@ import Bgp.{C, TriplePattern, V}
  *   proj    := ?var | ( agg ( DISTINCT? (?var | *) sepOpt ) AS ?alias )
  *   agg     := COUNT | SUM | AVG | MIN | MAX | SAMPLE | GROUP_CONCAT
  *   sepOpt  := (';' SEPARATOR = "sep")?          (GROUP_CONCAT only)
- *   group   := (triple '.'? | OPTIONAL { triples (FILTER ( expr ))* }
+ *   group   := (triple '.'? | GRAPH (?var | <iri>) { triples }
+ *              | OPTIONAL { triples (FILTER ( expr ))* }
  *              | MINUS { triples }
  *              | FILTER ( expr ) | FILTER NOT? EXISTS { triples }
  *              | BIND ( bexpr AS ?var ) | VALUES valuesClause
  *              | { select }                    (subquery — see below)
  *              | { triples } UNION { triples } (UNION { triples })* )*
- *              (a UNION member alone is the classic pure union; next to
- *               required triples it joins the group on its shared
- *               variables, which must be bound in EVERY branch)
+ *              (one algebra tree per group, in text order — see GROUPS
+ *               below)
  *   bexpr   := nexpr | sexpr | ?var | "lit" | COALESCE(?var, ?var+)
  *            | IF ( expr , bexpr , bexpr )   (same-kind branches; a NULL
  *              condition takes the ELSE branch)
@@ -140,10 +141,7 @@ import Bgp.{C, TriplePattern, V}
  * nodes-table overload required) with exact order-independent
  * decimal(28,10) accumulation, strict SPARQL error semantics (any
  * non-numeric/unbound value in the group makes the aggregate unbound)
- * and a single final cast to double. VALUES is a
- * set-semantics selection: one variable is a pushed IN-filter, several
- * a broadcast semi-join ([[Bgp.applyValues]]); its variables must be
- * anchored in the required pattern. ORDER BY + LIMIT plan as
+ * and a single final cast to double. ORDER BY + LIMIT plan as
  * per-partition top-k (TakeOrderedAndProject), never a global sort.
  *
  * Constants are translated with the engine's node-id recipe
@@ -173,14 +171,36 @@ import Bgp.{C, TriplePattern, V}
  * LANG of an IRI, a bare non-string-literal arg) reads NULL and the
  * row drops.
  *
+ * GROUPS: each `{ ... }` parses into a SPARQL 1.1 algebra tree
+ * ([[Pattern]]) by the §18.2.2 translation, element by element in text
+ * order: triples, GRAPH blocks, UNIONs, VALUES and subqueries JOIN the
+ * group so far (adjacent triples form one BGP), OPTIONAL LEFT-JOINs it,
+ * MINUS subtracts from it and BIND EXTENDs it; FILTERs and EXISTS probes
+ * are group-scoped and wrap the whole group. One evaluator runs the
+ * tree with equi-joins on the shared variables, which equal SPARQL's
+ * compatible-mapping joins only while no join key is unbound on either
+ * side. So the validation pass rejects, at the node concerned:
+ *  - an OPTIONAL or MINUS with nothing before it in its group (§18
+ *    applies it to the empty solution, not to the triples after it), or
+ *    with only a UNION/subquery before it;
+ *  - an OPTIONAL, MINUS, probe or join that shares no variable with the
+ *    rows it applies to (a cartesian product, or a no-op);
+ *  - a join, OPTIONAL, EXISTS or NOT EXISTS key that may be unbound on
+ *    either side — bound only under an OPTIONAL or in only some UNION
+ *    branches (a NULL key drops or keeps rows SPARQL would not); a MINUS
+ *    may share ONE such variable, which is SPARQL's disjoint-domain rule;
+ *  - a key that is a computed value (a BIND or an aggregate alias), and
+ *    a BIND reading a variable no pattern before it binds;
+ *  - a UNION whose variables outside the group's triples reach another
+ *    UNION, or a UNION joined with no triples to anchor it.
+ * VALUES is a set-semantics selection of the rest of its join: one
+ * variable is a pushed IN-filter, several a broadcast semi-join; its
+ * variables must be bound by every row it selects.
+ *
  * SUBQUERIES (`{ SELECT ... }` inside a group) evaluate bottom-up and
- * inner-join the enclosing group on their shared plain variables —
- * SPARQL 1.1's join of solution mappings, restricted to the
- * never-NULL fragment: every subquery-projected plain variable must be
- * anchored in the subquery's required pattern, and at least one must
- * be shared with the outer required pattern (or an earlier subquery),
- * so the equi-join can never diverge from unbound-is-compatible
- * semantics. Aggregate aliases flow out as plain VALUE columns — outer
+ * join the enclosing group on their shared plain variables; every
+ * projected plain variable must be bound by every solution of the
+ * subquery. Aggregate aliases flow out as plain VALUE columns — outer
  * FILTERs/BINDs read them directly (a COUNT alias compares numerically
  * with no extra join), and the classic aggregate-then-join shape
  * (`{ SELECT ?g (COUNT(*) AS ?n) ... GROUP BY ?g }` joined back on
@@ -396,19 +416,19 @@ object Sparql {
   // ---------- AST ----------------------------------------------------------
 
   private[kg] sealed trait FTerm
-  private final case class FTVar(name: String) extends FTerm
+  private[kg] final case class FTVar(name: String) extends FTerm
   /** A constant comparison side: `id` is the hashed node id (the form
     * node-position bindings carry); `raw` keeps the IRI's raw string for
     * comparisons against PREDICATE-position variables, which bind raw
     * predicate IRIs in the edges convention (not hashed ids). */
-  private final case class FTConst(id: String, raw: Option[String] = None) extends FTerm
+  private[kg] final case class FTConst(id: String, raw: Option[String] = None) extends FTerm
 
   private[kg] sealed trait FExpr
-  private final case class FBound(v: String) extends FExpr
-  private final case class FNot(e: FExpr) extends FExpr
+  private[kg] final case class FBound(v: String) extends FExpr
+  private[kg] final case class FNot(e: FExpr) extends FExpr
   private final case class FAnd(a: FExpr, b: FExpr) extends FExpr
-  private final case class FOr(a: FExpr, b: FExpr) extends FExpr
-  private final case class FCmp(l: FTerm, op: String, r: FTerm) extends FExpr
+  private[kg] final case class FOr(a: FExpr, b: FExpr) extends FExpr
+  private[kg] final case class FCmp(l: FTerm, op: String, r: FTerm) extends FExpr
   /** Numeric VALUE-SPACE expression: leaves are variables (read through
     * their bindValues `_term` struct, or directly for numeric BIND
     * columns), numeric constants and STRLEN projections; interior nodes
@@ -561,40 +581,183 @@ object Sparql {
   private final case class HAnd(a: HExpr, b: HExpr) extends HExpr
   private final case class HOr(a: HExpr, b: HExpr) extends HExpr
 
+  // ---------- algebra ------------------------------------------------------
+
+  /** A graph pattern of the SPARQL 1.1 algebra (§18.2). [[parse]] turns
+    * each group `{ ... }` into one tree by the §18.2.2 translation, in
+    * text order; [[evaluate]] runs a tree built by hand. One evaluator
+    * runs every node, and one validation pass rejects, at the node it is
+    * about, each shape whose equi-join plan would differ from §18's
+    * compatible-mapping semantics. */
+  sealed trait Pattern
+  /** A basic graph pattern: the triples join on their shared variables
+    * in [[Bgp.joinOrder]]'s order. `BGP(Nil)` is the empty group Z. */
+  final case class BGP(triples: Seq[TriplePattern]) extends Pattern
+  /** The join of `parts` on their shared variables, left to right; a
+    * [[Table]] part selects the rows of the others. */
+  final case class Join(parts: Seq[Pattern]) extends Pattern
+  /** OPTIONAL: every `left` row, extended by each compatible `right` row
+    * that satisfies `cond` (id-space, over `right`'s own variables). */
+  final case class LeftJoin(left: Pattern, right: Pattern,
+                            cond: Seq[FExpr] = Nil) extends Pattern
+  /** MINUS: the `left` rows that no `right` row agrees with on a shared
+    * variable. */
+  final case class Minus(left: Pattern, right: Pattern) extends Pattern
+  /** UNION: the bag union of the branches; a variable a branch does not
+    * bind is NULL in its rows. */
+  final case class Union(branches: Seq[Pattern]) extends Pattern
+  /** FILTER: the `inner` rows every condition holds on. A FILTER is
+    * group-scoped, so it wraps its whole group. */
+  final case class Filter(cond: Seq[FExpr], inner: Pattern) extends Pattern
+  /** BIND(expr AS ?v) over the rows of `inner`. */
+  final case class Extend(inner: Pattern, v: String, expr: BExpr) extends Pattern
+  /** VALUES: inline rows of constant node ids, `null` for UNDEF. Only a
+    * [[Join]] part: a set-semantics selection of the other parts' rows. */
+  final case class Table(vars: Seq[String], rows: Seq[Seq[String]]) extends Pattern
+  /** FILTER (NOT) EXISTS: the `inner` rows some `probe` row agrees with
+    * (none does, when `negated`) on their shared variables. */
+  final case class Exists(inner: Pattern, probe: Pattern, negated: Boolean) extends Pattern
+  /** A nested `{ SELECT ... }`, evaluated bottom-up. */
+  final case class SubSelect(query: Query) extends Pattern
+
+  private def children(p: Pattern): Seq[Pattern] = p match {
+    case BGP(_) | Table(_, _) | SubSelect(_) => Nil
+    case Join(ps)          => ps
+    case LeftJoin(l, r, _) => Seq(l, r)
+    case Minus(l, r)       => Seq(l, r)
+    case Union(bs)         => bs
+    case Filter(_, i)      => Seq(i)
+    case Extend(i, _, _)   => Seq(i)
+    case Exists(i, pr, _)  => Seq(i, pr)
+  }
+
+  private def varsOf(ps: Seq[TriplePattern]): Set[String] =
+    ps.flatMap(p => (Seq(p.subj, p.pred, p.obj) ++ p.graph)
+      .collect { case V(n) => n }).toSet
+
+  /** Variables a solution of `p` may bind (its in-scope variables). */
+  private def scope(p: Pattern): Set[String] = p match {
+    case BGP(ts)         => varsOf(ts)
+    case Minus(l, _)     => scope(l)
+    case Exists(i, _, _) => scope(i)
+    case Extend(i, v, _) => scope(i) + v
+    case Table(vs, _)    => vs.toSet
+    case SubSelect(q)    => q.outputs.toSet
+    case other           => children(other).flatMap(scope).toSet
+  }
+
+  /** Variables every solution of `p` binds: the keys an equi-join may use
+    * (a NULL key never matches, where SPARQL's compatible-mapping join
+    * treats an unbound variable as compatible with anything). */
+  private def certain(p: Pattern): Set[String] = p match {
+    case BGP(ts)           => varsOf(ts)
+    case Join(ps)          => ps.flatMap(certain).toSet
+    case LeftJoin(l, _, _) => certain(l)
+    case Minus(l, _)       => certain(l)
+    case Union(bs)         => bs.map(certain).reduce(_ & _)
+    case Filter(_, i)      => certain(i)
+    case Extend(i, _, _)   => certain(i)
+    case Exists(i, _, _)   => certain(i)
+    case Table(vs, rows)   => vs.indices.filter(i => rows.forall(_(i) != null)).map(vs).toSet
+    case SubSelect(q)      => q.select.toSet // validated: bound by every solution
+  }
+
+  /** Variables the group's own triple patterns bind — the BGPs joined
+    * into the group, not those under OPTIONAL, MINUS, UNION or a probe. */
+  private def requiredVars(p: Pattern): Set[String] = p match {
+    case BGP(ts)                  => varsOf(ts)
+    case Join(ps)                 => ps.flatMap(requiredVars).toSet
+    case Union(_) | Table(_, _) | SubSelect(_) => Set.empty
+    case other                    => requiredVars(children(other).head)
+  }
+
+  /** Whether `p` has a row source of its own: triples, a UNION or a
+    * subquery (VALUES, BIND and FILTER only act on rows). */
+  private def anchored(p: Pattern): Boolean = p match {
+    case BGP(ts)                 => ts.nonEmpty
+    case Union(_) | SubSelect(_) => true
+    case Table(_, _)             => false
+    case Join(ps)                => ps.exists(anchored)
+    case other                   => anchored(children(other).head)
+  }
+
+  private def bindKind(b: BExpr): Char = b match {
+    case BNum(_) => 'n'
+    case BStr(_) => 's'
+    case BCopy(_) | BCoalesce(_) | BMintTerm(_, _, _) => 'c'
+    case BIf(_, t, e) =>
+      val k = bindKind(t)
+      if (bindKind(e) != k)
+        fail("IF branches in BIND mix value kinds — both must be numeric, " +
+          "both string, or both id-space bindings")
+      k
+  }
+
+  /** Computed-value columns and their kinds: BIND variables ('n'umeric,
+    * 's'tring or id-space 'c'opy) and subquery aggregate aliases
+    * (COUNT/SUM/AVG numeric, GROUP_CONCAT string, MIN/MAX/SAMPLE id
+    * picks). */
+  private def valueKinds(p: Pattern): Map[String, Char] = p match {
+    case Extend(i, v, e) => valueKinds(i) + (v -> bindKind(e))
+    case SubSelect(q) => q.projection.collect {
+      case PAgg(AggCall(f, _, _, _), alias) => alias -> (f match {
+        case "COUNT" | "SUM" | "AVG" => 'n'
+        case "GROUP_CONCAT"          => 's'
+        case _                       => 'c'
+      })
+    }.toMap
+    case other => children(other).map(valueKinds).foldLeft(Map.empty[String, Char])(_ ++ _)
+  }
+
+  /** Variables bound in PREDICATE or GRAPH position: these bind RAW IRIs
+    * (the edges convention), not hashed node ids — a value space of
+    * their own. A subquery contributes its pred-space projections, and a
+    * BIND copy or COALESCE of pred-space variables stays in the space. */
+  private def predSpace(p: Pattern): Set[String] = p match {
+    case BGP(ts) => ts.flatMap(t => (t.pred +: t.graph.toSeq).collect { case V(n) => n }).toSet
+    case SubSelect(q) => q.select.filter(predSpace(q.where)).toSet
+    case Extend(i, v, e) =>
+      val in = predSpace(i)
+      e match {
+        case BCopy(src) if in(src)          => in + v
+        case BCoalesce(vs) if vs.forall(in) => in + v
+        case _                              => in
+      }
+    case other => children(other).flatMap(predSpace).toSet
+  }
+
+  /** Variables bound in SUBJECT/OBJECT position (hashed node ids) — the
+    * complement space to [[predSpace]]. */
+  private def nodeSpace(p: Pattern): Set[String] = p match {
+    case BGP(ts)      => ts.flatMap(t => Seq(t.subj, t.obj).collect { case V(n) => n }).toSet
+    case SubSelect(q) => q.select.filter(nodeSpace(q.where)).toSet
+    case other        => children(other).flatMap(nodeSpace).toSet
+  }
+
+  /** Value kinds seen by the expression compiler: computed-value columns
+    * plus pred-space variables tagged 'p' (raw-IRI reads — STR(?p) is the
+    * column itself, never a nodes-table join). */
+  private def compileKinds(p: Pattern): Map[String, Char] =
+    valueKinds(p) ++ predSpace(p).iterator.map(_ -> 'p')
+
   /** Parsed query. `form` is SELECT, ASK, CONSTRUCT or DESCRIBE;
-    * `projection` empty means `SELECT *`; `orderBy` pairs are
-    * (variable-or-alias, ascending); `values` clauses are (variables,
-    * constant-id rows) selections; `template` holds CONSTRUCT's output
-    * triples; `describeVars`/`describeIds` hold DESCRIBE's subject
-    * terms (group variables / constant node ids). */
+    * `projection` empty means `SELECT *`; `where` is the WHERE group's
+    * algebra tree; `orderBy` pairs are (variable-or-alias, ascending);
+    * `template` holds CONSTRUCT's output triples;
+    * `describeVars`/`describeIds` hold DESCRIBE's subject terms (group
+    * variables / constant node ids). */
   final case class Query(projection: Seq[Proj],
                          distinct: Boolean,
-                         required: Seq[TriplePattern],
-                         optionals: Seq[Seq[TriplePattern]],
-                         minuses: Seq[Seq[TriplePattern]],
-                         /** UNION groups: each element is ONE group's
-                           * branches. A group alone in the WHERE clause
-                           * is the classic pure union; groups alongside
-                           * required triples join the group result on
-                           * their (every-branch-bound) shared
-                           * variables. */
-                         unions: Seq[Seq[Seq[TriplePattern]]],
-                         private[Sparql] val filterAst: Seq[FExpr],
+                         where: Pattern,
                          groupBy: Seq[String] = Nil,
                          private[Sparql] val havingAst: Seq[HExpr] = Nil,
                          orderBy: Seq[(String, Boolean)] = Nil,
                          limit: Option[Long] = None,
                          offset: Option[Long] = None,
-                         values: Seq[(Seq[String], Seq[Seq[String]])] = Nil,
                          form: String = "SELECT",
                          template: Seq[TriplePattern] = Nil,
-                         exists: Seq[Seq[TriplePattern]] = Nil,
-                         notExists: Seq[Seq[TriplePattern]] = Nil,
                          describeVars: Seq[String] = Nil,
                          describeIds: Seq[String] = Nil,
-                         private[Sparql] val binds: Seq[(String, BExpr)] = Nil,
-                         private[Sparql] val subqueries: Seq[Query] = Nil,
-                         private[Sparql] val optionalFilters: Seq[Seq[FExpr]] = Nil,
                          /** SPARQL 13.2 dataset clause: `FROM <g>`
                            * merges into the DEFAULT graph (scopes every
                            * non-GRAPH pattern), `FROM NAMED <g>` the
@@ -610,82 +773,11 @@ object Sparql {
                            * for validation/compat. */
                          private[Sparql] val orderKeysAst:
                            Seq[(Either[String, NExpr], Boolean)] = Nil) {
-    /** BIND variable -> value kind: 'n'umeric, 's'tring, 'c'opy. */
-    private[Sparql] lazy val bindKinds: Map[String, Char] = {
-      def kindOf(b: BExpr): Char = b match {
-        case BNum(_) => 'n'
-        case BStr(_) => 's'
-        case BCopy(_) | BCoalesce(_) | BMintTerm(_, _, _) => 'c'
-        case BIf(_, t, _) => kindOf(t) // same-kind branches (validated)
-      }
-      binds.map { case (n, b) => n -> kindOf(b) }.toMap
-    }
-    /** All computed-value columns and their kinds: BIND variables plus
-      * subquery aggregate aliases (COUNT/SUM/AVG are numeric values,
-      * GROUP_CONCAT strings, MIN/MAX/SAMPLE id picks -> id-space 'c'). */
-    private[Sparql] lazy val valueKinds: Map[String, Char] =
-      bindKinds ++ subqueries.flatMap(_.projection.collect {
-        case PAgg(AggCall(f, _, _, _), alias) => alias -> (f match {
-          case "COUNT" | "SUM" | "AVG" => 'n'
-          case "GROUP_CONCAT"          => 's'
-          case _                       => 'c'
-        })
-      })
-    /** Result-column names each subquery contributes to the group. */
-    private[Sparql] def subqueryOutputs: Seq[String] =
-      subqueries.flatMap(sq =>
-        sq.select ++ sq.projection.collect { case PAgg(_, a) => a })
-    /** Variables bound in PREDICATE position by any pattern of the
-      * group: these bind RAW predicate IRIs (the edges convention), not
-      * hashed node ids — a different value space from every other
-      * binding. Includes subquery-projected variables that are
-      * predicate-position in the subquery, plus BIND copies/COALESCEs
-      * whose sources all live in this space. */
-    private[Sparql] lazy val predSpaceVars: Set[String] = {
-      val pats = required ++ optionals.flatten ++ unions.flatten.flatten ++
-        minuses.flatten ++ exists.flatten ++ notExists.flatten ++ template
-      val own = pats.flatMap(p => (Seq(p.pred) ++ p.graph).collect {
-        case V(n) => n
-      }).toSet
-      val sub = subqueries.flatMap(sq => sq.select.filter(sq.predSpaceVars)).toSet
-      binds.foldLeft(own ++ sub) { case (acc, (n, b)) =>
-        b match {
-          case BCopy(src) if acc(src)         => acc + n
-          case BCoalesce(vs) if vs.forall(acc) => acc + n
-          case _                               => acc
-        }
-      }
-    }
-    /** Variables bound in SUBJECT/OBJECT position (hashed node ids),
-      * plus DESCRIBE subjects and subquery-projected node-space
-      * variables — the complement space to [[predSpaceVars]]. */
-    private[Sparql] lazy val nodeSpaceVars: Set[String] = {
-      val pats = required ++ optionals.flatten ++ unions.flatten.flatten ++
-        minuses.flatten ++ exists.flatten ++ notExists.flatten ++ template
-      pats.flatMap(p => Seq(p.subj, p.obj).collect { case V(n) => n }).toSet ++
-        subqueries.flatMap(sq => sq.select.filter(sq.nodeSpaceVars)) ++
-        describeVars
-    }
-    /** Value kinds seen by the expression compiler: BIND/subquery value
-      * columns plus predicate-position variables tagged 'p' (raw-IRI
-      * reads — STR(?p) is the column itself, never a nodes-table join). */
-    private[Sparql] lazy val compileKinds: Map[String, Char] =
-      valueKinds ++ predSpaceVars.iterator.map(_ -> 'p')
-    /** Compiled FILTER predicates over the binding columns. */
-    def filters: Seq[Column] = filterAst.map(compileF(_, compileKinds))
     /** Plain variables of the projection (empty for `SELECT *`). */
     def select: Seq[String] = projection.collect { case PVar(n) => n }
-    /** Variables whose FILTERs read the VALUE space (numeric comparison,
-      * string function, LANG/DATATYPE, kind test) — each needs one
-      * [[Bgp.bindValues]] join before the FILTERs apply (BIND-produced
-      * variables are plain value columns and are excluded by the
-      * caller). */
-    private[Sparql] def filterTermVars: Seq[String] =
-      filterAst.flatMap(fTermVars).distinct
-    /** Variables BIND expressions read in the VALUE space — joined like
-      * [[filterTermVars]]; spent once the bind columns are computed. */
-    private[Sparql] def bindTermVars: Seq[String] =
-      binds.flatMap(b => bTermVars(b._2)).distinct
+    /** Result-column names: plain variables and aggregate aliases. */
+    private[Sparql] def outputs: Seq[String] =
+      select ++ projection.collect { case PAgg(_, a) => a }
     /** Variables aggregated in the NUMERIC value space (SUM/AVG args,
       * projected OR in HAVING) — these need [[Bgp.bindValues]] joins
       * that must SURVIVE until the aggregation step. */
@@ -697,44 +789,15 @@ object Sparql {
     /** Node-space variables picked by MIN/MAX: with the nodes overload
       * these need their `_term` struct alive at aggregation time so the
       * pick can follow SPARQL value ordering ([[termOrderKey]]). */
-    private[Sparql] def minmaxAggVars: Seq[String] =
+    private[Sparql] def minmaxAggVars: Seq[String] = {
+      val ns = nodeSpace(where)
       projection.collect {
-        case PAgg(AggCall("MIN" | "MAX", _, Some(v), _), _)
-          if nodeSpaceVars(v) => v
+        case PAgg(AggCall("MIN" | "MAX", _, Some(v), _), _) if ns(v) => v
       }.distinct
+    }
     private[Sparql] def isAggregate: Boolean =
       groupBy.nonEmpty || havingAst.nonEmpty ||
         projection.exists(_.isInstanceOf[PAgg])
-  }
-
-  /** Variables a FILTER expression reads through the nodes-table term
-    * join (numeric/string/temporal value spaces, kind tests, numeric IN
-    * lists) — BIND values and predicate-space variables are excluded by
-    * the caller via the kinds map. */
-  private def fTermVars(e: FExpr): Seq[String] = e match {
-    case FNumCmp(l, _, r) => nvars(l) ++ nvars(r)
-    case FTimeCmp(l, _, r, _) => Seq(l, r).collect { case TTVar(n) => n }
-    case FStrFn(_, a, b)  => svars(a) ++ svars(b)
-    case FRegex(a, _, _)  => svars(a)
-    case FStrCmp(l, _, r) => svars(l) ++ svars(r)
-    case FKindTest(_, v)  => Seq(v)
-    case FLangMatches(a, _) => svars(a)
-    case FIn(v, items, _) if items.forall(_.isInstanceOf[FONum]) => Seq(v)
-    case FNot(x)    => fTermVars(x)
-    case FAnd(a, b) => fTermVars(a) ++ fTermVars(b)
-    case FOr(a, b)  => fTermVars(a) ++ fTermVars(b)
-    case _          => Nil
-  }
-
-  /** Term-join variables a BIND body reads (IF conditions read like
-    * FILTERs; branches recurse). */
-  private def bTermVars(b: BExpr): Seq[String] = b match {
-    case BNum(e)           => nvars(e)
-    case BStr(t)           => svars(t)
-    case BCopy(_)          => Nil
-    case BCoalesce(_)      => Nil // id reads, no term join
-    case BIf(cond, t, e2)  => fTermVars(cond) ++ bTermVars(t) ++ bTermVars(e2)
-    case BMintTerm(lex, _, _) => svars(lex)
   }
 
   /** A comparison side; `predSide` = the OTHER side is a predicate-
@@ -743,33 +806,6 @@ object Sparql {
   private def compileT(t: FTerm, predSide: Boolean): Column = t match {
     case FTVar(n)         => col(n)
     case FTConst(id, raw) => lit(if (predSide) raw.getOrElse(id) else id)
-  }
-
-  /** Variables a numeric expression reads (through either space). */
-  private def nvars(e: NExpr): Seq[String] = e match {
-    case NVar(n)         => Seq(n)
-    case NNum(_)         => Nil
-    case NStrLen(a)      => svars(a)
-    case NArith(l, _, r) => nvars(l) ++ nvars(r)
-    case NFn(_, a)       => nvars(a)
-    case NTimeFn(_, v)   => Seq(v)
-    case NCast(v, _)     => Seq(v)
-  }
-
-  /** Variables a string expression reads (including the numeric reads
-    * of SUBSTR's position arguments — they need term joins too). */
-  private def svars(t: STerm): Seq[String] = t match {
-    case SVar(n, _)   => Seq(n)
-    case SLang(n)     => Seq(n)
-    case SDt(n)       => Seq(n)
-    case SConst(_)    => Nil
-    case SCase(a, _)  => svars(a)
-    case SConcat(as)  => as.flatMap(svars)
-    case SSubstr(a, s, l) => svars(a) ++ nvars(s) ++ l.toSeq.flatMap(nvars)
-    case SCut(a, b, _)    => svars(a) ++ svars(b)
-    case SReplace(a, _, _, _) => svars(a)
-    case SHash(_, a)      => svars(a)
-    case SEncode(a)       => svars(a)
   }
 
   /** A numeric expression's value with SPARQL's promotion: the integer
@@ -1694,7 +1730,7 @@ object Sparql {
     case t => fail(s"VALUES rows take IRI/literal constants or UNDEF, found $t")
   }
 
-  private def valuesClause(c: Cursor): (Seq[String], Seq[Seq[String]]) =
+  private def valuesClause(c: Cursor): Table =
     c.peekOrFail match {
       case TVar(n) =>
         c.next()
@@ -1704,7 +1740,7 @@ object Sparql {
         c.takeSym("}")
         val r = rows.result()
         if (r.isEmpty) fail("empty VALUES block")
-        (Seq(n), r)
+        Table(Seq(n), r)
       case TSym("(") =>
         c.takeSym("(")
         val vars = Seq.newBuilder[String]
@@ -1722,144 +1758,117 @@ object Sparql {
         c.takeSym("}")
         val r = rows.result()
         if (r.isEmpty) fail("empty VALUES block")
-        (vs, r)
+        Table(vs, r)
       case t => fail(s"VALUES takes ?var or (?var ...), found $t")
     }
 
-  /** The parsed WHERE-group pieces (shared by SELECT, ASK and
-    * CONSTRUCT). */
-  private final case class GroupAst(required: Seq[TriplePattern],
-                                    optionals: Seq[Seq[TriplePattern]],
-                                    minuses: Seq[Seq[TriplePattern]],
-                                    unions: Seq[Seq[Seq[TriplePattern]]],
-                                    filters: Seq[FExpr],
-                                    values: Seq[(Seq[String], Seq[Seq[String]])],
-                                    exists: Seq[Seq[TriplePattern]],
-                                    notExists: Seq[Seq[TriplePattern]],
-                                    binds: Seq[(String, BExpr)],
-                                    subqueries: Seq[Query],
-                                    optionalFilters: Seq[Seq[FExpr]])
+  /** §18.2.2's `Join(G, E)` with its simplification: the empty group Z
+    * is the identity, and triples merge into the group's one BGP part
+    * (a BGP is the join of its triples), which the join evaluates first. */
+  private def joinOf(g: Pattern, e: Pattern): Pattern = (g, e) match {
+    case (BGP(Nil), _)                  => e
+    case (BGP(a), BGP(b))               => BGP(a ++ b)
+    case (Join(BGP(a) +: rest), BGP(b)) => Join(BGP(a ++ b) +: rest)
+    case (Join(ps), BGP(_))             => Join(e +: ps)
+    case (Join(ps), _)                  => Join(ps :+ e)
+    case (_, BGP(_))                    => Join(Seq(e, g))
+    case _                              => Join(Seq(g, e))
+  }
 
-  /** Parses a group after its opening '{' (consumes the closing '}'). */
-  private def parseGroupBody(c: Cursor): GroupAst = {
-    val required = Seq.newBuilder[TriplePattern]
-    val optionals = Seq.newBuilder[Seq[TriplePattern]]
-    val minuses = Seq.newBuilder[Seq[TriplePattern]]
-    val unions = Seq.newBuilder[Seq[Seq[TriplePattern]]]
+  /** Parses a group after its opening '{' (consumes the closing '}') into
+    * its §18.2.2 translation. Elements apply in text order: triples,
+    * GRAPH blocks, UNIONs, VALUES and subqueries join the group so far,
+    * OPTIONAL left-joins it, MINUS subtracts from it, BIND extends it.
+    * FILTERs and EXISTS probes are group-scoped: they wrap the whole
+    * group wherever they are written. */
+  private def parseGroupBody(c: Cursor): Pattern = {
+    var g: Pattern = BGP(Nil)
     val filters = Seq.newBuilder[FExpr]
-    val values = Seq.newBuilder[(Seq[String], Seq[Seq[String]])]
-    val exists = Seq.newBuilder[Seq[TriplePattern]]
-    val notExists = Seq.newBuilder[Seq[TriplePattern]]
-    val binds = Seq.newBuilder[(String, BExpr)]
-    val subqueries = Seq.newBuilder[Query]
-    val optionalFilters = Seq.newBuilder[Seq[FExpr]]
-    // BIND ( bexpr AS ?var ) — the body's kind is decided by its first
-    // token: a string function opens the string space, STRLEN/number/
-    // paren/unary-minus the numeric space, a bare ?var (no arithmetic
-    // following) is an id-space copy, a plain "lit" a string constant
-    def bindBody(): BExpr = Sparql.bindBody(c)
-    def bindClause(): Unit = {
-      c.takeSym("BIND"); c.takeSym("(")
-      val b = bindBody()
-      c.takeSym("AS")
-      val v = varName(c)
-      c.takeSym(")")
-      binds += ((v, b))
-    }
-    // FILTER ( expr ) | FILTER EXISTS { .. } | FILTER NOT EXISTS { .. }
-    def filterClause(): Unit = {
-      c.takeSym("FILTER")
-      if (c.atSym("EXISTS")) {
-        c.takeSym("EXISTS"); c.takeSym("{")
-        exists += triplesBlock(c)
-      } else if (c.atSym("NOT")) {
-        c.takeSym("NOT"); c.takeSym("EXISTS"); c.takeSym("{")
-        notExists += triplesBlock(c)
-      } else {
-        c.takeSym("(")
-        filters += filterExpr(c)
+    val probes = Seq.newBuilder[Exists]
+    while (!c.atSym("}")) c.peekOrFail match {
+      case TSym("UNION") =>
+        fail("UNION branches must be plain { triples } blocks — start " +
+          "the group with '{ triples } UNION { triples }'")
+      case TSym("OPTIONAL") =>
+        // OPTIONAL { triples (FILTER(expr))* } — the filters CONDITION
+        // the match (SPARQL LeftJoin's third argument), restricted to
+        // the group's own variables (validated)
+        c.takeSym("OPTIONAL"); c.takeSym("{")
+        val pats = Seq.newBuilder[TriplePattern]
+        val ofs = Seq.newBuilder[FExpr]
+        while (!c.atSym("}")) {
+          if (c.atSym("FILTER")) {
+            c.takeSym("FILTER"); c.takeSym("(")
+            ofs += filterExpr(c)
+            c.takeSym(")")
+          } else pats += triple(c)
+        }
+        c.takeSym("}")
+        val ps = pats.result()
+        if (ps.isEmpty) fail("empty OPTIONAL group")
+        g = LeftJoin(g, BGP(ps), ofs.result())
+      case TSym("GRAPH") =>
+        // GRAPH (?g | <iri>) { triples } — scopes/binds the quad view's
+        // raw graph column; the scoped triples join the group's BGP
+        c.takeSym("GRAPH")
+        val gt: Bgp.TermPat = c.next() match {
+          case TVar(n)   => V(n)
+          case TIri(iri) => C(iri) // RAW graph IRI, like the pred column
+          case t => fail(s"GRAPH takes a ?variable or an <iri>, found $t")
+        }
+        c.takeSym("{")
+        g = joinOf(g, BGP(triplesBlock(c).map { t =>
+          if (t.graph.isDefined) fail("nested GRAPH scopes are not supported")
+          t.copy(graph = Some(gt))
+        }))
+      case TSym("MINUS") =>
+        c.takeSym("MINUS"); c.takeSym("{")
+        g = Minus(g, BGP(triplesBlock(c)))
+      case TSym("FILTER") =>
+        c.takeSym("FILTER")
+        if (c.atSym("EXISTS") || c.atSym("NOT")) {
+          val neg = c.atSym("NOT")
+          if (neg) c.takeSym("NOT")
+          c.takeSym("EXISTS"); c.takeSym("{")
+          probes += Exists(BGP(Nil), BGP(triplesBlock(c)), neg)
+        } else {
+          c.takeSym("(")
+          filters += filterExpr(c)
+          c.takeSym(")")
+        }
+      case TSym("BIND") =>
+        c.takeSym("BIND"); c.takeSym("(")
+        val b = bindBody(c)
+        c.takeSym("AS")
+        g = Extend(g, varName(c), b)
         c.takeSym(")")
-      }
+      case TSym("VALUES") =>
+        c.takeSym("VALUES")
+        g = joinOf(g, valuesClause(c))
+      case TSym("{") =>
+        // nested group: a SPARQL 1.1 subquery ({ SELECT ... }) or a
+        // UNION group ({ triples } UNION { triples } ...)
+        c.takeSym("{")
+        if (c.atSym("SELECT")) {
+          c.takeSym("SELECT")
+          g = joinOf(g, SubSelect(parseSelect(c, nested = true)))
+        } else {
+          val branches = Seq.newBuilder[Pattern]
+          branches += BGP(triplesBlock(c))
+          c.takeSym("UNION"); c.takeSym("{")
+          branches += BGP(triplesBlock(c))
+          while (c.atSym("UNION")) {
+            c.takeSym("UNION"); c.takeSym("{")
+            branches += BGP(triplesBlock(c))
+          }
+          g = joinOf(g, Union(branches.result()))
+        }
+      case _ => g = joinOf(g, BGP(Seq(triple(c))))
     }
-    locally {
-      while (!c.atSym("}")) c.peekOrFail match {
-        case TSym("UNION") =>
-          fail("UNION branches must be plain { triples } blocks — start " +
-            "the group with '{ triples } UNION { triples }'")
-        case TSym("OPTIONAL") =>
-          // OPTIONAL { triples (FILTER(expr))* } — the filters CONDITION
-          // the match (SPARQL LeftJoin's third argument), restricted to
-          // the group's own variables (validated)
-          c.takeSym("OPTIONAL"); c.takeSym("{")
-          val pats = Seq.newBuilder[TriplePattern]
-          val ofs = Seq.newBuilder[FExpr]
-          while (!c.atSym("}")) {
-            if (c.atSym("FILTER")) {
-              c.takeSym("FILTER"); c.takeSym("(")
-              ofs += filterExpr(c)
-              c.takeSym(")")
-            } else pats += triple(c)
-          }
-          c.takeSym("}")
-          val ps = pats.result()
-          if (ps.isEmpty) fail("empty OPTIONAL group")
-          optionals += ps
-          optionalFilters += ofs.result()
-        case TSym("GRAPH") =>
-          // GRAPH (?g | <iri>) { triples } — scopes/binds the quad
-          // view's raw graph column; the scoped triples are ordinary
-          // required patterns for the join-order machinery
-          c.takeSym("GRAPH")
-          val g: Bgp.TermPat = c.next() match {
-            case TVar(n)   => V(n)
-            case TIri(iri) => C(iri) // RAW graph IRI, like the pred column
-            case t => fail(s"GRAPH takes a ?variable or an <iri>, found $t")
-          }
-          c.takeSym("{")
-          required ++= triplesBlock(c).map { t =>
-            if (t.graph.isDefined) fail("nested GRAPH scopes are not supported")
-            t.copy(graph = Some(g))
-          }
-        case TSym("MINUS") =>
-          c.takeSym("MINUS"); c.takeSym("{")
-          minuses += triplesBlock(c)
-        case TSym("FILTER") =>
-          filterClause()
-        case TSym("BIND") =>
-          bindClause()
-        case TSym("VALUES") =>
-          c.takeSym("VALUES")
-          values += valuesClause(c)
-        case TSym("{") =>
-          // nested group: a SPARQL 1.1 subquery ({ SELECT ... }) or a
-          // UNION group ({ triples } UNION { triples } ...) — both are
-          // group members joining the rest of the group on their shared
-          // variables (a union member's join variables must be bound in
-          // EVERY branch; validated)
-          c.takeSym("{")
-          if (c.atSym("SELECT")) {
-            c.takeSym("SELECT")
-            subqueries += parseSelect(c, nested = true)
-          } else {
-            val branches = Seq.newBuilder[Seq[TriplePattern]]
-            branches += triplesBlock(c)
-            c.takeSym("UNION")
-            c.takeSym("{")
-            branches += triplesBlock(c)
-            while (c.atSym("UNION")) {
-              c.takeSym("UNION"); c.takeSym("{")
-              branches += triplesBlock(c)
-            }
-            unions += branches.result()
-          }
-        case _ => required += triple(c)
-      }
-      c.takeSym("}")
-    }
-    GroupAst(required.result(), optionals.result(), minuses.result(),
-      unions.result(), filters.result(), values.result(),
-      exists.result(), notExists.result(), binds.result(),
-      subqueries.result(), optionalFilters.result())
+    c.takeSym("}")
+    val probed = probes.result().foldLeft(g)((in, pr) => pr.copy(inner = in))
+    val fs = filters.result()
+    if (fs.isEmpty) probed else Filter(fs, probed)
   }
 
   /** A token-level absoluteness test: an IRI with an RFC 3986 scheme is
@@ -1975,15 +1984,11 @@ object Sparql {
       } else {
         if (vs.nonEmpty)
           fail(s"DESCRIBE ?${vs.head} needs a WHERE group to bind the variable")
-        GroupAst(Nil, Nil, Nil, Nil, Nil, Nil, Nil, Nil, Nil, Nil, Nil)
+        BGP(Nil)
       }
     if (!c.done) fail(s"trailing tokens after the DESCRIBE query: ${c.peekOrFail}")
-    val qy = Query(Nil, distinct = false, g.required, g.optionals, g.minuses,
-      g.unions, g.filters, values = g.values, form = "DESCRIBE",
-      exists = g.exists, notExists = g.notExists,
-      describeVars = vs, describeIds = is, binds = g.binds,
-      subqueries = g.subqueries, optionalFilters = g.optionalFilters,
-      fromGraphs = from, fromNamed = named)
+    val qy = Query(Nil, distinct = false, g, form = "DESCRIBE",
+      describeVars = vs, describeIds = is, fromGraphs = from, fromNamed = named)
     validate(qy)
     qy
   }
@@ -1996,10 +2001,7 @@ object Sparql {
     c.takeSym("{")
     val g = parseGroupBody(c)
     if (!c.done) fail(s"trailing tokens after the ASK group: ${c.peekOrFail}")
-    val qy = Query(Nil, distinct = false, g.required, g.optionals, g.minuses,
-      g.unions, g.filters, values = g.values, form = "ASK",
-      exists = g.exists, notExists = g.notExists, binds = g.binds,
-      subqueries = g.subqueries, optionalFilters = g.optionalFilters,
+    val qy = Query(Nil, distinct = false, g, form = "ASK",
       fromGraphs = from, fromNamed = named)
     validate(qy)
     qy
@@ -2016,12 +2018,8 @@ object Sparql {
     c.takeSym("{")
     val g = parseGroupBody(c)
     if (!c.done) fail(s"trailing tokens after the CONSTRUCT group: ${c.peekOrFail}")
-    val qy = Query(Nil, distinct = false, g.required, g.optionals, g.minuses,
-      g.unions, g.filters, values = g.values, form = "CONSTRUCT",
-      template = template, exists = g.exists, notExists = g.notExists,
-      binds = g.binds, subqueries = g.subqueries,
-      optionalFilters = g.optionalFilters,
-      fromGraphs = from, fromNamed = named)
+    val qy = Query(Nil, distinct = false, g, form = "CONSTRUCT",
+      template = template, fromGraphs = from, fromNamed = named)
     validate(qy)
     qy
   }
@@ -2136,12 +2134,12 @@ object Sparql {
     }
     if (nested) c.takeSym("}")
     else if (!c.done) fail(s"trailing tokens after the query: ${c.peekOrFail}")
-    val qy = Query(projection.result(), distinct, g.required, g.optionals,
-      g.minuses, g.unions, g.filters, groupBy, having.result(), orderBy,
-      limit, offset, g.values, exists = g.exists, notExists = g.notExists,
-      binds = g.binds ++ groupBinds, subqueries = g.subqueries,
-      optionalFilters = g.optionalFilters,
-      fromGraphs = from, fromNamed = named, orderKeysAst = orderKeys)
+    // GROUP BY (expr AS ?v) keys extend the group's solutions before
+    // they are grouped (§18.2.4.1)
+    val where = groupBinds.foldLeft(g) { case (p, (v, b)) => Extend(p, v, b) }
+    val qy = Query(projection.result(), distinct, where, groupBy,
+      having.result(), orderBy, limit, offset, fromGraphs = from,
+      fromNamed = named, orderKeysAst = orderKeys)
     if (nested && qy.projection.isEmpty)
       fail("subqueries must project explicitly (?vars / aggregates) — " +
         "SELECT * has no statically-known output to join on")
@@ -2149,145 +2147,83 @@ object Sparql {
     qy
   }
 
-  /** Parse-time semantic checks — every rejection here is a query that
-    * would otherwise run with silently-surprising semantics. */
-  private def validate(qy: Query): Unit = {
-    if (qy.unions.isEmpty && qy.required.isEmpty && qy.subqueries.isEmpty &&
-        !(qy.form == "DESCRIBE" && qy.describeVars.isEmpty))
-      fail("WHERE group has no required triple patterns or subqueries")
-    if (qy.required.isEmpty &&
-        (qy.optionals.nonEmpty || qy.minuses.nonEmpty))
-      fail("OPTIONAL/MINUS need required triple patterns to anchor on — a " +
-        "union- or subquery-only group supports FILTER/BIND/VALUES only")
-    if (qy.required.isEmpty && qy.unions.nonEmpty && qy.subqueries.nonEmpty)
-      fail("a group whose only required member is a UNION cannot also " +
-        "carry subqueries in this fragment — the join keys would not be " +
-        "anchored (NULL-padded branch variables); add a required triple " +
-        "pattern to anchor them")
-    def varsOf(ps: Seq[TriplePattern]): Set[String] =
-      ps.flatMap(p => (Seq(p.subj, p.pred, p.obj) ++ p.graph)
-        .collect { case V(n) => n }).toSet
-    val reqVars = varsOf(qy.required)
-    // ---- blank-node scope. A query bnode is a non-distinguished
-    // variable of ONE basic graph pattern (SPARQL scopes labels to the
-    // BGP); allowing a label to span OPTIONAL/UNION/MINUS/EXISTS groups
-    // or the CONSTRUCT template would silently join what the spec keeps
-    // separate — restricted to the required patterns, loudly.
-    val bnOutside = varsOf(qy.optionals.flatten ++ qy.minuses.flatten ++
-      qy.unions.flatten.flatten ++ qy.exists.flatten ++
-      qy.notExists.flatten ++ qy.template).filter(_.startsWith("_bn_"))
-    if (bnOutside.nonEmpty)
-      fail(s"blank nodes (${bnOutside.toSeq.sorted.mkString(", ")}) are " +
-        "only supported in the required triple patterns in this fragment " +
-        "— OPTIONAL/UNION/MINUS/EXISTS groups and CONSTRUCT templates " +
-        "take explicit ?variables")
-    if (qy.form == "SELECT" && qy.projection.isEmpty &&
-        reqVars.nonEmpty && reqVars.forall(_.startsWith("_bn_")) &&
-        qy.binds.isEmpty && qy.subqueries.isEmpty)
-      fail("SELECT * over patterns binding only blank nodes has no " +
-        "projectable result — name at least one ?variable")
-    // ---- UNION group checks. A lone UNION group IS the group (the
-    // classic pure union); alongside required triples each group joins
-    // the group result on its shared variables, and that equi-join is
-    // sound only when every join variable is bound in EVERY branch (a
-    // partial-branch binding is NULL in the other branches' rows, and a
-    // NULL key silently drops them where SPARQL's join compatibility
-    // keeps them). Cross-group / OPTIONAL-fresh overlap reintroduces
-    // the non-well-designed cases and is rejected like the two-OPTIONAL
-    // overlap rule.
-    if (qy.unions.nonEmpty && qy.required.isEmpty && qy.unions.sizeIs > 1)
-      fail("several UNION groups need a required pattern to anchor their join")
-    if (qy.unions.nonEmpty && qy.required.nonEmpty) {
-      val optFresh = qy.optionals.flatMap(varsOf).toSet -- reqVars
-      val unionVarSets = qy.unions.map(_.flatMap(varsOf).toSet)
-      qy.unions.zipWithIndex.foreach { case (branches, i) =>
-        val allVars = unionVarSets(i)
-        val everyBranch = branches.map(varsOf).reduce(_ & _)
-        val sharedReq = allVars & reqVars
-        if (sharedReq.isEmpty)
-          fail(s"UNION group ${i + 1} shares no variable with the required " +
-            "pattern — an unjoined union would be a cartesian product")
-        val partial = (sharedReq -- everyBranch).toSeq.sorted
-        if (partial.nonEmpty)
-          fail(s"variable(s) ${partial.map("?" + _).mkString(", ")} join the " +
-            "UNION group to the required pattern but are bound in only some " +
-            "branches — a branch row's NULL key would silently drop it; " +
-            "bind them in every branch")
-        val optClash = (allVars & optFresh).toSeq.sorted
-        if (optClash.nonEmpty)
-          fail(s"variable(s) ${optClash.map("?" + _).mkString(", ")} are " +
-            "bound both by an OPTIONAL group and a UNION group — only " +
-            "well-designed patterns are supported")
-        unionVarSets.drop(i + 1).zipWithIndex.foreach { case (other, j) =>
-          val clash = ((allVars & other) -- reqVars).toSeq.sorted
-          if (clash.nonEmpty)
-            fail(s"variable(s) ${clash.map("?" + _).mkString(", ")} are " +
-              s"bound by UNION groups ${i + 1} and ${i + j + 2} but not by " +
-              "the required pattern — join them through a required binding")
-        }
-      }
-    }
-    // VALUES variables must be anchored in the REQUIRED pattern: a NULL
-    // binding (unmatched OPTIONAL) never equals an inline value, which
-    // would silently diverge from SPARQL's unbound-is-compatible rule
-    qy.values.foreach { case (vs, _) =>
-      val unanchored = vs.filterNot(reqVars.contains)
-      if (unanchored.nonEmpty)
-        fail(s"VALUES variable(s) ${unanchored.mkString(", ")} must be bound " +
-          "by the required pattern (not only by OPTIONAL) in this fragment")
-    }
-    // ---- BIND checks: freshness, read availability and value-space
-    // kinds. Every rejection here is a query that would otherwise run
-    // with a silently-wrong space (e.g. a raw string compared to a
-    // hashed node id). Reads are tagged by HOW the variable is used:
-    // 'n' numeric value, 's' string value, 't' RDF-term structure,
-    // 'c' id-space comparison.
-    val kinds = qy.valueKinds
-    def readsN(e: NExpr): Seq[(String, Char)] = e match {
-      case NVar(n)         => Seq((n, 'n'))
-      case NNum(_)         => Nil
-      case NStrLen(a)      => readsS(a)
-      case NArith(l, _, r) => readsN(l) ++ readsN(r)
-      case NFn(_, a)       => readsN(a)
-      case NTimeFn(_, v)   => Seq((v, 'd'))
-      case NCast(v, _)     => Seq((v, 'x'))
-    }
-    def readsS(t: STerm): Seq[(String, Char)] = t match {
-      // 'S' = a STR(?v) read (defined on IRIs too), 's' = a bare
-      // string-literal read — the distinction matters for predicate-
-      // position variables, whose raw IRI STR() reads directly
-      case SVar(n, viaStr) => Seq((n, if (viaStr) 'S' else 's'))
-      case SLang(n)    => Seq((n, 't'))
-      case SDt(n)      => Seq((n, 't'))
-      case SConst(_)   => Nil
-      case SCase(a, _) => readsS(a)
-      case SConcat(as) => as.flatMap(readsS)
-      case SSubstr(a, s, l) =>
-        readsS(a) ++ readsN(s) ++ l.toSeq.flatMap(readsN)
-      case SCut(a, b, _)        => readsS(a) ++ readsS(b)
-      case SReplace(a, _, _, _) => readsS(a)
-      case SHash(_, a)          => readsS(a)
-      case SEncode(a)           => readsS(a)
-    }
-    def readsF(e: FExpr): Seq[(String, Char)] = e match {
-      case FBound(_)        => Nil
-      case FNot(x)          => readsF(x)
-      case FAnd(a, b)       => readsF(a) ++ readsF(b)
-      case FOr(a, b)        => readsF(a) ++ readsF(b)
-      case FCmp(l, _, r)    => Seq(l, r).collect { case FTVar(n) => (n, 'c') }
-      case FNumCmp(l, _, r) => readsN(l) ++ readsN(r)
-      case FStrFn(_, a, b)  => readsS(a) ++ readsS(b)
-      case FRegex(a, _, _)  => readsS(a)
-      case FStrCmp(l, _, r) => readsS(l) ++ readsS(r)
-      case FKindTest(_, v)  => Seq((v, 't'))
-      case FTimeCmp(l, _, r, _) =>
-        Seq(l, r).collect { case TTVar(n) => (n, 'd') }
-      case FLangMatches(a, _) => readsS(a)
-      case FIn(v, items, _) =>
-        Seq((v, if (items.forall(_.isInstanceOf[FONum])) 'n' else 'i'))
-      case FSameTerm(a, b) => Seq((a, 'c'), (b, 'c'))
-    }
-    def checkRead(v: String, how0: Char, ctx: String): Unit =
+  /** How an expression reads each variable: 'n' numeric value, 's' bare
+    * string-literal value, 'S' STR() value (defined on IRIs too), 't'
+    * RDF-term structure, 'c' id-space comparison, 'd' temporal value,
+    * 'x' constructor cast, 'i' RDF-term IN list. */
+  private def readsN(e: NExpr): Seq[(String, Char)] = e match {
+    case NVar(n)         => Seq((n, 'n'))
+    case NNum(_)         => Nil
+    case NStrLen(a)      => readsS(a)
+    case NArith(l, _, r) => readsN(l) ++ readsN(r)
+    case NFn(_, a)       => readsN(a)
+    case NTimeFn(_, v)   => Seq((v, 'd'))
+    case NCast(v, _)     => Seq((v, 'x'))
+  }
+
+  private def readsS(t: STerm): Seq[(String, Char)] = t match {
+    case SVar(n, viaStr) => Seq((n, if (viaStr) 'S' else 's'))
+    case SLang(n)        => Seq((n, 't'))
+    case SDt(n)          => Seq((n, 't'))
+    case SConst(_)       => Nil
+    case SCase(a, _)     => readsS(a)
+    case SConcat(as)     => as.flatMap(readsS)
+    case SSubstr(a, s, l) => readsS(a) ++ readsN(s) ++ l.toSeq.flatMap(readsN)
+    case SCut(a, b, _)        => readsS(a) ++ readsS(b)
+    case SReplace(a, _, _, _) => readsS(a)
+    case SHash(_, a)          => readsS(a)
+    case SEncode(a)           => readsS(a)
+  }
+
+  private def readsF(e: FExpr): Seq[(String, Char)] = e match {
+    case FBound(_)        => Nil
+    case FNot(x)          => readsF(x)
+    case FAnd(a, b)       => readsF(a) ++ readsF(b)
+    case FOr(a, b)        => readsF(a) ++ readsF(b)
+    case FCmp(l, _, r)    => Seq(l, r).collect { case FTVar(n) => (n, 'c') }
+    case FNumCmp(l, _, r) => readsN(l) ++ readsN(r)
+    case FStrFn(_, a, b)  => readsS(a) ++ readsS(b)
+    case FRegex(a, _, _)  => readsS(a)
+    case FStrCmp(l, _, r) => readsS(l) ++ readsS(r)
+    case FKindTest(_, v)  => Seq((v, 't'))
+    case FTimeCmp(l, _, r, _) => Seq(l, r).collect { case TTVar(n) => (n, 'd') }
+    case FLangMatches(a, _) => readsS(a)
+    case FIn(v, items, _) =>
+      Seq((v, if (items.forall(_.isInstanceOf[FONum])) 'n' else 'i'))
+    case FSameTerm(a, b) => Seq((a, 'c'), (b, 'c'))
+  }
+
+  private def readsB(b: BExpr): Seq[(String, Char)] = b match {
+    case BNum(e)              => readsN(e)
+    case BStr(t)              => readsS(t)
+    case BMintTerm(lex, _, _) => readsS(lex)
+    case BIf(cond, t, e2)     => readsF(cond) ++ readsB(t) ++ readsB(e2)
+    case BCopy(_) | BCoalesce(_) => Nil // id reads of pattern variables
+  }
+
+  /** The variables read through their nodes-table `_term` struct: every
+    * read but an id-space comparison ('c') or RDF-term IN list ('i'). */
+  private def termVars(reads: Seq[(String, Char)]): Seq[String] =
+    reads.collect { case (v, how) if how != 'c' && how != 'i' => v }.distinct
+
+  /** Every variable a FILTER reads, BOUND's included. */
+  private def fReadVars(e: FExpr): Seq[String] = e match {
+    case FBound(v)  => Seq(v)
+    case FNot(x)    => fReadVars(x)
+    case FAnd(a, b) => fReadVars(a) ++ fReadVars(b)
+    case FOr(a, b)  => fReadVars(a) ++ fReadVars(b)
+    case other      => readsF(other).map(_._1)
+  }
+
+  private def fmtVars(vs: Iterable[String]): String =
+    vs.toSeq.sorted.map("?" + _).mkString(", ")
+
+  /** The value spaces of one query's variables: computed-value kinds and
+    * the pred-space set. Each check rejects a read or comparison that
+    * would run in a silently-wrong space (a raw string compared to a
+    * hashed node id, a raw predicate IRI read as a number, ...). */
+  private final case class Spaces(kinds: Map[String, Char], pred: Set[String]) {
+    def read(v: String, how0: Char, ctx: String): Unit = {
       kinds.get(v).foreach { k =>
         val how = if (how0 == 'S') 's' else how0
         how match {
@@ -2309,23 +2245,7 @@ object Sparql {
           case _ => ()
         }
       }
-    // ---- predicate-position space checks. The edges convention stores
-    // RAW predicate IRIs in the pred column and hashed node ids
-    // everywhere else, so a variable bound in predicate position lives
-    // in a different value space from every other binding: joining or
-    // comparing across the two spaces is silently constant (a raw IRI
-    // never equals a sha256 hash). Everything cross-space is rejected
-    // here; the compiler handles the sound cases (IRI constants compile
-    // raw against pred variables, STR(?p) reads the column directly).
-    val predSpace = qy.predSpaceVars
-    val mixedSpace = (predSpace & qy.nodeSpaceVars).toSeq.sorted
-    if (mixedSpace.nonEmpty)
-      fail(s"variable(s) ${mixedSpace.map("?" + _).mkString(", ")} are bound " +
-        "in predicate/GRAPH position (raw IRIs) but also used where hashed node " +
-        "ids live (subject/object position, DESCRIBE, CONSTRUCT node slots) " +
-        "— the two spaces never compare equal; rename one of the uses")
-    def checkPredRead(v: String, how: Char, ctx: String): Unit =
-      if (predSpace(v)) how match {
+      if (pred(v)) how0 match {
         case 'n' => fail(s"$ctx reads ?$v numerically, but ?$v binds " +
           "raw predicate/graph IRIs")
         case 's' => fail(s"$ctx reads ?$v as a string literal, but ?$v " +
@@ -2339,13 +2259,15 @@ object Sparql {
           "predicate/graph IRIs — an xsd constructor cast of an IRI is " +
           "a SPARQL type error")
         // 'S' (STR) reads the raw IRI; 'c' and 'i' (RDF-term =/IN) are
-        // space-checked by checkPredCmp, which compiles raw IRIs
+        // space-checked by cmp, and compile raw IRIs
         case _ => ()
       }
-    def checkPredCmp(e: FExpr, pv: Set[String], ctx: String): Unit = e match {
+    }
+
+    def cmp(e: FExpr, ctx: String): Unit = e match {
       case FCmp(l, _, r) =>
         def isPred(t: FTerm): Boolean = t match {
-          case FTVar(n) => pv(n)
+          case FTVar(n) => pred(n)
           case _        => false
         }
         (l, r) match {
@@ -2363,247 +2285,310 @@ object Sparql {
               "predicates are IRIs; compare against an <iri>")
           case _ => () // pred variable vs IRI constant: compiled raw
         }
-      case FIn(v, items, _) if pv(v) =>
+      case FIn(v, items, _) if pred(v) =>
         if (!items.forall(_.isInstanceOf[FOIri]))
           fail(s"$ctx: ?$v binds raw predicate/graph IRIs — its IN list " +
             "must contain <iri>s only")
       case FSameTerm(a, b) =>
-        if (pv(a) != pv(b))
+        if (pred(a) != pred(b))
           fail(s"$ctx: SAMETERM(?$a, ?$b) compares across value spaces — " +
             "one binds raw predicate IRIs, the other hashed node ids, so " +
             "the test is silently constant")
-      case FNot(x)    => checkPredCmp(x, pv, ctx)
-      case FAnd(a, b) => checkPredCmp(a, pv, ctx); checkPredCmp(b, pv, ctx)
-      case FOr(a, b)  => checkPredCmp(a, pv, ctx); checkPredCmp(b, pv, ctx)
+      case FNot(x)    => cmp(x, ctx)
+      case FAnd(a, b) => cmp(a, ctx); cmp(b, ctx)
+      case FOr(a, b)  => cmp(a, ctx); cmp(b, ctx)
       case _          => ()
     }
-    qy.filterAst.foreach(checkPredCmp(_, predSpace, "FILTER"))
-    qy.optionalFilters.zip(qy.optionals).foreach { case (fs, group) =>
-      val gp = group.flatMap(p => p.pred match {
-        case V(n) => Seq(n); case _ => Nil
-      }).toSet
-      fs.foreach(checkPredCmp(_, gp, "a FILTER inside OPTIONAL"))
+  }
+
+  /** The structural checks of the validation pass, one per node. Each
+    * rejects a shape whose equi-join plan would differ from §18's
+    * compatible-mapping semantics — a join key that may be NULL on one
+    * side, a join sharing no variable (a cartesian product), a join on a
+    * computed value — or a blank node outside its basic graph pattern.
+    * `required` is false under OPTIONAL, MINUS, UNION and the probes. */
+  private def checkPattern(p: Pattern, sp: Spaces, required: Boolean = true): Unit = {
+    def sub(x: Pattern, req: Boolean = required): Unit = checkPattern(x, sp, req)
+    // OPTIONAL and MINUS act on the rows of the patterns before them
+    def anchorLeft(what: String, l: Pattern): Unit =
+      if (l == BGP(Nil))
+        fail(s"$what has nothing before it in its group — SPARQL applies it " +
+          "to the empty solution, not to the patterns written after it; " +
+          "write the group's triple patterns first")
+      else if (requiredVars(l).isEmpty)
+        fail("OPTIONAL/MINUS need required triple patterns to anchor on — a " +
+          "union- or subquery-only group supports FILTER/BIND/VALUES only")
+    // MINUS and the EXISTS probes are equi-semi/anti-joins on the shared
+    // variables; a NULL key never matches where SPARQL's substitution /
+    // compatibility semantics leave the variable free. A MINUS whose ONLY
+    // shared variable may be NULL is exactly SPARQL's disjoint-domain rule
+    // (the row survives), so it stays accepted.
+    def probeKeys(what: String, l: Pattern, r: Pattern, minShared: Int): Unit = {
+      val shared = scope(l) & scope(r)
+      if (shared.isEmpty)
+        fail(s"$what group shares no variable with the rows it applies to — " +
+          (if (minShared > 1) "SPARQL disjoint-domain MINUS removes nothing"
+           else "a constant-truth probe") + "; this is almost always a typo'd variable")
+      val computed = shared.filter(sp.kinds.contains)
+      if (computed.nonEmpty)
+        fail(s"$what patterns cannot reference computed variable(s) " +
+          s"${computed.toSeq.sorted.mkString(", ")} — the probes join on node-id columns")
+      val open = shared -- certain(l)
+      if (shared.size >= minShared && open.nonEmpty)
+        fail(s"$what shares variable(s) ${fmtVars(open)} that may be unbound " +
+          "(OPTIONAL-only or partial-union binding) — a NULL join key silently " +
+          "diverges from SPARQL's semantics; anchor the variable in the required pattern")
     }
-    qy.values.foreach { case (vs, _) =>
-      val pv = vs.filter(predSpace)
-      if (pv.nonEmpty)
-        fail(s"VALUES over predicate-position variable(s) " +
-          s"${pv.map("?" + _).mkString(", ")} — inline rows hash to node " +
-          "ids, which never match raw predicate IRIs; use a predicate " +
-          "alternative (<a>|<b>) or FILTER(?p = <a> || ?p = <b>)")
-    }
-    (qy.projection.collect { case PAgg(call, _) => call } ++
-      qy.havingAst.flatMap(havingCalls)).foreach {
-      case AggCall(f @ ("SUM" | "AVG"), _, Some(v), _) if predSpace(v) =>
-        fail(s"$f(?$v) aggregates numeric values, but ?$v binds predicate IRIs")
-      case _ => ()
-    }
-    val bindNames = qy.binds.map(_._1)
-    val dupBind = bindNames.diff(bindNames.distinct)
-    if (dupBind.nonEmpty)
-      fail(s"duplicate BIND variable(s): ${dupBind.distinct.mkString(", ")}")
-    val patternVarsAll = varsOf(qy.required) ++ qy.optionals.flatMap(varsOf) ++
-      qy.unions.flatten.flatMap(varsOf)
-    qy.binds.zipWithIndex.foreach { case ((name, b), i) =>
-      if (patternVarsAll.contains(name))
-        fail(s"BIND variable ?$name is already bound by the pattern group")
-      val earlier = bindNames.take(i).toSet
-      def readsB(bx: BExpr): Seq[(String, Char)] = bx match {
-        case BCopy(src) =>
-          if (!patternVarsAll.contains(src))
-            fail(s"BIND(?$src AS ?$name): a bare-?var BIND copies a PATTERN " +
-              s"binding — ?$src is not one (computed values need an expression)")
-          Nil
-        case BCoalesce(vs) =>
-          // id-space fallback over pattern bindings (OPTIONAL vars are
-          // the point); value columns would mix spaces — rejected
-          val notPattern = vs.filterNot(patternVarsAll.contains)
-          if (notPattern.nonEmpty)
-            fail(s"COALESCE takes PATTERN variables — ${notPattern.map("?" + _).mkString(", ")} " +
-              "are not pattern bindings (coalescing ids with computed values mixes spaces)")
-          val ps = vs.filter(predSpace)
-          if (ps.nonEmpty && ps.size != vs.size)
-            fail(s"COALESCE in BIND ?$name mixes predicate-position (raw " +
-              "IRI) and node-position (hashed id) variables — the two " +
-              "spaces cannot share a column")
-          Nil
-        case BNum(e) => readsN(e)
-        case BStr(t) => readsS(t)
-        case BMintTerm(lex, _, _) => readsS(lex)
-        case BIf(cond, t, e2) =>
-          checkPredCmp(cond, predSpace, s"BIND ?$name")
-          readsF(cond) ++ readsB(t) ++ readsB(e2)
-      }
-      // IF branches must live in ONE value kind — mixing a numeric and
-      // a string (or id) branch would give the column no coherent space
-      def kindOfB(bx: BExpr): Char = bx match {
-        case BNum(_)                 => 'n'
-        case BStr(_)                 => 's'
-        case BCopy(_) | BCoalesce(_) | BMintTerm(_, _, _) => 'c'
-        case BIf(_, t, e2) =>
-          val (kt, ke) = (kindOfB(t), kindOfB(e2))
-          if (kt != ke)
-            fail(s"IF branches in BIND ?$name mix value kinds — both must " +
-              "be numeric, both string, or both id-space bindings")
-          kt
-      }
-      kindOfB(b): Unit
-      readsB(b).foreach { case (v, how) =>
-        if (!patternVarsAll.contains(v) && !earlier.contains(v) &&
-            !qy.subqueryOutputs.contains(v))
-          fail(s"BIND ?$name reads ?$v, which is bound neither by the " +
-            "patterns, a subquery, nor an earlier BIND")
-        checkRead(v, how, s"BIND ?$name")
-        checkPredRead(v, how, s"BIND ?$name")
-      }
-    }
-    qy.filterAst.flatMap(readsF).foreach { case (v, how) =>
-      checkRead(v, how, "FILTER")
-      checkPredRead(v, how, "FILTER")
-    }
-    // every variable a FILTER reads must be bound by the patterns, a
-    // BIND or a subquery — a typo'd FILTER variable would otherwise
-    // surface as an opaque unresolved-column AnalysisException at run
-    // time instead of a parse error (the same check BIND gets above)
-    def fReadVars(e: FExpr): Seq[String] = e match {
-      case FBound(v) => Seq(v)
-      case FNot(x)   => fReadVars(x)
-      case FAnd(a, b) => fReadVars(a) ++ fReadVars(b)
-      case FOr(a, b)  => fReadVars(a) ++ fReadVars(b)
-      case other      => readsF(other).map(_._1)
-    }
-    val filterBound = patternVarsAll ++ bindNames ++ qy.subqueryOutputs
-    qy.filterAst.flatMap(fReadVars).distinct.filterNot(filterBound.contains)
-      .foreach(v => fail(s"FILTER reads ?$v, which is bound neither by " +
-        "the patterns, a BIND, nor a subquery"))
-    // ---- subquery checks: result-name hygiene and join anchoring.
-    // Every subquery-projected PLAIN variable must be bound by the
-    // subquery's own REQUIRED pattern and the join must share at least
-    // one such variable with the outer required pattern (or an earlier
-    // subquery) — anchored keys are never NULL, so the inner equi-join
-    // cannot silently diverge from SPARQL's unbound-is-compatible rule.
-    if (qy.subqueries.nonEmpty) {
-      val allOut = qy.subqueryOutputs
-      val dupOut = allOut.diff(allOut.distinct)
-      if (dupOut.nonEmpty)
-        fail(s"subqueries expose duplicate result name(s): " +
-          s"${dupOut.distinct.mkString(", ")}")
-      val bindClash = allOut.filter(bindNames.contains)
-      if (bindClash.nonEmpty)
-        fail(s"subquery result name(s) ${bindClash.mkString(", ")} collide " +
-          "with BIND variables")
-      qy.subqueries.zipWithIndex.foreach { case (sq, i) =>
-        // aggregate aliases are plain VALUES; an outer pattern variable
-        // of the same name would join an id column against them
-        val aliasClash = sq.projection.collect { case PAgg(_, a) => a }
-          .filter(patternVarsAll.contains)
-        if (aliasClash.nonEmpty)
-          fail(s"subquery aggregate alias(es) ${aliasClash.mkString(", ")} " +
-            "collide with outer pattern variables — rename the alias")
-        val subReq = varsOf(sq.required)
-        val unanchored = sq.select.filterNot(subReq.contains)
-        if (unanchored.nonEmpty)
-          fail(s"subquery-projected variable(s) ${unanchored.mkString(", ")} " +
-            "must be bound by the subquery's required pattern (not only " +
-            "OPTIONAL/UNION) in this fragment")
-        // the OUTER side of the join must be never-NULL too: a shared
-        // variable bound only by an outer OPTIONAL is NULL on unmatched
-        // rows, and the inner equi-join would drop them where SPARQL's
-        // unbound-is-compatible rule keeps them
-        val optOnly = sq.select.filter(v =>
-          !reqVars.contains(v) && qy.optionals.exists(o => varsOf(o).contains(v)))
-        if (optOnly.nonEmpty)
-          fail(s"subquery variable(s) ${optOnly.mkString(", ")} are bound " +
-            "only by an outer OPTIONAL — an unmatched row's NULL key would " +
-            "silently drop it from the join; anchor the variable in the " +
-            "required pattern or rename the subquery projection")
-        // same NULL-key hazard against a partial-branch UNION binding
-        val unionPartial = sq.select.filter(v =>
-          !reqVars.contains(v) && qy.unions.exists(g =>
-            g.flatMap(varsOf).toSet.contains(v) &&
-              !g.map(varsOf).reduce(_ & _).contains(v)))
-        if (unionPartial.nonEmpty)
-          fail(s"subquery variable(s) ${unionPartial.mkString(", ")} are " +
-            "bound in only some UNION branches — a branch row's NULL key " +
-            "would silently drop it from the join; bind them in every " +
-            "branch or rename the subquery projection")
-        if (qy.required.nonEmpty || i > 0) {
-          val prior = qy.subqueries.take(i).flatMap(_.select).toSet
-          val shared = sq.select.filter(v => reqVars.contains(v) || prior.contains(v))
-          if (shared.isEmpty)
-            fail(s"subquery ${i + 1} shares no plain variable with the " +
-              "group's required pattern — an unjoined subquery would be a " +
-              "cross product")
+    p match {
+      case BGP(ts) =>
+        val bn = varsOf(ts).filter(_.startsWith("_bn_"))
+        if (!required && bn.nonEmpty)
+          fail(s"blank nodes (${bn.toSeq.sorted.mkString(", ")}) are only " +
+            "supported in the required triple patterns in this fragment — " +
+            "OPTIONAL/UNION/MINUS/EXISTS groups and CONSTRUCT templates take " +
+            "explicit ?variables")
+      case Join(parts) =>
+        parts.foreach(sub(_))
+        checkJoin(parts, sp)
+      case LeftJoin(l, r, cond) =>
+        sub(l); sub(r, req = false)
+        anchorLeft("OPTIONAL", l)
+        val shared = scope(l) & scope(r)
+        if (shared.isEmpty)
+          fail("an OPTIONAL group shares no variable with the patterns " +
+            "before it — an unanchored OPTIONAL is a cartesian product")
+        val computed = shared.filter(sp.kinds.contains)
+        if (computed.nonEmpty)
+          fail(s"BIND variable(s) ${fmtVars(computed)} are already bound " +
+            "by the pattern group — a computed value never joins a node id")
+        // its keys are the group's own triple variables: never NULL
+        val open = shared -- requiredVars(l)
+        if (open.nonEmpty)
+          fail(s"variable(s) ${fmtVars(open)} join this OPTIONAL but the " +
+            "triple patterns before it do not bind them (they are bound by two " +
+            "optional groups, a UNION or a subquery) — only well-designed " +
+            "patterns (each optional variable bound once) are supported")
+        // the condition pre-filters the group side, which is exactly
+        // LeftJoin's condition ONLY when it reads the group's OWN
+        // variables, in the id space
+        val own = scope(r)
+        def idSpace(e: FExpr): Unit = e match {
+          case FBound(v) if !own(v) => notOwn(v, "BOUND over")
+          case FBound(_)            => ()
+          case FCmp(l2, _, r2) => Seq(l2, r2).foreach {
+            case FTVar(n) if !own(n) => notOwn(n, "operand")
+            case _                   => ()
+          }
+          case FNot(x)    => idSpace(x)
+          case FAnd(a, b) => idSpace(a); idSpace(b)
+          case FOr(a, b)  => idSpace(a); idSpace(b)
+          case _ => fail("FILTERs inside OPTIONAL are id-space only in this " +
+            "fragment (= / != / BOUND over the group's variables) — " +
+            "value-space conditions belong in a subquery or the outer group")
         }
-      }
-    }
-    // ---- OPTIONAL-group FILTER checks: pre-filtering the group side
-    // is exactly SPARQL's LeftJoin condition ONLY when the expression
-    // reads the group's OWN variables, in the id space
-    qy.optionalFilters.zip(qy.optionals).foreach { case (fs, group) =>
-      val gVars = varsOf(group)
-      def own(v: String, what: String): Unit =
-        if (!gVars.contains(v))
+        def notOwn(v: String, what: String): Nothing =
           fail(s"a FILTER inside an OPTIONAL group may only read the " +
             s"group's own variables — $what ?$v is bound elsewhere; " +
             "move the condition to the outer group to filter ROWS instead " +
             "of conditioning the match")
-      def checkIdSpace(e: FExpr): Unit = e match {
-        case FBound(v)     => own(v, "BOUND over")
-        case FCmp(l, _, r) =>
-          Seq(l, r).foreach {
-            case FTVar(n) => own(n, "operand")
-            case _        => ()
-          }
-        case FNot(x)    => checkIdSpace(x)
-        case FAnd(a, b) => checkIdSpace(a); checkIdSpace(b)
-        case FOr(a, b)  => checkIdSpace(a); checkIdSpace(b)
-        case _ => fail("FILTERs inside OPTIONAL are id-space only in this " +
-          "fragment (= / != / BOUND over the group's variables) — " +
-          "value-space conditions belong in a subquery or the outer group")
-      }
-      fs.foreach(checkIdSpace)
+        cond.foreach { e => sp.cmp(e, "a FILTER inside OPTIONAL"); idSpace(e) }
+      case Minus(l, r) =>
+        sub(l); sub(r, req = false)
+        anchorLeft("MINUS", l)
+        probeKeys("MINUS", l, r, minShared = 2)
+      case Exists(i, pr, neg) =>
+        sub(i); sub(pr, req = false)
+        probeKeys(if (neg) "FILTER NOT EXISTS" else "FILTER EXISTS", i, pr, minShared = 1)
+      case Union(bs) =>
+        if (bs.isEmpty) fail("empty UNION")
+        bs.foreach(sub(_, req = false))
+      case Filter(cond, i) =>
+        sub(i)
+        val sc = scope(i)
+        cond.foreach { e =>
+          sp.cmp(e, "FILTER")
+          readsF(e).foreach { case (v, how) => sp.read(v, how, "FILTER") }
+          // a typo'd FILTER variable would otherwise surface as an opaque
+          // unresolved-column error at run time
+          fReadVars(e).distinct.filterNot(sc).foreach(v =>
+            fail(s"FILTER reads ?$v, which is bound neither by the " +
+              "patterns, a BIND, nor a subquery"))
+        }
+      case Extend(i, v, b) =>
+        sub(i)
+        checkExtend(i, v, b, sp)
+      case Table(vs, rows) =>
+        if (vs.isEmpty || rows.isEmpty) fail("VALUES needs at least one variable and one row")
+        if (!rows.forall(_.size == vs.size))
+          fail(s"every VALUES row must have ${vs.size} term(s) for (${vs.mkString(", ")})")
+        val pv = vs.filter(sp.pred)
+        if (pv.nonEmpty)
+          fail(s"VALUES over predicate-position variable(s) ${fmtVars(pv)} — " +
+            "inline rows hash to node ids, which never match raw predicate " +
+            "IRIs; use a predicate alternative (<a>|<b>) or FILTER(?p = <a> || ?p = <b>)")
+      case SubSelect(q) =>
+        val open = q.select.filterNot(requiredVars(q.where))
+        if (open.nonEmpty)
+          fail(s"subquery-projected variable(s) ${open.mkString(", ")} " +
+            "must be bound by the subquery's required pattern (not only " +
+            "OPTIONAL/UNION) in this fragment")
     }
-    // the EXISTS/NOT EXISTS probes join BEFORE binds compute — a probe
-    // naming a bind variable (or a subquery VALUE alias) would silently
-    // not join / join nonsense
-    val probeVars = (qy.exists ++ qy.notExists).flatMap(varsOf).toSet
-    val valueAliases = qy.subqueryOutputs.filter(v =>
-      kinds.get(v).exists(k => k == 'n' || k == 's'))
-    val probeClash = (bindNames ++ valueAliases).filter(probeVars.contains)
-    if (probeClash.nonEmpty)
-      fail(s"FILTER EXISTS patterns cannot reference computed variable(s) " +
-        s"${probeClash.mkString(", ")} — the probes join on node-id columns")
-    // EXISTS / NOT EXISTS / MINUS compile to equi-semi/anti-joins on the
-    // shared variables, and a NULL key (a shared variable bound only by
-    // an OPTIONAL, or by only SOME union branches) never matches — where
-    // SPARQL's substitution/compatibility semantics leave the variable
-    // FREE: EXISTS would drop rows SPARQL keeps, NOT EXISTS keep rows
-    // SPARQL removes. Require every shared variable to be never-NULL:
-    // required-pattern-bound, bound by EVERY union branch, or a subquery
-    // plain output (validated never-NULL). Exception: a MINUS group whose
-    // ONLY shared variable may be NULL is exactly SPARQL's
-    // disjoint-domain rule (the row survives), so single-shared-variable
-    // MINUS stays accepted.
-    val neverNull: Set[String] =
-      reqVars ++ qy.subqueries.flatMap(_.select) ++
-        qy.unions.flatMap(g => g.map(varsOf).reduce(_ & _))
-    def checkProbeAnchors(groups: Seq[Seq[TriplePattern]], what: String,
-                          minShared: Int): Unit =
-      groups.foreach { g =>
-        val shared = (varsOf(g) & (patternVarsAll ++ qy.subqueryOutputs)).toSeq.sorted
-        val nullable = shared.filterNot(neverNull)
-        if (shared.size >= minShared && nullable.nonEmpty)
-          fail(s"$what shares variable(s) ${nullable.map("?" + _).mkString(", ")} " +
-            "that may be unbound (OPTIONAL-only or partial-union binding) — " +
-            "a NULL join key silently diverges from SPARQL's semantics; " +
-            "anchor the variable in the required pattern")
+  }
+
+  /** A join's parts evaluate left to right (VALUES tables last, as
+    * selections), so each part's shared variables with the parts before
+    * it are the equi-join keys: there must be one, none may be computed,
+    * and each must be bound on both sides. UNIONs, subqueries and VALUES
+    * join through the group's own triple patterns (`req`): a UNION's
+    * other variables stay local to it. */
+  private def checkJoin(parts: Seq[Pattern], sp: Spaces): Unit = {
+    val ops = parts.filterNot(_.isInstanceOf[Table])
+    if (ops.isEmpty) fail("WHERE group has no required triple patterns or subqueries")
+    val req = parts.flatMap(requiredVars).toSet
+    val unions = ops.filter(_.isInstanceOf[Union])
+    if (unions.nonEmpty && ops.sizeIs > 1 && req.isEmpty)
+      fail("several UNION groups, or a UNION next to a subquery, need a " +
+        "required pattern to anchor their join (the join keys would be " +
+        "NULL-padded branch variables)")
+    unions.combinations(2).foreach { pair =>
+      val clash = (scope(pair.head) & scope(pair(1))) -- req
+      if (clash.nonEmpty)
+        fail(s"variable(s) ${fmtVars(clash)} are bound by two UNION groups " +
+          "but not by the required pattern — join them through a required binding")
+    }
+    def subVars(p: Pattern) = p match {
+      case SubSelect(q) => q.select.toSet
+      case _            => Set.empty[String]
+    }
+    var (accScope, accCertain, accSubVars) = (scope(ops.head), certain(ops.head), subVars(ops.head))
+    ops.tail.foreach { r =>
+      val shared = accScope & scope(r)
+      val computed = shared.filter(sp.kinds.contains)
+      if (computed.nonEmpty) fail(r match {
+        case SubSelect(q) if q.outputs.exists(computed) =>
+          s"subquery aggregate alias(es) ${fmtVars(computed)} collide with " +
+            "outer pattern variables — rename the alias"
+        case _ => s"BIND variable(s) ${fmtVars(computed)} are already bound " +
+          "by the pattern group — a computed value never joins a node id"
+      })
+      // a subquery joins through the triples or an earlier subquery
+      val unjoined = r match {
+        case SubSelect(_) => (subVars(r) & (req ++ accSubVars)).isEmpty
+        case _            => shared.isEmpty
       }
-    checkProbeAnchors(qy.exists, "FILTER EXISTS", minShared = 1)
-    checkProbeAnchors(qy.notExists, "FILTER NOT EXISTS", minShared = 1)
-    checkProbeAnchors(qy.minuses, "MINUS", minShared = 2)
+      if (unjoined) fail(r match {
+        case SubSelect(_) => "a subquery shares no plain variable with the " +
+          "group's required pattern — an unjoined subquery would be a cross product"
+        case Union(_) => "a UNION group shares no variable with the required " +
+          "pattern — an unjoined union would be a cartesian product"
+        case _ => "a group member shares no variable with the rest of its " +
+          "group — a cartesian product at KG scale is always a bug"
+      })
+      val open = shared -- (accCertain & certain(r))
+      val openInR = open -- certain(r)
+      if (open.nonEmpty) fail(r match {
+        case Union(_) if openInR.nonEmpty =>
+          s"variable(s) ${fmtVars(openInR)} join the UNION group to the " +
+            "required pattern but are bound in only some branches — a branch " +
+            "row's NULL key would silently drop it; bind them in every branch"
+        case Union(_) =>
+          s"variable(s) ${fmtVars(open)} are bound both by an OPTIONAL group " +
+            "and a UNION group — only well-designed patterns are supported"
+        case SubSelect(_) if openInR.isEmpty =>
+          s"subquery variable(s) ${fmtVars(open)} are bound only by an outer " +
+            "OPTIONAL or in only some UNION branches — an unmatched row's NULL " +
+            "key would silently drop it from the join; anchor the variable in " +
+            "the required pattern or rename the subquery projection"
+        case _ =>
+          s"join variable(s) ${fmtVars(open)} may be unbound on one side — " +
+            "bound only by an OPTIONAL group or in only some UNION branches — " +
+            "and a NULL join key drops rows SPARQL's compatible-mapping join " +
+            "keeps; bind them in the triple patterns before the OPTIONAL"
+      })
+      accScope ++= scope(r)
+      accCertain ++= certain(r)
+      accSubVars ++= subVars(r)
+    }
+    // a NULL binding never equals an inline value, where SPARQL's
+    // unbound-is-compatible rule would keep the row
+    parts.collect { case t: Table => t }.foreach { t =>
+      val unanchored = t.vars.filterNot(req)
+      if (unanchored.nonEmpty)
+        fail(s"VALUES variable(s) ${unanchored.mkString(", ")} must be bound " +
+          "by the required pattern (not only by OPTIONAL) in this fragment")
+    }
+  }
+
+  /** BIND(b AS ?v) over `inner`: a fresh variable, reading only variables
+    * in scope before it, each in the value space it lives in. */
+  private def checkExtend(inner: Pattern, v: String, b: BExpr, sp: Spaces): Unit = {
+    val sc = scope(inner)
+    val computed = valueKinds(inner)
+    if (computed.contains(v)) fail(s"duplicate BIND variable(s): $v")
+    if (sc(v)) fail(s"BIND variable ?$v is already bound by the pattern group")
+    def isPattern(src: String) = sc(src) && !computed.contains(src)
+    def copies(bx: BExpr): Unit = bx match {
+      case BCopy(src) =>
+        if (!isPattern(src))
+          fail(s"BIND(?$src AS ?$v): a bare-?var BIND copies a PATTERN " +
+            s"binding — ?$src is not one (computed values need an expression)")
+      case BCoalesce(vs) =>
+        // id-space fallback over pattern bindings (OPTIONAL vars are the
+        // point); value columns would mix spaces
+        val notPattern = vs.filterNot(isPattern)
+        if (notPattern.nonEmpty)
+          fail(s"COALESCE takes PATTERN variables — ${fmtVars(notPattern)} " +
+            "are not pattern bindings (coalescing ids with computed values mixes spaces)")
+        val ps = vs.filter(sp.pred)
+        if (ps.nonEmpty && ps.size != vs.size)
+          fail(s"COALESCE in BIND ?$v mixes predicate-position (raw IRI) and " +
+            "node-position (hashed id) variables — the two spaces cannot share a column")
+      case BIf(cond, t, e2) =>
+        sp.cmp(cond, s"BIND ?$v")
+        copies(t); copies(e2)
+      case _ => ()
+    }
+    copies(b)
+    bindKind(b): Unit
+    readsB(b).foreach { case (r, how) =>
+      if (!sc(r))
+        fail(s"BIND ?$v reads ?$r, which is bound neither by the patterns " +
+          "before it, a subquery, nor an earlier BIND")
+      sp.read(r, how, s"BIND ?$v")
+    }
+  }
+
+  /** Parse-time semantic checks — every rejection here is a query that
+    * would otherwise run with silently-surprising semantics. */
+  private def validate(qy: Query): Unit = {
+    val where = qy.where
+    if (!anchored(where) && !(qy.form == "DESCRIBE" && qy.describeVars.isEmpty))
+      fail("WHERE group has no required triple patterns or subqueries")
+    val kinds = valueKinds(where)
+    val pred = predSpace(where) ++ predSpace(BGP(qy.template))
+    val sp = Spaces(kinds, pred)
+    // ---- predicate-position space. The edges convention stores RAW
+    // predicate IRIs in the pred column and hashed node ids everywhere
+    // else; joining or comparing across the two spaces is silently
+    // constant (a raw IRI never equals a sha256 hash)
+    val mixedSpace = pred & (nodeSpace(where) ++ nodeSpace(BGP(qy.template)) ++ qy.describeVars)
+    if (mixedSpace.nonEmpty)
+      fail(s"variable(s) ${fmtVars(mixedSpace)} are bound " +
+        "in predicate/GRAPH position (raw IRIs) but also used where hashed node " +
+        "ids live (subject/object position, DESCRIBE, CONSTRUCT node slots) " +
+        "— the two spaces never compare equal; rename one of the uses")
+    checkPattern(where, sp)
+    val sc = scope(where)
+    val groupVars = sc -- kinds.keySet
+    checkPattern(BGP(qy.template), sp, required = false) // template blank nodes
+    if (qy.form == "SELECT" && qy.projection.isEmpty && sc.nonEmpty &&
+        sc.forall(_.startsWith("_bn_")))
+      fail("SELECT * over patterns binding only blank nodes has no " +
+        "projectable result — name at least one ?variable")
     (qy.projection.collect { case PAgg(call, _) => call } ++
       qy.havingAst.flatMap(havingCalls)).foreach {
+      case AggCall(f @ ("SUM" | "AVG"), _, Some(v), _) if pred(v) =>
+        fail(s"$f(?$v) aggregates numeric values, but ?$v binds predicate IRIs")
       case AggCall(f @ ("SUM" | "AVG"), _, Some(v), _) if kinds.contains(v) =>
         fail(s"$f(?$v) aggregates the numeric VALUE space of RDF terms — " +
           "aggregate the base variable instead of the computed value")
@@ -2613,9 +2598,7 @@ object Sparql {
       case _ => ()
     }
     if (qy.form == "DESCRIBE") {
-      val groupVars = varsOf(qy.required) ++ qy.optionals.flatMap(varsOf) ++
-        qy.unions.flatten.flatMap(varsOf) ++ qy.subqueries.flatMap(_.select)
-      val unbound = qy.describeVars.filterNot(groupVars.contains)
+      val unbound = qy.describeVars.filterNot(groupVars)
       if (unbound.nonEmpty)
         fail(s"DESCRIBE variable(s) ${unbound.mkString(", ")} are not bound " +
           "by the WHERE group")
@@ -2626,8 +2609,6 @@ object Sparql {
         case other => fail(s"property paths are not allowed in a CONSTRUCT " +
           s"template (it names OUTPUT edges, not matches): $other")
       })
-      val groupVars = varsOf(qy.required) ++ qy.optionals.flatMap(varsOf) ++
-        qy.unions.flatten.flatMap(varsOf) ++ qy.subqueries.flatMap(_.select)
       val unbound = varsOf(qy.template) -- groupVars
       if (unbound.nonEmpty)
         fail(s"CONSTRUCT template variable(s) ${unbound.mkString(", ")} are " +
@@ -2651,10 +2632,7 @@ object Sparql {
     // ORDER BY applies to the PROJECTED result (after DISTINCT, as in
     // SPARQL's modifier order); restrict it to result columns
     val outNames: Set[String] =
-      if (qy.projection.isEmpty)
-        varsOf(qy.required) ++ qy.optionals.flatMap(varsOf) ++
-          qy.unions.flatten.flatMap(varsOf) ++ bindNames ++ qy.subqueryOutputs
-      else qy.select.toSet ++ aliases
+      if (qy.projection.isEmpty) sc else qy.select.toSet ++ aliases
     qy.orderBy.foreach { case (v, _) =>
       if (!outNames.contains(v))
         fail(s"ORDER BY variable ?$v is not a result column — order by a " +
@@ -2666,7 +2644,7 @@ object Sparql {
     }.toSet
     qy.orderKeysAst.foreach {
       case (Right(e), _) =>
-        nvars(e).foreach { v =>
+        readsN(e).map(_._1).foreach { v =>
           if (!outNames.contains(v))
             fail(s"ORDER BY expression reads ?$v, which is not a result " +
               "column — order by projected variables or aggregate aliases")
@@ -2674,10 +2652,7 @@ object Sparql {
             fail(s"ORDER BY expression reads ?$v, a non-numeric aggregate " +
               "alias — only COUNT/SUM/AVG aliases are numeric keys")
         }
-        readsN(e).foreach { case (v, how) =>
-          checkRead(v, how, "ORDER BY")
-          checkPredRead(v, how, "an ORDER BY expression")
-        }
+        readsN(e).foreach { case (v, how) => sp.read(v, how, "ORDER BY") }
       case _ => ()
     }
   }
@@ -2912,12 +2887,11 @@ object Sparql {
 
   /**
    * Parse and execute against an edges frame (subj_id, pred, obj_id).
-   * Pipeline order follows SPARQL's algebra: pattern group -> EXISTS /
-   * NOT EXISTS semi/anti-joins -> FILTERs -> VALUES selections ->
-   * GROUP BY/aggregates -> HAVING -> projection -> DISTINCT ->
-   * ORDER BY -> OFFSET -> LIMIT. An ORDER BY + LIMIT pair plans as
-   * TakeOrderedAndProject — per-partition top-k then a single merge,
-   * never a global sort.
+   * The WHERE tree evaluates bottom-up (see [[Pattern]]), then the
+   * solution modifiers apply in SPARQL's order: GROUP BY/aggregates ->
+   * HAVING -> projection -> DISTINCT -> ORDER BY -> OFFSET -> LIMIT. An
+   * ORDER BY + LIMIT pair plans as TakeOrderedAndProject — per-partition
+   * top-k then a single merge, never a global sort.
    */
   def run(edges: DataFrame, queryString: String): DataFrame =
     runWith(edges, None, queryString)
@@ -2926,11 +2900,20 @@ object Sparql {
     * surface: numeric FILTER comparisons (`FILTER(?n > 100)`), string
     * functions (STR/LANG/DATATYPE/STRSTARTS/STRENDS/CONTAINS, kind
     * tests) and SUM/AVG aggregation. Each such variable is
-    * [[Bgp.bindValues]]-joined once before the filters apply (AQE
-    * broadcasts the projected nodes side when it is dimension-sized);
-    * the term columns are dropped again before projection. */
+    * [[Bgp.bindValues]]-joined once, by the first BIND or FILTER that
+    * reads it (AQE broadcasts the projected nodes side when it is
+    * dimension-sized); the term columns are dropped again before
+    * projection. */
   def run(edges: DataFrame, nodes: DataFrame, queryString: String): DataFrame =
     runWith(edges, Some(nodes), queryString)
+
+  /** Validates and evaluates a hand-built algebra tree over an edges
+    * frame — the same checks and evaluator as a parsed WHERE group. */
+  def evaluate(edges: DataFrame, p: Pattern): DataFrame = {
+    if (!anchored(p)) fail("WHERE group has no required triple patterns or subqueries")
+    checkPattern(p, Spaces(valueKinds(p), predSpace(p)))
+    eval(p, Ctx(edges, None, compileKinds(p)))
+  }
 
   private def runWith(edges: DataFrame, nodes: Option[DataFrame],
                       queryString: String): DataFrame = {
@@ -2957,7 +2940,7 @@ object Sparql {
     * is statically empty. Subqueries inherit the outer dataset. */
   private def applyDataset(q: Query): Query = {
     if (q.fromGraphs.isEmpty && q.fromNamed.isEmpty) return q
-    def scope(p: TriplePattern): TriplePattern = p.graph match {
+    def scoped(p: TriplePattern): TriplePattern = p.graph match {
       case None => p.copy(graph = Some(Bgp.GraphIn(q.fromGraphs, None)))
       case Some(C(g)) =>
         if (q.fromNamed.contains(g)) p
@@ -2965,90 +2948,134 @@ object Sparql {
       case Some(V(n)) => p.copy(graph = Some(Bgp.GraphIn(q.fromNamed, Some(n))))
       case Some(_)    => p // unreachable: parse produces V/C graphs only
     }
-    def sq(ps: Seq[TriplePattern]) = ps.map(scope)
-    q.copy(required = sq(q.required), optionals = q.optionals.map(sq),
-      minuses = q.minuses.map(sq), unions = q.unions.map(_.map(sq)),
-      exists = q.exists.map(sq), notExists = q.notExists.map(sq),
-      subqueries = q.subqueries.map(s => applyDataset(
-        s.copy(fromGraphs = q.fromGraphs, fromNamed = q.fromNamed))))
+    def go(p: Pattern): Pattern = p match {
+      case BGP(ts)           => BGP(ts.map(scoped))
+      case Join(ps)          => Join(ps.map(go))
+      case LeftJoin(l, r, c) => LeftJoin(go(l), go(r), c)
+      case Minus(l, r)       => Minus(go(l), go(r))
+      case Union(bs)         => Union(bs.map(go))
+      case Filter(c, i)      => Filter(c, go(i))
+      case Extend(i, v, e)   => Extend(go(i), v, e)
+      case Exists(i, pr, n)  => Exists(go(i), go(pr), n)
+      case t: Table          => t
+      case SubSelect(s)      => SubSelect(applyDataset(
+        s.copy(fromGraphs = q.fromGraphs, fromNamed = q.fromNamed)))
+    }
+    q.copy(where = go(q.where))
+  }
+
+  /** What the evaluator reads: the edges, the optional nodes table and
+    * the compile kinds of the tree's variables. */
+  private final case class Ctx(edges: DataFrame, nodes: Option[DataFrame],
+                               kinds: Map[String, Char])
+
+  /** Joins the `_term` struct of each listed variable that lacks one — a
+    * value-space read needs the nodes table. */
+  private def withTerms(df: DataFrame, vars: Seq[String],
+                        nodes: Option[DataFrame]): DataFrame = {
+    val missing = vars.distinct.filterNot(v => df.columns.contains(s"${v}_term"))
+    if (missing.isEmpty) df
+    else Bgp.bindValues(df, nodes.getOrElse(fail(
+      "value-space FILTERs, BIND expressions and SUM/AVG read the value " +
+        "space — pass the nodes table: Sparql.run(edges, nodes, query)")), missing)
+  }
+
+  /** MINUS and the EXISTS probes: a left-semi/anti equi-join on the
+    * shared variables. The probe side is projected to the shared columns
+    * and deduped first, so no group payload crosses the shuffle and the
+    * row side keeps its bag semantics. */
+  private def probe(rows: DataFrame, other: DataFrame, how: String): DataFrame = {
+    val shared = other.columns.toSeq.filter(rows.columns.contains)
+    rows.join(other.select(shared.map(col): _*).distinct(), shared, how)
+  }
+
+  /** VALUES as a selection (set semantics — the inline rows are deduped,
+    * never a bag multiplier). One variable is an IN-filter Catalyst
+    * pushes toward the scan; several a BROADCAST left-semi join against
+    * the driver-local inline relation. UNDEF cells (null) are compatible
+    * with ANY binding (SPARQL 10.2), which a semi-join key cannot
+    * express, so rows with UNDEF compile to the disjunction of their
+    * defined-cell conjunctions; a row of all UNDEF keeps everything. */
+  private def selectValues(rows: DataFrame, t: Table): DataFrame = {
+    val Table(vars, values) = t
+    if (values.exists(_.contains(null))) {
+      val rowPreds = values.distinct.map { r =>
+        vars.zip(r).collect { case (v, c0) if c0 != null => col(v) === lit(c0) }
+          .reduceOption(_ && _)
+      }
+      if (rowPreds.contains(None)) rows
+      else rows.filter(rowPreds.flatten.reduce(_ || _))
+    }
+    else if (vars.sizeIs == 1)
+      rows.filter(col(vars.head).isin(values.map(_.head).distinct: _*))
+    else {
+      val spark = rows.sparkSession
+      val schema = StructType(vars.map(StructField(_, StringType, nullable = false)))
+      val inline = spark.createDataFrame(spark.sparkContext.parallelize(
+        values.distinct.map(org.apache.spark.sql.Row.fromSeq), 1), schema)
+      rows.join(broadcast(inline), vars, "left_semi")
+    }
+  }
+
+  /** The one evaluator: each node of the algebra is one relational
+    * operator over the binding frame. Joins are equi-joins on the shared
+    * variables — the validation pass guarantees no key is NULL where
+    * SPARQL's compatible-mapping join would differ. */
+  private def eval(p: Pattern, x: Ctx): DataFrame = p match {
+    case BGP(ts) => Bgp.matchPatterns(x.edges, ts)
+    case Join(parts) =>
+      val joined = parts.filterNot(_.isInstanceOf[Table]).map(eval(_, x)).reduceLeft {
+        (l, r) => l.join(r, r.columns.toSeq.filter(l.columns.contains), "inner")
+      }
+      parts.collect { case t: Table => t }.foldLeft(joined)(selectValues)
+    case LeftJoin(l, r, cond) =>
+      // the condition pre-filters the group side: reading only the
+      // group's own variables (validated), a failing condition makes the
+      // group unmatched (NULLs), never drops the row
+      val left = eval(l, x)
+      val right = cond.foldLeft(eval(r, x))((df, e) => df.filter(compileF(e, x.kinds)))
+      left.join(right, right.columns.toSeq.filter(left.columns.contains), "left")
+    case Minus(l, r) => probe(eval(l, x), eval(r, x), "left_anti")
+    case Exists(i, pr, neg) =>
+      probe(eval(i, x), eval(pr, x), if (neg) "left_anti" else "left_semi")
+    case Union(bs) =>
+      // columns align on the union of the branch variables (name order),
+      // NULL in a branch that does not bind one; a zero-shuffle concat
+      val matched = bs.map(eval(_, x))
+      val allVars = matched.flatMap(_.columns).distinct.sorted
+      matched.map { m =>
+        val have = m.columns.toSet
+        m.select(allVars.map(v =>
+          (if (have(v)) col(v) else lit(null).cast("string")).as(v)): _*)
+      }.reduce(_ union _)
+    case Filter(cond, i) =>
+      // BIND columns and pred-space variables are read directly; only
+      // node-position variables read in a value space join their terms
+      val in = withTerms(eval(i, x),
+        termVars(cond.flatMap(readsF)).filterNot(x.kinds.contains), x.nodes)
+      cond.foldLeft(in)((df, e) => df.filter(compileF(e, x.kinds)))
+    case Extend(i, v, b) =>
+      withTerms(eval(i, x), termVars(readsB(b)).filterNot(x.kinds.contains), x.nodes)
+        .withColumn(v, compileB(b, x.kinds))
+    case SubSelect(q) => runParsed(x.edges, x.nodes, q)
+    case Table(_, _) => fail("VALUES selects the rows of a group join")
   }
 
   private def runParsed(edges: DataFrame, nodes: Option[DataFrame],
                         q: Query): DataFrame = {
-    if (q.form == "DESCRIBE" && q.required.isEmpty && q.unions.isEmpty &&
-        q.subqueries.isEmpty)
+    if (q.form == "DESCRIBE" && q.describeVars.isEmpty)
       return describeEdges(describeScope(edges, q), None, q) // constant-only
-    // subqueries evaluate bottom-up (recursively through this same
-    // pipeline), then inner-join the group on their shared plain
-    // variables — validated non-NULL anchors, so bag semantics match
-    // SPARQL's join of solution mappings
-    val subDfs = q.subqueries.map(sq => runParsed(edges, nodes, sq))
-    def joinSubs(base: DataFrame, subs: Seq[DataFrame]): DataFrame =
-      subs.foldLeft(base) { (df, sdf) =>
-        val shared = sdf.columns.filter(df.columns.contains).toSeq
-        df.join(sdf, shared, "inner")
-      }
-    // a UNION group joins the required bindings on its shared variables
-    // (validated every-branch-bound, so the equi-join keys are never
-    // NULL); in the well-designed fragment the join commutes with the
-    // OPTIONAL left-joins (each multiplies rows by a factor of the
-    // required-side variables only), so it composes after them
-    def joinUnions(base: DataFrame): DataFrame =
-      q.unions.foldLeft(base) { (df, branches) =>
-        val r = Bgp.matchUnion(edges, branches)
-        val shared = r.columns.filter(df.columns.contains).toSeq
-        df.join(r, shared, "inner")
-      }
-    val grouped =
-      if (q.required.isEmpty && q.unions.nonEmpty)
-        Bgp.matchUnion(edges, q.unions.head) // pure union group
-      else if (q.required.isEmpty && q.subqueries.nonEmpty)
-        joinSubs(subDfs.head, subDfs.tail) // subquery-only group
-      else joinSubs(Bgp.applyMinus(edges,
-        joinUnions(Bgp.matchWithOptional(edges, q.required, q.optionals, Nil,
-          q.optionalFilters.zip(q.optionals).map { case (fs, group) =>
-            // an OPTIONAL group's own predicate-position variables bind
-            // raw IRIs — their constants must compile raw, like any
-            // pred-space comparison
-            val gk = group.flatMap(p => p.pred match {
-              case V(n) => Seq(n -> 'p'); case _ => Nil
-            }).toMap
-            fs.map(compileF(_, gk))
-          })), q.minuses),
-        subDfs)
-    val probed = Bgp.applyExists(edges,
-      Bgp.applyExists(edges, grouped, q.exists), q.notExists, negate = true)
-    val kinds = q.compileKinds
-    // BIND columns are plain values, and predicate-position variables
-    // carry their raw IRI directly — only NODE-position pattern
-    // variables read in a value space need the nodes-table term join
-    val filterVars = q.filterTermVars.filterNot(kinds.contains)
-    val bindInVars = q.bindTermVars.filterNot(kinds.contains)
     // MIN/MAX picks upgrade to SPARQL value ordering when the nodes
-    // table is attached — their term structs must reach the aggregation
+    // table is attached — their term structs, like SUM/AVG's, must reach
+    // the aggregation; every other term struct is spent
     val hybridVars = if (nodes.isDefined) q.minmaxAggVars else Nil
     val aggVars = (q.numericAggVars ++ hybridVars).distinct
-    val termVars = (filterVars ++ bindInVars ++ aggVars).distinct
-    val bound =
-      if (termVars.isEmpty) probed
-      else Bgp.bindValues(probed, nodes.getOrElse(fail(
-        "value-space FILTERs, BIND expressions and SUM/AVG read the value " +
-          "space — pass the nodes table: Sparql.run(edges, nodes, query)")),
-        termVars)
-    // BINDs compute after the value joins and before the FILTERs (FILTER
-    // is group-scoped in SPARQL — its position inside the group is
-    // irrelevant), in declaration order so later binds read earlier ones
-    val withBinds = q.binds.foldLeft(bound) { case (df, (n, b)) =>
-      df.withColumn(n, compileB(b, kinds))
-    }
-    val filtered = q.filters.foldLeft(withBinds)(_ filter _)
-    // filter- and bind-input term structs are spent; SUM/AVG structs
-    // must survive until the aggregation step reads them
-    val matched0 = (filterVars ++ bindInVars).distinct.filterNot(aggVars.contains)
-      .foldLeft(filtered)((df, v) => df.drop(s"${v}_term"))
-    val matched = q.values.foldLeft(matched0) { case (df, (vs, rows)) =>
-      Bgp.applyValues(df, vs, rows)
-    }
+    val evaluated = withTerms(eval(q.where, Ctx(edges, nodes, compileKinds(q.where))),
+      aggVars, nodes)
+    val matched = evaluated.drop(evaluated.schema.fields.collect {
+      case f if f.name.endsWith("_term") && f.dataType.isInstanceOf[StructType] &&
+        !aggVars.contains(f.name.stripSuffix("_term")) => f.name
+    }.toIndexedSeq: _*)
     if (q.form == "ASK")
       // one boolean row; limit(1) keeps the plan a first-match probe —
       // Spark stops scanning partitions once a row surfaces
@@ -3078,18 +3105,19 @@ object Sparql {
     val ordered =
       if (keySpecs.isEmpty) dist
       else {
+        val ns = nodeSpace(q.where)
         // expression keys read pattern variables through their _term
         // structs — the value read is only decidable with the nodes
         // table (an id-sort fallback would be meaningless for a
         // computed key, unlike a plain variable's documented id order)
-        val exprNodeVars = keySpecs.collect { case (Right(e), _) => nvars(e) }
-          .flatten.filter(v => q.nodeSpaceVars(v) && dist.columns.contains(v))
+        val exprNodeVars = keySpecs.collect { case (Right(e), _) => readsN(e).map(_._1) }
+          .flatten.filter(v => ns(v) && dist.columns.contains(v))
         require(exprNodeVars.isEmpty || nodes.isDefined,
           "ORDER BY expressions over pattern variables need the nodes " +
             "table — use run(edges, nodes, query)")
         val hybridOrd = nodes match {
           case Some(_) => (keySpecs.collect { case (Left(v), _) => v }
-            .filter(v => q.nodeSpaceVars(v) && dist.columns.contains(v)) ++
+            .filter(v => ns(v) && dist.columns.contains(v)) ++
             exprNodeVars).distinct
           case None => Nil
         }
@@ -3107,7 +3135,7 @@ object Sparql {
               case PAgg(AggCall("COUNT" | "SUM" | "AVG", _, _, _), alias) =>
                 alias -> 'n'
             }.toMap
-            val k = numValue(e, q.valueKinds ++ ownAgg)
+            val k = numValue(e, valueKinds(q.where) ++ ownAgg)
             if (asc) k.asc else k.desc
         }
         hybridOrd.foldLeft(base.orderBy(keys: _*))((df, v) => df.drop(s"${v}_term"))

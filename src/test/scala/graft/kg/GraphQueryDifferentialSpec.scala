@@ -10,6 +10,7 @@ import scala.util.Random
  * join-plan edge cases that only appear on particular graph shapes.
  */
 class GraphQueryDifferentialSpec extends AnyFunSuite {
+  import GraphQueryDifferentialSpec._
   private lazy val spark = TestSpark.spark
   import spark.implicits._
   import Bgp.{C, TriplePattern, V}
@@ -73,9 +74,9 @@ class GraphQueryDifferentialSpec extends AnyFunSuite {
       val nodes = (0 until 10).map(i => s"n$i")
       val es = (Seq.fill(25)((nodes(rnd.nextInt(10)), "p", nodes(rnd.nextInt(10)))) ++
         Seq.fill(8)((nodes(rnd.nextInt(10)), "opt", nodes(rnd.nextInt(10))))).distinct
-      val got = Bgp.matchWithOptional(es.toDF("subj_id", "pred", "obj_id"),
-        Seq(TriplePattern(V("x"), C("p"), V("y"))),
-        Seq(Seq(TriplePattern(V("x"), C("opt"), V("z")))))
+      val got = Sparql.evaluate(es.toDF("subj_id", "pred", "obj_id"), Sparql.LeftJoin(
+        Sparql.BGP(Seq(TriplePattern(V("x"), C("p"), V("y")))),
+        Sparql.BGP(Seq(TriplePattern(V("x"), C("opt"), V("z"))))))
         .collect().map(r => (r.getAs[String]("x"), r.getAs[String]("y"), r.getAs[String]("z")))
         .sorted.toSeq
       val req = es.filter(_._2 == "p").map(e => (e._1, e._3))
@@ -94,9 +95,9 @@ class GraphQueryDifferentialSpec extends AnyFunSuite {
       val nodes = (0 until 10).map(i => s"n$i")
       val es = (Seq.fill(25)((nodes(rnd.nextInt(10)), "p", nodes(rnd.nextInt(10)))) ++
         Seq.fill(10)((nodes(rnd.nextInt(10)), "neg", nodes(rnd.nextInt(10))))).distinct
-      val got = Bgp.matchGroup(es.toDF("subj_id", "pred", "obj_id"),
-        required = Seq(TriplePattern(V("x"), C("p"), V("y"))),
-        minus = Seq(Seq(TriplePattern(V("x"), C("neg"), V("z")))))
+      val got = Sparql.evaluate(es.toDF("subj_id", "pred", "obj_id"), Sparql.Minus(
+        Sparql.BGP(Seq(TriplePattern(V("x"), C("p"), V("y")))),
+        Sparql.BGP(Seq(TriplePattern(V("x"), C("neg"), V("z"))))))
         .collect().map(r => (r.getAs[String]("x"), r.getAs[String]("y")))
         .sorted.toSeq
       val req = es.filter(_._2 == "p").map(e => (e._1, e._3))
@@ -509,4 +510,201 @@ class GraphQueryDifferentialSpec extends AnyFunSuite {
     }
     assert(got.values.toSet.size === bases.size, "cross-base false merge")
   }
+
+  // ---- random group patterns vs a brute-force §18 evaluator ----------
+
+  test("random group patterns equal a brute-force SPARQL 1.1 §18 evaluator") {
+    def term(t: String) = if (t.startsWith("?")) t else s"<urn:$t>"
+    def idOf(n: String) = Bgp.iriId(s"urn:$n")
+    def tr(t: Tr) = s"${term(t.s)} <urn:${t.p}> ${term(t.o)} ."
+    def ex(e: Ex): String = e match {
+      case Bound(v)     => s"BOUND($v)"
+      case Eq(a, b)     => s"$a = $b"
+      case NeNode(v, n) => s"$v != <urn:$n>"
+      case Not(x)       => s"!(${ex(x)})"
+      case And(a, b)    => s"(${ex(a)}) && (${ex(b)})"
+      case Or(a, b)     => s"(${ex(a)}) || (${ex(b)})"
+    }
+    def render(els: Seq[El]): String = "SELECT * WHERE { " + els.map {
+      case t: Tr          => tr(t)
+      case Opt(t, c)      => s"OPTIONAL { ${tr(t)} ${c.map(e => s"FILTER(${ex(e)})").getOrElse("")} }"
+      case Uni(l, r)      => s"{ ${tr(l)} } UNION { ${tr(r)} }"
+      case Mns(t)         => s"MINUS { ${tr(t)} }"
+      case Flt(e)         => s"FILTER(${ex(e)})"
+      case Bnd(v, Seq(s)) => s"BIND($s AS $v)"
+      case Bnd(v, ss)     => s"BIND(COALESCE(${ss.mkString(", ")}) AS $v)"
+      case Vals(v, ns)    => s"VALUES $v { ${ns.map(term).mkString(" ")} }"
+      case Probe(t, neg)  => s"FILTER ${if (neg) "NOT " else ""}EXISTS { ${tr(t)} }"
+      case Sub(ts, proj)  => s"{ SELECT ${proj.mkString(" ")} WHERE { ${ts.map(tr).mkString(" ")} } }"
+    }.mkString(" ") + " }"
+
+    // ---- the brute force: §18.2.2's translation, evaluated on bags
+    def compatible(a: Sol, b: Sol) = a.forall { case (k, v) => b.get(k).forall(_ == v) }
+    def join(l: Seq[Sol], r: Seq[Sol]) =
+      for (a <- l; b <- r if compatible(a, b)) yield a ++ b
+    def eval(e: Ex, m: Sol): Option[Boolean] = e match {
+      case Bound(v)     => Some(m.contains(v))
+      case Eq(a, b)     => for (x <- m.get(a); y <- m.get(b)) yield x == y
+      case NeNode(v, n) => m.get(v).map(_ != idOf(n))
+      case Not(x)       => eval(x, m).map(!_)
+      case And(a, b) => (eval(a, m), eval(b, m)) match {
+        case (Some(false), _) | (_, Some(false)) => Some(false)
+        case (Some(true), Some(true))            => Some(true)
+        case _                                   => None
+      }
+      case Or(a, b) => (eval(a, m), eval(b, m)) match {
+        case (Some(true), _) | (_, Some(true)) => Some(true)
+        case (Some(false), Some(false))        => Some(false)
+        case _                                 => None
+      }
+    }
+    def brute(edges: Seq[(String, String, String)], els: Seq[El]): Seq[Sol] = {
+      def bgp(t: Tr): Seq[Sol] = edges.flatMap { case (s, p, o) =>
+        if (p != s"urn:${t.p}") None
+        else Seq(t.s -> s, t.o -> o).foldLeft(Option(Map.empty[String, String])) {
+          case (acc, (pt, v)) => acc.flatMap(m =>
+            if (!pt.startsWith("?")) if (idOf(pt) == v) Some(m) else None
+            else if (m.get(pt).exists(_ != v)) None else Some(m + (pt -> v)))
+        }
+      }
+      var g: Seq[Sol] = Seq(Map.empty)
+      val filters = Seq.newBuilder[Sol => Boolean]
+      els.foreach {
+        case t: Tr => g = join(g, bgp(t))
+        case Opt(t, c) =>
+          val r = bgp(t)
+          g = g.flatMap { a =>
+            val ext = r.filter(compatible(a, _)).map(a ++ _)
+              .filter(m => c.forall(eval(_, m).contains(true)))
+            if (ext.isEmpty) Seq(a) else ext
+          }
+        case Uni(l, r) => g = join(g, bgp(l) ++ bgp(r))
+        case Mns(t) =>
+          val r = bgp(t)
+          g = g.filterNot(a => r.exists(b => compatible(a, b) && a.keySet.exists(b.contains)))
+        case Flt(e) => filters += (m => eval(e, m).contains(true))
+        case Bnd(v, ss) => g = g.map(m => ss.flatMap(m.get).headOption.fold(m)(x => m + (v -> x)))
+        case Vals(v, ns) => g = join(g, ns.distinct.map(n => Map(v -> idOf(n))))
+        case Probe(t, neg) =>
+          val r = bgp(t)
+          filters += (m => r.exists(compatible(m, _)) != neg)
+        case Sub(ts, proj) =>
+          g = join(g, ts.map(bgp).foldLeft(Seq(Map.empty[String, String]): Seq[Sol])(join)
+            .map(_.filter(kv => proj.contains(kv._1))))
+      }
+      val fs = filters.result()
+      g.filter(m => fs.forall(_(m)))
+    }
+
+    // ---- the generator: elements in random text order over a small
+    // vocabulary, so groups connect often and every construct meets the
+    // others before and after it
+    val vars = Seq("?a", "?b", "?c")
+    val preds = Seq("p", "q", "r")
+    var (accepted, total) = (0, 0)
+    for (seed <- 1 to 5) {
+      val rnd = new Random(1000 + seed)
+      def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+      val names = (0 until 5).map(i => s"n$i")
+      val edges = Seq.fill(16)((idOf(pick(names)), s"urn:${pick(preds)}", idOf(pick(names)))).distinct
+      val df = edges.toDF("subj_id", "pred", "obj_id")
+      // a triple's subject is one of `anchor` when there is one, so most
+      // groups connect; its object is any variable or a node
+      def triple(anchor: Iterable[String]): Tr =
+        Tr(pick(if (anchor.isEmpty) vars else anchor.toSeq), pick(preds),
+          if (rnd.nextInt(4) == 0) pick(names) else pick(vars))
+      def cond(vs: Seq[String]): Ex = rnd.nextInt(5) match {
+        case 0 => Bound(pick(vs))
+        case 1 => Eq(pick(vs), pick(vs))
+        case 2 => NeNode(pick(vs), pick(names))
+        case 3 => Not(cond(vs))
+        case _ => if (rnd.nextBoolean()) And(cond(vs), cond(vs)) else Or(cond(vs), cond(vs))
+      }
+      def own(t: Tr) = Seq(t.s, t.o).filter(_.startsWith("?"))
+      for (_ <- 1 to 45) {
+        var bindN = 0
+        val els = Seq.newBuilder[El]
+        // `req`: variables of the group's own triples; `seen`: every
+        // variable in scope so far
+        val req = scala.collection.mutable.LinkedHashSet.empty[String]
+        val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+        if (rnd.nextInt(5) > 0) { val t = triple(req); els += t; req ++= own(t) }
+        for (_ <- 0 to rnd.nextInt(4)) {
+          seen ++= req
+          val known = if (seen.isEmpty) vars else seen.toSeq
+          rnd.nextInt(10) match {
+            case 0 | 1 => val t = triple(req); els += t; req ++= own(t)
+            case 2 =>
+              val t = triple(req)
+              els += Opt(t, if (rnd.nextBoolean()) Some(cond(own(t))) else None)
+              seen ++= own(t)
+            case 3 =>
+              val l = triple(req)
+              val u = Uni(l, Tr(l.s, pick(preds), pick(vars)))
+              els += u; seen ++= own(u.l) ++ own(u.r)
+            case 4 => els += Mns(triple(seen))
+            case 5 => els += Flt(cond(known))
+            case 6 =>
+              bindN += 1
+              val v = s"?e$bindN"
+              els += Bnd(v, if (rnd.nextBoolean()) Seq(pick(known)) else Seq(pick(known), pick(known)))
+              seen += v
+            case 7 => els += Vals(pick(if (req.isEmpty) known else req.toSeq), Seq.fill(2)(pick(names)))
+            case 8 => els += Probe(triple(req), rnd.nextBoolean())
+            case _ =>
+              val t1 = triple(req)
+              val t2 = Tr(pick(own(t1)), pick(preds), pick(vars))
+              val proj = (own(t1) ++ own(t2)).distinct
+              els += Sub(Seq(t1, t2), proj.take(1 + rnd.nextInt(proj.size)))
+              req ++= proj
+          }
+        }
+        val group = els.result()
+        val q = render(group)
+        total += 1
+        val got =
+          try Some(Sparql.run(df, q).collect().toSeq.map { r =>
+            r.schema.fieldNames.zipWithIndex.collect {
+              case (f, i) if !r.isNullAt(i) => s"?$f" -> r.getString(i)
+            }.toMap
+          })
+          catch { case _: IllegalArgumentException => None }
+        got.foreach { rows =>
+          accepted += 1
+          def canon(sols: Seq[Sol]) = sols.map(_.toSeq.sorted.mkString(" ")).sorted
+          assert(canon(rows) === canon(brute(edges, group)), s"seed $seed: $q")
+        }
+      }
+    }
+    info(s"$accepted of $total generated groups accepted")
+    assert(total >= 200)
+    assert(accepted * 2 >= total, s"only $accepted of $total generated groups accepted")
+  }
+}
+
+/** The generated group patterns of the §18 differential. */
+private object GraphQueryDifferentialSpec {
+  /** One element of a generated group, in text order. Terms are
+    * `?var`s or node names (`n3` -> `<urn:n3>`); predicates are names. */
+  sealed trait El
+  final case class Tr(s: String, p: String, o: String) extends El
+  final case class Opt(t: Tr, cond: Option[Ex]) extends El
+  final case class Uni(l: Tr, r: Tr) extends El
+  final case class Mns(t: Tr) extends El
+  final case class Flt(e: Ex) extends El
+  /** BIND(?src AS ?v), or BIND(COALESCE(?src1, ?src2) AS ?v). */
+  final case class Bnd(v: String, src: Seq[String]) extends El
+  final case class Vals(v: String, nodes: Seq[String]) extends El
+  final case class Probe(t: Tr, negated: Boolean) extends El
+  final case class Sub(ts: Seq[Tr], proj: Seq[String]) extends El
+
+  sealed trait Ex
+  final case class Bound(v: String) extends Ex
+  final case class Eq(a: String, b: String) extends Ex
+  final case class NeNode(v: String, node: String) extends Ex
+  final case class Not(e: Ex) extends Ex
+  final case class And(a: Ex, b: Ex) extends Ex
+  final case class Or(a: Ex, b: Ex) extends Ex
+
+  type Sol = Map[String, String]
 }

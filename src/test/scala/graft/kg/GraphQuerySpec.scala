@@ -14,6 +14,7 @@ class GraphQuerySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
   import Bgp.{C, PAlternative, PClosure, PLeaf, PathPat, TriplePattern, V}
+  import Sparql.{BGP, LeftJoin, Minus, Union}
 
   private def plus(pred: String) = PathPat(PClosure(PLeaf(pred), '+'))
   private def alt(preds: String*) = PathPat(PAlternative(preds.map(PLeaf)))
@@ -56,9 +57,9 @@ class GraphQuerySpec extends AnyFunSuite {
     val e = edges(
       ("d1", "lang", "en"), ("d1", "title", "t1"),
       ("d2", "lang", "fr"))
-    val out = Bgp.matchWithOptional(e,
-      Seq(TriplePattern(V("d"), C("lang"), V("l"))),
-      Seq(Seq(TriplePattern(V("d"), C("title"), V("t")))))
+    val out = Sparql.evaluate(e, LeftJoin(
+      BGP(Seq(TriplePattern(V("d"), C("lang"), V("l")))),
+      BGP(Seq(TriplePattern(V("d"), C("title"), V("t"))))))
     assert(out.collect().map(r =>
       (r.getAs[String]("d"), r.getAs[String]("l"), r.getAs[String]("t"))).toSet ===
       Set(("d1", "en", "t1"), ("d2", "fr", null)))
@@ -68,13 +69,13 @@ class GraphQuerySpec extends AnyFunSuite {
     val e = edges(("a", "p", "b"))
     val req = Seq(TriplePattern(V("x"), C("p"), V("y")))
     val ex1 = intercept[IllegalArgumentException] {
-      Bgp.matchWithOptional(e, req, Seq(Seq(TriplePattern(V("u"), C("p"), V("v")))))
+      Sparql.evaluate(e, LeftJoin(BGP(req), BGP(Seq(TriplePattern(V("u"), C("p"), V("v"))))))
     }
     assert(ex1.getMessage.contains("unanchored"))
     val ex2 = intercept[IllegalArgumentException] {
-      Bgp.matchWithOptional(e, req, Seq(
-        Seq(TriplePattern(V("x"), C("q"), V("z"))),
-        Seq(TriplePattern(V("y"), C("r"), V("z")))))
+      Sparql.evaluate(e, LeftJoin(
+        LeftJoin(BGP(req), BGP(Seq(TriplePattern(V("x"), C("q"), V("z"))))),
+        BGP(Seq(TriplePattern(V("y"), C("r"), V("z"))))))
     }
     assert(ex2.getMessage.contains("two optional groups"))
   }
@@ -129,17 +130,17 @@ class GraphQuerySpec extends AnyFunSuite {
   test("FILTER predicates apply over the binding columns after the match") {
     val e = edges(("d1", "lang", "en"), ("d2", "lang", "fr"), ("d3", "lang", "en"))
     val out = Bgp.matchPatterns(e,
-      Seq(TriplePattern(V("d"), C("lang"), V("l"))),
-      Seq(col("l") =!= "en"))
+      Seq(TriplePattern(V("d"), C("lang"), V("l"))))
+      .filter(col("l") =!= "en")
     assert(out.collect().map(_.getAs[String]("d")).toSeq === Seq("d2"))
   }
 
   test("FILTER after OPTIONAL sees NULL for unmatched optional variables") {
     val e = edges(("d1", "lang", "en"), ("d1", "title", "t1"), ("d2", "lang", "fr"))
-    val out = Bgp.matchWithOptional(e,
-      Seq(TriplePattern(V("d"), C("lang"), V("l"))),
-      Seq(Seq(TriplePattern(V("d"), C("title"), V("t")))),
-      Seq(col("t").isNull))
+    val out = Sparql.evaluate(e, LeftJoin(
+      BGP(Seq(TriplePattern(V("d"), C("lang"), V("l")))),
+      BGP(Seq(TriplePattern(V("d"), C("title"), V("t"))))))
+      .filter(col("t").isNull)
     assert(out.collect().map(_.getAs[String]("d")).toSeq === Seq("d2"))
   }
 
@@ -196,14 +197,14 @@ class GraphQuerySpec extends AnyFunSuite {
     val e = edges(
       ("d1", "lang", "en"), ("d2", "lang", "fr"), ("d3", "lang", "en"),
       ("d1", "flag", "spam"))
-    val out = Bgp.matchGroup(e,
-      required = Seq(TriplePattern(V("d"), C("lang"), V("l"))),
-      minus = Seq(Seq(TriplePattern(V("d"), C("flag"), V("f")))))
+    val out = Sparql.evaluate(e, Minus(
+      BGP(Seq(TriplePattern(V("d"), C("lang"), V("l")))),
+      BGP(Seq(TriplePattern(V("d"), C("flag"), V("f"))))))
     assert(out.collect().map(_.getAs[String]("d")).toSet === Set("d2", "d3"))
     val ex = intercept[IllegalArgumentException] {
-      Bgp.matchGroup(e,
-        required = Seq(TriplePattern(V("d"), C("lang"), V("l"))),
-        minus = Seq(Seq(TriplePattern(V("x"), C("flag"), V("f")))))
+      Sparql.evaluate(e, Minus(
+        BGP(Seq(TriplePattern(V("d"), C("lang"), V("l")))),
+        BGP(Seq(TriplePattern(V("x"), C("flag"), V("f"))))))
     }
     assert(ex.getMessage.contains("shares no variable"))
   }
@@ -214,19 +215,20 @@ class GraphQuerySpec extends AnyFunSuite {
     val e = edges(
       ("d1", "lang", "en"), ("d2", "lang", "fr"),
       ("d1", "title", "t1"), ("t1", "flag", "spam"))
-    val out = Bgp.matchGroup(e,
-      required = Seq(TriplePattern(V("d"), C("lang"), V("l"))),
-      optional = Seq(Seq(TriplePattern(V("d"), C("title"), V("t")))),
-      minus = Seq(Seq(TriplePattern(V("t"), C("flag"), V("f")))))
+    val out = Sparql.evaluate(e, Minus(
+      LeftJoin(
+        BGP(Seq(TriplePattern(V("d"), C("lang"), V("l")))),
+        BGP(Seq(TriplePattern(V("d"), C("title"), V("t"))))),
+      BGP(Seq(TriplePattern(V("t"), C("flag"), V("f"))))))
     assert(out.collect().map(_.getAs[String]("d")).toSet === Set("d2"))
   }
 
   test("UNION aligns branch variables and NULL-pads unbound ones") {
     val e = edges(("d1", "lang", "en"), ("d1", "source", "web"), ("d2", "lang", "de"))
-    val out = Bgp.matchUnion(e, Seq(
-      Seq(TriplePattern(V("d"), C("lang"), C("en")),
-        TriplePattern(V("d"), C("source"), V("src"))),
-      Seq(TriplePattern(V("d"), C("lang"), C("de")))))
+    val out = Sparql.evaluate(e, Union(Seq(
+      BGP(Seq(TriplePattern(V("d"), C("lang"), C("en")),
+        TriplePattern(V("d"), C("source"), V("src")))),
+      BGP(Seq(TriplePattern(V("d"), C("lang"), C("de")))))))
     assert(out.columns.toSeq === Seq("d", "src"))
     assert(out.collect().map(r => (r.getAs[String]("d"), r.getAs[String]("src"))).toSet ===
       Set(("d1", "web"), ("d2", null)))

@@ -400,9 +400,10 @@ class PipelineSpec extends AnyFunSuite {
     TripleExtract.failOnErrors(TripleExtract.parse(bad.filter(_.path == "ok.nt")))
     // Materialize strict mode refuses too
     val dir = Files.createTempDirectory("graft-strict").toString
-    intercept[IllegalStateException] {
+    val e2 = intercept[NtParseException] {
       Materialize.run(spark, bad, dir, buckets = 2, strict = true)
     }
+    assert(e2.getMessage.contains("bad.nt"))
   }
 
   test("bucketed edges table: subject self-join plans without a shuffle") {

@@ -13,6 +13,7 @@ class SparqlParserSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
   import Bgp.{C, PAlternative, PClosure, PLeaf, PathPat, TriplePattern, V}
+  import Sparql.{BGP, Exists, Join, LeftJoin, Minus, Table, Union}
 
   private def edges(rows: (String, String, String)*) =
     rows.toDF("subj_id", "pred", "obj_id")
@@ -54,10 +55,10 @@ class SparqlParserSpec extends AnyFunSuite {
         |  OPTIONAL { ?d <urn:src> ?s }
         |  FILTER (!BOUND(?s) || ?s = "web")
         |}""".stripMargin)
-    val prog = Bgp.matchWithOptional(corpus,
-      Seq(TriplePattern(V("d"), C("urn:lang"), C(en))),
-      Seq(Seq(TriplePattern(V("d"), C("urn:src"), V("s")))),
-      Seq(!col("s").isNotNull || col("s") === lit(web)))
+    val prog = Sparql.evaluate(corpus, LeftJoin(
+      BGP(Seq(TriplePattern(V("d"), C("urn:lang"), C(en)))),
+      BGP(Seq(TriplePattern(V("d"), C("urn:src"), V("s"))))))
+      .filter(!col("s").isNotNull || col("s") === lit(web))
       .select("d", "s")
     assertSame(parsed, prog)
     // both rows survive: d1 binds web, d3 is unbound
@@ -70,10 +71,10 @@ class SparqlParserSpec extends AnyFunSuite {
         |  { ?d <urn:lang> "en" . ?d <urn:src> ?s }
         |  UNION { ?d <urn:lang> "fr" }
         |}""".stripMargin)
-    val prog = Bgp.matchUnion(corpus, Seq(
-      Seq(TriplePattern(V("d"), C("urn:lang"), C(en)),
-        TriplePattern(V("d"), C("urn:src"), V("s"))),
-      Seq(TriplePattern(V("d"), C("urn:lang"), C(fr)))))
+    val prog = Sparql.evaluate(corpus, Union(Seq(
+      BGP(Seq(TriplePattern(V("d"), C("urn:lang"), C(en)),
+        TriplePattern(V("d"), C("urn:src"), V("s")))),
+      BGP(Seq(TriplePattern(V("d"), C("urn:lang"), C(fr)))))))
     assertSame(parsed, prog)
   }
 
@@ -191,9 +192,9 @@ class SparqlParserSpec extends AnyFunSuite {
         |  ?d <urn:lang> ?l .
         |  MINUS { ?d <urn:flag> ?f }
         |}""".stripMargin)
-    val prog = Bgp.matchGroup(e,
-      required = Seq(TriplePattern(V("d"), C("urn:lang"), V("l"))),
-      minus = Seq(Seq(TriplePattern(V("d"), C("urn:flag"), V("f")))))
+    val prog = Sparql.evaluate(e, Minus(
+      BGP(Seq(TriplePattern(V("d"), C("urn:lang"), V("l")))),
+      BGP(Seq(TriplePattern(V("d"), C("urn:flag"), V("f"))))))
       .select("d")
     assertSame(parsed, prog)
     assert(parsed.collect().map(_.getString(0)).toSet === Set(d2, d3))
@@ -301,11 +302,11 @@ class SparqlParserSpec extends AnyFunSuite {
         |  VALUES (?l ?s) { ("en" "web") ("fr" "book") }
         |}""".stripMargin)
     assert(multi.collect().map(_.getString(0)).toSet === Set(d1, d2))
-    val prog = Bgp.applyValues(
-      Bgp.matchPatterns(e, Seq(
+    val prog = Sparql.evaluate(e, Join(Seq(
+      BGP(Seq(
         TriplePattern(V("d"), C("urn:lang"), V("l")),
         TriplePattern(V("d"), C("urn:src"), V("s")))),
-      Seq("l", "s"), Seq(Seq(en, web), Seq(fr, book)))
+      Table(Seq("l", "s"), Seq(Seq(en, web), Seq(fr, book))))))
       .select("d", "l", "s")
     assertSame(multi, prog)
   }
@@ -371,9 +372,9 @@ class SparqlParserSpec extends AnyFunSuite {
     val parsedEx = Sparql.run(corpus,
       """SELECT ?d ?l WHERE { ?d <urn:lang> ?l
         |  FILTER EXISTS { ?d <urn:src> ?s } }""".stripMargin)
-    val progEx = Bgp.applyExists(corpus,
-      Bgp.matchPatterns(corpus, Seq(TriplePattern(V("d"), C("urn:lang"), V("l")))),
-      Seq(Seq(TriplePattern(V("d"), C("urn:src"), V("s")))))
+    val progEx = Sparql.evaluate(corpus, Exists(
+      BGP(Seq(TriplePattern(V("d"), C("urn:lang"), V("l")))),
+      BGP(Seq(TriplePattern(V("d"), C("urn:src"), V("s")))), negated = false))
       .select(col("d"), col("l"))
     assertSame(parsedEx, progEx)
     assert(parsedEx.collect().map(_.getString(0)).toSet === Set(d1, d2))
@@ -964,10 +965,11 @@ class SparqlParserSpec extends AnyFunSuite {
     assert(got === Seq((d1, null), (d2, book), (d3, null))
       .sortBy(t => (t._1, String.valueOf(t._2))))
     // parsed form equals the programmatic twin
-    val prog = Bgp.matchWithOptional(corpus,
-      Seq(TriplePattern(V("d"), C("urn:lang"), V("l"))),
-      Seq(Seq(TriplePattern(V("d"), C("urn:src"), V("s")))),
-      Nil, Seq(Seq(col("s") =!= lit(web)))).select("d", "s")
+    val prog = Sparql.evaluate(corpus, LeftJoin(
+      BGP(Seq(TriplePattern(V("d"), C("urn:lang"), V("l")))),
+      BGP(Seq(TriplePattern(V("d"), C("urn:src"), V("s")))),
+      Seq(Sparql.FCmp(Sparql.FTVar("s"), "!=", Sparql.FTConst(web)))))
+      .select("d", "s")
     assertSame(out, prog)
     def bad(q: String, needle: String): Unit = {
       val ex = intercept[IllegalArgumentException](Sparql.parse(q))
@@ -1203,9 +1205,9 @@ class SparqlParserSpec extends AnyFunSuite {
         |}""".stripMargin)
     val prog = Bgp.matchPatterns(corpus, Seq(
       TriplePattern(V("d"), C("urn:lang"), C(en))))
-      .join(Bgp.matchUnion(corpus, Seq(
-        Seq(TriplePattern(V("d"), C("urn:src"), V("s"))),
-        Seq(TriplePattern(V("d"), C("urn:lang"), V("l"))))), Seq("d"), "inner")
+      .join(Sparql.evaluate(corpus, Union(Seq(
+        BGP(Seq(TriplePattern(V("d"), C("urn:src"), V("s")))),
+        BGP(Seq(TriplePattern(V("d"), C("urn:lang"), V("l"))))))), Seq("d"), "inner")
     assertSame(parsed, prog)
     // d1 (en, has src): one branch-1 row + one branch-2 row; d3 (en, no
     // src): branch-2 only
@@ -1876,5 +1878,38 @@ class SparqlParserSpec extends AnyFunSuite {
     bad("SELECT * WHERE { }", "no required triple")
     bad("SELECT * WHERE { ?a <p> ?b } ?c", "trailing")
     bad("SELECT WHERE { ?a <p> ?b }", "SELECT needs")
+  }
+
+  test("a group evaluates in text order: shapes whose §18 rows a flat plan missed are rejected") {
+    // edges a q z1, b q z2, a p y1, b r y2, a r y9
+    val Seq(a, b, y1, y2, y9, z1, z2) =
+      Seq("a", "b", "y1", "y2", "y9", "z1", "z2").map(n => Bgp.iriId(s"urn:$n"))
+    val e = edges((a, "urn:q", z1), (b, "urn:q", z2), (a, "urn:p", y1),
+      (b, "urn:r", y2), (a, "urn:r", y9))
+    def bad(q: String, needle: String): Unit = {
+      val ex = intercept[IllegalArgumentException](Sparql.parse(q))
+      assert(ex.getMessage.contains(needle), s"$q -> ${ex.getMessage}")
+    }
+    // §18 left-joins the empty solution here, giving only the a row;
+    // left-joining after the triples would add b|z2|null
+    bad("SELECT ?x ?z ?y WHERE { OPTIONAL { ?x <urn:p> ?y } ?x <urn:q> ?z }",
+      "OPTIONAL has nothing before it")
+    // §18 subtracts from the empty solution (nothing to remove) and keeps
+    // both rows; subtracting after the triples would drop a
+    bad("SELECT ?x ?z WHERE { MINUS { ?x <urn:p> ?y } ?x <urn:q> ?z }",
+      "MINUS has nothing before it")
+    // ?y joins the OPTIONAL's result, where it may be unbound: §18 gives
+    // only b|y2|z2, one BGP of both triple blocks would add a|y9|z1
+    bad("SELECT ?x ?y ?z WHERE { ?x <urn:q> ?z OPTIONAL { ?x <urn:p> ?y } ?x <urn:r> ?y }",
+      "?y may be unbound")
+    def rows(q: String) = Sparql.run(e, q).collect()
+      .map(_.toSeq.map(v => String.valueOf(v)).mkString("|")).sorted.toSeq
+    // the same elements in an accepted order return the §18 rows
+    assert(rows("SELECT ?x ?z ?y WHERE { ?x <urn:q> ?z OPTIONAL { ?x <urn:p> ?y } }") ===
+      Seq(s"$a|$z1|$y1", s"$b|$z2|null").sorted)
+    assert(rows("SELECT ?x ?z WHERE { ?x <urn:q> ?z MINUS { ?x <urn:p> ?y } }") ===
+      Seq(s"$b|$z2"))
+    assert(rows("SELECT ?x ?y ?z WHERE { ?x <urn:q> ?z . ?x <urn:r> ?y OPTIONAL { ?x <urn:p> ?y } }") ===
+      Seq(s"$a|$y9|$z1", s"$b|$y2|$z2").sorted)
   }
 }
