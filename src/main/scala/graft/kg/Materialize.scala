@@ -27,9 +27,10 @@ import graft.Share
  * document identity (repo, path, commit). A bucket appears in `manifest`
  * only after its staging output is fully written, so a crashed/killed job
  * re-runs exactly the missing buckets: the corpus is anti-joined against
- * the manifest before any parsing happens. Staging writes use dynamic
- * partition overwrite, making a re-run of a half-written bucket
- * idempotent.
+ * the manifest before any parsing happens. The partitioned writes
+ * (staging, metrics, manifest) use dynamic partition overwrite, making a
+ * re-run of a half-written bucket idempotent; it is a write option, so
+ * the caller's session keeps its own `partitionOverwriteMode`.
  *
  * A run reads the corpus twice: once for one digest row per todo
  * document (repo, path, commit, content_sha256, bucket), shared with
@@ -318,7 +319,6 @@ object Materialize {
   def run(spark: SparkSession, corpus: Dataset[CorpusRow], outDir: String,
           buckets: Int = 64, strict: Boolean = false): Int = {
     import spark.implicits._
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     val withBucket = corpus.toDF().withColumn("bucket", bucketOf(buckets))
     val manifestPath = s"$outDir/manifest"
@@ -339,6 +339,7 @@ object Materialize {
     val parsed = TripleExtract.parseExpr(todo.drop("bucket"))
       .withColumn("bucket", bucketOf(buckets))
     parsed.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket", "err")
       .parquet(s"$outDir/staging")
 
@@ -360,12 +361,13 @@ object Materialize {
     // bucket in one task, so each bucket is one file.
     val stagedTodo = staged.filter(col("bucket").isin(todoBuckets: _*))
     countsJoin(todoDigests, stagedTodo).repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"$outDir/metrics") // dynamic overwrite: idempotent on re-run
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket").parquet(s"$outDir/metrics") // dynamic overwrite: idempotent on re-run
 
     // ---- commit the checkpoint LAST: bucket-level manifest rows
     todoCounts.toSeq.toDF("bucket", "n_docs")
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(manifestPath)
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket").parquet(manifestPath)
 
     todoBuckets.length
   }

@@ -31,34 +31,14 @@ import Bgp.{C, TriplePattern, V}
  *              | OPTIONAL { triples (FILTER ( expr ))* }
  *              | MINUS { triples }
  *              | FILTER ( expr ) | FILTER NOT? EXISTS { triples }
- *              | BIND ( bexpr AS ?var ) | VALUES valuesClause
+ *              | BIND ( expr AS ?var ) | VALUES valuesClause
  *              | { select }                    (subquery — see below)
  *              | { triples } UNION { triples } (UNION { triples })* )*
  *              (one algebra tree per group, in text order — see GROUPS
  *               below)
- *   bexpr   := nexpr | sexpr | ?var | "lit" | COALESCE(?var, ?var+)
- *            | IF ( expr , bexpr , bexpr )   (same-kind branches; a NULL
- *              condition takes the ELSE branch)
- *            | STRDT ( sexpr , <dt> ) | STRLANG ( sexpr , "tag" ) —
- *              mint a typed / language-tagged literal TERM: the node id
- *              (litId recipe, sha256 of the n3 form) computed at
- *              runtime, joinable/comparable against pattern bindings
- *              (?var alone copies the binding, COALESCE is the id-space
- *               OPTIONAL-fallback chain over pattern variables; numeric
- *               and string expressions produce PLAIN VALUE columns)
- *   nexpr   := nmul (('+' | '-') nmul)*        numeric VALUE space
- *   nmul    := natom (('*' | '/') natom)*      (x/0 = unbound, not INF)
- *   natom   := number | ?var | STRLEN ( sarg ) | ( nexpr ) | '-' natom
- *            | (ABS | CEIL | FLOOR | ROUND) ( nexpr )
- *              (ROUND = floor(x + 0.5): spec round-half-toward-+INF)
- *   sexpr   := STR(?v) | LANG(?v) | DATATYPE(?v) | CONCAT(sarg, sarg+)
- *            | LCASE(sarg) | UCASE(sarg)       string VALUE space
- *            | SUBSTR(sarg, nexpr (, nexpr)?)  1-based, like the spec
- *            | STRBEFORE(sarg, sarg) | STRAFTER(sarg, sarg)
- *            | REPLACE(sarg, "pat", "repl" (, "i")?)   all occurrences
  *   valuesClause := ?var { const+ } | ( ?var+ ) { ( const+ )+ }
- *   modifiers := (GROUP BY ?var+)? (HAVING ( hexpr ))*
- *                (ORDER BY (?var | ASC(?var) | DESC(?var))+)?
+ *   modifiers := (GROUP BY (?var | ( expr AS ?var ))+)? (HAVING ( expr ))*
+ *                (ORDER BY (?var | ASC ( expr ) | DESC ( expr ))+)?
  *                (LIMIT int)? (OFFSET int)?     (LIMIT/OFFSET any order)
  *   triple  := term pred term
  *   term    := ?var | <iri> | "lit" | "lit"@lang | "lit"^^<dt>
@@ -78,50 +58,62 @@ import Bgp.{C, TriplePattern, V}
  *               ! = negated property set; ONE closure operator may
  *               apply to ONE parenthesized group — (p1/p2)+, (a|b)* —
  *               deeper nesting stays out of fragment)
- *   expr    := BOUND(?v) | !expr | expr && expr | expr || expr
- *            | term (= | !=) term | ( expr )
- *            | nterm (< | <= | > | >= | = | !=) nterm
- *              where nterm := ?var | number — a comparison with a
- *              number (or an ordering operator) is VALUE-SPACE and
- *              needs the nodes table: run(edges, nodes, query)
- *            | nexpr (cmp) nexpr — arithmetic on either side selects
- *              the numeric value space (a parenthesized LEFT side is
- *              read as boolean grouping — start with the bare term)
- *            | term (cmp) "lit"^^xsd:date | "lit"^^xsd:dateTime — an
- *              xsd:date/dateTime TYPED constant selects the TEMPORAL
- *              value space (asDate/asTimestamp on both sides, compare
- *              by value; cross-type comparison rejected; nodes table
- *              required)
- *            | (YEAR|MONTH|DAY|HOURS|MINUTES|SECONDS) ( ?v ) — datetime
- *              accessors into the NUMERIC value space (xsd:dateTime by
- *              value, xsd:date at midnight, anything else excluded);
- *              legal anywhere a numeric expression is
- *            | xsd:integer(?v) | xsd:double(?v) | xsd:string(?v) — the
- *              XPath constructor casts (17.5): numeric casts read the
- *              variable's own representation (numeric value, string
- *              lexical form via try_cast) with xsd:integer truncating
- *              toward zero; xsd:string = STR; out-of-space values are
- *              excluded, never thrown
- *            | (STRSTARTS | STRENDS | CONTAINS) ( sarg , sarg )
- *            | REGEX ( sarg , "pattern" (, "i")? )
- *            | sexpr (= | !=) (sexpr | "lit" | <iri> | ?var)
- *            | (ISIRI | ISLITERAL | ISBLANK) ( ?var )
- *            | LANGMATCHES ( sarg , "range" )   (RFC 4647 basic: "*" =
- *              any non-empty tag, else tag or tag-prefix, case-blind)
- *            | SAMETERM ( ?a , ?b )   (RDF-term identity = id equality;
- *              both variables must live in one value space)
- *            | ?var NOT? IN ( const (, const)* ) — all-number lists read
- *              the numeric value space, term lists the variable's own
- *              space (ids / raw IRIs / string BIND values)
- *              where sarg := sexpr | ?var | "lit" — all STRING-VALUE-
- *              SPACE forms, needing the nodes table like nexpr; a bare
- *              ?var arg reads string-family literals only (SPARQL type
- *              error = excluded), STR() also stringifies IRIs
- *   hexpr   := (COUNT | SUM | AVG)(...) (= | != | < | <= | > | >=) number
- *            | !hexpr | hexpr && hexpr | hexpr || hexpr | ( hexpr )
- *              (SUM/AVG in HAVING read the numeric value space like
- *               their projected forms — nodes-table overload required)
+ *   expr    := expr || expr | expr && expr | ! expr
+ *            | sum (= | != | < | <= | > | >=) sum | ?var NOT? IN ( const, ... )
+ *            | sum := sum (+ | -) sum | sum (* | /) sum | - sum | ( expr )
+ *            | ?var | <iri> | "lit" | "lit"@lang | "lit"^^<dt> | number
+ *            | FUNC ( expr, ... ) | agg ( ... )     (aggregates in HAVING)
+ *              (precedence || < && < ! < comparison < + - < * / < unary -;
+ *               `!` negates a whole comparison; a parenthesized operand
+ *               right after = / != stays rejected)
  * }}}
+ *
+ * EXPRESSIONS: FILTER and OPTIONAL conditions, BIND and GROUP BY key
+ * bodies, ORDER BY keys and HAVING parse into one [[Expr]] tree. One
+ * typing pass ([[typeCheck]]) gives each node its value space by SPARQL
+ * 1.1 §17.3 — from the types of its operands, never from how they are
+ * spelled — and one [[compile]] lowers it to a Column. The table
+ * ([[Functions]] holds each function's parameters and result):
+ *
+ * {{{
+ *   node                                      value space
+ *   ?var of a triple's subject/object         its RDF term: read in the
+ *                                             space its parent needs (id,
+ *                                             numeric, string, temporal)
+ *                                             through the nodes table
+ *   ?var of a predicate / GRAPH position      raw predicate IRI
+ *   BIND / aggregate-alias ?var               numeric, string or id (as
+ *                                             computed)
+ *   number, "n"^^xsd:integer-or-double family numeric (5 and "5"^^xsd:integer
+ *                                             are one RDF term, §19.8)
+ *   "d"^^xsd:date / "t"^^xsd:dateTime         date / dateTime
+ *   <iri>, other literals                     id (a plain literal also reads
+ *                                             as a string, an IRI as its
+ *                                             raw string)
+ *   + - * / ABS CEIL FLOOR ROUND STRLEN       numeric (x/0 = unbound, not
+ *     YEAR..SECONDS xsd:integer xsd:double    INF; ROUND = floor(x + 0.5))
+ *   STR LANG DATATYPE LCASE UCASE CONCAT      string
+ *     SUBSTR STRBEFORE STRAFTER REPLACE
+ *     MD5..SHA512 ENCODE_FOR_URI xsd:string
+ *   comparisons, ! && ||, IN, BOUND, SAMETERM boolean
+ *     STRSTARTS STRENDS CONTAINS REGEX
+ *     LANGMATCHES ISIRI ISLITERAL ISBLANK
+ *   COALESCE STRDT STRLANG (BIND only)        id (STRDT / STRLANG mint the
+ *                                             literal's node id at runtime)
+ *   IF (BIND only)                            its branches' (one kind)
+ * }}}
+ *
+ * A comparison runs in the space of its operands (§17.3): temporal if one
+ * is a date / dateTime, string if one is a string expression (= / !=
+ * only), numeric if one is numeric or the operator orders, else RDF-term
+ * identity (node id, or raw IRI beside a predicate variable). A variable
+ * takes the space of what it is compared with; a computed BIND value is
+ * not an RDF term, so it never compares by id. Arguments must fit their
+ * parameter: a numeric or string read of a node variable joins its
+ * `_term` struct, and a term outside the space reads NULL, so the row is
+ * excluded (SPARQL's error-means-exclude); a mismatch the parser can see
+ * (a number against an IRI, a date against a dateTime, a predicate IRI
+ * read as a number) is rejected at parse.
  *
  * Aggregation is SPARQL 1.1 GROUP BY semantics over the hashed-id
  * fragment: COUNT / COUNT DISTINCT are id-decidable; MIN / MAX over a
@@ -133,7 +125,7 @@ import Bgp.{C, TriplePattern, V}
  * coincide whenever the group holds no numeric literal). ORDER BY over
  * a node-space variable upgrades the same way (one broadcast-able term
  * join per ordered column); aliases and BIND values always sort by
- * their plain column.
+ * their plain column, and an ASC / DESC expression key is numeric.
  * SAMPLE compiles to `min` (a deterministic pick where the spec allows
  * any) and GROUP_CONCAT concatenates in sorted order (the spec leaves
  * order undefined) so results are engine-independent; SUM/AVG read the
@@ -141,35 +133,25 @@ import Bgp.{C, TriplePattern, V}
  * nodes-table overload required) with exact order-independent
  * decimal(28,10) accumulation, strict SPARQL error semantics (any
  * non-numeric/unbound value in the group makes the aggregate unbound)
- * and a single final cast to double. ORDER BY + LIMIT plan as
- * per-partition top-k (TakeOrderedAndProject), never a global sort.
+ * and a single final cast to double. HAVING compares a COUNT / SUM / AVG
+ * aggregate to a number. ORDER BY + LIMIT plan as per-partition top-k
+ * (TakeOrderedAndProject), never a global sort.
  *
  * Constants are translated with the engine's node-id recipe
  * ([[Bgp.iriId]] / [[Bgp.litId]]) so a parsed constant matches the same
- * materialized edge a programmatic one does. FILTER comparisons are
- * node-id (in)equality — the decidable fragment over hashed ids; value
- * ordering (`<`, arithmetic) needs the typed-literal columns
- * ([[TypedLiterals]]) and is out of scope here. Unbound variables make
- * a comparison NULL, which `.filter` drops — exactly SPARQL's
+ * materialized edge a programmatic one does. Unbound variables make a
+ * comparison NULL, which `.filter` drops — exactly SPARQL's
  * error-means-exclude FILTER semantics; test bound-ness with BOUND.
  *
- * VALUE-SPACE FILTER: a comparison against a bare number — or any `<`
- * `<=` `>` `>=` — compares in the NUMERIC value space instead. It
- * requires the D2 nodes table ([[run(edges:*,nodes:*]] overload): each
- * such variable is [[Bgp.bindValues]]-joined once, and the comparison
- * compiles to the [[TypedLiterals]] accessors with SPARQL's numeric
- * promotion (integer family and double/float/decimal both promote to
- * double — exact for |v| < 2^53). Non-numeric terms (IRIs, bnodes,
- * string literals) make the accessor NULL, so the row is excluded —
- * SPARQL's error-means-exclude, again.
- *
- * STRING VALUE-SPACE FILTER: STR / LANG / DATATYPE projections,
- * STRSTARTS / STRENDS / CONTAINS predicates and ISIRI / ISLITERAL /
- * ISBLANK kind tests ride the same bindValues join — one per distinct
- * variable regardless of how many functions read it. Same exclusion
- * rule: a function applied outside its SPARQL domain (STR of a bnode,
- * LANG of an IRI, a bare non-string-literal arg) reads NULL and the
- * row drops.
+ * VALUE SPACES need the D2 nodes table ([[run(edges:*,nodes:*]]
+ * overload): each node variable read in one is [[Bgp.bindValues]]-joined
+ * once, by the first FILTER or BIND that reads it, however many functions
+ * read it. Numeric reads follow SPARQL's promotion (integer family and
+ * double/float/decimal both promote to double — exact for |v| < 2^53).
+ * String reads: a bare variable reads string-family literals only,
+ * STR(?v) also stringifies IRIs; LANG of an IRI or STR of a bnode reads
+ * NULL and the row drops. Id comparisons and RDF-term IN lists need no
+ * join.
  *
  * GROUPS: each `{ ... }` parses into a SPARQL 1.1 algebra tree
  * ([[Pattern]]) by the §18.2.2 translation, element by element in text
@@ -207,10 +189,11 @@ import Bgp.{C, TriplePattern, V}
  * ?g) costs the subquery's one hash-agg shuffle plus one broadcast-able
  * equi-join.
  *
- * BIND computes a PLAIN VALUE column (double for nexpr, string for
- * sexpr) or an id-space copy (?var alone) — a pure projection, never a
- * shuffle. Bind variables can be FILTERed (numeric comparisons and the
- * string functions read them directly — no extra join), projected,
+ * BIND computes a PLAIN VALUE column (double for a numeric expression,
+ * string for a string one) or an id-space copy (?var alone) — a pure
+ * projection, never a shuffle. Bind variables can be FILTERed (numeric
+ * comparisons and the string functions read them directly — no extra
+ * join), projected,
  * ORDER BY'd and used as GROUP BY keys; they are NOT RDF terms, so
  * LANG/DATATYPE/ISIRI-family tests, id-space `=` against constants,
  * SUM/AVG arguments and CONSTRUCT/DESCRIBE positions reject them at
@@ -232,7 +215,7 @@ object Sparql {
   private final case class TIri(iri: String) extends Tok
   private final case class TLit(v: String, lang: Option[String], dt: Option[String]) extends Tok
   private final case class TNum(v: Long) extends Tok
-  private final case class TDbl(v: Double) extends Tok
+  private final case class TDbl(v: String) extends Tok
   /** punctuation or UPPERCASED keyword (SELECT DISTINCT WHERE OPTIONAL
     * MINUS FILTER UNION BOUND AS GROUP BY HAVING ORDER ASC DESC LIMIT
     * OFFSET VALUES UNDEF and the aggregate names) or the bare rdf:type
@@ -260,13 +243,6 @@ object Sparql {
     "SECONDS", "MD5", "SHA1", "SHA256", "SHA384", "SHA512",
     "ENCODE_FOR_URI", "SAMETERM", "FROM", "NAMED", "BASE", "STRDT",
     "STRLANG")
-
-  /** XPath constructor-cast IRIs (SPARQL 17.5) the fragment supports:
-    * xsd:integer / xsd:double into the numeric space, xsd:string into
-    * the string space (= STR). */
-  private val XsdIntegerIri = "http://www.w3.org/2001/XMLSchema#integer"
-  private val XsdDoubleIri = "http://www.w3.org/2001/XMLSchema#double"
-  private val NumCastIris = Set(XsdIntegerIri, XsdDoubleIri)
 
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"SPARQL parse error: $msg")
@@ -298,7 +274,7 @@ object Sparql {
         if (i + 1 < n && q.charAt(i) == '.' && q.charAt(i + 1).isDigit) {
           i += 1
           while (i < n && q.charAt(i).isDigit) i += 1
-          out += TDbl(q.substring(s, i).toDouble)
+          out += TDbl(q.substring(s, i))
         } else out += TNum(q.substring(s, i).toLong)
       } else if (c == '?' || c == '$') {
         val s = i + 1
@@ -413,154 +389,25 @@ object Sparql {
     out.result()
   }
 
-  // ---------- AST ----------------------------------------------------------
+  // ---------- expressions --------------------------------------------------
 
-  private[kg] sealed trait FTerm
-  private[kg] final case class FTVar(name: String) extends FTerm
-  /** A constant comparison side: `id` is the hashed node id (the form
-    * node-position bindings carry); `raw` keeps the IRI's raw string for
-    * comparisons against PREDICATE-position variables, which bind raw
-    * predicate IRIs in the edges convention (not hashed ids). */
-  private[kg] final case class FTConst(id: String, raw: Option[String] = None) extends FTerm
-
-  private[kg] sealed trait FExpr
-  private[kg] final case class FBound(v: String) extends FExpr
-  private[kg] final case class FNot(e: FExpr) extends FExpr
-  private final case class FAnd(a: FExpr, b: FExpr) extends FExpr
-  private[kg] final case class FOr(a: FExpr, b: FExpr) extends FExpr
-  private[kg] final case class FCmp(l: FTerm, op: String, r: FTerm) extends FExpr
-  /** Numeric VALUE-SPACE expression: leaves are variables (read through
-    * their bindValues `_term` struct, or directly for numeric BIND
-    * columns), numeric constants and STRLEN projections; interior nodes
-    * are `+ - * /` (IEEE double — deterministic cross-engine). */
-  private[kg] sealed trait NExpr
-  private final case class NVar(name: String) extends NExpr
-  private final case class NNum(v: Double) extends NExpr
-  private final case class NStrLen(arg: STerm) extends NExpr
-  private final case class NArith(l: NExpr, op: String, r: NExpr) extends NExpr
-  /** ABS / CEIL / FLOOR / ROUND — ROUND compiles to floor(x + 0.5),
-    * which IS xsd/SPARQL round-half-toward-+INF (a bare engine round()
-    * would be HALF_UP / HALF_EVEN depending on the engine). */
-  private final case class NFn(func: String, arg: NExpr) extends NExpr
-  /** YEAR / MONTH / DAY / HOURS / MINUTES / SECONDS — datetime
-    * accessors into the numeric value space. The argument variable
-    * reads the TEMPORAL value space: an xsd:dateTime literal through
-    * [[TypedLiterals.asTimestamp]], an xsd:date through
-    * [[TypedLiterals.asDate]] at midnight (a deliberate widening of the
-    * spec's dateTime-only accessor domain — the common engine
-    * behavior); any other term reads NULL and the row is excluded
-    * (error-means-exclude). UTC sessions on both engines make the
-    * field extraction deterministic. */
-  private final case class NTimeFn(func: String, v: String) extends NExpr
-  /** `xsd:integer(?v)` / `xsd:double(?v)` — XPath constructor casts into
-    * the numeric value space (SPARQL 17.5). The argument reads its OWN
-    * representation: a numeric BIND value directly, a string BIND value
-    * through try_cast, a pattern variable's term through the numeric
-    * families first and then the string-family lexical form. Any value
-    * outside the cast's lexical space is NULL -> excluded
-    * (error-means-exclude, e.g. xsd:double of an IRI). `xsd:integer`
-    * truncates toward zero per XPath, via try_cast to long (NaN /
-    * overflow excluded rather than thrown under ANSI). */
-  private final case class NCast(v: String, toInt: Boolean) extends NExpr
-  private final case class FNumCmp(l: NExpr, op: String, r: NExpr) extends FExpr
-  /** STRING value-space operand: a variable read through its bindValues
-    * `_term` struct (bare = string-family literal lexical form only,
-    * `viaStr` = SPARQL STR(), which also stringifies IRIs — both read a
-    * string BIND column directly), its LANG() or DATATYPE() projection,
-    * a raw string constant, or an LCASE/UCASE/CONCAT combinator. */
-  private[kg] sealed trait STerm
-  private final case class SVar(name: String, viaStr: Boolean) extends STerm
-  private final case class SLang(name: String) extends STerm
-  private final case class SDt(name: String) extends STerm
-  private final case class SConst(s: String) extends STerm
-  private final case class SCase(arg: STerm, upper: Boolean) extends STerm
-  private final case class SConcat(args: Seq[STerm]) extends STerm
-  /** SUBSTR(arg, start[, len]) — 1-based like SPARQL/SQL; start/len are
-    * numeric value-space expressions. */
-  private final case class SSubstr(arg: STerm, start: NExpr, len: Option[NExpr]) extends STerm
-  /** STRBEFORE / STRAFTER — '' when the needle does not occur, per spec. */
-  private final case class SCut(arg: STerm, needle: STerm, before: Boolean) extends STerm
-  /** REPLACE(arg, "pattern", "replacement"[, "i"]) — regex, ALL
-    * occurrences (mirror with the 'g' flag in engines that default to
-    * first-match). */
-  private final case class SReplace(arg: STerm, pattern: String, repl: String,
-                                    ci: Boolean) extends STerm
-  /** MD5 / SHA1 / SHA256 / SHA384 / SHA512 — lowercase hex digest of
-    * the UTF-8 bytes of a string-space operand (both engines render
-    * lowercase hex, so digests are cross-engine stable). */
-  private final case class SHash(algo: String, arg: STerm) extends STerm
-  /** ENCODE_FOR_URI — XPath fn:encode-for-uri percent-encoding, via the
-    * codegen'd [[EncodeForUri]] native expression. */
-  private final case class SEncode(arg: STerm) extends STerm
-  /** STRSTARTS / STRENDS / CONTAINS over a string-space operand. */
-  private final case class FStrFn(func: String, arg: STerm, needle: STerm) extends FExpr
-  /** REGEX(sarg, "pattern"[, "i"]) — partial match, optional
-    * case-insensitive flag compiled as an inline `(?i)` (the one flag
-    * both regex dialects spell identically). */
-  private final case class FRegex(arg: STerm, pattern: String, ci: Boolean) extends FExpr
-  /** String value-space (in)equality — `=` / `!=` only (ordering over
-    * strings is collation-dependent and deliberately out of fragment). */
-  private final case class FStrCmp(l: STerm, eq: Boolean, r: STerm) extends FExpr
-  /** ISIRI / ISLITERAL / ISBLANK term-kind test (needs the `_term` struct). */
-  private final case class FKindTest(func: String, v: String) extends FExpr
-  /** SAMETERM(?a, ?b) — RDF-term identity. Distinct terms have distinct
-    * ids (and predicate variables distinct raw IRIs), so this is plain
-    * column equality — PROVIDED both variables live in ONE space, which
-    * validate() enforces (a pred-var vs node-var compare is silently
-    * constant, and BIND values are not RDF terms). */
-  private final case class FSameTerm(a: String, b: String) extends FExpr
-  /** TEMPORAL value-space comparison side: a variable read through its
-    * `_term` struct ([[TypedLiterals.asDate]]/[[TypedLiterals.asTimestamp]])
-    * or a typed constant's lexical form. */
-  private[kg] sealed trait TTerm
-  private final case class TTVar(name: String) extends TTerm
-  private final case class TTConst(v: String) extends TTerm
-  /** Temporal comparison, selected by an `xsd:date` / `xsd:dateTime`
-    * TYPED-LITERAL constant on either side: both sides read that one
-    * type's value space (SPARQL makes cross-type temporal comparison an
-    * error — a variable holding the other type reads NULL and the row
-    * drops, error-means-exclude). All six operators compare BY VALUE,
-    * so lexical variants of one instant compare equal. */
-  private final case class FTimeCmp(l: TTerm, op: String, r: TTerm,
-                                    dateTime: Boolean) extends FExpr
-  /** LANGMATCHES(sarg, "range"): RFC 4647 basic filtering — "*" matches
-    * any non-empty tag, otherwise a case-insensitive tag or tag-prefix
-    * ("en" matches "en" and "en-GB"). */
-  private final case class FLangMatches(arg: STerm, range: String) extends FExpr
-  /** `?v (NOT)? IN (const, ...)`: a pushed IN-filter. All-number lists
-    * read the numeric value space; RDF-term lists compare in the
-    * variable's own space (hashed ids for node variables and copies,
-    * raw IRIs for predicate/graph variables, raw strings for string
-    * BIND values). An unbound/other-space ?v reads NULL, so both IN and
-    * NOT IN exclude the row — SPARQL error propagation. */
-  private final case class FIn(v: String, items: Seq[FOperand],
-                               negated: Boolean) extends FExpr
-
-  /** A BIND(expr AS ?v) right-hand side: a numeric value expression, a
-    * string value expression, or a plain id-space copy of another
-    * PATTERN variable. */
-  private[kg] sealed trait BExpr
-  private final case class BNum(e: NExpr) extends BExpr
-  private final case class BStr(e: STerm) extends BExpr
-  private final case class BCopy(v: String) extends BExpr
-  /** COALESCE(?a, ?b, ...) over PATTERN variables — the id-space
-    * OPTIONAL-fallback chain (first bound binding wins). */
-  private final case class BCoalesce(vars: Seq[String]) extends BExpr
-  /** IF(cond, then, else) — the branches must live in ONE value kind
-    * (both numeric, both string, or both id-space copies/coalesces); a
-    * NULL condition (unbound read) yields the ELSE branch, matching
-    * when/otherwise. */
-  private final case class BIf(cond: FExpr, thenB: BExpr, elseB: BExpr) extends BExpr
-  /** STRDT(lexical, <dt>) / STRLANG(lexical, "tag") — CONSTRUCT a typed
-    * or language-tagged literal term from a string-space lexical form.
-    * The result is the term's NODE ID, minted at runtime by the same
-    * recipe as [[Bgp.litId]] (sha256 of the n3 rendering), so it
-    * equal-compares and joins against pattern bindings in the id space
-    * ('c' kind). A lexical that reads NULL (non-string input) yields
-    * NULL — SPARQL error propagation. `lang = None` is STRDT;
-    * `Some(tag)` is STRLANG (dt fixed to rdf:langString, per RDF 1.1). */
-  private final case class BMintTerm(lex: STerm, dt: String,
-                                     lang: Option[String]) extends BExpr
+  /** A SPARQL 1.1 §17 expression. FILTER and OPTIONAL conditions, BIND and
+    * GROUP BY key bodies, ORDER BY keys and HAVING conditions all parse
+    * into this one tree ([[expression]]); [[typeCheck]] gives each node
+    * its value space and [[compile]] lowers it to a Column. */
+  sealed trait Expr
+  final case class Var(name: String) extends Expr
+  final case class Iri(iri: String) extends Expr
+  /** A literal constant. A bare number is the literal it abbreviates:
+    * `5` is `"5"^^xsd:integer`, `2.5` is `"2.5"^^xsd:decimal` (§19.8). */
+  final case class Lit(value: String, lang: Option[String] = None,
+                       dt: Option[String] = None) extends Expr
+  /** An operator — `!` `&&` `||`, `=` `!=` `<` `<=` `>` `>=`, `+` `-` `*`
+    * `/` (unary minus is `0 - x`), `IN` / `NOT IN` with the tested
+    * variable first — or a function of [[Functions]]. */
+  final case class Call(fn: String, args: Seq[Expr]) extends Expr
+  /** An aggregate: a HAVING operand. */
+  final case class Agg(call: AggCall) extends Expr
 
   /** An aggregate invocation; `arg = None` is `COUNT(*)`. SAMPLE is
     * compiled as `min` (SPARQL leaves the pick arbitrary — a
@@ -575,11 +422,50 @@ object Sparql {
   private[kg] final case class PVar(name: String) extends Proj
   private[kg] final case class PAgg(call: AggCall, alias: String) extends Proj
 
-  private[kg] sealed trait HExpr
-  private final case class HCmp(call: AggCall, op: String, n: Double) extends HExpr
-  private final case class HNot(e: HExpr) extends HExpr
-  private final case class HAnd(a: HExpr, b: HExpr) extends HExpr
-  private final case class HOr(a: HExpr, b: HExpr) extends HExpr
+  private val XsdIntegerIri = "http://www.w3.org/2001/XMLSchema#integer"
+  private val XsdDecimalIri = "http://www.w3.org/2001/XMLSchema#decimal"
+  private val CmpOps = Set("=", "!=", "<", "<=", ">", ">=")
+  private val ArithOps = Set("+", "-", "*", "/")
+  private val BoolOps = Set("!", "&&", "||")
+
+  /** Each function's parameters and result space. A parameter is a value
+    * — 'n' numeric, 's' string, 'b' a condition, '*' an IF branch, 'l' a
+    * plain string literal, 'f' the "i" flag, 'I' a datatype IRI — or a
+    * ?variable, read as 'S' (STR: literal lexical form or IRI string), 't'
+    * (RDF-term structure), 'd' (temporal value), 'x' (constructor cast),
+    * 'c' (RDF-term identity), 'B' (bound-ness) or 'V' (a pattern binding).
+    * After '|' come the optional parameters; a trailing '+' repeats the
+    * last one. Results: 'n', 's', 'b', 'c' (a node id) or '*' (IF). */
+  private val Functions: Map[String, (String, Char)] =
+    Seq("STR", RdfTerm.XsdString).map(_ -> ("S", 's')).toMap ++
+    Seq("LANG", "DATATYPE").map(_ -> ("t", 's')) ++
+    Seq("LCASE", "UCASE", "MD5", "SHA1", "SHA256", "SHA384", "SHA512",
+      "ENCODE_FOR_URI").map(_ -> ("s", 's')) ++
+    Seq("STRBEFORE", "STRAFTER").map(_ -> ("ss", 's')) ++
+    Seq("ABS", "CEIL", "FLOOR", "ROUND").map(_ -> ("n", 'n')) ++
+    Seq("YEAR", "MONTH", "DAY", "HOURS", "MINUTES", "SECONDS").map(_ -> ("d", 'n')) ++
+    Seq(XsdIntegerIri, "http://www.w3.org/2001/XMLSchema#double").map(_ -> ("x", 'n')) ++
+    Seq("STRSTARTS", "STRENDS", "CONTAINS").map(_ -> ("ss", 'b')) ++
+    Seq("ISIRI", "ISLITERAL", "ISBLANK").map(_ -> ("t", 'b')) ++
+    Map("CONCAT" -> ("ss+", 's'), "SUBSTR" -> ("sn|n", 's'),
+      "REPLACE" -> ("sll|f", 's'), "STRLEN" -> ("s", 'n'),
+      "REGEX" -> ("sl|f", 'b'), "LANGMATCHES" -> ("sl", 'b'),
+      "BOUND" -> ("B", 'b'), "SAMETERM" -> ("cc", 'b'),
+      "IF" -> ("b**", '*'), "COALESCE" -> ("VV+", 'c'),
+      "STRDT" -> ("sI", 'c'), "STRLANG" -> ("sl", 'c'))
+
+  /** The functions that compute an RDF term or pick a branch: BIND bodies
+    * (and IF branches) only. */
+  private val BindOnly = Set("IF", "COALESCE", "STRDT", "STRLANG")
+
+  /** The parameter codes of a call with `n` arguments, if `n` fits. */
+  private def params(spec: String, n: Int): Option[String] = {
+    val ps = spec.filter(c => c != '|' && c != '+')
+    val required = if (spec.contains('|')) spec.indexOf('|') else ps.length
+    if (spec.endsWith("+") && n >= ps.length) Some(ps + ps.last.toString * (n - ps.length))
+    else if (n >= required && n <= ps.length) Some(ps.take(n))
+    else None
+  }
 
   // ---------- algebra ------------------------------------------------------
 
@@ -599,7 +485,7 @@ object Sparql {
   /** OPTIONAL: every `left` row, extended by each compatible `right` row
     * that satisfies `cond` (id-space, over `right`'s own variables). */
   final case class LeftJoin(left: Pattern, right: Pattern,
-                            cond: Seq[FExpr] = Nil) extends Pattern
+                            cond: Seq[Expr] = Nil) extends Pattern
   /** MINUS: the `left` rows that no `right` row agrees with on a shared
     * variable. */
   final case class Minus(left: Pattern, right: Pattern) extends Pattern
@@ -608,9 +494,9 @@ object Sparql {
   final case class Union(branches: Seq[Pattern]) extends Pattern
   /** FILTER: the `inner` rows every condition holds on. A FILTER is
     * group-scoped, so it wraps its whole group. */
-  final case class Filter(cond: Seq[FExpr], inner: Pattern) extends Pattern
+  final case class Filter(cond: Seq[Expr], inner: Pattern) extends Pattern
   /** BIND(expr AS ?v) over the rows of `inner`. */
-  final case class Extend(inner: Pattern, v: String, expr: BExpr) extends Pattern
+  final case class Extend(inner: Pattern, v: String, expr: Expr) extends Pattern
   /** VALUES: inline rows of constant node ids, `null` for UNDEF. Only a
     * [[Join]] part: a set-semantics selection of the other parts' rows. */
   final case class Table(vars: Seq[String], rows: Seq[Seq[String]]) extends Pattern
@@ -681,30 +567,14 @@ object Sparql {
     case other                   => anchored(children(other).head)
   }
 
-  private def bindKind(b: BExpr): Char = b match {
-    case BNum(_) => 'n'
-    case BStr(_) => 's'
-    case BCopy(_) | BCoalesce(_) | BMintTerm(_, _, _) => 'c'
-    case BIf(_, t, e) =>
-      val k = bindKind(t)
-      if (bindKind(e) != k)
-        fail("IF branches in BIND mix value kinds — both must be numeric, " +
-          "both string, or both id-space bindings")
-      k
-  }
-
   /** Computed-value columns and their kinds: BIND variables ('n'umeric,
     * 's'tring or id-space 'c'opy) and subquery aggregate aliases
     * (COUNT/SUM/AVG numeric, GROUP_CONCAT string, MIN/MAX/SAMPLE id
     * picks). */
   private def valueKinds(p: Pattern): Map[String, Char] = p match {
-    case Extend(i, v, e) => valueKinds(i) + (v -> bindKind(e))
+    case Extend(i, v, e) => valueKinds(i) + (v -> spaceOf(e, body = true))
     case SubSelect(q) => q.projection.collect {
-      case PAgg(AggCall(f, _, _, _), alias) => alias -> (f match {
-        case "COUNT" | "SUM" | "AVG" => 'n'
-        case "GROUP_CONCAT"          => 's'
-        case _                       => 'c'
-      })
+      case PAgg(AggCall(f, _, _, _), alias) => alias -> aggKind(f)
     }.toMap
     case other => children(other).map(valueKinds).foldLeft(Map.empty[String, Char])(_ ++ _)
   }
@@ -719,9 +589,12 @@ object Sparql {
     case Extend(i, v, e) =>
       val in = predSpace(i)
       e match {
-        case BCopy(src) if in(src)          => in + v
-        case BCoalesce(vs) if vs.forall(in) => in + v
-        case _                              => in
+        case Var(src) if in(src) => in + v
+        case Call("COALESCE", vs) if vs.forall {
+          case Var(src) => in(src)
+          case _        => false
+        } => in + v
+        case _ => in
       }
     case other => children(other).flatMap(predSpace).toSet
   }
@@ -734,15 +607,11 @@ object Sparql {
     case other        => children(other).flatMap(nodeSpace).toSet
   }
 
-  /** Value kinds seen by the expression compiler: computed-value columns
-    * plus pred-space variables tagged 'p' (raw-IRI reads — STR(?p) is the
-    * column itself, never a nodes-table join). */
-  private def compileKinds(p: Pattern): Map[String, Char] =
-    valueKinds(p) ++ predSpace(p).iterator.map(_ -> 'p')
-
   /** Parsed query. `form` is SELECT, ASK, CONSTRUCT or DESCRIBE;
     * `projection` empty means `SELECT *`; `where` is the WHERE group's
-    * algebra tree; `orderBy` pairs are (variable-or-alias, ascending);
+    * algebra tree; `having` holds the HAVING conditions; `orderBy` pairs
+    * are (key, ascending), a key being a ?variable or alias (value
+    * ordering) or a numeric expression;
     * `template` holds CONSTRUCT's output triples;
     * `describeVars`/`describeIds` hold DESCRIBE's subject terms (group
     * variables / constant node ids). */
@@ -750,8 +619,8 @@ object Sparql {
                          distinct: Boolean,
                          where: Pattern,
                          groupBy: Seq[String] = Nil,
-                         private[Sparql] val havingAst: Seq[HExpr] = Nil,
-                         orderBy: Seq[(String, Boolean)] = Nil,
+                         having: Seq[Expr] = Nil,
+                         orderBy: Seq[(Expr, Boolean)] = Nil,
                          limit: Option[Long] = None,
                          offset: Option[Long] = None,
                          form: String = "SELECT",
@@ -764,28 +633,21 @@ object Sparql {
                            * NAMED set (scopes GRAPH patterns). Applied
                            * by pattern rewrite at run time. */
                          fromGraphs: Seq[String] = Nil,
-                         fromNamed: Seq[String] = Nil,
-                         /** Populated when ORDER BY contains at least
-                           * one EXPRESSION key: every key in query
-                           * order, Left = a plain variable/alias,
-                           * Right = a numeric value expression. The
-                           * plain subset still mirrors into [[orderBy]]
-                           * for validation/compat. */
-                         private[Sparql] val orderKeysAst:
-                           Seq[(Either[String, NExpr], Boolean)] = Nil) {
+                         fromNamed: Seq[String] = Nil) {
     /** Plain variables of the projection (empty for `SELECT *`). */
     def select: Seq[String] = projection.collect { case PVar(n) => n }
     /** Result-column names: plain variables and aggregate aliases. */
     private[Sparql] def outputs: Seq[String] =
       select ++ projection.collect { case PAgg(_, a) => a }
+    /** The aggregates of the projection, then those of HAVING. */
+    private[Sparql] def aggCalls: Seq[AggCall] =
+      projection.collect { case PAgg(call, _) => call } ++
+        having.flatMap(subExprs).collect { case Agg(call) => call }
     /** Variables aggregated in the NUMERIC value space (SUM/AVG args,
       * projected OR in HAVING) — these need [[Bgp.bindValues]] joins
       * that must SURVIVE until the aggregation step. */
     private[Sparql] def numericAggVars: Seq[String] =
-      (projection.collect { case PAgg(call, _) => call } ++
-        havingAst.flatMap(havingCalls)).collect {
-        case AggCall("SUM" | "AVG", _, Some(v), _) => v
-      }.distinct
+      aggCalls.collect { case AggCall("SUM" | "AVG", _, Some(v), _) => v }.distinct
     /** Node-space variables picked by MIN/MAX: with the nodes overload
       * these need their `_term` struct alive at aggregation time so the
       * pick can follow SPARQL value ordering ([[termOrderKey]]). */
@@ -796,259 +658,488 @@ object Sparql {
       }.distinct
     }
     private[Sparql] def isAggregate: Boolean =
-      groupBy.nonEmpty || havingAst.nonEmpty ||
+      groupBy.nonEmpty || having.nonEmpty ||
         projection.exists(_.isInstanceOf[PAgg])
   }
 
-  /** A comparison side; `predSide` = the OTHER side is a predicate-
-    * position variable, so an IRI constant must compile to its RAW
-    * string (the form the pred column carries), not the hashed id. */
-  private def compileT(t: FTerm, predSide: Boolean): Column = t match {
-    case FTVar(n)         => col(n)
-    case FTConst(id, raw) => lit(if (predSide) raw.getOrElse(id) else id)
+  // ---------- typing and compilation ---------------------------------------
+
+  /** What an expression may read: the computed-value kinds ('n'umeric,
+    * 's'tring, id-space 'c'opy) of BIND variables and aggregate aliases,
+    * the variables bound in predicate / GRAPH position (raw IRIs, which
+    * includes BIND copies of them), the variables in scope, where the
+    * expression stands (`ctx`, for messages) and, under HAVING, each
+    * aggregate's column. */
+  private final case class Env(kinds: Map[String, Char], pred: Set[String],
+                               scope: Set[String] = Set.empty, ctx: String = "",
+                               alias: Map[AggCall, String] = Map.empty)
+
+  private val InOptional = "a FILTER inside OPTIONAL"
+
+  private def aggKind(func: String): Char = func match {
+    case "COUNT" | "SUM" | "AVG" => 'n'
+    case "GROUP_CONCAT"          => 's'
+    case _                       => 'c'
   }
 
-  /** A numeric expression's value with SPARQL's promotion: the integer
-    * family and double/float/decimal both read as double (exact for
-    * |v| < 2^53); everything else is NULL (excluded). A numeric BIND
-    * variable (`k(n) == 'n'`) is already a plain double column and is
-    * read directly. Arithmetic is IEEE double — bit-deterministic
-    * cross-engine — EXCEPT division by zero, which is NULL -> excluded
-    * (see the `/` case below), deliberately not xsd:double's INF. */
-  private def numValue(t: NExpr, k: Map[String, Char]): Column = t match {
-    case NVar(v) if k.get(v).contains('n') => col(v)
-    case NVar(v) =>
-      val term = col(s"${v}_term")
-      coalesce(TypedLiterals.asLong(term).cast("double"),
-        TypedLiterals.asDouble(term))
-    case NNum(d)    => lit(d)
-    case NStrLen(a) => length(strValue(a, k)).cast("double")
-    case NArith(l, op, r) =>
-      val (a, b) = (numValue(l, k), numValue(r, k))
-      op match {
-        case "+" => a + b
-        case "-" => a - b
-        case "*" => a * b
-        // division by zero is NULL -> the row is EXCLUDED (SPARQL
-        // error-means-exclude), deliberately diverging from IEEE's INF:
-        // NULL is deterministic cross-engine (mirror: a / nullif(b, 0))
-        // where signed-infinity rendering is not, and ANSI Spark would
-        // otherwise throw mid-job
-        case "/" => try_divide(a, b)
-      }
-    case NFn(func, a) =>
-      val x = numValue(a, k)
-      func match {
-        case "ABS"   => abs(x)
-        // floor/ceil return LONG in Spark — cast back so the whole
-        // numeric space stays double (exact for |v| < 2^53)
-        case "CEIL"  => ceil(x).cast("double")
-        case "FLOOR" => floor(x).cast("double")
-        case "ROUND" => floor(x + 0.5).cast("double")
-      }
-    case NCast(v, toInt) =>
-      val base = k.get(v) match {
-        case Some('n') => col(v)
-        case Some('s') => col(v).try_cast("double")
-        case _ =>
-          val term = col(s"${v}_term")
-          coalesce(TypedLiterals.asLong(term).cast("double"),
-            TypedLiterals.asDouble(term),
-            when(term("kind") === RdfTerm.LITERAL &&
-              term("dt").isin(RdfTerm.XsdString, RdfTerm.RdfLangString),
-              term("value").try_cast("double")))
-      }
-      // XPath truncation toward zero; try_cast keeps NaN/overflow as
-      // NULL -> excluded instead of an ANSI throw
-      if (toInt) base.try_cast("long").cast("double") else base
-    case NTimeFn(func, v) =>
-      val term = col(s"${v}_term")
-      val ts = coalesce(TypedLiterals.asTimestamp(term),
-        TypedLiterals.asDate(term).cast("timestamp"))
-      (func match {
-        case "YEAR"    => year(ts)
-        case "MONTH"   => month(ts)
-        case "DAY"     => dayofmonth(ts)
-        case "HOURS"   => hour(ts)
-        case "MINUTES" => minute(ts)
-        case "SECONDS" => second(ts)
-      }).cast("double")
+  /** A node and every node under it. */
+  private def subExprs(e: Expr): Seq[Expr] = e match {
+    case Call(_, args) => e +: args.flatMap(subExprs)
+    case _             => Seq(e)
   }
 
-  /** A string-space operand's value. Every non-constant case reads the
-    * variable's `_term` struct and yields NULL outside its SPARQL
-    * domain, so the enclosing predicate excludes the row
-    * (error-means-exclude):
-    *  - STR(?v): lexical form of a literal OR the IRI string (STR of a
-    *    blank node is an error per SPARQL);
-    *  - bare ?v: string-family literals ONLY (simple / xsd:string /
-    *    rdf:langString) — applying a string function to an IRI or a
-    *    number without STR() is a SPARQL type error;
-    *  - LANG(?v): the tag, '' for untagged literals, error for
-    *    non-literals;
-    *  - DATATYPE(?v): the datatype IRI (always materialized by the
-    *    parser — rdf:langString for tagged literals).
-    * A string BIND variable (`k(v) == 's'`) is already a plain string
-    * column — bare and STR() reads take it directly; NULL-propagation
-    * through CONCAT/LCASE/UCASE keeps error-means-exclude intact. */
-  private def strValue(t: STerm, k: Map[String, Char]): Column = t match {
-    case SVar(v, _) if k.get(v).contains('s') => col(v)
-    // a predicate-position variable IS the raw IRI string — STR(?p)
-    // reads the column directly, no nodes-table join (a join on the
-    // hashed-id key would silently never match); bare reads are
-    // rejected at validate (string functions over an IRI are a SPARQL
-    // type error)
-    case SVar(v, true) if k.get(v).contains('p') => col(v)
-    case SVar(v, true) =>
-      val term = col(s"${v}_term")
-      when(term("kind") === RdfTerm.IRI || term("kind") === RdfTerm.LITERAL,
-        term("value"))
-    case SVar(v, false) =>
-      val term = col(s"${v}_term")
-      when(term("kind") === RdfTerm.LITERAL &&
-        term("dt").isin(RdfTerm.XsdString, RdfTerm.RdfLangString), term("value"))
-    case SLang(v) =>
-      val term = col(s"${v}_term")
-      when(term("kind") === RdfTerm.LITERAL, coalesce(term("lang"), lit("")))
-    case SDt(v) =>
-      val term = col(s"${v}_term")
-      when(term("kind") === RdfTerm.LITERAL, term("dt"))
-    case SConst(s)        => lit(s)
-    case SCase(a, true)   => upper(strValue(a, k))
-    case SCase(a, false)  => lower(strValue(a, k))
-    case SConcat(as)      => concat(as.map(strValue(_, k)): _*)
-    case SSubstr(a, s, l) =>
-      strValue(a, k).substr(numValue(s, k).cast("int"),
-        l.map(numValue(_, k).cast("int")).getOrElse(lit(Int.MaxValue)))
-    case SCut(a, b, before) =>
-      val (h, n) = (strValue(a, k), strValue(b, k))
-      val pos = instr(h, n)
-      // instr(h, "") = 1, so the spec's empty-needle cases fall out:
-      // STRBEFORE(x, "") = "" (substr len 0), STRAFTER(x, "") = x
-      if (before) when(pos > 0, h.substr(lit(1), pos - 1)).otherwise(
-        when(h.isNotNull && n.isNotNull, lit("")))
-      else when(pos > 0, h.substr(pos + length(n), lit(Int.MaxValue))).otherwise(
-        when(h.isNotNull && n.isNotNull, lit("")))
-    case SReplace(a, pattern, repl, ci) =>
-      regexp_replace(strValue(a, k),
-        lit(if (ci) "(?i)" + pattern else pattern), lit(repl))
-    case SHash(algo, a) =>
-      val x = strValue(a, k)
-      algo match {
-        case "MD5"    => md5(x.cast("binary"))
-        case "SHA1"   => sha1(x.cast("binary"))
-        case "SHA256" => sha2(x.cast("binary"), 256)
-        case "SHA384" => sha2(x.cast("binary"), 384)
-        case "SHA512" => sha2(x.cast("binary"), 512)
-      }
-    case SEncode(a) => EncodeForUri(strValue(a, k))
+  /** The value space of a node, from the table in the header: 'n'
+    * numeric, 's' string, 'd' xsd:date, 'D' xsd:dateTime, 'c' node id,
+    * 'b' boolean. A constant's comes from its datatype, an operator's or
+    * function's from its signature. A variable takes the space its parent
+    * reads it in ('t': see [[typeCheck]]); as a BIND body (`body`) it is
+    * a copy of its binding ('c'), and a plain literal is a string. */
+  private def spaceOf(e: Expr, body: Boolean = false): Char = e match {
+    case Var(_)                     => if (body) 'c' else 't'
+    case Lit(_, None, None) if body => 's'
+    case Lit(_, None, Some(dt)) if TypedLiterals.integerTypes.contains(dt) ||
+                                   TypedLiterals.doubleTypes.contains(dt) => 'n'
+    case Lit(_, None, Some(TypedLiterals.dateType))     => 'd'
+    case Lit(_, None, Some(TypedLiterals.dateTimeType)) => 'D'
+    case Iri(_) | Lit(_, _, _)      => 'c'
+    case Agg(_)                     => 'n'
+    case Call("IF", Seq(_, t, _))   => spaceOf(t, body = true)
+    case Call(op, _) if ArithOps(op) => 'n'
+    case Call(op, _) if BoolOps(op) || CmpOps(op) || op == "IN" || op == "NOT IN" => 'b'
+    case Call(fn, _)                => Functions.get(fn).fold('?')(_._2)
   }
 
-  private def compileF(e: FExpr, k: Map[String, Char]): Column = e match {
-    case FBound(v)         => col(v).isNotNull
-    case FNot(x)           => !compileF(x, k)
-    case FAnd(a, b)        => compileF(a, k) && compileF(b, k)
-    case FOr(a, b)         => compileF(a, k) || compileF(b, k)
-    case FCmp(l, op, r)    =>
-      def isPred(t: FTerm): Boolean = t match {
-        case FTVar(n) => k.get(n).contains('p')
-        case _        => false
+  /** §17.3's operator mapping for a comparison: the space its operands
+    * meet in. A variable takes the space of what it is compared with;
+    * every other operand brings its own. Temporal wins, then string (a
+    * string expression, not a plain literal, selects it), then numeric (a
+    * number, or an ordering operator); else the operands compare as RDF
+    * terms: raw IRIs ('p') beside a predicate variable, node ids ('c'). */
+  private def cmpSpace(op: String, l: Expr, r: Expr, pred: Set[String]): Char = {
+    val fixed = Seq(l, r).filterNot(_.isInstanceOf[Var]).map(spaceOf(_))
+    fixed.find(s => s == 'd' || s == 'D').orElse(fixed.find(_ == 's')).getOrElse(
+      if ((op != "=" && op != "!=") || fixed.contains('n')) 'n'
+      else if (Seq(l, r).exists { case Var(v) => pred(v); case _ => false }) 'p'
+      else 'c')
+  }
+
+  /** The typing pass: checks `e` as `want` — 'b' a condition, '*' a BIND
+    * body, 'n' a numeric ORDER BY key — node by node against the table in
+    * the header, raises the value-space rejections, and returns the node
+    * variables read through their nodes-table `_term` struct. */
+  private def typeCheck(e: Expr, want: Char, env: Env): Seq[String] = {
+    import env.{ctx, kinds, pred}
+    val idOnly = "FILTERs inside OPTIONAL are id-space only in this fragment " +
+      "(= / != / BOUND over the group's variables) — value-space conditions " +
+      "belong in a subquery or the outer group"
+    // a variable read as 'n' numeric, 's' string literal, 'S' STR, 't'
+    // term structure, 'd' temporal, 'x' cast, 'c' id, 'i' RDF-term IN
+    // list or 'B' bound-ness
+    def read(v: String, how: Char): Seq[String] = {
+      if (!env.scope(v)) fail(ctx match {
+        case "FILTER" => s"FILTER reads ?$v, which is bound neither by the " +
+          "patterns, a BIND, nor a subquery"
+        case InOptional => "a FILTER inside an OPTIONAL group may only read the " +
+          s"group's own variables — ${if (how == 'B') "BOUND over" else "operand"} " +
+          s"?$v is bound elsewhere; move the condition to the outer group to " +
+          "filter ROWS instead of conditioning the match"
+        case "ORDER BY" => s"ORDER BY expression reads ?$v, which is not a " +
+          "result column — order by projected variables or aggregate aliases"
+        case _ => s"$ctx reads ?$v, which is bound neither by the patterns " +
+          "before it, a subquery, nor an earlier BIND"
+      })
+      kinds.get(v).foreach { k =>
+        (if (how == 'S') 's' else how) match {
+          case 't' => fail(s"$ctx: ?$v is a BIND value, not an RDF term — " +
+            "LANG/DATATYPE/ISIRI-family tests cannot apply to it")
+          case 'c' if k != 'c' => fail(s"$ctx: ?$v is a BIND value — compare " +
+            s"it in its value space (a numeric comparison, or STR(?$v) = " +
+            "\"...\" for strings), not by node id")
+          case 'n' if k != 'n' => fail(s"$ctx: ?$v is not a numeric BIND value")
+          case 'd' => fail(s"$ctx: ?$v is a computed value, not an RDF " +
+            "term — temporal comparisons read xsd:date/xsd:dateTime literals")
+          case 'i' if k == 'n' => fail(s"$ctx: ?$v is a numeric BIND " +
+            "value — an RDF-term IN list cannot match it; use numbers")
+          case 'x' if k == 'c' => fail(s"$ctx: ?$v is an id-space BIND " +
+            "copy — cast the original pattern variable instead")
+          case 's' if k != 's' => fail(s"$ctx: ?$v is not a string BIND value")
+          case _ => ()
+        }
       }
-      val (lc, rc) = (compileT(l, isPred(r)), compileT(r, isPred(l)))
-      if (op == "=") lc === rc else lc =!= rc
-    case FNumCmp(l, op, r) =>
-      val (a, b) = (numValue(l, k), numValue(r, k))
-      op match {
-        case "="  => a === b
-        case "!=" => a =!= b
-        case "<"  => a < b
-        case "<=" => a <= b
-        case ">"  => a > b
-        case ">=" => a >= b
+      if (pred(v)) how match {
+        case 'n' => fail(s"$ctx reads ?$v numerically, but ?$v binds " +
+          "raw predicate/graph IRIs")
+        case 's' => fail(s"$ctx reads ?$v as a string literal, but ?$v " +
+          s"binds predicate IRIs — wrap it: STR(?$v)")
+        case 't' => fail(s"$ctx applies an RDF-term test to ?$v, which " +
+          "binds predicate IRIs directly (ISIRI would be vacuously true; " +
+          "LANG/DATATYPE are type errors on IRIs)")
+        case 'd' => fail(s"$ctx compares ?$v temporally, but ?$v binds " +
+          "raw predicate/graph IRIs")
+        case 'x' => fail(s"$ctx casts ?$v, but ?$v binds raw " +
+          "predicate/graph IRIs — an xsd constructor cast of an IRI is " +
+          "a SPARQL type error")
+        // STR reads the raw IRI; id comparisons and IN lists compile raw IRIs
+        case _ => ()
       }
-    case FStrFn(func, a, n) =>
-      val (h, needle) = (strValue(a, k), strValue(n, k))
-      func match {
-        case "STRSTARTS" => h.startsWith(needle)
-        case "STRENDS"   => h.endsWith(needle)
-        case "CONTAINS"  => h.contains(needle)
+      if ("ciB".contains(how) || kinds.contains(v) || pred(v)) Nil else Seq(v)
+    }
+    // one argument of `fn` as parameter `p` (see [[Functions]])
+    def arg(fn: String, x: Expr, p: Char): Seq[String] = (p, x) match {
+      case ('n' | 's', Var(v))            => read(v, p)
+      case ('s', Lit(_, None, None))       => Nil
+      case ('s', Lit(_, _, _))             => fail("string functions take PLAIN " +
+        "string literals (no @lang / ^^dt) in this fragment")
+      case ('n' | 's' | 'b', _) if spaceOf(x) == p => check(x)
+      case ('n', _) => fail("arithmetic takes ?vars and numbers — use STRLEN(...) " +
+        "for string lengths; STR/LANG/DATATYPE values are strings")
+      case ('s', _) => fail("expected ?var, STR/LANG/DATATYPE/CONCAT/LCASE/UCASE(...) " +
+        s"or a plain string literal, found $x")
+      case ('b', _) => fail(s"expected a comparison (= != < <= > >=) in $ctx, found $x")
+      case ('*', _) => body(x)
+      case ('l', Lit(_, None, None)) => Nil
+      case ('l', _) => fail(s"$fn takes a plain string literal there, found $x")
+      case ('f', Lit("i", None, None)) => Nil
+      case ('f', Lit(f, _, _)) => fail(s"unsupported $fn flags '$f' — only " +
+        "\"i\" (case-insensitive) is in this fragment")
+      case ('f', _) => fail(s"$fn flags must be a plain string literal, found $x")
+      case ('I', Iri(RdfTerm.RdfLangString)) => fail("STRDT cannot mint " +
+        "rdf:langString — a language-tagged literal needs a tag; use STRLANG")
+      case ('I', Iri(_)) => Nil
+      case ('I', _) => fail(s"$fn takes a datatype <iri>, found $x")
+      case ('V', Var(_)) => Nil // a pattern binding: checked with the BIND
+      case (_, Var(v)) => read(v, p)
+      case _ => fail(s"$fn takes a ?variable, found $x")
+    }
+    def call(fn: String, args: Seq[Expr]): Seq[String] = {
+      val (spec, _) = Functions.getOrElse(fn, fail(s"unknown function $fn"))
+      val ps = params(spec, args.size).getOrElse(fail(
+        if (spec.endsWith("+")) s"$fn takes at least two " +
+          (if (fn == "COALESCE") "?variables" else "arguments")
+        else s"$fn does not take ${args.size} argument(s)"))
+      val terms = args.zip(ps).flatMap { case (a, p) => arg(fn, a, p) }
+      if (fn == "SAMETERM") (args: @unchecked) match {
+        case Seq(Var(a), Var(b)) if pred(a) != pred(b) =>
+          fail(s"$ctx: SAMETERM(?$a, ?$b) compares across value spaces — " +
+            "one binds raw predicate IRIs, the other hashed node ids, so " +
+            "the test is silently constant")
+        case _ => ()
       }
-    case FRegex(a, pattern, ci) =>
-      strValue(a, k).rlike(if (ci) "(?i)" + pattern else pattern)
-    case FStrCmp(l, eq, r) =>
-      if (eq) strValue(l, k) === strValue(r, k)
-      else strValue(l, k) =!= strValue(r, k)
-    case FTimeCmp(l, op, r, isDt) =>
-      def side(t: TTerm): Column = t match {
-        case TTVar(n) =>
-          val term = col(s"${n}_term")
-          if (isDt) TypedLiterals.asTimestamp(term) else TypedLiterals.asDate(term)
-        case TTConst(v) =>
-          if (isDt) lit(v).try_cast("timestamp") else lit(v).try_cast("date")
-      }
-      val (a, b) = (side(l), side(r))
-      op match {
-        case "="  => a === b
-        case "!=" => a =!= b
-        case "<"  => a < b
-        case "<=" => a <= b
-        case ">"  => a > b
-        case ">=" => a >= b
-      }
-    case FLangMatches(a, range) =>
-      val tag = strValue(a, k)
-      if (range == "*") tag.isNotNull && tag =!= ""
-      else {
-        val lt = lower(tag)
-        // Locale.ROOT: the tag side uses Spark's locale-independent
-        // lower(); a default-locale toLowerCase would fold 'I' wrongly
-        // under e.g. a Turkish JVM locale (ADVICE r6)
-        val r = range.toLowerCase(java.util.Locale.ROOT)
-        lt === r || lt.startsWith(r + "-")
-      }
-    case FIn(v, items, neg) =>
-      val base =
-        if (items.forall(_.isInstanceOf[FONum]))
-          numValue(NVar(v), k).isin(items.collect { case FONum(d) => d }: _*)
-        else if (k.get(v).contains('s'))
-          col(v).isin(items.map {
-            case FOLit(s2, None, None) => s2
+      terms
+    }
+    // a BIND body (or IF branch): a copy, a computed RDF term, or a value
+    def body(x: Expr): Seq[String] = x match {
+      case Var(_) => Nil // a copy: checked with the BIND
+      case Call("IF", args @ Seq(_, t, f)) =>
+        val terms = call("IF", args)
+        if (spaceOf(t, body = true) != spaceOf(f, body = true))
+          fail("IF branches in BIND mix value kinds — both must be numeric, " +
+            "both string, or both id-space bindings")
+        terms
+      case Call(fn, args) if BindOnly(fn) => call(fn, args)
+      case Lit(_, None, _) if "sn".contains(spaceOf(x, body = true)) => Nil
+      case Lit(_, _, _) => fail("BIND string constants must be plain (no @lang / ^^dt)")
+      case _ if "sn".contains(spaceOf(x)) => check(x)
+      case _ => fail("expected a numeric/string expression, IF(...), " +
+        s"COALESCE(...), ?var or a plain string literal in BIND, found $x")
+    }
+    def check(x: Expr): Seq[String] = x match {
+      case Var(_) | Iri(_) | Lit(_, _, _) => Nil // read by the parent
+      case Agg(call) =>
+        if (ctx != "HAVING") fail(s"aggregates are only allowed in SELECT and " +
+          s"HAVING, found ${call.func} in $ctx")
+        if (aggKind(call.func) != 'n')
+          fail(s"HAVING supports COUNT/SUM/AVG comparisons only — ${call.func} " +
+            "yields an id/string value; filter those with FILTER before aggregation")
+        Nil
+      case Call(op, _) if ctx == InOptional &&
+          !(BoolOps(op) || op == "=" || op == "!=" || op == "BOUND") => fail(idOnly)
+      case Call(op, _) if ctx == "HAVING" && !(BoolOps(op) || CmpOps(op)) =>
+        fail(s"HAVING compares an aggregate to a number, found $x")
+      case Call(op, args) if BoolOps(op) => args.flatMap(arg(op, _, 'b'))
+      case Call(op, Seq(l, r)) if CmpOps(op) =>
+        // HAVING: an aggregate against a (negated) number
+        def number(n: Expr): Boolean = n match {
+          case Call("-", Seq(Lit("0", None, Some(XsdIntegerIri)), m)) => number(m)
+          case _ => n.isInstanceOf[Lit] && spaceOf(n) == 'n'
+        }
+        if (ctx == "HAVING") (l, r) match {
+          case (Agg(_), n) if number(n) => ()
+          case (Agg(_), n) => fail(s"HAVING compares an aggregate to a number, found $n")
+          case _ => fail("expected an aggregate (COUNT/SUM/AVG/MIN/MAX/SAMPLE/" +
+            s"GROUP_CONCAT), found $l")
+        }
+        val ops = Seq(l, r)
+        ops.foreach(o => if (!o.isInstanceOf[Var] && spaceOf(o) == 'b')
+          fail(s"a comparison takes values, found the condition $o"))
+        val sp = cmpSpace(op, l, r, pred)
+        if (ctx == InOptional && sp != 'c' && sp != 'p') fail(idOnly)
+        sp match {
+          case 'd' | 'D' =>
+            if (ops.map(spaceOf(_)).exists(s => (s == 'd' || s == 'D') && s != sp))
+              fail("xsd:date and xsd:dateTime do not compare in SPARQL — use one " +
+                "type on both sides")
+            if (!ops.forall(o => o.isInstanceOf[Var] || spaceOf(o) == sp))
+              fail("temporal comparisons take ?vars and xsd:date/xsd:dateTime " +
+                "typed literals")
+          case 's' =>
+            if (op != "=" && op != "!=")
+              fail("string value-space comparisons support = / != only — string " +
+                "ordering is collation-dependent and out of this fragment")
+            ops.foreach {
+              case Lit(_, None, None) => ()
+              case Lit(_, _, _) => fail("string-space comparisons take plain " +
+                "string literals (no @lang / ^^dt)")
+              case o if spaceOf(o) == 'n' => fail("a string-space side cannot " +
+                "compare to a number — wrap the variable (not the function) for " +
+                "numeric space")
+              case _ => ()
+            }
+          case 'n' =>
+            if (!ops.forall(o => o.isInstanceOf[Var] || spaceOf(o) == 'n'))
+              fail("value-space comparisons take ?vars or numbers — IRI/literal " +
+                "constants compare by node id with = / != only")
+          case _ => (l, r) match {
+            case (Var(a), Var(b)) if pred(a) != pred(b) =>
+              fail(s"$ctx compares ?$a with ?$b across value spaces — one " +
+                "binds raw predicate IRIs, the other hashed node ids, so " +
+                "the comparison is silently constant")
+            case (Var(n), Lit(_, _, _)) if pred(n) => fail(s"$ctx compares " +
+              s"predicate variable ?$n with a literal — predicates are IRIs; " +
+              "compare against an <iri>")
+            case (Lit(_, _, _), Var(n)) if pred(n) => fail(s"$ctx compares " +
+              s"predicate variable ?$n with a literal — predicates are IRIs; " +
+              "compare against an <iri>")
+            case _ => ()
+          }
+        }
+        val how = sp match {
+          case 'd' | 'D' => 'd'
+          case 'p'       => 'c'
+          case s         => s
+        }
+        ops.flatMap {
+          case Var(v) => read(v, how)
+          case o      => if (ctx == "HAVING" && !o.isInstanceOf[Agg]) Nil else check(o)
+        }
+      case Call(op, Seq(a, b)) if ArithOps(op) => arg(op, a, 'n') ++ arg(op, b, 'n')
+      case Call(op @ ("IN" | "NOT IN"), left +: items) =>
+        val v = left match {
+          case Var(n) => n
+          case other  => fail(s"IN takes a ?variable on the left, found $other")
+        }
+        if (items.isEmpty || !items.forall(i => i.isInstanceOf[Iri] || i.isInstanceOf[Lit]))
+          fail("IN lists take constants (IRIs, literals, numbers)")
+        val numbers = items.count(spaceOf(_) == 'n')
+        if (numbers != 0 && numbers != items.size)
+          fail("an IN list mixes numbers with RDF terms — use one value space")
+        if (numbers > 0) read(v, 'n')
+        else {
+          if (pred(v) && !items.forall(_.isInstanceOf[Iri]))
+            fail(s"$ctx: ?$v binds raw predicate/graph IRIs — its IN list " +
+              "must contain <iri>s only")
+          if (kinds.get(v).contains('s')) items.foreach {
+            case Lit(_, None, None) => ()
             case other => fail(s"a string BIND IN-list takes plain string " +
               s"literals, found $other")
-          }: _*)
-        else if (k.get(v).contains('p'))
-          col(v).isin(items.collect { case FOIri(iri) => iri }: _*)
-        else
-          col(v).isin(items.map {
-            case FOIri(iri)          => Bgp.iriId(iri)
-            case FOLit(lv, lang, dt) =>
-              Bgp.litId(lv, dt.getOrElse(RdfTerm.XsdString), lang)
-            case other => fail(s"unexpected IN item $other")
-          }: _*)
-      if (neg) !base else base
-    case FSameTerm(a, b) => col(a) === col(b)
-    case FKindTest(func, v) =>
-      val kind = col(s"${v}_term")("kind")
-      func match {
-        case "ISIRI"     => kind === RdfTerm.IRI
-        case "ISLITERAL" => kind === RdfTerm.LITERAL
-        case "ISBLANK"   => kind === RdfTerm.BNODE
-      }
+          }
+          read(v, 'i')
+        }
+      case Call(fn, _) if BindOnly(fn) =>
+        fail(s"$fn(...) is a BIND body in this fragment, not an operand in $ctx")
+      case Call(fn, args) => call(fn, args)
+    }
+    want match {
+      case '*' => body(e)
+      case 'n' if spaceOf(e) != 'n' && !e.isInstanceOf[Var] =>
+        fail(s"ORDER BY takes ?vars and numeric expressions in this fragment, found $e")
+      case p   => arg("", e, p)
+    }
   }
 
-  /** A BIND right-hand side's value column. */
-  private def compileB(b: BExpr, k: Map[String, Char]): Column = b match {
-    case BNum(e)        => numValue(e, k)
-    case BStr(t)        => strValue(t, k)
-    case BCopy(v)       => col(v)
-    case BCoalesce(vs)  => coalesce(vs.map(col): _*)
-    case BIf(cond, t, e) =>
-      when(compileF(cond, k), compileB(t, k)).otherwise(compileB(e, k))
-    case BMintTerm(lex, dt, lang) =>
+  /** The numeric value of a `_term` struct, with SPARQL's promotion: the
+    * integer family and double/float/decimal both read as double (exact
+    * for |v| < 2^53); everything else is NULL (excluded). */
+  private def termNum(term: Column): Column =
+    coalesce(TypedLiterals.asLong(term).cast("double"), TypedLiterals.asDouble(term))
+
+  /** Lowers a type-checked expression to a Column. `as` is the space a
+    * variable or constant is read in — its parent's operand space ('t'
+    * never reaches here); every other node computes its own. Arithmetic
+    * is IEEE double (bit-deterministic cross-engine) EXCEPT division by
+    * zero, which is NULL -> excluded (a / nullif(b, 0) in other engines),
+    * deliberately not xsd:double's INF: signed-infinity rendering is not
+    * deterministic across engines, and ANSI Spark would throw mid-job. */
+  private def compile(e: Expr, as: Char, env: Env): Column = {
+    def c(x: Expr, a: Char): Column = compile(x, a, env)
+    def term(v: String): Column = col(s"${v}_term")
+    def cmp(op: String, a: Column, b: Column): Column = op match {
+      case "="  => a === b
+      case "!=" => a =!= b
+      case "<"  => a < b
+      case "<=" => a <= b
+      case ">"  => a > b
+      case ">=" => a >= b
+    }
+    e match {
+      // a computed value, a predicate IRI or a node id: the column itself
+      case Var(v) if env.kinds.contains(v) || "cp".contains(as) => col(v)
+      case Var(v) => as match {
+        case 'n' => termNum(term(v))
+        // a bare variable reads string-family literals only: a string
+        // function applied to an IRI or a number is a SPARQL type error
+        case 's' => when(term(v)("kind") === RdfTerm.LITERAL &&
+          term(v)("dt").isin(RdfTerm.XsdString, RdfTerm.RdfLangString), term(v)("value"))
+        case 'd' => TypedLiterals.asDate(term(v))
+        case 'D' => TypedLiterals.asTimestamp(term(v))
+      }
+      case Iri(iri) => lit(if (as == 'c') Bgp.iriId(iri) else iri)
+      case Lit(v, lang, dt) => as match {
+        case 'n' if TypedLiterals.integerTypes.contains(dt.get) =>
+          lit(v).try_cast("long").cast("double")
+        case 'n' => lit(v).try_cast("double")
+        case 's' => lit(v)
+        case 'd' => lit(v).try_cast("date")
+        case 'D' => lit(v).try_cast("timestamp")
+        case _   => lit(Bgp.litId(v, dt.getOrElse(RdfTerm.XsdString), lang))
+      }
+      case Agg(call)              => col(env.alias(call))
+      case Call("!", Seq(x))      => !c(x, 'b')
+      case Call("&&", Seq(a, b))  => c(a, 'b') && c(b, 'b')
+      case Call("||", Seq(a, b))  => c(a, 'b') || c(b, 'b')
+      case Call(op, Seq(l, r)) if CmpOps(op) =>
+        val sp = cmpSpace(op, l, r, env.pred)
+        cmp(op, c(l, sp), c(r, sp))
+      case Call(op, Seq(l, r)) if ArithOps(op) =>
+        val (a, b) = (c(l, 'n'), c(r, 'n'))
+        op match {
+          case "+" => a + b
+          case "-" => a - b
+          case "*" => a * b
+          case "/" => try_divide(a, b)
+        }
+      case Call(op @ ("IN" | "NOT IN"), (x @ Var(v)) +: items) =>
+        val sp =
+          if (items.forall(spaceOf(_) == 'n')) 'n'
+          else if (env.kinds.get(v).contains('s')) 's'
+          else if (env.pred(v)) 'p'
+          else 'c'
+        val in = c(x, sp).isin(items.map(c(_, sp)): _*)
+        if (op == "IN") in else !in
+      case Call("STR" | RdfTerm.XsdString, Seq(Var(v))) =>
+        // a string BIND value or a predicate variable's raw IRI as it is
+        if (env.kinds.contains(v) || env.pred(v)) col(v)
+        else when(term(v)("kind") === RdfTerm.IRI || term(v)("kind") === RdfTerm.LITERAL,
+          term(v)("value"))
+      case Call("LANG", Seq(Var(v))) =>
+        when(term(v)("kind") === RdfTerm.LITERAL, coalesce(term(v)("lang"), lit("")))
+      case Call("DATATYPE", Seq(Var(v))) =>
+        when(term(v)("kind") === RdfTerm.LITERAL, term(v)("dt"))
+      case Call("LCASE", Seq(a))  => lower(c(a, 's'))
+      case Call("UCASE", Seq(a))  => upper(c(a, 's'))
+      case Call("CONCAT", as2)    => concat(as2.map(c(_, 's')): _*)
+      case Call("SUBSTR", a +: n) =>
+        c(a, 's').substr(c(n.head, 'n').cast("int"),
+          n.lift(1).map(c(_, 'n').cast("int")).getOrElse(lit(Int.MaxValue)))
+      case Call(f @ ("STRBEFORE" | "STRAFTER"), Seq(a, b)) =>
+        val (h, n) = (c(a, 's'), c(b, 's'))
+        val pos = instr(h, n)
+        // instr(h, "") = 1, so the spec's empty-needle cases fall out:
+        // STRBEFORE(x, "") = "" (substr len 0), STRAFTER(x, "") = x;
+        // '' when the needle does not occur
+        val none = when(h.isNotNull && n.isNotNull, lit(""))
+        if (f == "STRBEFORE") when(pos > 0, h.substr(lit(1), pos - 1)).otherwise(none)
+        else when(pos > 0, h.substr(pos + length(n), lit(Int.MaxValue))).otherwise(none)
+      // REPLACE / REGEX: regex, REPLACE of ALL occurrences; the "i" flag is
+      // an inline (?i), the one flag both regex dialects spell identically
+      case Call("REPLACE", Seq(a, Lit(p, _, _), Lit(r, _, _), flags @ _*)) =>
+        regexp_replace(c(a, 's'), lit(if (flags.nonEmpty) "(?i)" + p else p), lit(r))
+      case Call("REGEX", Seq(a, Lit(p, _, _), flags @ _*)) =>
+        c(a, 's').rlike(if (flags.nonEmpty) "(?i)" + p else p)
+      // lowercase hex digests of the UTF-8 bytes (both engines render
+      // lowercase hex, so digests are cross-engine stable)
+      case Call("MD5", Seq(a))    => md5(c(a, 's').cast("binary"))
+      case Call("SHA1", Seq(a))   => sha1(c(a, 's').cast("binary"))
+      case Call(f @ ("SHA256" | "SHA384" | "SHA512"), Seq(a)) =>
+        sha2(c(a, 's').cast("binary"), f.drop(3).toInt)
+      case Call("ENCODE_FOR_URI", Seq(a)) => EncodeForUri(c(a, 's'))
+      case Call("STRLEN", Seq(a)) => length(c(a, 's')).cast("double")
+      case Call("ABS", Seq(a))    => abs(c(a, 'n'))
+      // floor/ceil return LONG in Spark — cast back so the whole numeric
+      // space stays double; ROUND = floor(x + 0.5) IS xsd/SPARQL
+      // round-half-toward-+INF (an engine round() is HALF_UP / HALF_EVEN)
+      case Call("CEIL", Seq(a))   => ceil(c(a, 'n')).cast("double")
+      case Call("FLOOR", Seq(a))  => floor(c(a, 'n')).cast("double")
+      case Call("ROUND", Seq(a))  => floor(c(a, 'n') + 0.5).cast("double")
+      // datetime accessors read xsd:dateTime by value and xsd:date at
+      // midnight (a deliberate widening of the spec's dateTime-only
+      // domain); UTC sessions make the fields deterministic
+      case Call(f @ ("YEAR" | "MONTH" | "DAY" | "HOURS" | "MINUTES" | "SECONDS"),
+                Seq(Var(v))) =>
+        val ts = coalesce(TypedLiterals.asTimestamp(term(v)),
+          TypedLiterals.asDate(term(v)).cast("timestamp"))
+        (f match {
+          case "YEAR"    => year(ts)
+          case "MONTH"   => month(ts)
+          case "DAY"     => dayofmonth(ts)
+          case "HOURS"   => hour(ts)
+          case "MINUTES" => minute(ts)
+          case "SECONDS" => second(ts)
+        }).cast("double")
+      // xsd:integer / xsd:double (§17.5) read the argument's OWN
+      // representation; a value outside the cast's lexical space is NULL,
+      // and xsd:integer truncates toward zero via try_cast (NaN / overflow
+      // excluded rather than thrown under ANSI)
+      case Call(iri, Seq(Var(v))) if Functions.get(iri).exists(_._1 == "x") =>
+        val base = env.kinds.get(v) match {
+          case Some('n') => col(v)
+          case Some(_)   => col(v).try_cast("double")
+          case None =>
+            coalesce(termNum(term(v)), when(term(v)("kind") === RdfTerm.LITERAL &&
+              term(v)("dt").isin(RdfTerm.XsdString, RdfTerm.RdfLangString),
+              term(v)("value").try_cast("double")))
+        }
+        if (iri == XsdIntegerIri) base.try_cast("long").cast("double") else base
+      case Call(f @ ("STRSTARTS" | "STRENDS" | "CONTAINS"), Seq(a, b)) =>
+        val (h, n) = (c(a, 's'), c(b, 's'))
+        f match {
+          case "STRSTARTS" => h.startsWith(n)
+          case "STRENDS"   => h.endsWith(n)
+          case "CONTAINS"  => h.contains(n)
+        }
+      // RFC 4647 basic filtering: "*" matches any non-empty tag, otherwise
+      // a case-insensitive tag or tag-prefix ("en" matches "en-GB"); the
+      // range folds with Locale.ROOT like Spark's lower()
+      case Call("LANGMATCHES", Seq(a, Lit(range, _, _))) =>
+        val tag = c(a, 's')
+        if (range == "*") tag.isNotNull && tag =!= ""
+        else {
+          val r = range.toLowerCase(java.util.Locale.ROOT)
+          lower(tag) === r || lower(tag).startsWith(r + "-")
+        }
+      case Call(f @ ("ISIRI" | "ISLITERAL" | "ISBLANK"), Seq(Var(v))) =>
+        term(v)("kind") === (f match {
+          case "ISIRI"     => RdfTerm.IRI
+          case "ISLITERAL" => RdfTerm.LITERAL
+          case "ISBLANK"   => RdfTerm.BNODE
+        })
+      // distinct terms have distinct ids (and predicates distinct raw IRIs)
+      case Call("SAMETERM", Seq(a, b)) => c(a, 'c') === c(b, 'c')
+      case Call("BOUND", Seq(Var(v)))  => col(v).isNotNull
+      // a NULL condition (an unbound read) takes the ELSE branch
+      case Call("IF", Seq(cond, t, f)) => when(c(cond, 'b'), c(t, as)).otherwise(c(f, as))
+      case Call("COALESCE", vs)        => coalesce(vs.map(c(_, 'c')): _*)
+      // STRDT / STRLANG mint the literal's node id at runtime — the
       // runtime twin of Bgp.litId: sha256 of `"value"[@lang]^^<dt>`
-      val suffix = lang.map("@" + _).getOrElse("") + "^^<" + dt + ">"
-      sha2(concat(lit("\""), strValue(lex, k), lit("\"" + suffix))
-        .cast("binary"), 256)
+      case Call(f @ ("STRDT" | "STRLANG"), Seq(lex, x)) =>
+        val suffix = x match {
+          case Iri(dt)      => "^^<" + dt + ">"
+          case Lit(t, _, _) => "@" + t + "^^<" + RdfTerm.RdfLangString + ">"
+          case other        => fail(s"$f: unexpected $other")
+        }
+        sha2(concat(lit("\""), c(lex, 's'), lit("\"" + suffix)).cast("binary"), 256)
+      case other => fail(s"unexpected expression $other")
+    }
   }
 
   // ---------- parser -------------------------------------------------------
@@ -1187,392 +1278,75 @@ object Sparql {
     r
   }
 
-  /** A comparison operand: variable, IRI/literal constant (kept raw —
-    * the SPACE the comparison lives in decides between the hashed node
-    * id and the raw string), numeric constant, or a string-space
-    * function projection. The operator and operand kinds decide the
-    * space — see [[filterExpr]]. */
-  private sealed trait FOperand
-  private final case class FOVar(n: String) extends FOperand
-  private final case class FOIri(iri: String) extends FOperand
-  private final case class FOLit(v: String, lang: Option[String], dt: Option[String]) extends FOperand
-  private final case class FONum(d: Double) extends FOperand
-  private final case class FOStrFn(t: STerm) extends FOperand
+  private val AggNames = Set("COUNT", "MIN", "MAX", "SAMPLE", "GROUP_CONCAT", "SUM", "AVG")
 
-  /** `STR(?v)` / `LANG(?v)` / `DATATYPE(?v)` / `CONCAT(sarg, ...)` /
-    * `LCASE(sarg)` / `UCASE(sarg)` — the string-space expressions usable
-    * as comparison sides, string-function args and BIND bodies. */
-  private def strFnOperand(c: Cursor): Option[STerm] = c.peekOrFail match {
-    case TSym(s @ ("STR" | "LANG" | "DATATYPE")) =>
-      c.next(); c.takeSym("(")
-      val v = varName(c)
-      c.takeSym(")")
-      Some(s match {
-        case "STR"      => SVar(v, viaStr = true)
-        case "LANG"     => SLang(v)
-        case "DATATYPE" => SDt(v)
-      })
-    case TSym(s @ ("LCASE" | "UCASE")) =>
-      c.next(); c.takeSym("(")
-      val a = strArg(c)
-      c.takeSym(")")
-      Some(SCase(a, upper = s == "UCASE"))
-    case TSym(s @ ("MD5" | "SHA1" | "SHA256" | "SHA384" | "SHA512")) =>
-      c.next(); c.takeSym("(")
-      val a = strArg(c)
-      c.takeSym(")")
-      Some(SHash(s, a))
-    case TSym("ENCODE_FOR_URI") =>
-      c.next(); c.takeSym("(")
-      val a = strArg(c)
-      c.takeSym(")")
-      Some(SEncode(a))
-    // xsd:string(?v) — the constructor cast into the string space, the
-    // same read as STR(?v) (lexical form of a literal / the IRI string)
-    case TIri(RdfTerm.XsdString) if c.peek2.contains(TSym("(")) =>
-      c.next(); c.takeSym("(")
-      val v = varName(c)
-      c.takeSym(")")
-      Some(SVar(v, viaStr = true))
-    case TSym("CONCAT") =>
-      c.next(); c.takeSym("(")
-      val args = Seq.newBuilder[STerm]
-      args += strArg(c)
-      while (c.atSym(",")) { c.takeSym(","); args += strArg(c) }
-      c.takeSym(")")
-      val as = args.result()
-      if (as.sizeIs < 2) fail("CONCAT takes at least two arguments")
-      Some(SConcat(as))
-    case TSym("SUBSTR") =>
-      c.next(); c.takeSym("(")
-      val a = strArg(c)
-      c.takeSym(",")
-      val start = nexpr(c)
-      val len = if (c.atSym(",")) { c.takeSym(","); Some(nexpr(c)) } else None
-      c.takeSym(")")
-      Some(SSubstr(a, start, len))
-    case TSym(s @ ("STRBEFORE" | "STRAFTER")) =>
-      c.next(); c.takeSym("(")
-      val a = strArg(c)
-      c.takeSym(",")
-      val b = strArg(c)
-      c.takeSym(")")
-      Some(SCut(a, b, before = s == "STRBEFORE"))
-    case TSym("REPLACE") =>
-      c.next(); c.takeSym("(")
-      val a = strArg(c)
-      c.takeSym(",")
-      val pat = c.next() match {
-        case TLit(v, None, None) => v
-        case t => fail(s"REPLACE takes a plain string literal pattern, found $t")
+  /** One §17 expression, by the precedence ladder in the header:
+    * `||` < `&&` < `!` < comparison and IN < `+ -` < `* /` < unary `-`.
+    * `!` negates a whole comparison (`!?a = ?b` is `!(?a = ?b)`). */
+  private def expression(c: Cursor): Expr = {
+    def binary(ops: Set[String], operand: () => Expr): Expr = {
+      var e = operand()
+      while (c.peek.exists { case TSym(s) => ops(s); case _ => false }) {
+        val op = c.next().asInstanceOf[TSym].s
+        e = Call(op, Seq(e, operand()))
       }
-      c.takeSym(",")
-      val repl = c.next() match {
-        case TLit(v, None, None) => v
-        case t => fail(s"REPLACE takes a plain string literal replacement, found $t")
-      }
-      val ci = if (c.atSym(",")) {
-        c.takeSym(",")
-        c.next() match {
-          case TLit("i", None, None) => true
-          case TLit(f, _, _) => fail(s"unsupported REPLACE flags '$f' — only " +
-            "\"i\" (case-insensitive) is in this fragment")
-          case t => fail(s"REPLACE flags must be a plain string literal, found $t")
-        }
-      } else false
-      c.takeSym(")")
-      Some(SReplace(a, pat, repl, ci))
-    case _ => None
-  }
-
-  /** A string-space argument: a string expression, a bare variable
-    * (string-family literal read — or a string BIND column) or a plain
-    * string constant. */
-  private def strArg(c: Cursor): STerm = strFnOperand(c).getOrElse(c.next() match {
-    case TVar(n)             => SVar(n, viaStr = false)
-    case TLit(v, None, None) => SConst(v)
-    case TLit(_, _, _)       => fail("string functions take PLAIN string " +
-      "literals (no @lang / ^^dt) in this fragment")
-    case t => fail(s"expected ?var, STR/LANG/DATATYPE/CONCAT/LCASE/UCASE(...) " +
-      s"or a plain string literal, found $t")
-  })
-
-  /** Numeric value-space expression parsing — the usual two precedence
-    * levels (`* /` over `+ -`), parentheses, unary minus and STRLEN. */
-  private def natom(c: Cursor): NExpr = c.peekOrFail match {
-    case TSym("(") => c.takeSym("("); val e = nexpr(c); c.takeSym(")"); e
-    case TSym("-") => c.takeSym("-"); NArith(NNum(0), "-", natom(c))
-    case TSym("STRLEN") =>
-      c.next(); c.takeSym("(")
-      val a = strArg(c)
-      c.takeSym(")")
-      NStrLen(a)
-    case TSym(f @ ("ABS" | "CEIL" | "FLOOR" | "ROUND")) =>
-      c.next(); c.takeSym("(")
-      val a = nexpr(c)
-      c.takeSym(")")
-      NFn(f, a)
-    case TSym(f @ ("YEAR" | "MONTH" | "DAY" | "HOURS" | "MINUTES" |
-                   "SECONDS")) =>
-      c.next(); c.takeSym("(")
-      val v = varName(c)
-      c.takeSym(")")
-      NTimeFn(f, v)
-    case TIri(iri) if NumCastIris.contains(iri) =>
-      c.next(); c.takeSym("(")
-      val v = varName(c)
-      c.takeSym(")")
-      NCast(v, toInt = iri == XsdIntegerIri)
-    case TNum(v) => c.next(); NNum(v.toDouble)
-    case TDbl(v) => c.next(); NNum(v)
-    case TVar(n) => c.next(); NVar(n)
-    case t => fail(s"expected a number, ?var, STRLEN(...), '(' or unary '-' " +
-      s"in a numeric expression, found $t")
-  }
-
-  private def isArithSym(c: Cursor): Boolean =
-    c.atSym("+") || c.atSym("-") || c.atSym("*") || c.atSym("/")
-
-  /** Continues a `* /` chain from an already-parsed atom. */
-  private def nmulFrom(c: Cursor, first: NExpr): NExpr = {
-    var l = first
-    while (c.atSym("*") || c.atSym("/")) {
-      val op = c.next() match { case TSym(s) => s; case t => fail(s"unexpected $t") }
-      l = NArith(l, op, natom(c))
-    }
-    l
-  }
-
-  /** Continues a full additive expression from an already-parsed atom. */
-  private def nexprFrom(c: Cursor, first: NExpr): NExpr = {
-    var l = nmulFrom(c, first)
-    while (c.atSym("+") || c.atSym("-")) {
-      val op = c.next() match { case TSym(s) => s; case t => fail(s"unexpected $t") }
-      l = NArith(l, op, nmulFrom(c, natom(c)))
-    }
-    l
-  }
-
-  private def nexpr(c: Cursor): NExpr = nexprFrom(c, natom(c))
-
-  private def filterOperand(c: Cursor): FOperand =
-    strFnOperand(c).map(FOStrFn).getOrElse(c.next() match {
-      case TVar(n)           => FOVar(n)
-      case TIri(iri)         => FOIri(iri)
-      case TLit(v, lang, dt) => FOLit(v, lang, dt)
-      case TNum(v)           => FONum(v.toDouble)
-      case TDbl(v)           => FONum(v)
-      case t => fail(s"expected a variable, IRI, literal or number in FILTER, found $t")
-    })
-
-  // precedence: || < && < ! < atom
-  private def filterExpr(c: Cursor): FExpr = {
-    def cmpOp(): String = c.next() match {
-      case TSym(s) if Set("=", "!=", "<", "<=", ">", ">=")(s) => s
-      case t => fail(s"expected a comparison (= != < <= > >=) in FILTER, found $t")
-    }
-    // a typed temporal literal selects the TEMPORAL value space:
-    // Some(false) = xsd:date, Some(true) = xsd:dateTime
-    def temporalDt(o: FOperand): Option[Boolean] = o match {
-      case FOLit(_, None, Some(TypedLiterals.dateType))     => Some(false)
-      case FOLit(_, None, Some(TypedLiterals.dateTimeType)) => Some(true)
-      case _                                                => None
-    }
-    // an operand pulled into arithmetic must be a numeric leaf
-    def toN(o: FOperand): NExpr = o match {
-      case FOVar(n) => NVar(n)
-      case FONum(d) => NNum(d)
-      case _ => fail("arithmetic takes ?vars and numbers — use STRLEN(...) " +
-        "for string lengths; STR/LANG/DATATYPE values are strings")
-    }
-    def atom(): FExpr = c.peekOrFail match {
-      case TSym("(") => c.takeSym("("); val e = orExpr(); c.takeSym(")"); e
-      case TSym("!") => c.takeSym("!"); FNot(atom())
-      case TSym("BOUND") =>
-        c.takeSym("BOUND"); c.takeSym("(")
-        val v = c.next() match {
-          case TVar(n) => n
-          case t       => fail(s"BOUND takes a variable, found $t")
-        }
-        c.takeSym(")")
-        FBound(v)
-      case TSym("SAMETERM") =>
-        c.takeSym("SAMETERM"); c.takeSym("(")
-        val a = varName(c)
-        c.takeSym(",")
-        val b = varName(c)
-        c.takeSym(")")
-        FSameTerm(a, b)
-      case TSym(f @ ("STRSTARTS" | "STRENDS" | "CONTAINS")) =>
-        c.next(); c.takeSym("(")
-        val a = strArg(c)
-        c.takeSym(",")
-        val n = strArg(c)
-        c.takeSym(")")
-        FStrFn(f, a, n)
-      case TSym("REGEX") =>
-        c.next(); c.takeSym("(")
-        val a = strArg(c)
-        c.takeSym(",")
-        val pat = c.next() match {
-          case TLit(v, None, None) => v
-          case t => fail(s"REGEX takes a plain string literal pattern, found $t")
-        }
-        val ci = if (c.atSym(",")) {
-          c.takeSym(",")
-          c.next() match {
-            case TLit("i", None, None) => true
-            case TLit(f, _, _) => fail(s"unsupported REGEX flags '$f' — only " +
-              "\"i\" (case-insensitive) is in this fragment")
-            case t => fail(s"REGEX flags must be a plain string literal, found $t")
-          }
-        } else false
-        c.takeSym(")")
-        FRegex(a, pat, ci)
-      case TSym(f @ ("ISIRI" | "ISLITERAL" | "ISBLANK")) =>
-        c.next(); c.takeSym("(")
-        val v = varName(c)
-        c.takeSym(")")
-        FKindTest(f, v)
-      case TSym("LANGMATCHES") =>
-        c.next(); c.takeSym("(")
-        val a = strArg(c)
-        c.takeSym(",")
-        val r = c.next() match {
-          case TLit(v, None, None) => v
-          case t => fail(s"LANGMATCHES takes a plain string literal range, found $t")
-        }
-        c.takeSym(")")
-        FLangMatches(a, r)
-      // an unambiguous numeric-expression opener: the whole comparison
-      // lives in the numeric value space
-      case TSym("STRLEN") | TSym("-") | TSym("ABS") | TSym("CEIL") |
-           TSym("FLOOR") | TSym("ROUND") | TSym("YEAR") | TSym("MONTH") |
-           TSym("DAY") | TSym("HOURS") | TSym("MINUTES") | TSym("SECONDS") =>
-        val l = nexpr(c)
-        FNumCmp(l, cmpOp(), nexpr(c))
-      case TIri(iri) if NumCastIris.contains(iri) &&
-          c.peek2.contains(TSym("(")) =>
-        val l = nexpr(c)
-        FNumCmp(l, cmpOp(), nexpr(c))
-      case _ =>
-        val l = filterOperand(c)
-        if (c.atSym("IN") || (c.atSym("NOT") && c.peek2.contains(TSym("IN")))) {
-          val neg = c.atSym("NOT")
-          if (neg) c.takeSym("NOT")
-          c.takeSym("IN")
-          val v = l match {
-            case FOVar(n) => n
-            case other    => fail(s"IN takes a ?variable on the left, found $other")
-          }
-          c.takeSym("(")
-          val items = Seq.newBuilder[FOperand]
-          def item(): Unit = filterOperand(c) match {
-            case FOVar(_) | FOStrFn(_) =>
-              fail("IN lists take constants (IRIs, literals, numbers)")
-            case o => items += o
-          }
-          item()
-          while (c.atSym(",")) { c.takeSym(","); item() }
-          c.takeSym(")")
-          val its = items.result()
-          val numCount = its.count(_.isInstanceOf[FONum])
-          if (numCount != 0 && numCount != its.size)
-            fail("an IN list mixes numbers with RDF terms — use one value space")
-          FIn(v, its, neg)
-        } else if (isArithSym(c)) {
-          // left side continues arithmetically -> numeric value space
-          val lfull = nexprFrom(c, toN(l))
-          FNumCmp(lfull, cmpOp(), nexpr(c))
-        } else {
-        val op = cmpOp()
-        // a right side opening with '-' or STRLEN is unambiguously a
-        // numeric expression; '(' is numeric too but ONLY under an
-        // ordering operator — `?x = (?y)` would otherwise silently turn
-        // an id-space equality into a value-space one
-        if (c.atSym("-") || c.atSym("STRLEN") || c.atSym("ABS") ||
-            c.atSym("CEIL") || c.atSym("FLOOR") || c.atSym("ROUND") ||
-            (c.atSym("(") && Set("<", "<=", ">", ">=")(op)))
-          FNumCmp(toN(l), op, nexpr(c))
-        else if (c.atSym("("))
-          fail("a parenthesized operand after = / != is ambiguous between " +
-            "the id and numeric spaces — drop the parentheses for id " +
-            "equality, or start the arithmetic unparenthesized " +
-            "(`?x = ?y + 1`) for the numeric space")
-        else {
-        val r = filterOperand(c)
-        if (isArithSym(c)) {
-          // right side continues arithmetically -> numeric value space
-          FNumCmp(toN(l), op, nexprFrom(c, toN(r)))
-        }
-        // space selection: a STR/LANG/DATATYPE/CONCAT/LCASE/UCASE side
-        // puts the comparison in the STRING value space (= / != only —
-        // string ordering is collation-dependent and out of fragment);
-        // an ordering operator or a bare-number side selects the NUMERIC
-        // value space; = / != between vars/IRIs/literals stays node-id
-        // (in)equality (decidable without the nodes table)
-        else if (temporalDt(l).isDefined || temporalDt(r).isDefined) {
-          val kinds = (temporalDt(l) ++ temporalDt(r)).toSeq
-          if (kinds.distinct.sizeIs > 1)
-            fail("xsd:date and xsd:dateTime do not compare in SPARQL — " +
-              "use one type on both sides")
-          val isDt = kinds.head
-          def tt(o: FOperand): TTerm = o match {
-            case FOVar(n) => TTVar(n)
-            case FOLit(v, None, Some(_)) => TTConst(v)
-            case _ => fail("temporal comparisons take ?vars and " +
-              "xsd:date/xsd:dateTime typed literals")
-          }
-          FTimeCmp(tt(l), op, tt(r), isDt)
-        }
-        else if (l.isInstanceOf[FOStrFn] || r.isInstanceOf[FOStrFn]) {
-          if (Set("<", "<=", ">", ">=")(op))
-            fail("string value-space comparisons support = / != only — " +
-              "string ordering is collation-dependent and out of this fragment")
-          def st(o: FOperand): STerm = o match {
-            case FOStrFn(t)           => t
-            case FOVar(n)             => SVar(n, viaStr = false)
-            case FOLit(v, None, None) => SConst(v)
-            case FOIri(iri)           => SConst(iri)
-            case FOLit(_, _, _) => fail("string-space comparisons take plain " +
-              "string literals (no @lang / ^^dt)")
-            case FONum(_) => fail("a string-space side cannot compare to a " +
-              "number — wrap the variable (not the function) for numeric space")
-          }
-          FStrCmp(st(l), op == "=", st(r))
-        } else if (Set("<", "<=", ">", ">=")(op) ||
-            l.isInstanceOf[FONum] || r.isInstanceOf[FONum]) {
-          def nt(o: FOperand): NExpr = o match {
-            case FOVar(n) => NVar(n)
-            case FONum(d) => NNum(d)
-            case _ => fail("value-space comparisons take ?vars or " +
-              "numbers — IRI/literal constants compare by node id with = / != only")
-          }
-          FNumCmp(nt(l), op, nt(r))
-        } else {
-          def ft(o: FOperand): FTerm = o match {
-            case FOVar(n)           => FTVar(n)
-            case FOIri(iri)         => FTConst(Bgp.iriId(iri), Some(iri))
-            case FOLit(v, lang, dt) =>
-              FTConst(Bgp.litId(v, dt.getOrElse(RdfTerm.XsdString), lang))
-            case _ => fail("unreachable: numeric/string operand in id comparison")
-          }
-          FCmp(ft(l), op, ft(r))
-        }
-        }
-        }
-    }
-    def andExpr(): FExpr = {
-      var e = atom()
-      while (c.atSym("&&")) { c.takeSym("&&"); e = FAnd(e, atom()) }
       e
     }
-    def orExpr(): FExpr = {
-      var e = andExpr()
-      while (c.atSym("||")) { c.takeSym("||"); e = FOr(e, andExpr()) }
-      e
+    def list(): Seq[Expr] = {
+      val args = Seq.newBuilder[Expr]
+      c.takeSym("(")
+      if (!c.atSym(")")) {
+        args += or()
+        while (c.atSym(",")) { c.takeSym(","); args += or() }
+      }
+      c.takeSym(")")
+      args.result()
     }
-    orExpr()
+    def or(): Expr = binary(Set("||"), () => and())
+    def and(): Expr = binary(Set("&&"), () => not())
+    def not(): Expr =
+      if (c.atSym("!")) { c.takeSym("!"); Call("!", Seq(not())) } else rel()
+    def rel(): Expr = {
+      val l = add()
+      c.peek match {
+        case Some(TSym(op)) if CmpOps(op) =>
+          c.next()
+          // kept from the parser that picked a space by spelling, which
+          // rejected it: a parenthesized right side after = / !=
+          if ((op == "=" || op == "!=") && c.atSym("("))
+            fail("a parenthesized operand after = / != is ambiguous between " +
+              "the id and numeric spaces — drop the parentheses for id " +
+              "equality, or start the arithmetic unparenthesized " +
+              "(`?x = ?y + 1`) for the numeric space")
+          Call(op, Seq(l, add()))
+        case Some(TSym("IN")) => c.next(); Call("IN", l +: list())
+        case Some(TSym("NOT")) if c.peek2.contains(TSym("IN")) =>
+          c.next(); c.next(); Call("NOT IN", l +: list())
+        case _ => l
+      }
+    }
+    def add(): Expr = binary(Set("+", "-"), () => mul())
+    def mul(): Expr = binary(Set("*", "/"), () => unary())
+    def unary(): Expr =
+      if (c.atSym("-")) {
+        c.takeSym("-")
+        Call("-", Seq(Lit("0", None, Some(XsdIntegerIri)), unary()))
+      } else primary()
+    def primary(): Expr = c.peekOrFail match {
+      case TSym("(") => c.takeSym("("); val e = or(); c.takeSym(")"); e
+      case TVar(n) => c.next(); Var(n)
+      case TIri(f) if Functions.contains(f) && c.peek2.contains(TSym("(")) =>
+        c.next(); Call(f, list())
+      case TIri(iri) => c.next(); Iri(iri)
+      case TLit(v, lang, dt) => c.next(); Lit(v, lang, dt)
+      case TNum(v) => c.next(); Lit(v.toString, None, Some(XsdIntegerIri))
+      case TDbl(v) => c.next(); Lit(v, None, Some(XsdDecimalIri))
+      case TSym(f) if AggNames(f) => Agg(aggCall(c))
+      case TSym(f) if Functions.contains(f) => c.next(); Call(f, list())
+      case t => fail(s"expected an expression (?var, constant, function call " +
+        s"or '('), found $t")
+    }
+    or()
   }
 
   private def varName(c: Cursor): String = c.next() match {
@@ -1580,79 +1354,9 @@ object Sparql {
     case t       => fail(s"expected a ?variable, found $t")
   }
 
-  /** BIND(expr AS ?v) right-hand side — shared by BIND clauses and
-    * `GROUP BY (expr AS ?v)` keys: a string expression, IF, COALESCE,
-    * a bare ?var copy, or a numeric expression. */
-  private def bindBody(c: Cursor): BExpr = strFnOperand(c) match {
-      case Some(st) => BStr(st)
-      case None => c.peekOrFail match {
-        case TSym("IF") =>
-          // IF(cond, then, else): the condition is a full FILTER
-          // expression; the branches recurse through this same body
-          // grammar and must share one value kind (validated)
-          c.next(); c.takeSym("(")
-          val cond = filterExpr(c)
-          c.takeSym(",")
-          val t = bindBody(c)
-          c.takeSym(",")
-          val e = bindBody(c)
-          c.takeSym(")")
-          BIf(cond, t, e)
-        case TSym("COALESCE") =>
-          c.next(); c.takeSym("(")
-          val vs = Seq.newBuilder[String]
-          vs += varName(c)
-          while (c.atSym(",")) { c.takeSym(","); vs += varName(c) }
-          c.takeSym(")")
-          val r = vs.result()
-          if (r.sizeIs < 2) fail("COALESCE takes at least two ?variables")
-          BCoalesce(r)
-        case TSym(f @ ("STRDT" | "STRLANG")) =>
-          c.next(); c.takeSym("(")
-          val lex = strArg(c)
-          c.takeSym(",")
-          val minted = f match {
-            case "STRDT" =>
-              val dt = c.next() match {
-                case TIri(iri) => iri
-                case t => fail(s"STRDT takes a datatype <iri>, found $t")
-              }
-              if (dt == RdfTerm.RdfLangString)
-                fail("STRDT cannot mint rdf:langString — a language-tagged " +
-                  "literal needs a tag; use STRLANG")
-              BMintTerm(lex, dt, None)
-            case _ =>
-              val tag = c.next() match {
-                case TLit(v, None, None) => v
-                case t => fail(s"STRLANG takes a plain string literal tag, found $t")
-              }
-              BMintTerm(lex, RdfTerm.RdfLangString, Some(tag))
-          }
-          c.takeSym(")")
-          minted
-        case TVar(n) =>
-          c.next()
-          if (isArithSym(c)) BNum(nexprFrom(c, NVar(n))) else BCopy(n)
-        case TLit(v, None, None) => c.next(); BStr(SConst(v))
-        case TLit(_, _, _) =>
-          fail("BIND string constants must be plain (no @lang / ^^dt)")
-        case TNum(_) | TDbl(_) | TSym("(") | TSym("-") | TSym("STRLEN") |
-             TSym("ABS") | TSym("CEIL") | TSym("FLOOR") | TSym("ROUND") |
-             TSym("YEAR") | TSym("MONTH") | TSym("DAY") | TSym("HOURS") |
-             TSym("MINUTES") | TSym("SECONDS") =>
-          BNum(nexpr(c))
-        case TIri(iri) if NumCastIris.contains(iri) &&
-            c.peek2.contains(TSym("(")) =>
-          BNum(nexpr(c))
-        case t => fail(s"expected a numeric/string expression, IF(...), " +
-          s"COALESCE(...), ?var or a plain string literal in BIND, found $t")
-      }
-    }
-
   private def aggCall(c: Cursor): AggCall = {
     val f = c.next() match {
-      case TSym(s) if Set("COUNT", "MIN", "MAX", "SAMPLE", "GROUP_CONCAT",
-        "SUM", "AVG")(s) => s
+      case TSym(s) if AggNames(s) => s
       case t => fail(s"expected an aggregate (COUNT/SUM/AVG/MIN/MAX/SAMPLE/" +
         s"GROUP_CONCAT), found $t")
     }
@@ -1680,49 +1384,9 @@ object Sparql {
     AggCall(f, dist, arg, sep)
   }
 
-  // HAVING: aggregate-to-number comparisons under !/&&/||; COUNT (any
-  // comparison) and SUM/AVG (numeric value space — the nodes-table
-  // overload is required, exactly as for projected SUM/AVG).
-  // MIN/MAX/SAMPLE/GROUP_CONCAT yield id/string values a numeric
-  // comparison cannot mean anything against.
-  private def havingExpr(c: Cursor): HExpr = {
-    def atom(): HExpr = c.peekOrFail match {
-      case TSym("(") => c.takeSym("("); val e = orE(); c.takeSym(")"); e
-      case TSym("!") => c.takeSym("!"); HNot(atom())
-      case _ =>
-        val call = aggCall(c)
-        if (call.func != "COUNT" && call.func != "SUM" && call.func != "AVG")
-          fail(s"HAVING supports COUNT/SUM/AVG comparisons only — ${call.func} " +
-            "yields an id/string value; filter those with FILTER before aggregation")
-        val op = c.next() match {
-          case TSym(s) if Set("=", "!=", "<", "<=", ">", ">=")(s) => s
-          case t => fail(s"expected a comparison after the HAVING aggregate, found $t")
-        }
-        val neg = c.atSym("-")
-        if (neg) c.takeSym("-")
-        val n = c.next() match {
-          case TNum(v) => v.toDouble
-          case TDbl(v) => v
-          case t       => fail(s"HAVING compares an aggregate to a number, found $t")
-        }
-        HCmp(call, op, if (neg) -n else n)
-    }
-    def andE(): HExpr = {
-      var e = atom()
-      while (c.atSym("&&")) { c.takeSym("&&"); e = HAnd(e, atom()) }
-      e
-    }
-    def orE(): HExpr = {
-      var e = andE()
-      while (c.atSym("||")) { c.takeSym("||"); e = HOr(e, andE()) }
-      e
-    }
-    orE()
-  }
-
   /** One VALUES cell: a constant's node id, or null for UNDEF (the
-    * cell is compatible with ANY binding — [[Bgp.applyValues]] switches
-    * to its disjunctive-filter compilation when any row has one). */
+    * cell is compatible with ANY binding — [[selectValues]] compiles the
+    * rows holding one to a disjunctive filter). */
   private def valuesConst(c: Cursor): String = c.next() match {
     case TIri(iri)         => Bgp.iriId(iri)
     case TLit(v, lang, dt) => Bgp.litId(v, dt.getOrElse(RdfTerm.XsdString), lang)
@@ -1783,7 +1447,7 @@ object Sparql {
     * group wherever they are written. */
   private def parseGroupBody(c: Cursor): Pattern = {
     var g: Pattern = BGP(Nil)
-    val filters = Seq.newBuilder[FExpr]
+    val filters = Seq.newBuilder[Expr]
     val probes = Seq.newBuilder[Exists]
     while (!c.atSym("}")) c.peekOrFail match {
       case TSym("UNION") =>
@@ -1795,11 +1459,11 @@ object Sparql {
         // the group's own variables (validated)
         c.takeSym("OPTIONAL"); c.takeSym("{")
         val pats = Seq.newBuilder[TriplePattern]
-        val ofs = Seq.newBuilder[FExpr]
+        val ofs = Seq.newBuilder[Expr]
         while (!c.atSym("}")) {
           if (c.atSym("FILTER")) {
             c.takeSym("FILTER"); c.takeSym("(")
-            ofs += filterExpr(c)
+            ofs += expression(c)
             c.takeSym(")")
           } else pats += triple(c)
         }
@@ -1833,12 +1497,12 @@ object Sparql {
           probes += Exists(BGP(Nil), BGP(triplesBlock(c)), neg)
         } else {
           c.takeSym("(")
-          filters += filterExpr(c)
+          filters += expression(c)
           c.takeSym(")")
         }
       case TSym("BIND") =>
         c.takeSym("BIND"); c.takeSym("(")
-        val b = bindBody(c)
+        val b = expression(c)
         c.takeSym("AS")
         g = Extend(g, varName(c), b)
         c.takeSym(")")
@@ -2057,7 +1721,7 @@ object Sparql {
     // ---- solution modifiers (SPARQL order: GROUP BY, HAVING, ORDER BY,
     // LIMIT/OFFSET in either order) --------------------------------------
     var groupBy = Seq.empty[String]
-    var groupBinds = Seq.empty[(String, BExpr)]
+    var groupBinds = Seq.empty[(String, Expr)]
     if (c.atSym("GROUP")) {
       c.takeSym("GROUP"); c.takeSym("BY")
       val gs = Seq.newBuilder[String]
@@ -2069,7 +1733,7 @@ object Sparql {
           // the grouping: the key is computed per row in the same
           // projection pass, then grouped like any BIND variable
           c.takeSym("(")
-          val b = bindBody(c)
+          val b = expression(c)
           c.takeSym("AS")
           val v = varName(c)
           c.takeSym(")")
@@ -2080,41 +1744,33 @@ object Sparql {
       groupBy = gs.result()
       if (groupBy.isEmpty) fail("GROUP BY needs ?vars or (expr AS ?v) keys")
     }
-    val having = Seq.newBuilder[HExpr]
+    val having = Seq.newBuilder[Expr]
     while (c.atSym("HAVING")) {
       c.takeSym("HAVING"); c.takeSym("(")
-      having += havingExpr(c)
+      having += expression(c)
       c.takeSym(")")
     }
-    var orderBy = Seq.empty[(String, Boolean)]
-    var orderKeys = Seq.empty[(Either[String, NExpr], Boolean)]
+    var orderBy = Seq.empty[(Expr, Boolean)]
     if (c.atSym("ORDER")) {
       c.takeSym("ORDER"); c.takeSym("BY")
-      val os = Seq.newBuilder[(Either[String, NExpr], Boolean)]
-      // ASC/DESC take a plain ?var — or any NUMERIC value expression
-      // (SPARQL OrderCondition's bracketted expression), compiled like
-      // a FILTER's numeric side at sort time
+      val os = Seq.newBuilder[(Expr, Boolean)]
+      // ASC/DESC take a ?var or any numeric expression (SPARQL
+      // OrderCondition's bracketted expression)
       def key(asc: Boolean): Unit = {
         c.takeSym(if (asc) "ASC" else "DESC"); c.takeSym("(")
-        val k: Either[String, NExpr] = c.peekOrFail match {
-          case TVar(n) if c.peek2.contains(TSym(")")) => c.next(); Left(n)
-          case _ => Right(nexpr(c))
-        }
+        os += ((expression(c), asc))
         c.takeSym(")")
-        os += ((k, asc))
       }
       var more = true
       while (more) c.peek match {
-        case Some(TVar(n))      => c.next(); os += ((Left(n), true))
+        case Some(TVar(n))      => c.next(); os += ((Var(n), true))
         case Some(TSym("ASC"))  => key(asc = true)
         case Some(TSym("DESC")) => key(asc = false)
         case _ => more = false
       }
-      val keys = os.result()
-      if (keys.isEmpty)
+      orderBy = os.result()
+      if (orderBy.isEmpty)
         fail("ORDER BY needs ?vars or ASC(expr)/DESC(expr)")
-      orderBy = keys.collect { case (Left(v), asc) => (v, asc) }
-      if (keys.exists(_._1.isRight)) orderKeys = keys
     }
     var limit: Option[Long] = None
     var offset: Option[Long] = None
@@ -2139,7 +1795,7 @@ object Sparql {
     val where = groupBinds.foldLeft(g) { case (p, (v, b)) => Extend(p, v, b) }
     val qy = Query(projection.result(), distinct, where, groupBy,
       having.result(), orderBy, limit, offset, fromGraphs = from,
-      fromNamed = named, orderKeysAst = orderKeys)
+      fromNamed = named)
     if (nested && qy.projection.isEmpty)
       fail("subqueries must project explicitly (?vars / aggregates) — " +
         "SELECT * has no statically-known output to join on")
@@ -2147,168 +1803,30 @@ object Sparql {
     qy
   }
 
-  /** How an expression reads each variable: 'n' numeric value, 's' bare
-    * string-literal value, 'S' STR() value (defined on IRIs too), 't'
-    * RDF-term structure, 'c' id-space comparison, 'd' temporal value,
-    * 'x' constructor cast, 'i' RDF-term IN list. */
-  private def readsN(e: NExpr): Seq[(String, Char)] = e match {
-    case NVar(n)         => Seq((n, 'n'))
-    case NNum(_)         => Nil
-    case NStrLen(a)      => readsS(a)
-    case NArith(l, _, r) => readsN(l) ++ readsN(r)
-    case NFn(_, a)       => readsN(a)
-    case NTimeFn(_, v)   => Seq((v, 'd'))
-    case NCast(v, _)     => Seq((v, 'x'))
-  }
-
-  private def readsS(t: STerm): Seq[(String, Char)] = t match {
-    case SVar(n, viaStr) => Seq((n, if (viaStr) 'S' else 's'))
-    case SLang(n)        => Seq((n, 't'))
-    case SDt(n)          => Seq((n, 't'))
-    case SConst(_)       => Nil
-    case SCase(a, _)     => readsS(a)
-    case SConcat(as)     => as.flatMap(readsS)
-    case SSubstr(a, s, l) => readsS(a) ++ readsN(s) ++ l.toSeq.flatMap(readsN)
-    case SCut(a, b, _)        => readsS(a) ++ readsS(b)
-    case SReplace(a, _, _, _) => readsS(a)
-    case SHash(_, a)          => readsS(a)
-    case SEncode(a)           => readsS(a)
-  }
-
-  private def readsF(e: FExpr): Seq[(String, Char)] = e match {
-    case FBound(_)        => Nil
-    case FNot(x)          => readsF(x)
-    case FAnd(a, b)       => readsF(a) ++ readsF(b)
-    case FOr(a, b)        => readsF(a) ++ readsF(b)
-    case FCmp(l, _, r)    => Seq(l, r).collect { case FTVar(n) => (n, 'c') }
-    case FNumCmp(l, _, r) => readsN(l) ++ readsN(r)
-    case FStrFn(_, a, b)  => readsS(a) ++ readsS(b)
-    case FRegex(a, _, _)  => readsS(a)
-    case FStrCmp(l, _, r) => readsS(l) ++ readsS(r)
-    case FKindTest(_, v)  => Seq((v, 't'))
-    case FTimeCmp(l, _, r, _) => Seq(l, r).collect { case TTVar(n) => (n, 'd') }
-    case FLangMatches(a, _) => readsS(a)
-    case FIn(v, items, _) =>
-      Seq((v, if (items.forall(_.isInstanceOf[FONum])) 'n' else 'i'))
-    case FSameTerm(a, b) => Seq((a, 'c'), (b, 'c'))
-  }
-
-  private def readsB(b: BExpr): Seq[(String, Char)] = b match {
-    case BNum(e)              => readsN(e)
-    case BStr(t)              => readsS(t)
-    case BMintTerm(lex, _, _) => readsS(lex)
-    case BIf(cond, t, e2)     => readsF(cond) ++ readsB(t) ++ readsB(e2)
-    case BCopy(_) | BCoalesce(_) => Nil // id reads of pattern variables
-  }
-
-  /** The variables read through their nodes-table `_term` struct: every
-    * read but an id-space comparison ('c') or RDF-term IN list ('i'). */
-  private def termVars(reads: Seq[(String, Char)]): Seq[String] =
-    reads.collect { case (v, how) if how != 'c' && how != 'i' => v }.distinct
-
-  /** Every variable a FILTER reads, BOUND's included. */
-  private def fReadVars(e: FExpr): Seq[String] = e match {
-    case FBound(v)  => Seq(v)
-    case FNot(x)    => fReadVars(x)
-    case FAnd(a, b) => fReadVars(a) ++ fReadVars(b)
-    case FOr(a, b)  => fReadVars(a) ++ fReadVars(b)
-    case other      => readsF(other).map(_._1)
-  }
-
   private def fmtVars(vs: Iterable[String]): String =
     vs.toSeq.sorted.map("?" + _).mkString(", ")
 
-  /** The value spaces of one query's variables: computed-value kinds and
-    * the pred-space set. Each check rejects a read or comparison that
-    * would run in a silently-wrong space (a raw string compared to a
-    * hashed node id, a raw predicate IRI read as a number, ...). */
-  private final case class Spaces(kinds: Map[String, Char], pred: Set[String]) {
-    def read(v: String, how0: Char, ctx: String): Unit = {
-      kinds.get(v).foreach { k =>
-        val how = if (how0 == 'S') 's' else how0
-        how match {
-          case 't' => fail(s"$ctx: ?$v is a BIND value, not an RDF term — " +
-            "LANG/DATATYPE/ISIRI-family tests cannot apply to it")
-          case 'c' if k != 'c' => fail(s"$ctx: ?$v is a BIND value — compare " +
-            s"it in its value space (a numeric comparison, or STR(?$v) = " +
-            "\"...\" for strings), not by node id")
-          case 'n' if k != 'n' =>
-            fail(s"$ctx: ?$v is not a numeric BIND value")
-          case 'd' => fail(s"$ctx: ?$v is a computed value, not an RDF " +
-            "term — temporal comparisons read xsd:date/xsd:dateTime literals")
-          case 'i' if k == 'n' => fail(s"$ctx: ?$v is a numeric BIND " +
-            "value — an RDF-term IN list cannot match it; use numbers")
-          case 'x' if k == 'c' => fail(s"$ctx: ?$v is an id-space BIND " +
-            "copy — cast the original pattern variable instead")
-          case 's' if k != 's' =>
-            fail(s"$ctx: ?$v is not a string BIND value")
-          case _ => ()
-        }
-      }
-      if (pred(v)) how0 match {
-        case 'n' => fail(s"$ctx reads ?$v numerically, but ?$v binds " +
-          "raw predicate/graph IRIs")
-        case 's' => fail(s"$ctx reads ?$v as a string literal, but ?$v " +
-          s"binds predicate IRIs — wrap it: STR(?$v)")
-        case 't' => fail(s"$ctx applies an RDF-term test to ?$v, which " +
-          "binds predicate IRIs directly (ISIRI would be vacuously true; " +
-          "LANG/DATATYPE are type errors on IRIs)")
-        case 'd' => fail(s"$ctx compares ?$v temporally, but ?$v binds " +
-          "raw predicate/graph IRIs")
-        case 'x' => fail(s"$ctx casts ?$v, but ?$v binds raw " +
-          "predicate/graph IRIs — an xsd constructor cast of an IRI is " +
-          "a SPARQL type error")
-        // 'S' (STR) reads the raw IRI; 'c' and 'i' (RDF-term =/IN) are
-        // space-checked by cmp, and compile raw IRIs
-        case _ => ()
-      }
-    }
-
-    def cmp(e: FExpr, ctx: String): Unit = e match {
-      case FCmp(l, _, r) =>
-        def isPred(t: FTerm): Boolean = t match {
-          case FTVar(n) => pred(n)
-          case _        => false
-        }
-        (l, r) match {
-          case _ if !isPred(l) && !isPred(r) => ()
-          case (FTVar(a), FTVar(b)) =>
-            if (isPred(l) != isPred(r))
-              fail(s"$ctx compares ?$a with ?$b across value spaces — one " +
-                "binds raw predicate IRIs, the other hashed node ids, so " +
-                "the comparison is silently constant")
-          case (FTVar(n), FTConst(_, None)) =>
-            fail(s"$ctx compares predicate variable ?$n with a literal — " +
-              "predicates are IRIs; compare against an <iri>")
-          case (FTConst(_, None), FTVar(n)) =>
-            fail(s"$ctx compares predicate variable ?$n with a literal — " +
-              "predicates are IRIs; compare against an <iri>")
-          case _ => () // pred variable vs IRI constant: compiled raw
-        }
-      case FIn(v, items, _) if pred(v) =>
-        if (!items.forall(_.isInstanceOf[FOIri]))
-          fail(s"$ctx: ?$v binds raw predicate/graph IRIs — its IN list " +
-            "must contain <iri>s only")
-      case FSameTerm(a, b) =>
-        if (pred(a) != pred(b))
-          fail(s"$ctx: SAMETERM(?$a, ?$b) compares across value spaces — " +
-            "one binds raw predicate IRIs, the other hashed node ids, so " +
-            "the test is silently constant")
-      case FNot(x)    => cmp(x, ctx)
-      case FAnd(a, b) => cmp(a, ctx); cmp(b, ctx)
-      case FOr(a, b)  => cmp(a, ctx); cmp(b, ctx)
-      case _          => ()
-    }
+  /** Blank nodes are non-distinguished variables of the required triple
+    * patterns only. */
+  private def checkBlankNodes(ts: Seq[TriplePattern], required: Boolean): Unit = {
+    val bn = varsOf(ts).filter(_.startsWith("_bn_"))
+    if (!required && bn.nonEmpty)
+      fail(s"blank nodes (${bn.toSeq.sorted.mkString(", ")}) are only " +
+        "supported in the required triple patterns in this fragment — " +
+        "OPTIONAL/UNION/MINUS/EXISTS groups and CONSTRUCT templates take " +
+        "explicit ?variables")
   }
 
   /** The structural checks of the validation pass, one per node. Each
     * rejects a shape whose equi-join plan would differ from §18's
     * compatible-mapping semantics — a join key that may be NULL on one
     * side, a join sharing no variable (a cartesian product), a join on a
-    * computed value — or a blank node outside its basic graph pattern.
-    * `required` is false under OPTIONAL, MINUS, UNION and the probes. */
-  private def checkPattern(p: Pattern, sp: Spaces, required: Boolean = true): Unit = {
-    def sub(x: Pattern, req: Boolean = required): Unit = checkPattern(x, sp, req)
+    * computed value — or a blank node outside its basic graph pattern,
+    * and type-checks each expression where it stands. `env` holds the
+    * query's value kinds and predicate-space variables; `required` is
+    * false under OPTIONAL, MINUS, UNION and the probes. */
+  private def checkPattern(p: Pattern, env: Env, required: Boolean = true): Unit = {
+    def sub(x: Pattern, req: Boolean = required): Unit = checkPattern(x, env, req)
     // OPTIONAL and MINUS act on the rows of the patterns before them
     def anchorLeft(what: String, l: Pattern): Unit =
       if (l == BGP(Nil))
@@ -2329,7 +1847,7 @@ object Sparql {
         fail(s"$what group shares no variable with the rows it applies to — " +
           (if (minShared > 1) "SPARQL disjoint-domain MINUS removes nothing"
            else "a constant-truth probe") + "; this is almost always a typo'd variable")
-      val computed = shared.filter(sp.kinds.contains)
+      val computed = shared.filter(env.kinds.contains)
       if (computed.nonEmpty)
         fail(s"$what patterns cannot reference computed variable(s) " +
           s"${computed.toSeq.sorted.mkString(", ")} — the probes join on node-id columns")
@@ -2341,15 +1859,13 @@ object Sparql {
     }
     p match {
       case BGP(ts) =>
-        val bn = varsOf(ts).filter(_.startsWith("_bn_"))
-        if (!required && bn.nonEmpty)
-          fail(s"blank nodes (${bn.toSeq.sorted.mkString(", ")}) are only " +
-            "supported in the required triple patterns in this fragment — " +
-            "OPTIONAL/UNION/MINUS/EXISTS groups and CONSTRUCT templates take " +
-            "explicit ?variables")
+        checkBlankNodes(ts, required)
+        // the evaluator's join order: it rejects triples forming two
+        // components (a cartesian product)
+        if (ts.nonEmpty) Bgp.joinOrder(ts)
       case Join(parts) =>
         parts.foreach(sub(_))
-        checkJoin(parts, sp)
+        checkJoin(parts, env)
       case LeftJoin(l, r, cond) =>
         sub(l); sub(r, req = false)
         anchorLeft("OPTIONAL", l)
@@ -2357,7 +1873,7 @@ object Sparql {
         if (shared.isEmpty)
           fail("an OPTIONAL group shares no variable with the patterns " +
             "before it — an unanchored OPTIONAL is a cartesian product")
-        val computed = shared.filter(sp.kinds.contains)
+        val computed = shared.filter(env.kinds.contains)
         if (computed.nonEmpty)
           fail(s"BIND variable(s) ${fmtVars(computed)} are already bound " +
             "by the pattern group — a computed value never joins a node id")
@@ -2371,27 +1887,8 @@ object Sparql {
         // the condition pre-filters the group side, which is exactly
         // LeftJoin's condition ONLY when it reads the group's OWN
         // variables, in the id space
-        val own = scope(r)
-        def idSpace(e: FExpr): Unit = e match {
-          case FBound(v) if !own(v) => notOwn(v, "BOUND over")
-          case FBound(_)            => ()
-          case FCmp(l2, _, r2) => Seq(l2, r2).foreach {
-            case FTVar(n) if !own(n) => notOwn(n, "operand")
-            case _                   => ()
-          }
-          case FNot(x)    => idSpace(x)
-          case FAnd(a, b) => idSpace(a); idSpace(b)
-          case FOr(a, b)  => idSpace(a); idSpace(b)
-          case _ => fail("FILTERs inside OPTIONAL are id-space only in this " +
-            "fragment (= / != / BOUND over the group's variables) — " +
-            "value-space conditions belong in a subquery or the outer group")
-        }
-        def notOwn(v: String, what: String): Nothing =
-          fail(s"a FILTER inside an OPTIONAL group may only read the " +
-            s"group's own variables — $what ?$v is bound elsewhere; " +
-            "move the condition to the outer group to filter ROWS instead " +
-            "of conditioning the match")
-        cond.foreach { e => sp.cmp(e, "a FILTER inside OPTIONAL"); idSpace(e) }
+        val own = env.copy(scope = scope(r), ctx = InOptional)
+        cond.foreach(typeCheck(_, 'b', own))
       case Minus(l, r) =>
         sub(l); sub(r, req = false)
         anchorLeft("MINUS", l)
@@ -2404,24 +1901,16 @@ object Sparql {
         bs.foreach(sub(_, req = false))
       case Filter(cond, i) =>
         sub(i)
-        val sc = scope(i)
-        cond.foreach { e =>
-          sp.cmp(e, "FILTER")
-          readsF(e).foreach { case (v, how) => sp.read(v, how, "FILTER") }
-          // a typo'd FILTER variable would otherwise surface as an opaque
-          // unresolved-column error at run time
-          fReadVars(e).distinct.filterNot(sc).foreach(v =>
-            fail(s"FILTER reads ?$v, which is bound neither by the " +
-              "patterns, a BIND, nor a subquery"))
-        }
+        val in = env.copy(scope = scope(i), ctx = "FILTER")
+        cond.foreach(typeCheck(_, 'b', in))
       case Extend(i, v, b) =>
         sub(i)
-        checkExtend(i, v, b, sp)
+        checkExtend(i, v, b, env)
       case Table(vs, rows) =>
         if (vs.isEmpty || rows.isEmpty) fail("VALUES needs at least one variable and one row")
         if (!rows.forall(_.size == vs.size))
           fail(s"every VALUES row must have ${vs.size} term(s) for (${vs.mkString(", ")})")
-        val pv = vs.filter(sp.pred)
+        val pv = vs.filter(env.pred)
         if (pv.nonEmpty)
           fail(s"VALUES over predicate-position variable(s) ${fmtVars(pv)} — " +
             "inline rows hash to node ids, which never match raw predicate " +
@@ -2441,7 +1930,7 @@ object Sparql {
     * and each must be bound on both sides. UNIONs, subqueries and VALUES
     * join through the group's own triple patterns (`req`): a UNION's
     * other variables stay local to it. */
-  private def checkJoin(parts: Seq[Pattern], sp: Spaces): Unit = {
+  private def checkJoin(parts: Seq[Pattern], env: Env): Unit = {
     val ops = parts.filterNot(_.isInstanceOf[Table])
     if (ops.isEmpty) fail("WHERE group has no required triple patterns or subqueries")
     val req = parts.flatMap(requiredVars).toSet
@@ -2463,7 +1952,7 @@ object Sparql {
     var (accScope, accCertain, accSubVars) = (scope(ops.head), certain(ops.head), subVars(ops.head))
     ops.tail.foreach { r =>
       val shared = accScope & scope(r)
-      val computed = shared.filter(sp.kinds.contains)
+      val computed = shared.filter(env.kinds.contains)
       if (computed.nonEmpty) fail(r match {
         case SubSelect(q) if q.outputs.exists(computed) =>
           s"subquery aggregate alias(es) ${fmtVars(computed)} collide with " +
@@ -2521,52 +2010,55 @@ object Sparql {
 
   /** BIND(b AS ?v) over `inner`: a fresh variable, reading only variables
     * in scope before it, each in the value space it lives in. */
-  private def checkExtend(inner: Pattern, v: String, b: BExpr, sp: Spaces): Unit = {
+  private def checkExtend(inner: Pattern, v: String, b: Expr, env: Env): Unit = {
     val sc = scope(inner)
     val computed = valueKinds(inner)
     if (computed.contains(v)) fail(s"duplicate BIND variable(s): $v")
     if (sc(v)) fail(s"BIND variable ?$v is already bound by the pattern group")
     def isPattern(src: String) = sc(src) && !computed.contains(src)
-    def copies(bx: BExpr): Unit = bx match {
-      case BCopy(src) =>
+    def copies(bx: Expr): Unit = bx match {
+      case Var(src) =>
         if (!isPattern(src))
           fail(s"BIND(?$src AS ?$v): a bare-?var BIND copies a PATTERN " +
             s"binding — ?$src is not one (computed values need an expression)")
-      case BCoalesce(vs) =>
+      case Call("COALESCE", args) =>
         // id-space fallback over pattern bindings (OPTIONAL vars are the
         // point); value columns would mix spaces
+        val vs = args.collect { case Var(n) => n }
         val notPattern = vs.filterNot(isPattern)
         if (notPattern.nonEmpty)
           fail(s"COALESCE takes PATTERN variables — ${fmtVars(notPattern)} " +
             "are not pattern bindings (coalescing ids with computed values mixes spaces)")
-        val ps = vs.filter(sp.pred)
+        val ps = vs.filter(env.pred)
         if (ps.nonEmpty && ps.size != vs.size)
           fail(s"COALESCE in BIND ?$v mixes predicate-position (raw IRI) and " +
             "node-position (hashed id) variables — the two spaces cannot share a column")
-      case BIf(cond, t, e2) =>
-        sp.cmp(cond, s"BIND ?$v")
-        copies(t); copies(e2)
+      case Call("IF", Seq(_, t, e2)) => copies(t); copies(e2)
       case _ => ()
     }
     copies(b)
-    bindKind(b): Unit
-    readsB(b).foreach { case (r, how) =>
-      if (!sc(r))
-        fail(s"BIND ?$v reads ?$r, which is bound neither by the patterns " +
-          "before it, a subquery, nor an earlier BIND")
-      sp.read(r, how, s"BIND ?$v")
-    }
+    typeCheck(b, '*', env.copy(scope = sc, ctx = s"BIND ?$v")): Unit
+  }
+
+  /** ORDER BY keys read the result columns (after DISTINCT, as in SPARQL's
+    * modifier order): the projected variables and aggregate aliases, or
+    * every in-scope variable under SELECT *. */
+  private def orderEnv(q: Query): Env = {
+    val aliases = q.projection.collect { case PAgg(call, a) => a -> aggKind(call.func) }
+    Env(valueKinds(q.where) ++ aliases, predSpace(q.where),
+      if (q.projection.isEmpty) scope(q.where) else q.select.toSet ++ aliases.map(_._1),
+      "ORDER BY")
   }
 
   /** Parse-time semantic checks — every rejection here is a query that
     * would otherwise run with silently-surprising semantics. */
   private def validate(qy: Query): Unit = {
     val where = qy.where
+    qy.having.foreach(typeCheck(_, 'b', Env(Map.empty, Set.empty, ctx = "HAVING")))
     if (!anchored(where) && !(qy.form == "DESCRIBE" && qy.describeVars.isEmpty))
       fail("WHERE group has no required triple patterns or subqueries")
     val kinds = valueKinds(where)
     val pred = predSpace(where) ++ predSpace(BGP(qy.template))
-    val sp = Spaces(kinds, pred)
     // ---- predicate-position space. The edges convention stores RAW
     // predicate IRIs in the pred column and hashed node ids everywhere
     // else; joining or comparing across the two spaces is silently
@@ -2577,16 +2069,15 @@ object Sparql {
         "in predicate/GRAPH position (raw IRIs) but also used where hashed node " +
         "ids live (subject/object position, DESCRIBE, CONSTRUCT node slots) " +
         "— the two spaces never compare equal; rename one of the uses")
-    checkPattern(where, sp)
+    checkPattern(where, Env(kinds, pred))
     val sc = scope(where)
     val groupVars = sc -- kinds.keySet
-    checkPattern(BGP(qy.template), sp, required = false) // template blank nodes
+    checkBlankNodes(qy.template, required = false)
     if (qy.form == "SELECT" && qy.projection.isEmpty && sc.nonEmpty &&
         sc.forall(_.startsWith("_bn_")))
       fail("SELECT * over patterns binding only blank nodes has no " +
         "projectable result — name at least one ?variable")
-    (qy.projection.collect { case PAgg(call, _) => call } ++
-      qy.havingAst.flatMap(havingCalls)).foreach {
+    qy.aggCalls.foreach {
       case AggCall(f @ ("SUM" | "AVG"), _, Some(v), _) if pred(v) =>
         fail(s"$f(?$v) aggregates numeric values, but ?$v binds predicate IRIs")
       case AggCall(f @ ("SUM" | "AVG"), _, Some(v), _) if kinds.contains(v) =>
@@ -2629,32 +2120,15 @@ object Sparql {
         fail(s"non-aggregate SELECT variable(s) ${bad.mkString(", ")} must " +
           "appear in GROUP BY")
     }
-    // ORDER BY applies to the PROJECTED result (after DISTINCT, as in
-    // SPARQL's modifier order); restrict it to result columns
-    val outNames: Set[String] =
-      if (qy.projection.isEmpty) sc else qy.select.toSet ++ aliases
-    qy.orderBy.foreach { case (v, _) =>
-      if (!outNames.contains(v))
-        fail(s"ORDER BY variable ?$v is not a result column — order by a " +
-          "projected variable or aggregate alias")
-    }
-    val nonNumAgg = qy.projection.collect {
-      case PAgg(AggCall(f, _, _, _), alias)
-        if f != "COUNT" && f != "SUM" && f != "AVG" => alias
-    }.toSet
-    qy.orderKeysAst.foreach {
-      case (Right(e), _) =>
-        readsN(e).map(_._1).foreach { v =>
-          if (!outNames.contains(v))
-            fail(s"ORDER BY expression reads ?$v, which is not a result " +
-              "column — order by projected variables or aggregate aliases")
-          if (nonNumAgg(v))
-            fail(s"ORDER BY expression reads ?$v, a non-numeric aggregate " +
-              "alias — only COUNT/SUM/AVG aliases are numeric keys")
-        }
-        readsN(e).foreach { case (v, how) => sp.read(v, how, "ORDER BY") }
+    val order = orderEnv(qy)
+    qy.orderBy.foreach {
+      case (Var(v), _) =>
+        if (!order.scope(v))
+          fail(s"ORDER BY variable ?$v is not a result column — order by a " +
+            "projected variable or aggregate alias")
       case _ => ()
     }
+    qy.orderBy.foreach { case (e, _) => if (!e.isInstanceOf[Var]) typeCheck(e, 'n', order) }
   }
 
   // ---------- execution ----------------------------------------------------
@@ -2687,8 +2161,7 @@ object Sparql {
     * struct comparison is total. */
   private def termOrderKey(v: String): Column = {
     val term = col(s"${v}_term")
-    val num = coalesce(TypedLiterals.asLong(term).cast("double"),
-      TypedLiterals.asDouble(term))
+    val num = termNum(term)
     struct(when(num.isNotNull, 1).otherwise(0).as("r"),
       coalesce(num, lit(0.0)).as("n"), col(v).as("i"))
   }
@@ -2750,29 +2223,6 @@ object Sparql {
     case other => fail(s"unsupported aggregate $other")
   }
 
-  private def havingCalls(e: HExpr): Seq[AggCall] = e match {
-    case HCmp(call, _, _) => Seq(call)
-    case HNot(x)          => havingCalls(x)
-    case HAnd(a, b)       => havingCalls(a) ++ havingCalls(b)
-    case HOr(a, b)        => havingCalls(a) ++ havingCalls(b)
-  }
-
-  private def compileH(e: HExpr, alias: Map[AggCall, String]): Column = e match {
-    case HCmp(call, op, n) =>
-      val c = col(alias(call))
-      op match {
-        case "="  => c === n
-        case "!=" => c =!= n
-        case "<"  => c < n
-        case "<=" => c <= n
-        case ">"  => c > n
-        case ">=" => c >= n
-      }
-    case HNot(x)    => !compileH(x, alias)
-    case HAnd(a, b) => compileH(a, alias) && compileH(b, alias)
-    case HOr(a, b)  => compileH(a, alias) || compileH(b, alias)
-  }
-
   /** GROUP BY + aggregates + HAVING over the matched bindings: ONE
     * hash-aggregate shuffle on the group variables (or a global
     * aggregate when GROUP BY is absent — SPARQL's implicit single
@@ -2782,7 +2232,7 @@ object Sparql {
   private def aggregate(matched: DataFrame, q: Query,
                         hybrid: Set[String] = Set.empty): DataFrame = {
     val projAggs = q.projection.collect { case PAgg(call, alias) => (call, alias) }
-    val extra = q.havingAst.flatMap(havingCalls).distinct
+    val extra = q.aggCalls.distinct
       .filterNot(projAggs.map(_._1).contains)
       .zipWithIndex.map { case (call, i) => (call, s"_having_$i") }
     val all = projAggs ++ extra
@@ -2798,8 +2248,8 @@ object Sparql {
           else matched.groupBy()
         grouped.agg(aggCols.head, aggCols.tail: _*)
       }
-    val aliasMap = all.toMap
-    val hav = q.havingAst.foldLeft(agged)((df, h) => df.filter(compileH(h, aliasMap)))
+    val env = Env(Map.empty, Set.empty, alias = all.toMap)
+    val hav = q.having.foldLeft(agged)((df, h) => df.filter(compile(h, 'b', env)))
     hav.select(q.projection.map {
       case PVar(n)        => col(n)
       case PAgg(_, alias) => col(alias)
@@ -2911,8 +2361,8 @@ object Sparql {
     * frame — the same checks and evaluator as a parsed WHERE group. */
   def evaluate(edges: DataFrame, p: Pattern): DataFrame = {
     if (!anchored(p)) fail("WHERE group has no required triple patterns or subqueries")
-    checkPattern(p, Spaces(valueKinds(p), predSpace(p)))
-    eval(p, Ctx(edges, None, compileKinds(p)))
+    checkPattern(p, Env(valueKinds(p), predSpace(p)))
+    eval(p, Ctx(edges, None, Env(valueKinds(p), predSpace(p))))
   }
 
   private def runWith(edges: DataFrame, nodes: Option[DataFrame],
@@ -2965,9 +2415,8 @@ object Sparql {
   }
 
   /** What the evaluator reads: the edges, the optional nodes table and
-    * the compile kinds of the tree's variables. */
-  private final case class Ctx(edges: DataFrame, nodes: Option[DataFrame],
-                               kinds: Map[String, Char])
+    * the value kinds and predicate-space variables of the tree. */
+  private final case class Ctx(edges: DataFrame, nodes: Option[DataFrame], env: Env)
 
   /** Joins the `_term` struct of each listed variable that lacks one — a
     * value-space read needs the nodes table. */
@@ -3033,7 +2482,8 @@ object Sparql {
       // group's own variables (validated), a failing condition makes the
       // group unmatched (NULLs), never drops the row
       val left = eval(l, x)
-      val right = cond.foldLeft(eval(r, x))((df, e) => df.filter(compileF(e, x.kinds)))
+      val own = x.env.copy(scope = scope(r), ctx = InOptional)
+      val right = cond.foldLeft(eval(r, x))((df, e) => df.filter(compile(e, 'b', own)))
       left.join(right, right.columns.toSeq.filter(left.columns.contains), "left")
     case Minus(l, r) => probe(eval(l, x), eval(r, x), "left_anti")
     case Exists(i, pr, neg) =>
@@ -3051,12 +2501,13 @@ object Sparql {
     case Filter(cond, i) =>
       // BIND columns and pred-space variables are read directly; only
       // node-position variables read in a value space join their terms
-      val in = withTerms(eval(i, x),
-        termVars(cond.flatMap(readsF)).filterNot(x.kinds.contains), x.nodes)
-      cond.foldLeft(in)((df, e) => df.filter(compileF(e, x.kinds)))
+      val env = x.env.copy(scope = scope(i), ctx = "FILTER")
+      val in = withTerms(eval(i, x), cond.flatMap(typeCheck(_, 'b', env)), x.nodes)
+      cond.foldLeft(in)((df, e) => df.filter(compile(e, 'b', env)))
     case Extend(i, v, b) =>
-      withTerms(eval(i, x), termVars(readsB(b)).filterNot(x.kinds.contains), x.nodes)
-        .withColumn(v, compileB(b, x.kinds))
+      val env = x.env.copy(scope = scope(i), ctx = s"BIND ?$v")
+      withTerms(eval(i, x), typeCheck(b, '*', env), x.nodes)
+        .withColumn(v, compile(b, spaceOf(b, body = true), env))
     case SubSelect(q) => runParsed(x.edges, x.nodes, q)
     case Table(_, _) => fail("VALUES selects the rows of a group join")
   }
@@ -3070,8 +2521,8 @@ object Sparql {
     // the aggregation; every other term struct is spent
     val hybridVars = if (nodes.isDefined) q.minmaxAggVars else Nil
     val aggVars = (q.numericAggVars ++ hybridVars).distinct
-    val evaluated = withTerms(eval(q.where, Ctx(edges, nodes, compileKinds(q.where))),
-      aggVars, nodes)
+    val evaluated = withTerms(eval(q.where,
+      Ctx(edges, nodes, Env(valueKinds(q.where), predSpace(q.where)))), aggVars, nodes)
     val matched = evaluated.drop(evaluated.schema.fields.collect {
       case f if f.name.endsWith("_term") && f.dataType.isInstanceOf[StructType] &&
         !aggVars.contains(f.name.stripSuffix("_term")) => f.name
@@ -3099,24 +2550,23 @@ object Sparql {
     // value, other terms before them by id) — one broadcast-able term
     // join per such column, dropped after the sort; everything else
     // (aliases, computed values, pred-space raw IRIs) sorts as-is
-    val keySpecs: Seq[(Either[String, NExpr], Boolean)] =
-      if (q.orderKeysAst.nonEmpty) q.orderKeysAst
-      else q.orderBy.map { case (v, asc) => (Left(v), asc) }
     val ordered =
-      if (keySpecs.isEmpty) dist
+      if (q.orderBy.isEmpty) dist
       else {
         val ns = nodeSpace(q.where)
+        val env = orderEnv(q)
         // expression keys read pattern variables through their _term
         // structs — the value read is only decidable with the nodes
         // table (an id-sort fallback would be meaningless for a
         // computed key, unlike a plain variable's documented id order)
-        val exprNodeVars = keySpecs.collect { case (Right(e), _) => readsN(e).map(_._1) }
-          .flatten.filter(v => ns(v) && dist.columns.contains(v))
+        val exprNodeVars = q.orderBy.collect {
+          case (e, _) if !e.isInstanceOf[Var] => typeCheck(e, 'n', env)
+        }.flatten.filter(v => ns(v) && dist.columns.contains(v))
         require(exprNodeVars.isEmpty || nodes.isDefined,
           "ORDER BY expressions over pattern variables need the nodes " +
             "table — use run(edges, nodes, query)")
         val hybridOrd = nodes match {
-          case Some(_) => (keySpecs.collect { case (Left(v), _) => v }
+          case Some(_) => (q.orderBy.collect { case (Var(v), _) => v }
             .filter(v => ns(v) && dist.columns.contains(v)) ++
             exprNodeVars).distinct
           case None => Nil
@@ -3124,19 +2574,14 @@ object Sparql {
         val base =
           if (hybridOrd.isEmpty) dist
           else Bgp.bindValues(dist, nodes.get, hybridOrd)
-        val keys = keySpecs.map {
-          case (Left(v), asc) =>
-            val k = if (hybridOrd.contains(v)) termOrderKey(v) else col(v)
-            if (asc) k.asc else k.desc
-          case (Right(e), asc) =>
-            // the query's OWN aggregate aliases are plain numeric
-            // columns by the time the sort runs (post-aggregation)
-            val ownAgg = q.projection.collect {
-              case PAgg(AggCall("COUNT" | "SUM" | "AVG", _, _, _), alias) =>
-                alias -> 'n'
-            }.toMap
-            val k = numValue(e, valueKinds(q.where) ++ ownAgg)
-            if (asc) k.asc else k.desc
+        val keys = q.orderBy.map { case (e, asc) =>
+          // the query's OWN aggregate aliases are plain columns by the
+          // time the sort runs (post-aggregation)
+          val k = e match {
+            case Var(v) => if (hybridOrd.contains(v)) termOrderKey(v) else col(v)
+            case _      => compile(e, 'n', env)
+          }
+          if (asc) k.asc else k.desc
         }
         hybridOrd.foldLeft(base.orderBy(keys: _*))((df, v) => df.drop(s"${v}_term"))
       }

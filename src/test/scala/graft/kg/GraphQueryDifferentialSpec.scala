@@ -662,13 +662,17 @@ class GraphQueryDifferentialSpec extends AnyFunSuite {
         val group = els.result()
         val q = render(group)
         total += 1
+        // a query the parser accepts must run: every rejection is a parse one
+        val parsed =
+          try { Sparql.parse(q); true }
+          catch { case _: IllegalArgumentException => false }
         val got =
-          try Some(Sparql.run(df, q).collect().toSeq.map { r =>
+          if (!parsed) None
+          else Some(Sparql.run(df, q).collect().toSeq.map { r =>
             r.schema.fieldNames.zipWithIndex.collect {
               case (f, i) if !r.isNullAt(i) => s"?$f" -> r.getString(i)
             }.toMap
           })
-          catch { case _: IllegalArgumentException => None }
         got.foreach { rows =>
           accepted += 1
           def canon(sols: Seq[Sol]) = sols.map(_.toSeq.sorted.mkString(" ")).sorted
@@ -679,6 +683,104 @@ class GraphQueryDifferentialSpec extends AnyFunSuite {
     info(s"$accepted of $total generated groups accepted")
     assert(total >= 200)
     assert(accepted * 2 >= total, s"only $accepted of $total generated groups accepted")
+  }
+
+  // ---- random expressions vs a brute-force §17 evaluator -------------
+
+  test("random typed expressions equal a brute-force SPARQL 1.1 §17 evaluator") {
+    import ExprGen._
+    var (accepted, total, withRows) = (0, 0, 0)
+    for (seed <- 1 to 5) {
+      val rnd = new Random(2000 + seed)
+      def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+      // a typed graph: each subject has 1-3 ?v values and maybe one ?w
+      val subjects = (0 until 6).map(i => s"urn:s:$i")
+      val vs = subjects.flatMap(s => Seq.fill(1 + rnd.nextInt(3))((s, pick(Pool))).distinct)
+      val ws = subjects.filter(_ => rnd.nextBoolean()).map(s => (s, pick(Pool)))
+      val edges = (vs.map { case (s, t) => (Bgp.iriId(s), "urn:v", t.id) } ++
+        ws.map { case (s, t) => (Bgp.iriId(s), "urn:w", t.id) }).toDF("subj_id", "pred", "obj_id")
+      val nodes = (Pool ++ subjects.map(Term(_, None, None, iri = true))).map(t =>
+        (t.id, if (t.iri) RdfTerm.IRI else RdfTerm.LITERAL, t.value, t.lang.orNull,
+          if (t.iri) null else t.dt.get)).distinct.toDF("id", "kind", "value", "lang", "dt")
+      // the solutions of `?s <urn:v> ?v OPTIONAL { ?s <urn:w> ?w }`
+      val sols: Seq[Sol] = vs.map { case (s, t) =>
+        Map("s" -> Term(s, None, None, iri = true), "v" -> t) ++
+          ws.collectFirst { case (`s`, w) => "w" -> w }
+      }
+      val gen = new Gen(rnd)
+      val pat = "?s <urn:v> ?v OPTIONAL { ?s <urn:w> ?w }"
+      def show(row: Seq[Any]): String = row.map(x => if (x == null) "NULL" else x.toString).mkString(" ")
+      def shown(v: Option[Value]): String = v.fold("NULL") {
+        case N(d) => d.toString
+        case S(x) => x
+        case T(t) => t.id
+        case B(b) => b.toString
+      }
+      for (_ <- 1 to 45) {
+        // (query, expected rows, whether row order counts)
+        val (q, expected, ordered) = rnd.nextInt(5) match {
+          case 0 | 1 =>
+            val c = gen.cond(0)
+            (s"SELECT ?s ?v ?w WHERE { $pat FILTER(${render(c)}) }",
+              sols.filter(m => eval(c, m).contains(B(true)))
+                .map(m => Seq("s", "v", "w").map(k => m.get(k).fold("NULL")(_.id)).mkString(" ")),
+              false)
+          case 2 =>
+            val b = gen.body()
+            val after = if (rnd.nextBoolean() && b.numeric) Some(NCmp(pick(Seq("<", ">=", "!=")),
+              NVar("b"), pick(Consts))) else None
+            val rows = sols.map(m => (m, eval(b, m))).filter { case (m, bv) =>
+              after.forall(f => eval(f, m, bv).contains(B(true)))
+            }
+            (s"SELECT ?s ?v ?w ?b WHERE { $pat BIND(${render(b)} AS ?b)" +
+              after.fold("")(f => s" FILTER(${render(f)})") + " }",
+              rows.map { case (m, bv) =>
+                (Seq("s", "v", "w").map(k => m.get(k).fold("NULL")(_.id)) :+ shown(bv)).mkString(" ")
+              }, false)
+          case 3 =>
+            val k = gen.numCall(0)
+            val asc = rnd.nextBoolean()
+            val keyed = sols.map(m => (m, eval(k, m).collect { case N(d) => d }))
+            val byKey: Ordering[Option[Double]] = (a, b) => (a, b) match {
+              case (None, None)       => 0
+              case (None, _)          => if (asc) -1 else 1
+              case (_, None)          => if (asc) 1 else -1
+              case (Some(x), Some(y)) => (if (x == y) 0 else if (x < y) -1 else 1) * (if (asc) 1 else -1)
+            }
+            val sorted = keyed.sortWith { case ((m1, k1), (m2, k2)) =>
+              val c = byKey.compare(k1, k2)
+              if (c != 0) c < 0
+              else {
+                val c2 = m1("s").id.compareTo(m2("s").id)
+                if (c2 != 0) c2 < 0 else before(orderKey(m1("v")), orderKey(m2("v")))
+              }
+            }
+            (s"SELECT ?s ?v WHERE { $pat } ORDER BY ${if (asc) "ASC" else "DESC"}(${render(k)}) ?s ?v LIMIT 4",
+              sorted.take(4).map { case (m, _) => s"${m("s").id} ${m("v").id}" }, true)
+          case _ =>
+            val h = gen.having(0)
+            val groups = vs.groupBy(_._1).map { case (s, xs) => (s, xs.map(_._2)) }
+            (s"SELECT ?s (COUNT(*) AS ?n) WHERE { ?s <urn:v> ?v } GROUP BY ?s HAVING(${render(h)})",
+              groups.collect { case (s, xs) if evalHaving(h, xs).contains(true) =>
+                s"${Bgp.iriId(s)} ${xs.size}"
+              }.toSeq, false)
+        }
+        total += 1
+        val parsed =
+          try { Sparql.parse(q); true }
+          catch { case _: IllegalArgumentException => false }
+        if (parsed) {
+          accepted += 1
+          if (expected.nonEmpty) withRows += 1
+          val got = Sparql.run(edges, nodes, q).collect().toSeq.map(r => show(r.toSeq))
+          if (ordered) assert(got === expected, s"seed $seed: $q")
+          else assert(got.sorted === expected.sorted, s"seed $seed: $q")
+        }
+      }
+    }
+    info(s"$accepted of $total generated expressions accepted, $withRows with rows")
+    assert(total >= 200)
+    assert(accepted * 2 >= total, s"only $accepted of $total generated expressions accepted")
   }
 }
 
@@ -707,4 +809,353 @@ private object GraphQueryDifferentialSpec {
   final case class Or(a: Ex, b: Ex) extends Ex
 
   type Sol = Map[String, String]
+}
+
+/** The generated expressions of the §17 differential and their
+  * brute-force evaluation over Scala values: `None` is an error or an
+  * unbound value, which excludes a FILTER row and leaves a BIND unbound. */
+private object ExprGen {
+  private val XSD = "http://www.w3.org/2001/XMLSchema#"
+
+  /** An RDF term: an IRI, or a literal with its language tag or datatype. */
+  final case class Term(value: String, lang: Option[String], dt: Option[String],
+                        iri: Boolean = false) {
+    def id: String =
+      if (iri) Bgp.iriId(value) else Bgp.litId(value, dt.getOrElse(RdfTerm.XsdString), lang)
+    def spelled: String =
+      if (iri) s"<$value>"
+      else "\"" + value + "\"" + lang.fold(dt.fold("")(d => s"^^<$d>"))("@" + _)
+    def isString: Boolean = !iri && (lang.isDefined || dt.contains(RdfTerm.XsdString))
+    def num: Option[Double] = dt match {
+      case Some(d) if TypedLiterals.integerTypes.contains(d) => value.toLongOption.map(_.toDouble)
+      case Some(d) if TypedLiterals.doubleTypes.contains(d)  => value.toDoubleOption
+      case _ => None
+    }
+  }
+  private def lit(v: String, dt: String) = Term(v, None, Some(dt))
+  private def str(v: String, lang: Option[String] = None) =
+    Term(v, lang, Some(if (lang.isDefined) RdfTerm.RdfLangString else RdfTerm.XsdString))
+
+  /** The graph's values: numbers with equal values in different spellings
+    * (5 as integer, long and double; halves for ROUND), tagged and plain
+    * strings, dates, a dateTime and IRIs. */
+  val Pool: Seq[Term] = Seq(
+    lit("5", XSD + "integer"), lit("05", XSD + "integer"), lit("5.0", XSD + "double"),
+    lit("5", XSD + "long"), lit("-3", XSD + "integer"), lit("2.5", XSD + "double"),
+    lit("-1.5", XSD + "decimal"), lit("0.5", XSD + "double"), lit("12", XSD + "int"),
+    str("ab"), str("b"), str("ab", Some("en")), str("Ba", Some("de")), str("5"),
+    lit("2020-01-03", XSD + "date"), lit("2020-01-07", XSD + "date"),
+    lit("2020-01-03T12:00:00", XSD + "dateTime"),
+    Term("urn:o:a", None, None, iri = true), Term("urn:o:b", None, None, iri = true))
+
+  /** Numeric constants: (spelling, value). */
+  val Consts: Seq[NConst] = Seq(("5", 5.0), ("2.5", 2.5), ("0", 0.0), ("1", 1.0),
+    ("\"5\"^^<" + XSD + "integer>", 5.0), ("\"05\"^^<" + XSD + "integer>", 5.0),
+    ("\"5.0\"^^<" + XSD + "double>", 5.0), ("\"7\"^^<" + XSD + "long>", 7.0),
+    ("\"-1.5\"^^<" + XSD + "decimal>", -1.5)).map { case (s, d) => NConst(s, d) }
+  /** RDF-term constants compared by identity. */
+  private val TermConsts: Seq[Term] = Seq(str("ab"), str("5"), str("ab", Some("en")),
+    Term("urn:o:a", None, None, iri = true), Term("urn:o:b", None, None, iri = true))
+
+  sealed trait Value
+  final case class N(d: Double) extends Value
+  final case class S(s: String) extends Value
+  final case class B(b: Boolean) extends Value
+  final case class T(t: Term) extends Value
+
+  type Sol = Map[String, Term]
+
+  sealed trait Ex { def numeric: Boolean = false }
+  sealed trait NumEx extends Ex { override def numeric = true }
+  final case class NVar(v: String) extends NumEx
+  final case class NConst(spelling: String, value: Double) extends NumEx
+  final case class Arith(op: String, a: Ex, b: Ex) extends NumEx
+  final case class Neg(a: Ex) extends NumEx
+  final case class NFn(f: String, a: Ex) extends NumEx
+  final case class StrLen(a: Ex) extends NumEx
+  /** YEAR / DAY of a date or dateTime term. */
+  final case class DateFn(f: String, v: String) extends NumEx
+  /** xsd:integer(?v) / xsd:double(?v). */
+  final case class Cast(toInt: Boolean, v: String) extends NumEx
+  /** A bare variable read as a string literal, or STR(?v). */
+  final case class SVar(v: String, viaStr: Boolean) extends Ex
+  final case class SLang(v: String) extends Ex
+  final case class SConst(s: String) extends Ex
+  final case class SCase(upper: Boolean, a: Ex) extends Ex
+  final case class SConcat(a: Ex, b: Ex) extends Ex
+  final case class SSub(a: Ex, start: Int) extends Ex
+  final case class NCmp(op: String, a: Ex, b: Ex) extends Ex
+  final case class SCmp(eq: Boolean, a: Ex, b: Ex) extends Ex
+  /** RDF-term identity of ?v with a constant, or with ?w. */
+  final case class IdCmp(eq: Boolean, v: String, t: Option[Term]) extends Ex
+  final case class DCmp(op: String, v: String, date: String) extends Ex
+  final case class InList(v: String, items: Seq[Either[NConst, Term]], negated: Boolean) extends Ex
+  final case class Bound(v: String) extends Ex
+  final case class IsLit(v: String) extends Ex
+  final case class Not(a: Ex) extends Ex
+  final case class And(a: Ex, b: Ex) extends Ex
+  final case class Or(a: Ex, b: Ex) extends Ex
+  final case class StrFn(f: String, a: Ex, needle: String) extends Ex
+  final case class Regex(a: Ex, pattern: String, ci: Boolean) extends Ex
+  final case class If(c: Ex, a: Ex, b: Ex) extends Ex { override def numeric = a.numeric }
+  final case class Coalesce(a: String, b: String) extends Ex
+  final case class Agg(f: String) extends NumEx
+
+  final class Gen(rnd: Random) {
+    private def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    private def v(): String = pick(Seq("v", "v", "w"))
+    def num(d: Int): Ex =
+      if (d > 2 || rnd.nextInt(3) == 0) { if (rnd.nextBoolean()) NVar(v()) else pick(Consts) }
+      else rnd.nextInt(8) match {
+        case 0 | 1 => Arith(pick(Seq("+", "-", "*", "/")), num(d + 1), num(d + 1))
+        case 2 => Neg(num(d + 1))
+        case 3 => NFn(pick(Seq("ABS", "CEIL", "FLOOR", "ROUND")), num(d + 1))
+        case 4 => NFn("ROUND", NVar(v()))
+        case 5 => DateFn(pick(Seq("YEAR", "DAY")), v())
+        case 6 => Cast(rnd.nextBoolean(), v())
+        case _ => StrLen(string(d + 1))
+      }
+    def string(d: Int): Ex =
+      if (d > 2 || rnd.nextInt(3) == 0) pick(Seq(SVar(v(), viaStr = false), SVar(v(), viaStr = true),
+        SConst(pick(Seq("ab", "b", "x")))))
+      else rnd.nextInt(5) match {
+        case 0 => SLang(v())
+        case 1 => SCase(rnd.nextBoolean(), string(d + 1))
+        case 2 => SConcat(string(d + 1), string(d + 1))
+        case 3 => SSub(string(d + 1), 1 + rnd.nextInt(2))
+        case _ => SVar(v(), viaStr = true)
+      }
+    /** A string expression that is a function call: it selects the string
+      * space of a comparison. */
+    private def stringCall(d: Int): Ex = string(d) match {
+      case SVar(x, false) => SVar(x, viaStr = true)
+      case SConst(_)      => SVar(v(), viaStr = true)
+      case e              => e
+    }
+    /** A numeric expression that is not a bare variable: alone, a
+      * variable is a copy of its term (BIND) or sorts by term order. */
+    def numCall(d: Int): Ex = num(d) match {
+      case x: NVar => Neg(x)
+      case e       => e
+    }
+    def cond(d: Int): Ex =
+      if (d > 2) pick(Seq(() => NCmp(pick(Seq("=", "!=", "<", ">=")), num(d), num(d)),
+        () => Bound(v()), () => IsLit(v())))()
+      else rnd.nextInt(12) match {
+        case 0 | 1 => NCmp(pick(Seq("=", "!=", "<", "<=", ">", ">=")), num(d + 1), num(d + 1))
+        case 2 => SCmp(rnd.nextBoolean(), stringCall(d + 1), string(d + 1))
+        case 3 => IdCmp(rnd.nextBoolean(), v(), if (rnd.nextInt(4) == 0) None else Some(pick(TermConsts)))
+        case 4 => DCmp(pick(Seq("=", "<", ">=")), v(), pick(Seq("2020-01-03", "2020-01-05")))
+        case 5 => InList(v(), if (rnd.nextBoolean()) Seq.fill(2)(Left(pick(Consts)))
+          else Seq.fill(2)(Right(pick(TermConsts))), rnd.nextBoolean())
+        case 6 => Not(cond(d + 1))
+        case 7 => And(cond(d + 1), cond(d + 1))
+        case 8 => Or(cond(d + 1), cond(d + 1))
+        case 9 => StrFn(pick(Seq("CONTAINS", "STRSTARTS", "STRENDS")), string(d + 1), pick(Seq("a", "b", "")))
+        case 10 => Regex(string(d + 1), pick(Seq("^a", "b$", "A")), rnd.nextBoolean())
+        case _ => Bound(v())
+      }
+    def body(): Ex = rnd.nextInt(6) match {
+      case 0 | 1 => numCall(0)
+      case 2 => stringCall(0)
+      case 3 => If(cond(1), numCall(1), numCall(1))
+      case 4 => If(cond(1), stringCall(1), stringCall(1))
+      case _ => Coalesce("w", "v")
+    }
+    def having(d: Int): Ex = rnd.nextInt(if (d > 1) 3 else 6) match {
+      case 3 => Not(having(d + 1))
+      case 4 => And(having(d + 1), having(d + 1))
+      case 5 => Or(having(d + 1), having(d + 1))
+      case _ => NCmp(pick(Seq("=", "!=", "<", "<=", ">", ">=")),
+        Agg(pick(Seq("COUNT(*)", "COUNT(?v)", "SUM(?v)", "AVG(?v)"))),
+        pick(Consts ++ Seq(NConst("-1", -1.0), NConst("2", 2.0))))
+    }
+  }
+
+  /** SPARQL text; arithmetic is parenthesized, so a comparison may start
+    * with '(' (the right side after = / != is written bare). */
+  def render(e: Ex): String = e match {
+    case NVar(v)          => s"?$v"
+    case NConst(s, _)     => s
+    case Arith(op, a, b)  => s"(${render(a)} $op ${render(b)})"
+    case Neg(a)           => s"-${render(a)}"
+    case NFn(f, a)        => s"$f(${render(a)})"
+    case StrLen(a)        => s"STRLEN(${render(a)})"
+    case DateFn(f, v)     => s"$f(?$v)"
+    case Cast(toInt, v)   => s"<$XSD${if (toInt) "integer" else "double"}>(?$v)"
+    case SVar(v, viaStr)  => if (viaStr) s"STR(?$v)" else s"?$v"
+    case SLang(v)         => s"LANG(?$v)"
+    case SConst(s)        => "\"" + s + "\""
+    case SCase(u, a)      => s"${if (u) "UCASE" else "LCASE"}(${render(a)})"
+    case SConcat(a, b)    => s"CONCAT(${render(a)}, ${render(b)})"
+    case SSub(a, k)       => s"SUBSTR(${render(a)}, $k)"
+    case NCmp(op, a, b)   =>
+      val r = b match {
+        case Arith(o, x, y) if op == "=" || op == "!=" => s"${render(x)} $o ${render(y)}"
+        case _ => render(b)
+      }
+      s"${render(a)} $op $r"
+    case SCmp(eq, a, b)   => s"${render(a)} ${if (eq) "=" else "!="} ${render(b)}"
+    case IdCmp(eq, v, t)  => s"?$v ${if (eq) "=" else "!="} ${t.fold("?w")(_.spelled)}"
+    case DCmp(op, v, d)   => s"?$v $op \"$d\"^^<${XSD}date>"
+    case InList(v, items, neg) =>
+      s"?$v ${if (neg) "NOT " else ""}IN (" + items.map(_.fold(_.spelling, _.spelled)).mkString(", ") + ")"
+    case Bound(v)         => s"BOUND(?$v)"
+    case IsLit(v)         => s"ISLITERAL(?$v)"
+    case Not(a)           => s"!(${render(a)})"
+    case And(a, b)        => s"(${render(a)}) && (${render(b)})"
+    case Or(a, b)         => s"(${render(a)}) || (${render(b)})"
+    case StrFn(f, a, n)   => s"$f(${render(a)}, \"$n\")"
+    case Regex(a, p, ci)  => s"REGEX(${render(a)}, \"$p\"${if (ci) ", \"i\"" else ""})"
+    case If(c, a, b)      => s"IF(${render(c)}, ${render(a)}, ${render(b)})"
+    case Coalesce(a, b)   => s"COALESCE(?$a, ?$b)"
+    case Agg(f)           => f
+  }
+
+  /** Numeric value of a term with SPARQL's promotion (integer family and
+    * double/float/decimal as double); anything else is an error. */
+  private def numOf(x: Option[Value]): Option[Double] = x.flatMap {
+    case N(d) => Some(d)
+    case T(t) => t.num
+    case _    => None
+  }
+
+  /** `e` over a solution and, as ?b, the value of a BIND. */
+  def eval(e: Ex, m: Sol, bind: Option[Value] = None): Option[Value] =
+    evalIn(e, m.map { case (k, t) => k -> (T(t): Value) } ++ bind.map("b" -> _))
+
+  /** The values of `m` are pattern terms (T) or computed BIND values. */
+  private def evalIn(e: Ex, m: Map[String, Value]): Option[Value] = {
+    def ev(x: Ex) = evalIn(x, m)
+    def n(x: Ex) = numOf(ev(x))
+    def s(x: Ex): Option[String] = ev(x).collect { case S(v) => v }
+    def b(x: Ex): Option[Boolean] = ev(x).collect { case B(v) => v }
+    def term(v: String): Option[Term] = m.get(v).collect { case T(t) => t }
+    e match {
+      case NVar(v)         => numOf(m.get(v)).map(N)
+      case NConst(_, d)    => Some(N(d))
+      case Arith(op, x, y) => for (a <- n(x); c <- n(y) if !(op == "/" && c == 0)) yield N(op match {
+        case "+" => a + c
+        case "-" => a - c
+        case "*" => a * c
+        case "/" => a / c
+      })
+      case Neg(x)          => n(x).map(a => N(0 - a))
+      case NFn(f, x)       => n(x).map(a => N(f match {
+        case "ABS"   => math.abs(a)
+        case "CEIL"  => math.ceil(a)
+        case "FLOOR" => math.floor(a)
+        case "ROUND" => math.floor(a + 0.5)
+      }))
+      case StrLen(x)       => s(x).map(v => N(v.length.toDouble))
+      // a dateTime by value, a date at midnight (UTC)
+      case DateFn(f, v)    => term(v).collect {
+        case t if t.dt.contains(XSD + "dateTime") => java.time.LocalDateTime.parse(t.value)
+        case t if t.dt.contains(XSD + "date")     => java.time.LocalDate.parse(t.value).atStartOfDay()
+      }.map(d => N((if (f == "YEAR") d.getYear else d.getDayOfMonth).toDouble))
+      // a number's value, a string literal's lexical form; xsd:integer
+      // truncates toward zero
+      case Cast(toInt, v)  => term(v).flatMap(t => t.num.orElse(
+        if (t.isString) t.value.trim.toDoubleOption else None))
+        .map(d => N(if (toInt) d.toLong.toDouble else d))
+      // a bare variable reads string literals; STR also literals' lexical
+      // forms and IRIs
+      case SVar(v, viaStr) => term(v).collect { case t if viaStr || t.isString => S(t.value) }
+      case SLang(v)        => term(v).collect { case t if !t.iri => S(t.lang.getOrElse("")) }
+      case SConst(v)       => Some(S(v))
+      case SCase(u, x)     => s(x).map(v => S(if (u) v.toUpperCase(java.util.Locale.ROOT)
+                                                else v.toLowerCase(java.util.Locale.ROOT)))
+      case SConcat(x, y)   => for (a <- s(x); c <- s(y)) yield S(a + c)
+      case SSub(x, k)      => s(x).map(v => S(v.drop(k - 1)))
+      // two variables under = / != compare as RDF terms: neither brings a
+      // value space
+      case NCmp(op @ ("=" | "!="), NVar(x), NVar(y)) =>
+        for (a <- term(x); c <- term(y)) yield B((a.id == c.id) == (op == "="))
+      case NCmp(op, x, y)  => for (a <- n(x); c <- n(y)) yield B(op match {
+        case "="  => a == c
+        case "!=" => a != c
+        case "<"  => a < c
+        case "<=" => a <= c
+        case ">"  => a > c
+        case ">=" => a >= c
+      })
+      case SCmp(eq, x, y)  => for (a <- s(x); c <- s(y)) yield B((a == c) == eq)
+      case IdCmp(eq, v, t) =>
+        for (a <- term(v); c <- t.orElse(term("w"))) yield B((a.id == c.id) == eq)
+      case DCmp(op, v, d)  =>
+        term(v).filter(_.dt.contains(XSD + "date")).map { t =>
+          val c = java.time.LocalDate.parse(t.value).compareTo(java.time.LocalDate.parse(d))
+          B(op match {
+            case "="  => c == 0
+            case "<"  => c < 0
+            case ">=" => c >= 0
+          })
+        }
+      case InList(v, items, neg) =>
+        val hit =
+          if (items.forall(_.isLeft)) numOf(m.get(v)).map(a => items.exists(_.left.exists(_.value == a)))
+          else term(v).map(t => items.exists(_.exists(_.id == t.id)))
+        hit.map(h => B(h != neg))
+      case Bound(v)        => Some(B(m.contains(v)))
+      case IsLit(v)        => term(v).map(t => B(!t.iri))
+      case Not(x)          => b(x).map(v => B(!v))
+      case And(x, y)       => (b(x), b(y)) match {
+        case (Some(false), _) | (_, Some(false)) => Some(B(false))
+        case (Some(true), Some(true))            => Some(B(true))
+        case _                                   => None
+      }
+      case Or(x, y)        => (b(x), b(y)) match {
+        case (Some(true), _) | (_, Some(true)) => Some(B(true))
+        case (Some(false), Some(false))        => Some(B(false))
+        case _                                 => None
+      }
+      case StrFn(f, x, nd) => s(x).map(v => B(f match {
+        case "CONTAINS"  => v.contains(nd)
+        case "STRSTARTS" => v.startsWith(nd)
+        case "STRENDS"   => v.endsWith(nd)
+      }))
+      case Regex(x, p, ci) =>
+        s(x).map(v => B(java.util.regex.Pattern.compile(if (ci) "(?i)" + p else p).matcher(v).find()))
+      // a NULL condition takes the ELSE branch
+      case If(c, x, y)     => if (b(c).contains(true)) ev(x) else ev(y)
+      case Coalesce(x, y)  => term(x).orElse(term(y)).map(T)
+      case Agg(_)          => None
+    }
+  }
+
+  /** A HAVING condition over one group's ?v terms: COUNT, and SUM / AVG
+    * strict (a non-numeric term makes them unbound), summed exactly. */
+  def evalHaving(h: Ex, vs: Seq[Term]): Option[Boolean] = {
+    val exact = vs.map(t => t.num.map(_ => BigDecimal(t.value)))
+    val sum = if (exact.forall(_.isDefined)) Some(exact.flatten.sum.toDouble) else None
+    def agg(f: String): Option[Double] = f match {
+      case "COUNT(*)" | "COUNT(?v)" => Some(vs.size.toDouble)
+      case "SUM(?v)"                => sum
+      case "AVG(?v)"                => sum.map(_ / vs.size)
+    }
+    h match {
+      case NCmp(op, Agg(f), k) =>
+        agg(f).flatMap(a => evalIn(NCmp(op, NConst("", a), k), Map.empty)).collect { case B(v) => v }
+      case Not(x)    => evalHaving(x, vs).map(!_)
+      case And(x, y) => (evalHaving(x, vs), evalHaving(y, vs)) match {
+        case (Some(false), _) | (_, Some(false)) => Some(false)
+        case (Some(true), Some(true))            => Some(true)
+        case _                                   => None
+      }
+      case Or(x, y)  => (evalHaving(x, vs), evalHaving(y, vs)) match {
+        case (Some(true), _) | (_, Some(true)) => Some(true)
+        case (Some(false), Some(false))        => Some(false)
+        case _                                 => None
+      }
+      case other => sys.error(s"not a HAVING condition: $other")
+    }
+  }
+
+  /** ORDER BY ?v with the nodes table: numeric literals by value after
+    * every other term, ties and the rest by id. */
+  def orderKey(t: Term): (Int, Double, String) =
+    t.num.fold((0, 0.0, t.id))(d => (1, d, t.id))
+
+  def before(a: (Int, Double, String), b: (Int, Double, String)): Boolean =
+    if (a._1 != b._1) a._1 < b._1 else if (a._2 != b._2) a._2 < b._2 else a._3 < b._3
 }

@@ -135,6 +135,29 @@ class PipelineSpec extends AnyFunSuite {
     assert(manifestCounts(dir2) == perBucket)
   }
 
+  test("run leaves the caller's partitionOverwriteMode as it was and still resumes") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try {
+      val dir = tempDir("graft-static")
+      val corpus = Corpus.synthetic(spark, nDocs = 40, linesPerDoc = 25)
+      val perBucket = corpusCounts(corpus, 8)
+      // a first run commits 3 buckets; the resume must write the other
+      // buckets' partitions beside theirs, not replace the whole tables
+      val first = perBucket.keys.toSeq.sorted.take(3)
+      val part = corpus.toDF().filter(Materialize.bucketOf(8).isin(first: _*)).as[CorpusRow]
+      assert(Materialize.run(spark, part, dir, buckets = 8) == 3)
+      assert(spark.conf.get(key) == "static")
+      assert(Materialize.run(spark, corpus, dir, buckets = 8) == perBucket.size - 3)
+      assert(spark.conf.get(key) == "static")
+      assert(manifestCounts(dir) == perBucket)
+      val stagedBuckets = Materialize.readStaging(spark, dir).select("bucket").distinct()
+        .as[Long].collect().toSet
+      assert(stagedBuckets == perBucket.keySet)
+    } finally spark.conf.set(key, saved)
+  }
+
   test("run writes nodes/edges equal to the linked staging; AQE sizes the edges files") {
     // pinned wider than the suite default so a fixed-count edges exchange
     // (one file per shuffle partition) cannot pass the file-count check

@@ -968,7 +968,7 @@ class SparqlParserSpec extends AnyFunSuite {
     val prog = Sparql.evaluate(corpus, LeftJoin(
       BGP(Seq(TriplePattern(V("d"), C("urn:lang"), V("l")))),
       BGP(Seq(TriplePattern(V("d"), C("urn:src"), V("s")))),
-      Seq(Sparql.FCmp(Sparql.FTVar("s"), "!=", Sparql.FTConst(web)))))
+      Seq(Sparql.Call("!=", Seq(Sparql.Var("s"), Sparql.Lit("web"))))))
       .select("d", "s")
     assertSame(out, prog)
     def bad(q: String, needle: String): Unit = {
@@ -1911,5 +1911,39 @@ class SparqlParserSpec extends AnyFunSuite {
       Seq(s"$b|$z2"))
     assert(rows("SELECT ?x ?y ?z WHERE { ?x <urn:q> ?z . ?x <urn:r> ?y OPTIONAL { ?x <urn:p> ?y } }") ===
       Seq(s"$a|$y9|$z1", s"$b|$y2|$z2").sorted)
+  }
+
+  test("a disconnected basic graph pattern is rejected at parse, as at run") {
+    val q = "SELECT * WHERE { ?a <urn:p> ?b . ?c <urn:q> ?d }"
+    val ex = intercept[IllegalArgumentException](Sparql.parse(q))
+    assert(ex.getMessage.contains("disconnected BGP"))
+    // the same rule in an OPTIONAL group
+    assert(intercept[IllegalArgumentException](Sparql.parse(
+      "SELECT * WHERE { ?a <urn:p> ?b OPTIONAL { ?a <urn:q> ?c . ?d <urn:r> ?e } }"))
+      .getMessage.contains("disconnected BGP"))
+  }
+
+  test("a numeric-typed constant is the number it spells (§19.8): one value space for both") {
+    val XSD = "http://www.w3.org/2001/XMLSchema#"
+    // four subjects, one value each: the same number in four spellings
+    val terms = Seq(("5", "integer"), ("05", "integer"), ("5.0", "double"), ("5", "long"))
+    val ids = terms.map { case (v, t) => Bgp.litId(v, XSD + t) }
+    val subjects = (1 to 4).map(i => Bgp.iriId(s"urn:s:$i"))
+    val e = edges(subjects.zip(ids).map { case (s, o) => (s, "urn:v", o) }: _*)
+    val nodes = terms.zip(ids).map { case ((v, t), id) =>
+      (id, RdfTerm.LITERAL, v, null: String, XSD + t) }.toDF("id", "kind", "value", "lang", "dt")
+    def subjectsOf(filter: String): Set[String] = Sparql.run(e, nodes,
+      s"SELECT ?s WHERE { ?s <urn:v> ?v FILTER($filter) }")
+      .collect().map(_.getString(0)).toSet
+    for (five <- Seq("5", s"\"5\"^^<${XSD}integer>")) {
+      assert(subjectsOf(s"?v = $five") === subjects.toSet, five)
+      assert(subjectsOf(s"?v != $five") === Set.empty, five)
+      assert(subjectsOf(s"?v IN ($five)") === subjects.toSet, five)
+    }
+    // ordering against a typed constant, and a parenthesized arithmetic
+    // left side, read the numeric space like their bare spellings
+    assert(subjectsOf(s"?v < \"6\"^^<${XSD}integer>") === subjects.toSet)
+    assert(subjectsOf("(?v + 1) > 5") === subjects.toSet)
+    assert(subjectsOf(s"(?v + 1) > \"6\"^^<${XSD}long>") === Set.empty)
   }
 }
