@@ -36,8 +36,25 @@ object SparkEntry {
 
   // ---------- corpora ------------------------------------------------------
 
+  private def nation(s: SparkSession, dir: String): DataFrame =
+    s.read.schema(NationSchema).parquet(s"$dir/nation.parquet")
+
+  /** The path gates' graph over the nation keys: `up` edges k -> k/2 (a
+    * binary tree rooted at 0) and a `peer` ring k -> k+1 mod 25. */
+  private def nationUpPeer(s: SparkSession, dir: String): DataFrame = {
+    val n = nation(s, dir)
+    val nk = col("n_nationkey").cast("long")
+    val up = n.filter(nk >= 1).select(
+      nk.cast("string").as("subj_id"), lit("up").as("pred"),
+      (nk / 2).cast("long").cast("string").as("obj_id"))
+    val peer = n.select(
+      nk.cast("string").as("subj_id"), lit("peer").as("pred"),
+      ((nk + 1) % 25).cast("string").as("obj_id"))
+    up.union(peer)
+  }
+
   private def nationCorpus(s: SparkSession, dir: String): Dataset[CorpusRow] =
-    Corpus.fromTable(fanOut(s, s.read.schema(NationSchema).parquet(s"$dir/nation.parquet")),
+    Corpus.fromTable(fanOut(s, nation(s, dir)),
       "nation", "n_nationkey",
       Seq("n_name" -> col("n_name"), "n_regionkey" -> col("n_regionkey")))
 
@@ -321,7 +338,7 @@ object SparkEntry {
     // E4: scoped bnode skolemization (sha256(repo|commit|path|label))
     "kg_skolemize" -> ((s, dir) => {
       import s.implicits._
-      val corpus = s.read.parquet(s"$dir/nation.parquet").select(
+      val corpus = nation(s, dir).select(
         lit("synthetic/bnodes").as("repo"),
         concat(lit("bn/"), col("n_nationkey").cast("string"), lit(".nt")).as("path"),
         lit(Corpus.FixedCommit).as("commit"),
@@ -359,7 +376,7 @@ object SparkEntry {
     // E8: manifest anti-join resume shape
     "kg_resume_antijoin" -> ((s, dir) => {
       import s.implicits._
-      val withBucket = s.read.parquet(s"$dir/nation.parquet")
+      val withBucket = nation(s, dir)
         .select((col("n_nationkey") % 8).as("bucket"),
           concat(lit("nation/"), col("n_nationkey").cast("string"), lit(".nt")).as("path"))
       val manifest = Seq(0L, 1L).toDF("bucket")
@@ -942,7 +959,7 @@ object SparkEntry {
 
     // graph analytics over a numeric nation->region edge set
     "kg_graph_degrees" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/nation.parquet")
+      val e = nation(s, dir)
         .select((col("n_nationkey") + 100).cast("long").as("subj_id"),
           col("n_regionkey").cast("long").as("obj_id"))
       GraphOps.degrees(e)
@@ -951,7 +968,7 @@ object SparkEntry {
     // connected components (large-star/small-star rounds); maxIter = 4
     // must suffice, since non-convergence is an error
     "kg_graph_components" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/nation.parquet")
+      val e = nation(s, dir)
         .select((col("n_nationkey") + 100).cast("long").as("src"),
           col("n_regionkey").cast("long").as("dst"))
       GraphOps.connectedComponents(e, "src", "dst", maxIter = 4)
@@ -971,7 +988,7 @@ object SparkEntry {
     // from nation (each consecutive triple (i, i+1, i+2) closes a
     // triangle); per-node counts are exact
     "kg_triangles" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val n = nation(s, dir)
       val ring = n.select(col("n_nationkey").cast("long").as("src"),
         ((col("n_nationkey") + 1) % 25).cast("long").as("dst"))
       val chord = n.select(col("n_nationkey").cast("long").as("src"),
@@ -982,7 +999,7 @@ object SparkEntry {
     // multi-source BFS distances (<= 3 hops from node 0) over the
     // ring+chord graph — the "k-hop neighborhood" KG traversal primitive
     "kg_bfs_distances" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val n = nation(s, dir)
       val ring = n.select(col("n_nationkey").cast("long").as("src"),
         ((col("n_nationkey") + 1) % 25).cast("long").as("dst"))
       val chord = n.select(col("n_nationkey").cast("long").as("src"),
@@ -994,7 +1011,7 @@ object SparkEntry {
     // deterministic scaled-integer PageRank (3 iterations) — exact BIGINT
     // arithmetic, so the DuckDB oracle reproduces every rank bit-for-bit
     "kg_pagerank" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/nation.parquet")
+      val e = nation(s, dir)
         .select((col("n_nationkey") + 100).cast("long").as("src"),
           col("n_regionkey").cast("long").as("dst"))
       GraphOps.pagerankScaled(e, "src", "dst", iters = 3)
@@ -1048,7 +1065,7 @@ object SparkEntry {
     // ?b next ?c, ?a skip ?c — two different join variables plus a
     // cycle-closing third pattern (the path/closure query shape)
     "kg_bgp_path" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val n = nation(s, dir)
       def lbl(pred: String, off: Int) = n.select(
         col("n_nationkey").cast("long").cast("string").as("subj_id"),
         lit(pred).as("pred"),
@@ -1063,7 +1080,7 @@ object SparkEntry {
     // optional group binds ?c for half the rows and NULL for the rest —
     // the left-join semantics of the well-designed OPTIONAL fragment
     "kg_bgp_optional" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val n = nation(s, dir)
       def lbl(pred: String, off: Int) = n.select(
         col("n_nationkey").cast("long").cast("string").as("subj_id"),
         lit(pred).as("pred"),
@@ -1082,7 +1099,7 @@ object SparkEntry {
     // a 3-edit variant that shares a block but must be REJECTED by the
     // levenshtein verify. Expected: 25 clusters of 4 + 25 singletons.
     "kg_entity_resolution" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val n = nation(s, dir)
       val base = substring(sha2(col("n_name"), 256), 1, 12)
       val idb = col("n_nationkey").cast("long") * 10
       val ents = n.select(explode(array(
@@ -1102,7 +1119,7 @@ object SparkEntry {
     // 'zzz' variant stays distinct; endpoints outside the mapping pass
     // through unchanged
     "kg_sameas_rewrite" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val n = nation(s, dir)
       val base = substring(sha2(col("n_name"), 256), 1, 12)
       val idb = col("n_nationkey").cast("long") * 10
       val ents = n.select(explode(array(
@@ -1133,7 +1150,7 @@ object SparkEntry {
     // end typo, 3-edit reject candidate) trips the drop flag while the
     // singleton/suffix blocks stay retained — both branches exercised
     "kg_er_blocks" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val n = nation(s, dir)
       val base = substring(sha2(col("n_name"), 256), 1, 12)
       val idb = col("n_nationkey").cast("long") * 10
       val ents = n.select(explode(array(
@@ -1152,7 +1169,7 @@ object SparkEntry {
     // closure (iterative doubling) + rdfs9 type inheritance over a
     // broadcast vocabulary-sized hierarchy
     "kg_rdfs_closure" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val n = nation(s, dir)
       // no .distinct() here (r7): transitiveClosure's own seed distinct
       // dedups the identical pair set — the duplicate shuffle was pure
       // overhead (guide §2.4)
@@ -1171,7 +1188,7 @@ object SparkEntry {
     // away over several iterations (leaves first, then their parents),
     // the clique survives — exercises the multi-round peeling fixpoint
     "kg_kcore" -> ((s, dir) => {
-      val keys = s.read.parquet(s"$dir/nation.parquet")
+      val keys = nation(s, dir)
         .select(col("n_nationkey").cast("long").as("i"))
       val tree = keys.filter(col("i") >= 1)
         .select(col("i").as("src"), expr("i DIV 2").as("dst"))
@@ -1235,15 +1252,7 @@ object SparkEntry {
     // edge set (iterative doubling) — the 'peer' edges prove the closure
     // is predicate-scoped, not graph-wide
     "kg_bgp_path_plus" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
-      val nk = col("n_nationkey").cast("long")
-      val up = n.filter(nk >= 1).select(
-        nk.cast("string").as("subj_id"), lit("up").as("pred"),
-        (nk / 2).cast("long").cast("string").as("obj_id"))
-      val peer = n.select(
-        nk.cast("string").as("subj_id"), lit("peer").as("pred"),
-        ((nk + 1) % 25).cast("string").as("obj_id"))
-      Bgp.matchPatterns(up.union(peer),
+      Bgp.matchPatterns(nationUpPeer(s, dir),
         Seq(Bgp.TriplePattern(Bgp.V("s"),
           Bgp.PathPat(Bgp.PClosure(Bgp.PLeaf("up"), '+')), Bgp.V("o"))))
     }),
@@ -1306,7 +1315,7 @@ object SparkEntry {
     // array_join'd for cross-engine hashing (the array column itself is
     // spec-gated)
     "kg_property_table_multi" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val n = nation(s, dir)
       val nk = col("n_nationkey").cast("long")
       val subj = concat(lit("n:"), nk).as("subj_id")
       val tagR = n.select(subj, lit("tag").as("pred"),
@@ -1327,30 +1336,14 @@ object SparkEntry {
     // rows cover peer-only nodes too, while the closure itself stays
     // predicate-scoped
     "kg_bgp_path_star" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
-      val nk = col("n_nationkey").cast("long")
-      val up = n.filter(nk >= 1).select(
-        nk.cast("string").as("subj_id"), lit("up").as("pred"),
-        (nk / 2).cast("long").cast("string").as("obj_id"))
-      val peer = n.select(
-        nk.cast("string").as("subj_id"), lit("peer").as("pred"),
-        ((nk + 1) % 25).cast("string").as("obj_id"))
-      Sparql.run(up.union(peer), "SELECT ?x ?y WHERE { ?x <up>* ?y }")
+      Sparql.run(nationUpPeer(s, dir), "SELECT ?x ?y WHERE { ?x <up>* ?y }")
     }),
 
     // negated property set !<peer> joined to a zero-or-one path <up>? —
     // the NOT-IN filter is pushed to the scan; the ?-relation is edges
     // plus graph-wide identity
     "kg_bgp_path_negopt" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
-      val nk = col("n_nationkey").cast("long")
-      val up = n.filter(nk >= 1).select(
-        nk.cast("string").as("subj_id"), lit("up").as("pred"),
-        (nk / 2).cast("long").cast("string").as("obj_id"))
-      val peer = n.select(
-        nk.cast("string").as("subj_id"), lit("peer").as("pred"),
-        ((nk + 1) % 25).cast("string").as("obj_id"))
-      Sparql.run(up.union(peer),
+      Sparql.run(nationUpPeer(s, dir),
         "SELECT ?x ?y ?z WHERE { ?x !<peer> ?y . ?y <up>? ?z }")
     }),
 
@@ -1359,15 +1352,7 @@ object SparkEntry {
     // node, each hop's predicate filter pushed to its scan — the 'peer'
     // edges prove both hops are predicate-scoped
     "kg_bgp_path_seq" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
-      val nk = col("n_nationkey").cast("long")
-      val up = n.filter(nk >= 1).select(
-        nk.cast("string").as("subj_id"), lit("up").as("pred"),
-        (nk / 2).cast("long").cast("string").as("obj_id"))
-      val peer = n.select(
-        nk.cast("string").as("subj_id"), lit("peer").as("pred"),
-        ((nk + 1) % 25).cast("string").as("obj_id"))
-      Sparql.run(up.union(peer), "SELECT ?x ?y WHERE { ?x <up>/^<up> ?y }")
+      Sparql.run(nationUpPeer(s, dir), "SELECT ?x ?y WHERE { ?x <up>/^<up> ?y }")
     }),
 
     // SPARQL 1.1 aggregation through the string front end: GROUP BY lang
@@ -1461,7 +1446,7 @@ object SparkEntry {
     // order undefined), SAMPLE compiles to min — both deterministic
     // cross-engine by construction
     "kg_sparql_group_concat" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val n = nation(s, dir)
       val nk = col("n_nationkey").cast("long")
       val subj = concat(lit("n:"), nk).as("subj_id")
       val tag = n.select(subj, lit("tag").as("pred"),
@@ -1889,15 +1874,7 @@ object SparkEntry {
     // pattern matches pairs at even up-distance; the peer ring proves
     // the group is predicate-scoped
     "kg_bgp_path_nested" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
-      val nk = col("n_nationkey").cast("long")
-      val up = n.filter(nk >= 1).select(
-        nk.cast("string").as("subj_id"), lit("up").as("pred"),
-        (nk / 2).cast("long").cast("string").as("obj_id"))
-      val peer = n.select(
-        nk.cast("string").as("subj_id"), lit("peer").as("pred"),
-        ((nk + 1) % 25).cast("string").as("obj_id"))
-      Sparql.run(up.union(peer), "SELECT ?x ?y WHERE { ?x (<up>/<up>)+ ?y }")
+      Sparql.run(nationUpPeer(s, dir), "SELECT ?x ?y WHERE { ?x (<up>/<up>)+ ?y }")
     }),
 
     // GENUINELY NESTED property path — a sequence whose second part is
@@ -1906,15 +1883,7 @@ object SparkEntry {
     // the (up/up)+ closure relation (the same O(log diameter) doubling
     // as every other closure); bag semantics per SPARQL path evaluation
     "kg_bgp_path_deep" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
-      val nk = col("n_nationkey").cast("long")
-      val up = n.filter(nk >= 1).select(
-        nk.cast("string").as("subj_id"), lit("up").as("pred"),
-        (nk / 2).cast("long").cast("string").as("obj_id"))
-      val peer = n.select(
-        nk.cast("string").as("subj_id"), lit("peer").as("pred"),
-        ((nk + 1) % 25).cast("string").as("obj_id"))
-      Sparql.run(up.union(peer),
+      Sparql.run(nationUpPeer(s, dir),
         "SELECT ?x ?y WHERE { ?x <peer>/(<up>/<up>)+ ?y }")
     }),
 

@@ -10,34 +10,34 @@ import graft.Share
  * E6-E9: graph materialization with skew handling, per-partition
  * checkpoint/resume and metrics.
  *
- * Output layout under `outDir` (parquet tables; the writer is kept behind
- * this one object so swapping in a real Iceberg catalog is a config
- * change — the sandbox ships no Iceberg jars, see SURVEY.md §7):
+ * Output layout under `outDir` (four parquet tables; the writer is kept
+ * behind this one object so swapping in a real Iceberg catalog is a
+ * config change — the sandbox ships no Iceberg jars, see SURVEY.md §7):
  *
  *   staging/   bucket=K/err=B/...   one pass of the parse kernel, the
  *                                   resumable unit of work
  *   nodes/                          distinct terms: id, kind, value, lang, dt
  *   edges/                          subj_id, pred, obj_id + lineage; AQE
  *                                   sizes the files (see saltedRepartition)
- *   metrics/   bucket=K/...         per-document lineage + counts + sha256,
- *                                   one file per bucket
- *   manifest/  bucket=K/...         per-bucket checkpoint rows (n_docs)
+ *   manifest/  bucket=K/...         the commit: one row per document of
+ *                                   the bucket, its lineage + counts +
+ *                                   sha256 ([[metrics]]), one file per bucket
  *
  * Resume contract (E8): work is sharded into `buckets` by a hash of the
- * document identity (repo, path, commit). A bucket appears in `manifest`
- * only after its staging output is fully written, so a crashed/killed job
- * re-runs exactly the missing buckets: the corpus is anti-joined against
- * the manifest before any parsing happens. The partitioned writes
- * (staging, metrics, manifest) use dynamic partition overwrite, making a
+ * document identity (repo, path, commit). Bucket K is committed once
+ * `manifest/bucket=K` holds a file; the manifest is written last, so a
+ * crashed/killed job re-runs exactly the uncommitted buckets: the corpus
+ * is anti-joined against the committed buckets before any parsing. A new
+ * document in a committed bucket is not processed. The partitioned
+ * writes (staging, manifest) use dynamic partition overwrite, making a
  * re-run of a half-written bucket idempotent; it is a write option, so
  * the caller's session keeps its own `partitionOverwriteMode`.
  *
  * A run reads the corpus twice: once for one digest row per todo
  * document (repo, path, commit, content_sha256, bucket), shared with
- * [[graft.Share]], from which come both the manifest counts and the
- * metrics; and once to parse the todo documents. A lost digest block fails
- * the metrics write, which comes before the manifest commit, so a resume
- * re-runs those buckets.
+ * [[graft.Share]], from which come the todo buckets and the manifest
+ * rows; and once to parse the todo documents. A lost digest block fails
+ * the manifest write, so a resume re-runs those buckets.
  */
 object Materialize {
 
@@ -68,10 +68,11 @@ object Materialize {
     StructField("bucket", LongType),
     StructField("err", BooleanType)))
 
-  /** Schema of the manifest table: one row per committed bucket. */
-  private val ManifestSchema: StructType = StructType(Seq(
-    StructField("n_docs", LongType),
-    StructField("bucket", LongType)))
+  /** Schema of the manifest table: the [[metrics]] row of each committed
+    * document, then the `bucket` partition column. */
+  private val ManifestSchema: StructType = StructType(StagingSchema.take(3) ++ Seq(
+    StructField("content_sha256", StringType), StructField("n_triples", LongType),
+    StructField("n_errors", LongType), StructField("bucket", LongType)))
 
   /**
    * Read the staging table back with its known schema. Naming the schema
@@ -296,14 +297,17 @@ object Materialize {
   }
 
   /**
-   * The committed manifest rows (n_docs, bucket), read with their known
-   * schema, so no schema-inference job runs. Only a manifest that was
-   * never committed reads as "nothing done": a missing directory, or one
-   * holding nothing but hidden entries such as the `_temporary` dir of a
-   * write that died before its commit (the parquet reader skips those,
-   * so it finds no file). Any other failure, such as a corrupt file or a
-   * `bucket=` directory that is not a number, fails the caller rather
-   * than silently re-running every bucket.
+   * The committed manifest rows, read with their known schema, so no
+   * schema-inference job runs. `bucket` comes from the directory names,
+   * so an older manifest of `(n_docs, bucket)` rows (with a `metrics/`
+   * table beside it) reads as the same committed buckets, its document
+   * columns NULL. Only a manifest that was never committed reads as
+   * "nothing done": a missing directory, or one holding nothing but
+   * hidden entries such as the `_temporary` dir of a write that died
+   * before its commit (the parquet reader skips those, so it finds no
+   * file). Any other failure, such as a corrupt file or a `bucket=`
+   * directory that is not a number, fails the caller rather than
+   * silently re-running every bucket.
    */
   def readManifest(spark: SparkSession, manifestPath: String): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(manifestPath)
@@ -313,8 +317,9 @@ object Materialize {
   }
 
   /**
-   * Full materialization run with resume. Returns the number of buckets
-   * actually processed in this invocation (0 == nothing left to do).
+   * Full materialization run with resume: stages every uncommitted
+   * bucket, rebuilds nodes and edges, then commits those buckets' rows.
+   * Returns the number of buckets processed (0 == nothing left to do).
    */
   def run(spark: SparkSession, corpus: Dataset[CorpusRow], outDir: String,
           buckets: Int = 64, strict: Boolean = false): Int = {
@@ -322,17 +327,14 @@ object Materialize {
 
     val withBucket = corpus.toDF().withColumn("bucket", bucketOf(buckets))
     val manifestPath = s"$outDir/manifest"
-    val done = readManifest(spark, manifestPath).select("bucket")
+    val done = readManifest(spark, manifestPath).select("bucket").distinct()
 
-    // one digest row per todo document, shared: its per-bucket counts ARE
-    // the manifest rows this run commits (<= `buckets` rows, collected
-    // here), and the metrics write reads it instead of the corpus
+    // one digest row per todo document, shared: the manifest rows this run
+    // commits, and its distinct buckets (<= `buckets` values, collected here)
     val todo = withBucket.join(broadcast(done), Seq("bucket"), "left_anti")
     val todoDigests = Share(digests(todo, col("bucket")))
-    val todoCounts = todoDigests.groupBy("bucket").agg(count(lit(1)).as("n_docs"))
-      .as[(Long, Long)].collect()
-    if (todoCounts.isEmpty) return 0
-    val todoBuckets = todoCounts.map(_._1).sorted
+    val todoBuckets = todoDigests.select("bucket").distinct().as[Long].collect().sorted
+    if (todoBuckets.isEmpty) return 0
 
     // ---- parse (single pass) -> staging, partitioned by (bucket, err)
     // native generator path: no object-serde boundary (see ParseNtLines)
@@ -354,18 +356,13 @@ object Materialize {
       salts = 16)
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/edges")
 
-    // ---- metrics for the documents processed in THIS run: counted from
+    // ---- commit LAST: the documents processed in THIS run, counted from
     // the STAGED rows, not the live parse plan — re-evaluating `parsed`
     // here would parse the whole todo corpus a second time. A
     // repartition-by-bucket that AQE sizes (the edges pattern) puts each
     // bucket in one task, so each bucket is one file.
     val stagedTodo = staged.filter(col("bucket").isin(todoBuckets: _*))
     countsJoin(todoDigests, stagedTodo).repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(s"$outDir/metrics") // dynamic overwrite: idempotent on re-run
-
-    // ---- commit the checkpoint LAST: bucket-level manifest rows
-    todoCounts.toSeq.toDF("bucket", "n_docs")
       .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket").parquet(manifestPath)
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
  *
  *   corpus (parquet/table) -> [slice+parse kernel] -> staging{triples,errors}
  *     -> [skolemize] -> [canonicalize/link] -> nodes + edges tables
- *     + manifest checkpoint + per-document metrics
+ *     -> manifest: the commit, one metrics row per document
  *
  * Usage:
  *   Pipeline <corpusParquetPath|synth:N:L> <outDir> [buckets] [strict]
@@ -25,10 +25,9 @@ object Pipeline {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       // list up to 1024 paths (a glob's files, a table's partition dirs)
       // on the driver, not in a distributed job: at the default of 32 a
-      // 64-file glob or a 64-bucket staging/metrics/manifest table is
+      // 64-file glob or a 64-bucket staging or manifest table is
       // listed by a job. Measured on the local FS at local[4]: the job for
       // a 64-file glob ran ~300 ms, and NtFileSource.documents took
       // 0.5-0.9 s with it against 50-70 ms listing on the driver. Object

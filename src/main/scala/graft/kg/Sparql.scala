@@ -125,7 +125,10 @@ import Bgp.{C, TriplePattern, V}
  * coincide whenever the group holds no numeric literal). ORDER BY over
  * a node-space variable upgrades the same way (one broadcast-able term
  * join per ordered column); aliases and BIND values always sort by
- * their plain column, and an ASC / DESC expression key is numeric.
+ * their plain column, and an ASC / DESC expression key is numeric. So
+ * does `?v = ?w` (and `!=`): with the nodes table two numeric literals
+ * compare by value (§17.3 op:numeric-equal), other terms by id; on the
+ * edges-only overload and in OPTIONAL conditions, by id only.
  * SAMPLE compiles to `min` (a deterministic pick where the spec allows
  * any) and GROUP_CONCAT concatenates in sorted order (the spec leaves
  * order undefined) so results are engine-independent; SUM/AVG read the
@@ -668,11 +671,12 @@ object Sparql {
     * 's'tring, id-space 'c'opy) of BIND variables and aggregate aliases,
     * the variables bound in predicate / GRAPH position (raw IRIs, which
     * includes BIND copies of them), the variables in scope, where the
-    * expression stands (`ctx`, for messages) and, under HAVING, each
-    * aggregate's column. */
+    * expression stands (`ctx`, for messages), under HAVING each
+    * aggregate's column, and whether the nodes table is attached. */
   private final case class Env(kinds: Map[String, Char], pred: Set[String],
                                scope: Set[String] = Set.empty, ctx: String = "",
-                               alias: Map[AggCall, String] = Map.empty)
+                               alias: Map[AggCall, String] = Map.empty,
+                               values: Boolean = false)
 
   private val InOptional = "a FILTER inside OPTIONAL"
 
@@ -722,6 +726,16 @@ object Sparql {
       else if (Seq(l, r).exists { case Var(v) => pred(v); case _ => false }) 'p'
       else 'c')
   }
+
+  /** The two variables of `?a = ?b` / `?a != ?b` that compare by value
+    * when both bound terms are numeric literals (see the header): where
+    * the nodes table is attached (`values`), outside OPTIONAL conditions. */
+  private def numericEq(l: Expr, r: Expr, op: String, env: Env): Seq[String] =
+    (l, r) match {
+      case (Var(a), Var(b)) if env.values && env.ctx != InOptional &&
+          cmpSpace(op, l, r, env.pred) == 'c' => Seq(a, b)
+      case _ => Nil
+    }
 
   /** The typing pass: checks `e` as `want` — 'b' a condition, '*' a BIND
     * body, 'n' a numeric ORDER BY key — node by node against the table in
@@ -921,7 +935,7 @@ object Sparql {
         ops.flatMap {
           case Var(v) => read(v, how)
           case o      => if (ctx == "HAVING" && !o.isInstanceOf[Agg]) Nil else check(o)
-        }
+        } ++ numericEq(l, r, op, env)
       case Call(op, Seq(a, b)) if ArithOps(op) => arg(op, a, 'n') ++ arg(op, b, 'n')
       case Call(op @ ("IN" | "NOT IN"), left +: items) =>
         val v = left match {
@@ -1009,7 +1023,13 @@ object Sparql {
       case Call("||", Seq(a, b))  => c(a, 'b') || c(b, 'b')
       case Call(op, Seq(l, r)) if CmpOps(op) =>
         val sp = cmpSpace(op, l, r, env.pred)
-        cmp(op, c(l, sp), c(r, sp))
+        val byId = cmp(op, c(l, sp), c(r, sp))
+        numericEq(l, r, op, env) match {
+          case Seq(a, b) =>
+            val (x, y) = (termNum(term(a)), termNum(term(b)))
+            when(x.isNotNull && y.isNotNull, cmp(op, x, y)).otherwise(byId)
+          case _ => byId
+        }
       case Call(op, Seq(l, r)) if ArithOps(op) =>
         val (a, b) = (c(l, 'n'), c(r, 'n'))
         op match {
@@ -2522,7 +2542,8 @@ object Sparql {
     val hybridVars = if (nodes.isDefined) q.minmaxAggVars else Nil
     val aggVars = (q.numericAggVars ++ hybridVars).distinct
     val evaluated = withTerms(eval(q.where,
-      Ctx(edges, nodes, Env(valueKinds(q.where), predSpace(q.where)))), aggVars, nodes)
+      Ctx(edges, nodes, Env(valueKinds(q.where), predSpace(q.where), values = nodes.isDefined))),
+      aggVars, nodes)
     val matched = evaluated.drop(evaluated.schema.fields.collect {
       case f if f.name.endsWith("_term") && f.dataType.isInstanceOf[StructType] &&
         !aggVars.contains(f.name.stripSuffix("_term")) => f.name

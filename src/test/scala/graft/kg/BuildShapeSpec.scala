@@ -17,9 +17,10 @@ import graft.CostTrace
  * `Materialize.run` into an empty dir), as executed:
  *  - the input glob, and the bucket dirs of a 64-bucket staging and
  *    manifest, are listed on the driver, with no Spark job;
- *  - the corpus is read by two jobs, the digest job behind the manifest
- *    counts and the parse; the metrics write reads the shared digests;
- *  - the metrics table is one file per bucket;
+ *  - it runs a fixed number of jobs and writes four tables;
+ *  - the corpus is read by two jobs, the digest job behind the todo
+ *    buckets and the parse; the manifest write reads the shared digests;
+ *  - the manifest is one file per bucket;
  *  - its rows are those of `Materialize.metrics` over the live parse.
  */
 class BuildShapeSpec extends AnyFunSuite {
@@ -91,7 +92,13 @@ class BuildShapeSpec extends AnyFunSuite {
     } finally spark.conf.set(Threshold, "1024")
   }
 
-  test("run into an empty dir reads the corpus in two jobs and writes one metrics file per bucket") {
+  test("a fresh 8-bucket build runs 11 jobs and writes staging, nodes, edges and manifest") {
+    val dir = Files.createTempDirectory("graft-buildshape-tables").toString
+    assert(jobs(Materialize.run(spark, NtFileSource.documents(spark, glob), dir, Buckets)) == 11)
+    assert(new java.io.File(dir).list.toSet == Set("staging", "nodes", "edges", "manifest"))
+  }
+
+  test("run into an empty dir reads the corpus in two jobs and writes one manifest file per bucket") {
     val sc = spark.sparkContext
     val reads = sc.longAccumulator("corpus documents read")
     val counted = udf { (s: String) => reads.add(1); s }
@@ -105,17 +112,17 @@ class BuildShapeSpec extends AnyFunSuite {
 
     val perBucket = files.toDF().groupBy(Materialize.bucketOf(Buckets)).count().collect()
     assert(processed == perBucket.length)
-    // the digest job (manifest counts) and the parse; not the metrics write
+    // the digest job (todo buckets) and the parse; not the manifest write
     assert(readers.jobs == 2)
     assert(reads.value == 2L * 40)
 
-    val metricsDirs = new java.io.File(s"$dir/metrics").listFiles.filter(_.getName.startsWith("bucket="))
-    assert(metricsDirs.length == perBucket.length)
-    metricsDirs.foreach { b =>
+    val manifestDirs = new java.io.File(s"$dir/manifest").listFiles.filter(_.getName.startsWith("bucket="))
+    assert(manifestDirs.length == perBucket.length)
+    manifestDirs.foreach { b =>
       assert(b.listFiles.count(_.getName.startsWith("part-")) == 1, s"${b.getName} files")
     }
 
-    val written = spark.read.parquet(s"$dir/metrics")
+    val written = spark.read.parquet(s"$dir/manifest")
       .withColumn("bucket", col("bucket").cast("long"))
     val plain = NtFileSource.documents(spark, glob)
     val expected = Materialize.metrics(plain.toDF(), TripleExtract.parse(plain).toDF())

@@ -1020,6 +1020,16 @@ private object ExprGen {
     case _    => None
   }
 
+  /** §17.3 `=`: two numbers by value (op:numeric-equal), two RDF terms
+    * by identity; a number against any other term is an error. */
+  private def equal(a: Value, c: Value): Option[Boolean] = (numOf(Some(a)), numOf(Some(c))) match {
+    case (Some(x), Some(y)) => Some(x == y)
+    case _ => (a, c) match {
+      case (T(s), T(t)) => Some(s.id == t.id)
+      case _            => None
+    }
+  }
+
   /** `e` over a solution and, as ?b, the value of a BIND. */
   def eval(e: Ex, m: Sol, bind: Option[Value] = None): Option[Value] =
     evalIn(e, m.map { case (k, t) => k -> (T(t): Value) } ++ bind.map("b" -> _))
@@ -1031,6 +1041,11 @@ private object ExprGen {
     def s(x: Ex): Option[String] = ev(x).collect { case S(v) => v }
     def b(x: Ex): Option[Boolean] = ev(x).collect { case B(v) => v }
     def term(v: String): Option[Term] = m.get(v).collect { case T(t) => t }
+    // an = / != operand: a variable is its term, which a number may equal
+    def operand(x: Ex): Option[Value] = x match {
+      case NVar(v) => m.get(v)
+      case _       => ev(x)
+    }
     e match {
       case NVar(v)         => numOf(m.get(v)).map(N)
       case NConst(_, d)    => Some(N(d))
@@ -1067,10 +1082,8 @@ private object ExprGen {
                                                 else v.toLowerCase(java.util.Locale.ROOT)))
       case SConcat(x, y)   => for (a <- s(x); c <- s(y)) yield S(a + c)
       case SSub(x, k)      => s(x).map(v => S(v.drop(k - 1)))
-      // two variables under = / != compare as RDF terms: neither brings a
-      // value space
-      case NCmp(op @ ("=" | "!="), NVar(x), NVar(y)) =>
-        for (a <- term(x); c <- term(y)) yield B((a.id == c.id) == (op == "="))
+      case NCmp(op @ ("=" | "!="), x, y) =>
+        for (a <- operand(x); c <- operand(y); eq <- equal(a, c)) yield B(eq == (op == "="))
       case NCmp(op, x, y)  => for (a <- n(x); c <- n(y)) yield B(op match {
         case "="  => a == c
         case "!=" => a != c
@@ -1081,7 +1094,7 @@ private object ExprGen {
       })
       case SCmp(eq, x, y)  => for (a <- s(x); c <- s(y)) yield B((a == c) == eq)
       case IdCmp(eq, v, t) =>
-        for (a <- term(v); c <- t.orElse(term("w"))) yield B((a.id == c.id) == eq)
+        for (a <- term(v); c <- t.orElse(term("w")); same <- equal(T(a), T(c))) yield B(same == eq)
       case DCmp(op, v, d)  =>
         term(v).filter(_.dt.contains(XSD + "date")).map { t =>
           val c = java.time.LocalDate.parse(t.value).compareTo(java.time.LocalDate.parse(d))

@@ -41,9 +41,9 @@ class PipelineSpec extends AnyFunSuite {
 
   private def tempDir(prefix: String): String = Files.createTempDirectory(prefix).toString
 
-  /** Per-bucket (bucket -> n_docs) rows of a manifest directory. */
+  /** Documents per bucket (bucket -> n) committed in a manifest directory. */
   private def manifestCounts(dir: String): Map[Long, Long] =
-    Materialize.readManifest(spark, s"$dir/manifest").select("bucket", "n_docs")
+    Materialize.readManifest(spark, s"$dir/manifest").groupBy("bucket").count()
       .as[(Long, Long)].collect().toMap
 
   /** Documents per bucket, counted straight from the corpus. */
@@ -110,7 +110,7 @@ class PipelineSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-mat").toString
     val corpus = Corpus.synthetic(spark, nDocs = 40, linesPerDoc = 25)
     // no manifest directory: nothing is done, so every bucket runs and
-    // commits its corpus document count
+    // commits one row per corpus document
     val perBucket = corpusCounts(corpus, 8)
     val n1 = Materialize.run(spark, corpus, dir, buckets = 8)
     assert(n1 == perBucket.size)
@@ -126,13 +126,15 @@ class PipelineSpec extends AnyFunSuite {
     // resume: everything is checkpointed, second run is a no-op
     val n2 = Materialize.run(spark, corpus, dir, buckets = 8)
     assert(n2 == 0)
-    // partial manifest -> only missing buckets processed
+    // partial manifest (3 whole buckets) -> only missing buckets processed
     val dir2 = Files.createTempDirectory("graft-mat2").toString
-    spark.read.parquet(s"$dir/manifest").limit(3)
+    val manifest = Materialize.readManifest(spark, s"$dir/manifest")
+    manifest.filter($"bucket".isin(perBucket.keys.toSeq.sorted.take(3): _*))
       .write.partitionBy("bucket").parquet(s"$dir2/manifest")
     val n3 = Materialize.run(spark, corpus, dir2, buckets = 8)
     assert(n3 == n1 - 3)
     assert(manifestCounts(dir2) == perBucket)
+    assert(tableHash(Materialize.readManifest(spark, s"$dir2/manifest")) == tableHash(manifest))
   }
 
   test("run leaves the caller's partitionOverwriteMode as it was and still resumes") {
@@ -205,6 +207,29 @@ class PipelineSpec extends AnyFunSuite {
     assert(attempt.mkdirs())
     Files.write(new java.io.File(attempt, "part-00000.snappy.parquet").toPath, "torn".getBytes)
     assert(Materialize.run(spark, corpus, dir, buckets = 4) == corpusCounts(corpus, 4).size)
+  }
+
+  test("manifest: an older (n_docs, bucket) manifest's buckets read as committed") {
+    // the layout a build wrote before the manifest held document rows:
+    // one n_docs row per bucket, and a per-document metrics table beside it
+    val dir = tempDir("graft-oldmanifest")
+    val corpus = Corpus.synthetic(spark, nDocs = 40, linesPerDoc = 5)
+    val perBucket = corpusCounts(corpus, 8)
+    val old = perBucket.toSeq.sorted.take(3)
+    old.toDF("bucket", "n_docs").write.partitionBy("bucket").parquet(s"$dir/manifest")
+    Materialize.metrics(corpus.toDF(), TripleExtract.parse(corpus).toDF())
+      .withColumn("bucket", Materialize.bucketOf(8)).filter($"bucket".isin(old.map(_._1): _*))
+      .write.partitionBy("bucket").parquet(s"$dir/metrics")
+    assert(Materialize.run(spark, corpus, dir, buckets = 8) == perBucket.size - 3)
+    assert(Materialize.run(spark, corpus, dir, buckets = 8) == 0)
+    // the old buckets keep their rows, document columns NULL; the new ones
+    // hold one row per document; metrics/ is left as it was
+    val committed = Materialize.readManifest(spark, s"$dir/manifest")
+    assert(committed.filter($"path".isNull).select("bucket").as[Long].collect().toSet ==
+      old.map(_._1).toSet)
+    assert(manifestCounts(dir) == perBucket.map { case (b, n) =>
+      b -> (if (old.exists(_._1 == b)) 1L else n) })
+    assert(spark.read.parquet(s"$dir/metrics").count() == old.map(_._2).sum)
   }
 
   test("manifest: an unreadable manifest fails the run before any work") {

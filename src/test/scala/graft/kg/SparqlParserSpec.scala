@@ -1946,4 +1946,34 @@ class SparqlParserSpec extends AnyFunSuite {
     assert(subjectsOf("(?v + 1) > 5") === subjects.toSet)
     assert(subjectsOf(s"(?v + 1) > \"6\"^^<${XSD}long>") === Set.empty)
   }
+
+  test("?v = ?w compares two numeric literals by value with the nodes table, else by id") {
+    val XSD = "http://www.w3.org/2001/XMLSchema#"
+    // per subject, its ?v and ?w: 5 and 5.0, 5 and 6, the same IRI, 5 and "5"
+    val terms = Seq(("5", XSD + "integer"), ("5.0", XSD + "double"), ("6", XSD + "integer"),
+      ("5", RdfTerm.XsdString))
+    val Seq(five, fiveD, six, fiveS) = terms.map { case (v, t) => Bgp.litId(v, t) }
+    val iri = Bgp.iriId("urn:o:a")
+    val Seq(s1, s2, s3, s4) = (1 to 4).map(i => Bgp.iriId(s"urn:s:$i"))
+    val e = edges(Seq(s1 -> (five, fiveD), s2 -> (five, six), s3 -> (iri, iri), s4 -> (five, fiveS))
+      .flatMap { case (s, (v, w)) => Seq((s, "urn:v", v), (s, "urn:w", w)) }: _*)
+    val nodes = (terms.map { case (v, t) => (Bgp.litId(v, t), RdfTerm.LITERAL, v, null: String, t) } :+
+      ((iri, RdfTerm.IRI, "urn:o:a", null: String, null: String)))
+      .toDF("id", "kind", "value", "lang", "dt")
+    def subjectsOf(filter: String, withNodes: Boolean = true): Set[String] = {
+      val q = s"SELECT ?s WHERE { ?s <urn:v> ?v . ?s <urn:w> ?w FILTER($filter) }"
+      (if (withNodes) Sparql.run(e, nodes, q) else Sparql.run(e, q))
+        .collect().map(_.getString(0)).toSet
+    }
+    assert(subjectsOf("?v = ?w") === Set(s1, s3))
+    assert(subjectsOf("?v != ?w") === Set(s2, s4))
+    assert(subjectsOf("!(?v = ?w) && ?v != ?w") === Set(s2, s4))
+    // edges only: node ids
+    assert(subjectsOf("?v = ?w", withNodes = false) === Set(s3))
+    assert(subjectsOf("?v != ?w", withNodes = false) === Set(s1, s2, s4))
+    // an OPTIONAL condition compares node ids, nodes table or not
+    val opt = Sparql.run(e, nodes, "SELECT ?s ?w WHERE { ?s <urn:v> ?x " +
+      "OPTIONAL { ?s <urn:v> ?v . ?s <urn:w> ?w FILTER(?v = ?w) } }")
+    assert(opt.filter($"w".isNotNull).collect().map(_.getString(0)).toSet === Set(s3))
+  }
 }
