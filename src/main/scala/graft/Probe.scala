@@ -30,7 +30,8 @@ import graft.ops._
  *
  * Every measurement reports its best sample's cost, and that of each span
  * nested in it: jobs, executed stages, shuffle-writing stages, shuffle
- * bytes, spill, GC, and max / median task ms of the dominant stage.
+ * bytes, spill, GC, max / median task ms of the dominant stage, and the
+ * span's wall, busy (some job ran) and summed job ms.
  */
 object Probe {
 
@@ -67,7 +68,8 @@ object Probe {
       "shuffle_write_bytes" -> c.shuffleWriteBytes, "shuffle_read_bytes" -> c.shuffleReadBytes,
       "spill_bytes" -> c.spillBytes, "gc_ms" -> c.gcMs,
       "max_task_ms" -> ts.lastOption.getOrElse(0L),
-      "median_task_ms" -> (if (ts.isEmpty) 0L else ts(ts.length / 2)))
+      "median_task_ms" -> (if (ts.isEmpty) 0L else ts(ts.length / 2)),
+      "wall_ms" -> s.wallMs, "busy_ms" -> c.busyMs, "job_ms" -> c.jobMs)
   }
 
   /** Best-of-N wall time, with the best sample's cost and its child spans'. */

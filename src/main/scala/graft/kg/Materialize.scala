@@ -28,15 +28,20 @@ import graft.Share
  * `manifest/bucket=K` holds a file; the manifest is written last, so a
  * crashed/killed job re-runs exactly the uncommitted buckets: the corpus
  * is anti-joined against the committed buckets before any parsing. A new
- * document in a committed bucket is not processed. The partitioned
- * writes (staging, manifest) use dynamic partition overwrite, making a
- * re-run of a half-written bucket idempotent; it is a write option, so
- * the caller's session keeps its own `partitionOverwriteMode`.
+ * document in a committed bucket is not processed. A re-run deletes the
+ * staging dir of each bucket it processes before it stages, so nothing
+ * of a half-written bucket's earlier input is left. The partitioned
+ * writes (staging, manifest) use dynamic partition overwrite, so they
+ * replace only the buckets they write; it is a write option, so the
+ * caller's session keeps its own `partitionOverwriteMode`.
  *
- * A run reads the corpus twice: once for one digest row per todo
+ * A run goes: digests -> staging -> nodes ∥ edges ∥ commit rows ->
+ * manifest. It reads the corpus twice: once for one digest row per todo
  * document (repo, path, commit, content_sha256, bucket), shared with
  * [[graft.Share]], from which come the todo buckets and the manifest
- * rows; and once to parse the todo documents. A lost digest block fails
+ * rows; and once to parse the todo documents into staging. Nodes, edges
+ * and the commit rows read only staging and the digests, so they run at
+ * once; the manifest write waits for all three. A lost digest block fails
  * the manifest write, so a resume re-runs those buckets.
  */
 object Materialize {
@@ -317,9 +322,18 @@ object Materialize {
   }
 
   /**
-   * Full materialization run with resume: stages every uncommitted
-   * bucket, rebuilds nodes and edges, then commits those buckets' rows.
-   * Returns the number of buckets processed (0 == nothing left to do).
+   * Full materialization run with resume, in this order:
+   *  1. digests: one shared digest row per document of an uncommitted
+   *     bucket; with none, it returns 0 and writes nothing;
+   *  2. staging: the todo buckets' staging dirs are deleted, then their
+   *     documents are parsed into staging (and checked, if `strict`);
+   *  3. nodes ∥ edges ∥ commit rows: the nodes and edges writes over all
+   *     of staging, and the shared commit rows of the todo buckets, at
+   *     once, each on a thread of its own;
+   *  4. manifest: once all three have ended, the commit rows are written.
+   * If any of step 3 fails, the others still run to their end, no
+   * manifest is written and the first failure is thrown. Returns the
+   * number of buckets processed (0 == nothing left to do).
    */
   def run(spark: SparkSession, corpus: Dataset[CorpusRow], outDir: String,
           buckets: Int = 64, strict: Boolean = false): Int = {
@@ -336,36 +350,68 @@ object Materialize {
     val todoBuckets = todoDigests.select("bucket").distinct().as[Long].collect().sorted
     if (todoBuckets.isEmpty) return 0
 
-    // ---- parse (single pass) -> staging, partitioned by (bucket, err)
+    // ---- parse (single pass) -> staging, partitioned by (bucket, err).
+    // A todo bucket is uncommitted, so its staging dir goes first: dynamic
+    // overwrite replaces only the (bucket, err) dirs this parse writes.
     // native generator path: no object-serde boundary (see ParseNtLines)
+    val stagingPath = new org.apache.hadoop.fs.Path(s"$outDir/staging")
+    val fs = stagingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(stagingPath))
+      todoBuckets.foreach(b => fs.delete(new org.apache.hadoop.fs.Path(stagingPath, s"bucket=$b"), true))
     val parsed = TripleExtract.parseExpr(todo.drop("bucket"))
       .withColumn("bucket", bucketOf(buckets))
     parsed.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket", "err")
-      .parquet(s"$outDir/staging")
+      .parquet(stagingPath.toString)
 
     if (strict) TripleExtract.failOnErrors(readStaging(spark, outDir).as[ParsedLine])
 
-    // ---- derive graph tables from ALL staged triples (cheap vs parse)
+    // ---- derive graph tables from ALL staged triples (cheap vs parse),
+    // and the commit rows: the documents processed in THIS run, counted
+    // from the STAGED rows, not the live parse plan — re-evaluating
+    // `parsed` here would parse the whole todo corpus a second time. A
+    // repartition-by-bucket that AQE sizes (the edges pattern) puts each
+    // bucket in one task, so each bucket is one file. `Share` runs the
+    // commit rows' shuffle-map stages now, beside the two writes.
     val staged = readStaging(spark, outDir)
     val triplesDf = Canonicalize(Skolemize(TripleExtract.assembleTriples(staged)))
-    nodes(triplesDf).write.mode(SaveMode.Overwrite).parquet(s"$outDir/nodes")
-    saltedRepartition(edges(triplesDf), col("subj_id"),
-      saltFrom = Seq(col("repo"), col("path"), col("commit"), col("line")),
-      salts = 16)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/edges")
+    val stagedTodo = staged.filter(col("bucket").isin(todoBuckets.toIndexedSeq: _*))
+    var commitRows: DataFrame = null
+    allAtOnce(
+      () => nodes(triplesDf).write.mode(SaveMode.Overwrite).parquet(s"$outDir/nodes"),
+      () => saltedRepartition(edges(triplesDf), col("subj_id"),
+        saltFrom = Seq(col("repo"), col("path"), col("commit"), col("line")),
+        salts = 16)
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/edges"),
+      () => commitRows = Share(countsJoin(todoDigests, stagedTodo).repartition(col("bucket"))))
 
-    // ---- commit LAST: the documents processed in THIS run, counted from
-    // the STAGED rows, not the live parse plan — re-evaluating `parsed`
-    // here would parse the whole todo corpus a second time. A
-    // repartition-by-bucket that AQE sizes (the edges pattern) puts each
-    // bucket in one task, so each bucket is one file.
-    val stagedTodo = staged.filter(col("bucket").isin(todoBuckets: _*))
-    countsJoin(todoDigests, stagedTodo).repartition(col("bucket"))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+    // ---- commit LAST, after nodes and edges are written
+    commitRows.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket").parquet(manifestPath)
 
     todoBuckets.length
+  }
+
+  /**
+   * Runs `pieces` at once, one thread each, and returns once every thread
+   * has ended, also when a piece fails: no job a piece started is still
+   * running then. The threads are made here, by the caller's thread, so
+   * they inherit its SparkContext local properties, the job group among
+   * them, and a listener that attributes jobs by job group (graft.CostTrace)
+   * sees every job of the run under the caller's span. A failed piece does
+   * not stop the others; the first failure is thrown after all have ended.
+   */
+  private def allAtOnce(pieces: (() => Unit)*): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = pieces.map(p => new Thread(() =>
+      try p() catch { case e: Throwable => failures.add(e) }, "Materialize.run"))
+    var interrupted = false
+    try threads.foreach(_.start())
+    finally threads.foreach { t =>
+      while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread.interrupt()
+    Option(failures.peek()).foreach(e => throw e)
   }
 }

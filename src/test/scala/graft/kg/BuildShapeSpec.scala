@@ -4,9 +4,13 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.graftshim.SchedulerShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +21,12 @@ import graft.CostTrace
  * `Materialize.run` into an empty dir), as executed:
  *  - the input glob, and the bucket dirs of a 64-bucket staging and
  *    manifest, are listed on the driver, with no Spark job;
- *  - it runs a fixed number of jobs and writes four tables;
+ *  - it runs a fixed number of jobs, every one under the caller's
+ *    `CostTrace` span although three pieces run on threads of their own,
+ *    and writes four tables;
+ *  - the manifest write starts after the nodes and edges writes end;
+ *  - a failed piece fails the run with no manifest, no job still running
+ *    and no thread of the run alive;
  *  - the corpus is read by two jobs, the digest job behind the todo
  *    buckets and the parse; the manifest write reads the shared digests;
  *  - the manifest is one file per bucket;
@@ -96,6 +105,72 @@ class BuildShapeSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-buildshape-tables").toString
     assert(jobs(Materialize.run(spark, NtFileSource.documents(spark, glob), dir, Buckets)) == 11)
     assert(new java.io.File(dir).list.toSet == Set("staging", "nodes", "edges", "manifest"))
+  }
+
+  /** The start and end times of SQL executions and of their jobs, and the
+    * output path of each execution that writes files. */
+  private final class Executions extends SparkListener {
+    val start = new ConcurrentHashMap[Long, Long]()
+    val end = new ConcurrentHashMap[Long, Long]()
+    val output = new ConcurrentHashMap[Long, String]()
+    val jobExec = new ConcurrentHashMap[Int, Long]()
+    val jobStart = new ConcurrentHashMap[Int, Long]()
+    val jobEnd = new ConcurrentHashMap[Int, Long]()
+    // the command's entry in the formatted plan: "(N) Execute
+    // InsertIntoHadoopFsRelationCommand", "Input: []", "Arguments: <path>, ..."
+    private val Insert = "Execute InsertIntoHadoopFsRelationCommand\\s+Input: \\[\\]\\s+Arguments: (\\S+?),".r
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        start.put(s.executionId, s.time)
+        Insert.findFirstMatchIn(s.physicalPlanDescription).foreach(m => output.put(s.executionId, m.group(1)))
+      case x: SparkListenerSQLExecutionEnd => end.put(x.executionId, x.time)
+      case _ =>
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobStart.put(e.jobId, e.time)
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .foreach(x => jobExec.put(e.jobId, x.toLong))
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = jobEnd.put(e.jobId, e.time)
+
+    /** The one execution that writes to `path`. */
+    def writing(path: String): Long = {
+      val xs = output.asScala.collect { case (x, out) if out.stripPrefix("file:") == path => x }
+      assert(xs.size == 1, s"writes to $path: $xs among ${output.asScala}")
+      xs.head
+    }
+    def jobsOf(exec: Long): Seq[Int] = jobExec.asScala.collect { case (j, x) if x == exec => j }.toSeq
+  }
+
+  test("the manifest write starts after the nodes and edges writes have ended") {
+    val sc = spark.sparkContext
+    val execs = new Executions
+    sc.addSparkListener(execs)
+    val dir = Files.createTempDirectory("graft-buildshape-order").toString
+    try assert(Materialize.run(spark, NtFileSource.documents(spark, glob), dir, Buckets) > 0)
+    finally { SchedulerShim.drain(sc); sc.removeSparkListener(execs) }
+    val Seq(nodes, edges, manifest) = Seq("nodes", "edges", "manifest").map(t => execs.writing(s"$dir/$t"))
+    val written = Seq(nodes, edges)
+    written.foreach(x => assert(execs.start.get(manifest) >= execs.end.get(x)))
+    val manifestJobs = execs.jobsOf(manifest)
+    val writeJobs = written.flatMap(execs.jobsOf)
+    assert(manifestJobs.nonEmpty && writeJobs.size >= 2)
+    assert(manifestJobs.map(execs.jobStart.get).min >= writeJobs.map(execs.jobEnd.get).max)
+  }
+
+  test("a failed nodes write fails the run: no manifest, no job running, no thread of the run alive") {
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft-buildshape-fail")
+    // a link to nowhere where the nodes dir goes: the write finds no
+    // table to replace, and cannot make its dir
+    Files.createSymbolicLink(dir.resolve("nodes"), dir.resolve("nowhere"))
+    intercept[Exception](Materialize.run(spark, NtFileSource.documents(spark, glob), dir.toString, Buckets))
+    SchedulerShim.drain(sc)
+    assert(!Files.exists(dir.resolve("manifest")))
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName == "Materialize.run"))
+    // the other pieces ran to their end
+    assert(Files.exists(dir.resolve("edges/_SUCCESS")))
   }
 
   test("run into an empty dir reads the corpus in two jobs and writes one manifest file per bucket") {

@@ -160,6 +160,28 @@ class PipelineSpec extends AnyFunSuite {
     } finally spark.conf.set(key, saved)
   }
 
+  test("a re-run of an uncommitted bucket keeps nothing of its earlier input") {
+    val good = CorpusRow("r", "good.nt", "c", "nt", "<a:b> <c:d> <e:f> .\n")
+    val good2 = CorpusRow("r", "good2.nt", "c", "nt", "<a:b> <c:d> \"g2\" .\n")
+    val bad = CorpusRow("r", "bad.nt", "c", "nt", "oops\n")
+    def tables(dir: String) = Seq(Materialize.readStaging(spark, dir),
+      spark.read.parquet(s"$dir/nodes"), spark.read.parquet(s"$dir/edges"),
+      Materialize.readManifest(spark, s"$dir/manifest")).map(tableHash)
+    // one bucket: each input's documents share it. The first re-run drops
+    // a document with only an error row, the second one with only triples.
+    Seq(Seq(good, bad) -> Seq(good), Seq(good2) -> Seq(bad)).foreach { case (first, rerun) =>
+      val dir = tempDir("graft-rerun")
+      assert(Materialize.run(spark, first.toDS(), dir, buckets = 1) == 1)
+      // a crash before the commit: everything but the manifest is written
+      Files.walk(java.nio.file.Paths.get(dir, "manifest")).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.delete(p))
+      assert(Materialize.run(spark, rerun.toDS(), dir, buckets = 1) == 1)
+      val fresh = tempDir("graft-rerun-fresh")
+      assert(Materialize.run(spark, rerun.toDS(), fresh, buckets = 1) == 1)
+      assert(tables(dir) == tables(fresh), s"${first.map(_.path)} then ${rerun.map(_.path)}")
+    }
+  }
+
   test("run writes nodes/edges equal to the linked staging; AQE sizes the edges files") {
     // pinned wider than the suite default so a fixed-count edges exchange
     // (one file per shuffle partition) cannot pass the file-count check
